@@ -72,11 +72,6 @@ object Bench {
     val t = spark.read.parquet(path)
     // sparse series: the CC path needs only occupied buckets (window
     // assembly reconstructs the zeros; equivalence asserted in OpsSpec).
-    // windows→ccPairs (NOT ccPairsSparse): measured head-to-head at this
-    // workload the two-step path wins at low core counts — it aggregates
-    // each conv's windows ONCE regardless of pair fanout, while the fused
-    // path pushes points×fanout rows through its object agg (see
-    // Correlate.ccPairsSparse scaladoc for when the fused shape wins).
     val series = Ingest.seriesSparse(t, stepSec)
     val wins = Correlate.windows(series, windowSec, strideSec, stepSec)
     val pairs = spark.range(0, nConvs.toLong)
@@ -142,22 +137,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based partition coalescing serializes explode-heavy stages
-      // (a KB-scale spans shuffle fans out to millions of grid rows);
-      // on a real cluster tune minPartitionNum instead
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // local-mode shuffle I/O contention dominates at 32 threads (thread
-      // dumps: FileChannel map/unmap churn on /tmp) — put shuffle files on
-      // tmpfs; a real cluster uses per-executor NVMe spill dirs instead
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
 
     val headline = Seq(
@@ -260,5 +240,28 @@ object Bench {
       java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH/bench.json"), line + "\n")
     } catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     spark.stop()
+  }
+
+  /** The bench session (shared with [[BenchExtra]]): local[SPARK_GRAFT_CPUS]
+    * with one shuffle partition per core.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      // size-based partition coalescing serializes explode-heavy stages
+      // (a KB-scale spans shuffle fans out to millions of grid rows);
+      // on a real cluster tune minPartitionNum instead
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      // local-mode shuffle I/O contention dominates at 32 threads (thread
+      // dumps: FileChannel map/unmap churn on /tmp) — put shuffle files on
+      // tmpfs; a real cluster uses per-executor NVMe spill dirs instead
+      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round side harness (guide §1.4/§1.5) — NOT the driver
   * bench. Two modes over the SAME query map and session shape as
   * [[Bench]] (which is frozen for measurement):
@@ -17,24 +15,10 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchExtra {
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchExtra plans <outDir> [q...] | time [q...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     val fns = SparkEntry.queries
 

@@ -169,10 +169,7 @@ object ProcessJob {
       val pendingConvs = pending.select(col("conv_a").as("conv_id"))
         .union(pending.select(col("conv_b").as("conv_id"))).distinct()
       val pendingSeries = series.join(broadcast(pendingConvs), Seq("conv_id"), "left_semi")
-      // two-step assembly (windows once per conv, then pair tagging): at
-      // production pair fanout this beats the fused ccPairsSparse shape,
-      // whose point agg grows with points×fanout (measured head-to-head —
-      // see Correlate.ccPairsSparse scaladoc)
+      // two-step assembly: windows once per conv, then pair tagging
       val wins = Correlate.windows(pendingSeries, cfg.windowSec, cfg.strideSec, cfg.stepSec)
       val cc = Correlate
         .ccPairs(wins, pendingPairs, cfg.stepSec, cfg.windowSec, cfg.normalize,

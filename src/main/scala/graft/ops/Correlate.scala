@@ -1,9 +1,9 @@
 package graft.ops
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.core.{CcRow, SeriesWindow}
+import graft.core.CcRow
 import graft.kernel.Cc
 
 /** Pairwise windowed cross-correlation — the engine's flagship operator
@@ -86,9 +86,7 @@ object Correlate {
       strideSec: Long,
       stepSec: Long
   ): DataFrame = {
-    require(windowSec % stepSec == 0, "window must be a multiple of the grid step")
-    require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
-    require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
+    checkGrid(windowSec, strideSec, stepSec)
     val npts = (windowSec / stepSec).toInt
 
     // Sparse assembly: gap-filled series are mostly zeros, and a zero grid
@@ -97,22 +95,9 @@ object Correlate {
     // points x overlap). Window completeness is decided from the per-key
     // span instead of a point count: the gap-filled grid covers [t0, t1]
     // densely by construction, so a window is complete iff it fits the span.
-
-    // window starts w (aligned to stride) with w <= ts < w + window:
-    //   ceil((ts - window + step) / stride) .. floor(ts / stride)
-    val winExpr =
-      s"""sequence(
-         |  CAST(ceil((unix_timestamp(cast(ts as timestamp)) - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec,
-         |  (unix_timestamp(cast(ts as timestamp)) DIV $strideSec) * $strideSec,
-         |  $strideSec)""".stripMargin
-    val sparse = series
-      .where(col("value") =!= 0.0)
-      .withColumn("win_start_s", explode(expr(winExpr)))
-      .where(col("win_start_s") >= 0)
+    val sparse = windowPoints(series, windowSec, strideSec, stepSec)
       .groupBy(col("conv_id"), col("metric"), col("win_start_s"))
-      .agg(collect_list(struct(
-        ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
-        col("value").cast("float").as("v"))).as("sparse_pts"))
+      .agg(collect_list(struct(pointCols(stepSec): _*)).as("sparse_pts"))
 
     val cand = candidates(series, windowSec, strideSec, stepSec)
 
@@ -128,6 +113,59 @@ object Correlate {
         graft.functions.DensifyFloat(col("sparse_pts"), npts).as("values")
       )
   }
+
+  /** The grid the window operators assume: window and stride are whole
+    * numbers of grid steps, and consecutive windows leave no gap.
+    */
+  private[graft] def checkGrid(windowSec: Long, strideSec: Long, stepSec: Long): Unit = {
+    require(windowSec % stepSec == 0, "window must be a multiple of the grid step")
+    require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
+    require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
+  }
+
+  /** Every NONZERO point of `series`, once per window it falls in: the
+    * input columns plus `win_start_s`, the window start in epoch seconds.
+    * Shared by [[windows]] and the streaming operator
+    * (graft.streaming.StreamingCc); [[pointCols]] gives each point's place
+    * in its window.
+    */
+  private[graft] def windowPoints(
+      series: DataFrame,
+      windowSec: Long,
+      strideSec: Long,
+      stepSec: Long
+  ): DataFrame = {
+    // window starts w (aligned to stride) with w <= ts < w + window:
+    //   ceil((ts - window + step) / stride) .. floor(ts / stride)
+    val winExpr =
+      s"""sequence(
+         |  CAST(ceil((unix_timestamp(cast(ts as timestamp)) - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec,
+         |  (unix_timestamp(cast(ts as timestamp)) DIV $strideSec) * $strideSec,
+         |  $strideSec)""".stripMargin
+    series
+      .where(col("value") =!= 0.0)
+      .withColumn("win_start_s", explode(expr(winExpr)))
+      .where(col("win_start_s") >= 0)
+  }
+
+  /** A [[windowPoints]] row's grid offset in its window (`idx`) and its
+    * float32 value (`v`).
+    */
+  private[graft] def pointCols(stepSec: Long): Seq[Column] = Seq(
+    ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
+    col("value").cast("float").as("v"))
+
+  /** One row per (conversation, pair) it belongs to: (conv_id, pair, side),
+    * side 0 for conv_a and 1 for conv_b. Joined on conv_id, it tags windows
+    * or points with every (pair, side) they serve.
+    */
+  private[graft] def pairSides(pairs: DataFrame): DataFrame =
+    pairs
+      .select(col("conv_a").as("conv_id"),
+        concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(0).as("side"))
+      .unionByName(pairs
+        .select(col("conv_b").as("conv_id"),
+          concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(1).as("side")))
 
   /** All unordered conv pairs (convA < convB) present in the series — the
     * reference's `triu_indices` co-array / tri_mask "compute half" trick
@@ -158,33 +196,20 @@ object Correlate {
       .select(col("a.conv_id").as("conv_a"), col("b.conv_id").as("conv_b"))
   }
 
-  /** Cross-correlate the given conversation pairs per (metric, window).
-    *
-    * @param pairs DataFrame(conv_a, conv_b) with conv_a < conv_b — small,
-    *              broadcast to both joins.
-    * @param clipLagSec keep only |lag| <= clip (reference lag clipping at
-    *                   init, /root/reference/xcorr/core/init.py:177-196 —
-    *                   a projection pushdown: store only the lag window of
-    *                   interest). Negative = keep all. The emitted rows
-    *                   carry `npts` (input length n) and `lag0` (index of
-    *                   the first stored element on the full 2n-1 lag axis)
-    *                   so downstream ops can rebuild the lag coordinate of
-    *                   a clipped table; `shift`/`cc_max` are extracted from
-    *                   the STORED (clipped) array, exactly as the reference
-    *                   extracts on its clipped lag coordinate.
-    */
-  /** The per-(pair, window) kernel body shared by [[ccPairs]],
-    * [[ccPairsSparse]] and the streaming operator
-    * (graft.streaming.StreamingCc) — identical math, so the assembly
-    * shapes are bitwise-interchangeable (asserted in OpsSpec).
+  /** The per-(pair, window) kernel body shared by [[ccPairs]] and the
+    * streaming operator (graft.streaming.StreamingCc): widens the float32
+    * windows to double and correlates them — identical math, so a sealed
+    * streaming window equals its batch row (asserted in IoStreamingSpec).
     */
   private[graft] def kernelRow(
       pairId: String, metric: String, winStart: Timestamp,
-      va: Array[Double], vb: Array[Double],
+      vaF: Array[Float], vbF: Array[Float],
       delta: Double, halfWin: Double,
       normalize: Boolean, unbiased: Boolean, clipLagSec: Double,
-      hashInputs: Boolean, vaF: Array[Float], vbF: Array[Float]
+      hashInputs: Boolean
   ): CcRow = {
+    val va = toDoubles(vaF)
+    val vb = toDoubles(vbF)
     // a window with zero signal on either side carries no information:
     // flag it missing_data like the reference's status=-1
     // (/root/reference/xcorr/core/init.py:244-247) instead of emitting
@@ -230,6 +255,21 @@ object Correlate {
     )
   }
 
+  /** Cross-correlate the given conversation pairs per (metric, window).
+    *
+    * @param pairs DataFrame(conv_a, conv_b) with conv_a < conv_b — small,
+    *              broadcast to both joins.
+    * @param clipLagSec keep only |lag| <= clip (reference lag clipping at
+    *                   init, xcorr/core/init.py:177-196 —
+    *                   a projection pushdown: store only the lag window of
+    *                   interest). Negative = keep all. The emitted rows
+    *                   carry `npts` (input length n) and `lag0` (index of
+    *                   the first stored element on the full 2n-1 lag axis)
+    *                   so downstream ops can rebuild the lag coordinate of
+    *                   a clipped table; `shift`/`cc_max` are extracted from
+    *                   the STORED (clipped) array, exactly as the reference
+    *                   extracts on its clipped lag coordinate.
+    */
   def ccPairs(
       wins: DataFrame,
       pairs: DataFrame,
@@ -252,14 +292,8 @@ object Correlate {
     // aggregation output is already hash-partitioned by a key containing
     // both conv ids AND the window, so hot conversations spread across
     // partitions for the FFT stage with no extra repartition.
-    val sides = pairs
-      .select(col("conv_a").as("conv_id"),
-        concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(0).as("side"))
-      .unionByName(pairs
-        .select(col("conv_b").as("conv_id"),
-          concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(1).as("side")))
     val joined = wins
-      .join(broadcast(sides), Seq("conv_id"))
+      .join(broadcast(pairSides(pairs)), Seq("conv_id"))
       .groupBy(col("pair"), col("metric"), col("win_start"))
       .agg(
         first(when(col("side") === 0, col("values")), ignoreNulls = true).as("va"),
@@ -275,115 +309,10 @@ object Correlate {
     val halfWin = windowSec / 2.0
     joined.mapPartitions { it =>
       it.map { case (pairId, metric, winStart, vaF, vbF) =>
-        kernelRow(pairId, metric, winStart, toDoubles(vaF), toDoubles(vbF),
-          delta, halfWin, normalize, unbiased, clipLagSec, hashInputs, vaF, vbF)
+        kernelRow(pairId, metric, winStart, vaF, vbF,
+          delta, halfWin, normalize, unbiased, clipLagSec, hashInputs)
       }
     }
-  }
-
-  /** Fused sparse assembly + pairwise CC: ONE exchange of SPARSE points.
-    *
-    * [[windows]]→[[ccPairs]] moves the window arrays through two exchanges
-    * (the window-assembly groupBy keyed by conv, then the pair-assembly
-    * groupBy keyed by pair), both carrying DENSE float vectors. Here the
-    * nonzero points are tagged with every (pair, side, window) they serve
-    * (two broadcast-driven narrow maps), and a single groupBy on
-    * (pair, metric, win_start) collects the sparse (side, idx, value)
-    * structs; densify + FFT happen inside the kernel stage. Shuffled array
-    * bytes drop from 2 exchanges × npts floats to 1 exchange × occupied
-    * points — on sparse series an order of magnitude fewer bytes on the
-    * wire, and one whole shuffle barrier removed from the flagship path.
-    *
-    * Window completeness is identical: the pair-level candidate list (both
-    * sides' spans cover the window — computed from the tiny spans table)
-    * LEFT-joins the grouped points, so a complete-but-all-zero window still
-    * yields its status=-1 row. Output is bitwise-equal to
-    * windows→ccPairs (asserted in OpsSpec).
-    *
-    * WHEN TO USE WHICH (measured head-to-head, BENCH/BASELINE.md r3): the
-    * fused shape tags points with (pair, side) BEFORE aggregating, so its
-    * object agg processes points × overlap × pair-fanout rows; the
-    * two-step windows→ccPairs aggregates each conv's windows ONCE and fans
-    * out only the finished arrays. At the flagship workload (fanout 4,
-    * ~10% occupancy) the two-step path wins at low core counts and ties at
-    * 32 — prefer ccPairsSparse only when pair fanout is small (≤2) AND the
-    * series is very sparse (occupancy ≪ 1/fanout), e.g. sparse event
-    * streams correlated along a chain.
-    */
-  def ccPairsSparse(
-      series: DataFrame,
-      pairs: DataFrame,
-      windowSec: Long,
-      strideSec: Long,
-      stepSec: Long,
-      normalize: Boolean = true,
-      unbiased: Boolean = false,
-      clipLagSec: Double = -1,
-      hashInputs: Boolean = false
-  ): Dataset[CcRow] = {
-    require(windowSec % stepSec == 0, "window must be a multiple of the grid step")
-    require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
-    require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
-    val spark = series.sparkSession
-    import spark.implicits._
-    val npts = (windowSec / stepSec).toInt
-    val delta = stepSec.toDouble
-    val halfWin = windowSec / 2.0
-
-    val sides = pairs
-      .select(col("conv_a").as("conv_id"),
-        concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(0).as("side"))
-      .unionByName(pairs
-        .select(col("conv_b").as("conv_id"),
-          concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(1).as("side")))
-
-    val winExpr =
-      s"""sequence(
-         |  CAST(ceil((unix_timestamp(cast(ts as timestamp)) - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec,
-         |  (unix_timestamp(cast(ts as timestamp)) DIV $strideSec) * $strideSec,
-         |  $strideSec)""".stripMargin
-    val pts = series
-      .where(col("value") =!= 0.0)
-      .withColumn("win_start_s", explode(expr(winExpr)))
-      .where(col("win_start_s") >= 0)
-      .join(broadcast(sides), Seq("conv_id"))
-      .select(col("pair"), col("metric"), col("win_start_s"),
-        struct(
-          col("side"),
-          ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
-          col("value").cast("float").as("v")).as("pt"))
-    val grouped = pts
-      .groupBy(col("pair"), col("metric"), col("win_start_s"))
-      .agg(collect_list(col("pt")).as("pts"))
-
-    // pair-level complete-window gate from the spans-only candidates query
-    val cand = candidates(series, windowSec, strideSec, stepSec)
-    val a = cand.select(col("conv_id").as("conv_a"), col("metric"), col("win_start_s"))
-    val b = cand.select(col("conv_id").as("conv_b"), col("metric"), col("win_start_s"))
-    val candPairs = a.join(broadcast(pairs), Seq("conv_a"))
-      .join(b, Seq("conv_b", "metric", "win_start_s"))
-      .select(concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"),
-        col("metric"), col("win_start_s"))
-
-    val joined = candPairs
-      .join(grouped, Seq("pair", "metric", "win_start_s"), "left")
-      .select(col("pair"), col("metric"),
-        timestamp_seconds(col("win_start_s")).as("win_start"), col("pts"))
-
-    joined.mapPartitions { it =>
-      it.map { row =>
-        val vaF = new Array[Float](npts)
-        val vbF = new Array[Float](npts)
-        val pts = row.getSeq[org.apache.spark.sql.Row](3)
-        if (pts != null) pts.foreach { p =>
-          val tgt = if (p.getInt(0) == 0) vaF else vbF
-          tgt(p.getInt(1)) = p.getFloat(2)
-        }
-        kernelRow(row.getString(0), row.getString(1), row.getTimestamp(2),
-          toDoubles(vaF), toDoubles(vbF),
-          delta, halfWin, normalize, unbiased, clipLagSec, hashInputs, vaF, vbF)
-      }
-    }(org.apache.spark.sql.Encoders.product[CcRow])
   }
 
   private def sha256Floats(a: Array[Float], b: Array[Float]): String = {

@@ -24,15 +24,6 @@ object Dedup {
     * need the tokens themselves). */
   def tokens(text: Column): Column = graft.functions.TokenArray(text)
 
-  /** word `n`-gram shingles, distinct per (id, shingle).
-    *
-    * The token array is materialized ONCE per row before the shingle
-    * lambda: referencing `split(trim(text))` inside the transform body
-    * re-runs the regex split per sequence ELEMENT (no common-subexpression
-    * hoisting across a lambda boundary), which made shingling O(tokens²)
-    * regex passes per document — the dominant cost of every shingle-based
-    * query at corpus scale.
-    */
   /** The ONE spelling of the per-row shingle array (duplicates kept,
     * CASE-guarded for short docs — sequence() would count DOWN on an
     * empty range). [[shingles]] explodes it; streaming curation
@@ -53,6 +44,19 @@ object Dedup {
     df
   }
 
+  /** word `n`-gram shingles, distinct per (id, shingle).
+    *
+    * Precondition: one row per `idCol` value. Shingles are deduped within
+    * a row only, so a repeated id yields repeated (id, shingle) rows and
+    * inflates every count built on them (the DF cap, Jaccard sizes).
+    *
+    * The token array is materialized ONCE per row before the shingle
+    * lambda: referencing `split(trim(text))` inside the transform body
+    * re-runs the regex split per sequence ELEMENT (no common-subexpression
+    * hoisting across a lambda boundary), which made shingling O(tokens²)
+    * regex passes per document — the dominant cost of every shingle-based
+    * query at corpus scale.
+    */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     registered(df).select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
       .where(size(col("__toks")) >= n)

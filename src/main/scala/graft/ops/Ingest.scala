@@ -27,10 +27,6 @@ object Ingest {
     */
   def tokenCount(c: Column): Column = graft.functions.TokenCount(c)
 
-  /** Floor a timestamp onto a regular `stepSec` grid. */
-  def bucket(ts: Column, stepSec: Long): Column =
-    timestamp_seconds((unix_timestamp(ts) / stepSec).cast("long") * stepSec)
-
   /** Per-(conv, bucket) turn_rate and token_volume — the two metrics the
     * engine derives from transcripts (BASELINE.json north_star).
     */

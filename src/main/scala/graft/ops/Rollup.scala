@@ -58,9 +58,9 @@ object Rollup {
     "minute" -> 60000000L, "hour" -> 3600000000L, "day" -> 86400000000L)
 
   /** SQL floor division (`DIV` truncates toward zero; pre-epoch timestamps
-    * need the floor) — same helper shape as Trigger.floorDiv.
+    * need the floor). Also used by Trigger's grid bucketing.
     */
-  private def floorDiv(a: String, b: Long): String =
+  private[graft] def floorDiv(a: String, b: Long): String =
     s"(($a) DIV $b + (CASE WHEN ($a) % $b < 0 THEN -1 ELSE 0 END))"
 
   /** Tier-1 directly from OCCUPIED buckets (`Ingest.bucketed` output) —

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Rollup.floorDiv
 
 /** Coincidence trigger over a per-(key, time) characteristic function
   * (e.g. the snr table) — the reference's network coincidence trigger
@@ -34,13 +35,6 @@ object Trigger {
     * @return (period, period_start, period_end, n_steps) with `period` a
     *         dense 0-based index in time order (trigger.py:161-185 labels)
     */
-  /** SQL floor division (`DIV` truncates toward zero — a pre-epoch time's
-    * negative index would land in a misaligned bucket and break the
-    * at_edge boundary test; same pitfall Correlate.candidates fixed).
-    */
-  private def floorDiv(a: String, b: Long): String =
-    s"(($a) DIV $b + (CASE WHEN ($a) % $b < 0 THEN -1 ELSE 0 END))"
-
   def periods(
       cf: DataFrame,
       thrOn: Double,

@@ -36,6 +36,9 @@ object Winnow {
     * VALUES, after dropping fingerprints present in > maxDf distinct
     * documents. `n_shared` counts distinct shared hash values (positions
     * may differ between the documents — that is the point of winnowing).
+    *
+    * Precondition: one row per `idCol` value. Fingerprints are deduped
+    * within a row only, so a repeated id inflates its df and `n_shared`.
     */
   def candidatePairs(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 5, w: Int = 4,
@@ -61,10 +64,11 @@ object Winnow {
         col("x.fp") === col("y.fp") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("a"), col("y.id").as("b"))
       // count(*), not countDistinct: both join sides are distinct on
-      // (id, fp) by construction (fp.distinct() upstream, rare is one row
-      // per fp), so each shared hash contributes exactly one join row —
-      // same value, one aggregate phase instead of countDistinct's
-      // two-phase plan with its extra exchange (r6, plan diff in
+      // (id, fp) — array_distinct dedups fps within a row, each id has one
+      // input row (the precondition above), and rare is one row per fp —
+      // so each shared hash contributes exactly one join row: same value,
+      // one aggregate phase instead of countDistinct's two-phase plan with
+      // its extra exchange (r6, plan diff in
       // plans/r06/q116_winnow_pairs_*.txt)
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)

@@ -11,9 +11,9 @@ import graft.ops.Correlate
   * over a LIVE series feed, as a `flatMapGroupsWithState` stateful operator
   * with an event-time timeout:
   *
-  *  - each nonzero point is exploded into the windows it serves and tagged
-  *    with every (pair, side) via a stream-static join against the pair
-  *    list (the same sparse tagging as the batch ccPairsSparse);
+  *  - each nonzero point is exploded into the windows it serves (the batch
+  *    Correlate.windows explode) and tagged with every (pair, side) via a
+  *    stream-static join against the pair list (the batch ccPairs tagging);
   *  - state per (pair, metric, win_start) = the accumulated sparse
   *    (side, idx, value) points of the still-open window — bounded by
   *    occupied points per window, and GC'd by the watermark;
@@ -44,50 +44,28 @@ object StreamingCc {
       normalize: Boolean = true,
       lateness: String = "0 seconds"
   ): Dataset[CcRow] = {
-    require(windowSec % stepSec == 0, "window must be a multiple of the grid step")
-    require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
-    require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
+    Correlate.checkGrid(windowSec, strideSec, stepSec)
     val spark = series.sparkSession
     import spark.implicits._
     val npts = (windowSec / stepSec).toInt
     val delta = stepSec.toDouble
     val halfWin = windowSec / 2.0
 
-    val sides = pairs
-      .select(col("conv_a").as("conv_id"),
-        concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(0).as("side"))
-      .unionByName(pairs
-        .select(col("conv_b").as("conv_id"),
-          concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(1).as("side")))
-
-    val winExpr =
-      s"""sequence(
-         |  CAST(ceil((unix_timestamp(cast(ts as timestamp)) - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec,
-         |  (unix_timestamp(cast(ts as timestamp)) DIV $strideSec) * $strideSec,
-         |  $strideSec)""".stripMargin
-    val tagged = series
-      .withWatermark("ts", lateness)
-      .where(col("value") =!= 0.0)
-      .withColumn("win_start_s", explode(expr(winExpr)))
-      .where(col("win_start_s") >= 0)
-      .join(sides, Seq("conv_id")) // stream-static inner join (watermark survives)
+    val tagged = Correlate.windowPoints(series.withWatermark("ts", lateness), windowSec, strideSec, stepSec)
+      .join(Correlate.pairSides(pairs), Seq("conv_id")) // stream-static inner join (watermark survives)
       // the watermarked ts column must reach the stateful operator's input
       // (the event-time-timeout check looks for it in the child output)
-      .select(col("pair"), col("metric"), col("win_start_s"),
-        col("side"),
-        ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
-        col("value").cast("float").as("v"),
-        col("ts"))
+      .select(Seq(col("pair"), col("metric"), col("win_start_s"), col("side")) ++
+        Correlate.pointCols(stepSec) :+ col("ts"): _*)
       .as[(String, String, Long, Int, Int, Float, Timestamp)]
 
     def seal(key: (String, String, Long), pts: List[(Int, Int, Float)]): CcRow = {
       val vaF = new Array[Float](npts)
       val vbF = new Array[Float](npts)
       pts.foreach { case (side, idx, v) => (if (side == 0) vaF else vbF)(idx) = v }
-      def toD(f: Array[Float]) = { val d = new Array[Double](f.length); var i = 0; while (i < f.length) { d(i) = f(i); i += 1 }; d }
       Correlate.kernelRow(key._1, key._2, new Timestamp(key._3 * 1000L),
-        toD(vaF), toD(vbF), delta, halfWin, normalize,
-        unbiased = false, clipLagSec = -1, hashInputs = false, vaF, vbF)
+        vaF, vbF, delta, halfWin, normalize,
+        unbiased = false, clipLagSec = -1, hashInputs = false)
     }
 
     val fn = (key: (String, String, Long),

@@ -329,31 +329,6 @@ class OpsSpec extends AnyFunSuite {
     assert(viz.groupBy("conv_id", "metric").count().agg(max("count")).collect()(0).getLong(0) <= 20)
   }
 
-  test("ccPairsSparse == windows→ccPairs bitwise (fused single-exchange assembly)") {
-    import spark.implicits._
-    val t = Transcripts.generate(spark, 6, 120, hotConvs = 1, hotFactor = 5).toDF()
-    val s = Ingest.seriesSparse(t, 60)
-    val pairs = Correlate.allPairs(s)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("pair"), col("metric"), col("win_start"), col("cc"),
-        col("status"), col("pair_offset"), col("time_offset"), col("shift"),
-        col("cc_max"), col("npts"), col("lag0"), col("input_hash"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getTimestamp(2).getTime,
-        r.getSeq[Double](3).toList, r.getByte(4), r.getDouble(5), r.getDouble(6),
-        r.getDouble(7), r.getDouble(8), r.getInt(9), r.getInt(10), r.getString(11)))
-      .sortBy(x => (x._1, x._2, x._3))
-    for (clip <- Seq(-1.0, 300.0); hash <- Seq(false, true)) {
-      val ref = canon(Correlate.ccPairs(
-        Correlate.windows(s, 1800, 900, 60), pairs, 60, 1800,
-        clipLagSec = clip, hashInputs = hash).toDF())
-      val fused = canon(Correlate.ccPairsSparse(s, pairs, 1800, 900, 60,
-        clipLagSec = clip, hashInputs = hash).toDF())
-      assert(ref.nonEmpty && fused.sameElements(ref),
-        s"fused path differs at clip=$clip hash=$hash: ${fused.length} vs ${ref.length} rows")
-    }
-  }
-
   test("simhash 16-bit bands keep bucket occupancy << n (the 4-bit-band O(n^2/16) failure mode)") {
     // the property the old 16-bit/4-bit-band domain violated: a 4-bit band
     // has only 16 values, so every bucket held ~n/16 docs and the band

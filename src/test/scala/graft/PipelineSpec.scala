@@ -86,22 +86,46 @@ class PipelineSpec extends AnyFunSuite {
     val pairsDf = pairsSeq.toDF("conv_a", "conv_b")
     val series = Ingest.series(tinyDf, 60)
     val wins = Correlate.windows(series, windowSec = 1800, strideSec = 900, stepSec = 60)
-    val got = Correlate.ccPairs(wins, pairsDf, stepSec = 60, windowSec = 1800).collect()
-      .map(c => ((c.pair, c.metric, c.win_start.getTime), c))
-      .toMap
-    val want = Ref.ccPairs(Ref.series(tiny, 60), pairsSeq, stepSec = 60, windowSec = 1800, strideSec = 900)
+    val refPoints = Ref.series(tiny, 60)
+    val want = Ref.ccPairs(refPoints, pairsSeq, stepSec = 60, windowSec = 1800, strideSec = 900)
     assert(want.nonEmpty, "reference produced no CC cells — fixture too sparse")
-    assert(got.size == want.size, s"${got.size} vs ${want.size} cells")
-    want.foreach { w =>
-      val g = got((w.pair, w.metric, w.winStartMs))
-      assert(g.cc.length == w.cc.length)
-      g.cc.zip(w.cc).zipWithIndex.foreach { case ((a, b), i) =>
-        assert(a == b, s"${w.pair}@${w.winStartMs} lag $i: $a != $b")
+    val npts = 30
+    // input_hash: SHA-256 over side A's then side B's float32 window values
+    val pointValue = refPoints.map(p => (p.convId, p.metric, p.tsMs) -> p.value).toMap
+    def windowHash(pair: String, metric: String, winStartMs: Long): String = {
+      val (a, b) = pairsSeq.find { case (x, y) => s"$x-$y" == pair }.get
+      val bb = java.nio.ByteBuffer.allocate(4 * 2 * npts)
+      for (c <- Seq(a, b); i <- 0 until npts)
+        bb.putFloat(pointValue((c, metric, winStartMs + i * 60000L)).toFloat)
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(bb.array()).map("%02x".format(_)).mkString
+    }
+    // unclipped without hashing, and clipped to |lag| <= 300 s (5 steps)
+    // with input hashing
+    for ((clip, hash) <- Seq((-1.0, false), (300.0, true))) {
+      val got = Correlate.ccPairs(wins, pairsDf, stepSec = 60, windowSec = 1800,
+          clipLagSec = clip, hashInputs = hash).collect()
+        .map(c => ((c.pair, c.metric, c.win_start.getTime), c))
+        .toMap
+      assert(got.size == want.size, s"clip=$clip: ${got.size} vs ${want.size} cells")
+      val halfKeep = if (clip < 0) npts - 1 else 5
+      want.foreach { w =>
+        val g = got((w.pair, w.metric, w.winStartMs))
+        val at = s"clip=$clip ${w.pair}@${w.winStartMs}"
+        assert(g.npts == npts && g.lag0 == npts - 1 - halfKeep && g.cc.length == 2 * halfKeep + 1, at)
+        val slice = w.cc.slice(g.lag0, g.lag0 + g.cc.length)
+        g.cc.zip(slice).zipWithIndex.foreach { case ((a, b), i) =>
+          assert(a == b, s"$at lag $i: $a != $b")
+        }
+        // shift/cc_max: the first argmax of the stored slice
+        val jm = slice.indexOf(slice.max)
+        assert(g.shift == (g.lag0 + jm - (npts - 1)) * 60.0 && g.cc_max == slice(jm), at)
+        if (clip < 0) assert(g.shift == w.shift && g.cc_max == w.ccMax, at)
+        // status=1 for informative windows; -1 (missing_data) iff a side is
+        // all-zero (reference init.py:244-247 semantics)
+        assert(g.status == (if (w.cc.forall(_ == 0.0)) -1 else 1), at)
+        assert(g.input_hash == (if (hash) windowHash(w.pair, w.metric, w.winStartMs) else ""), at)
       }
-      assert(g.shift == w.shift && g.cc_max == w.ccMax)
-      // status=1 for informative windows; -1 (missing_data) iff a side is
-      // all-zero (reference init.py:244-247 semantics)
-      assert(g.status == (if (w.cc.forall(_ == 0.0)) -1 else 1))
     }
   }
 

@@ -57,25 +57,6 @@ class PlanSpec extends AnyFunSuite {
     assert(pairingExchanges == 1, s"want exactly 1 pair-keyed exchange, got $pairingExchanges:\n$p")
   }
 
-  test("ccPairsSparse: exactly ONE exchange carries point data (fused assembly)") {
-    import spark.implicits._
-    val t = Transcripts.generate(spark, 8, 120).toDF()
-    val s = Ingest.seriesSparse(t, 60)
-    val pairs = Seq(("conv-000000", "conv-000001")).toDF("conv_a", "conv_b")
-    val p = plan(Correlate.ccPairsSparse(s, pairs, 1800, 900, 60).toDF())
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"non-hash join on the fused CC path:\n$p")
-    // the points are aggregated exactly once (one partial + one final
-    // collect_list), i.e. exactly one exchange carries point structs —
-    // the windows→ccPairs shape had a second array-carrying aggregation
-    val collects = "collect_list".r.findAllIn(p).length
-    assert(collects == 2, s"points aggregated more than once ($collects):\n$p")
-    // and at most 2 pair-keyed exchanges exist overall: the point agg and
-    // the (keys-only) candidate gate side of the left join
-    val pairExchanges = "Exchange hashpartitioning\\(pair".r.findAllIn(p).length
-    assert(pairExchanges <= 2, s"fused path re-shuffles the arrays:\n$p")
-  }
-
   test("windows→ccPairs assembly has no Scala UDF (densify is a codegen'd Expression)") {
     import spark.implicits._
     val t = Transcripts.generate(spark, 6, 120).toDF()
