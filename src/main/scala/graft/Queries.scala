@@ -2,10 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.kernel.Cc
-import graft.ops.{Correlate, Ingest, Rollup}
-import graft.synth.Transcripts
+import graft.queries._
 
 /** The driver-checked operator surface: each entry is one operator from
   * SURVEY.md §2 (or a training-data-pipeline extension) as a Spark query
@@ -20,26 +17,33 @@ import graft.synth.Transcripts
   *    BOTH sides;
   *  - per-row double arithmetic (no reordering) is left exact — IEEE ops
   *    on identical inputs are engine-independent.
+  *
+  * This object is the registry: the query type, the table readers and
+  * `all`. The queries themselves live in one trait per operator family
+  * under [[graft.queries]], with the DuckDB fragments they share in
+  * [[graft.queries.OracleSql]].
   */
-object Queries {
+object Queries extends RelationalQueries with SeriesQueries with CcQueries
+    with SignalQueries with DocumentQueries with WinnowQueries
+    with EmbeddingQueries with SketchQueries with TrainPrepQueries {
 
   type QFn = (SparkSession, String) => DataFrame
 
   final case class Q(name: String, fn: QFn, oracle: Option[String])
 
-  private def ev(s: SparkSession, dir: String) = s.read.parquet(s"$dir/events.parquet")
-  private def li(s: SparkSession, dir: String) = s.read.parquet(s"$dir/lineitem.parquet")
-  private def ord(s: SparkSession, dir: String) = s.read.parquet(s"$dir/orders.parquet")
-  private def cust(s: SparkSession, dir: String) = s.read.parquet(s"$dir/customer.parquet")
-  private def nat(s: SparkSession, dir: String) = s.read.parquet(s"$dir/nation.parquet")
-  private def reg(s: SparkSession, dir: String) = s.read.parquet(s"$dir/region.parquet")
-  private def docs(s: SparkSession, dir: String) = {
+  private[graft] def ev(s: SparkSession, dir: String) = s.read.parquet(s"$dir/events.parquet")
+  private[graft] def li(s: SparkSession, dir: String) = s.read.parquet(s"$dir/lineitem.parquet")
+  private[graft] def ord(s: SparkSession, dir: String) = s.read.parquet(s"$dir/orders.parquet")
+  private[graft] def cust(s: SparkSession, dir: String) = s.read.parquet(s"$dir/customer.parquet")
+  private[graft] def nat(s: SparkSession, dir: String) = s.read.parquet(s"$dir/nation.parquet")
+  private[graft] def reg(s: SparkSession, dir: String) = s.read.parquet(s"$dir/region.parquet")
+  private[graft] def docs(s: SparkSession, dir: String) = {
     // the token/shingle queries resolve graft_tokens/graft_words/
     // graft_shingles (codegen kernels, graft.functions)
     graft.functions.GraftExtensions.register(s)
     s.read.parquet(s"$dir/documents.parquet")
   }
-  private def emb(s: SparkSession, dir: String) = {
+  private[graft] def emb(s: SparkSession, dir: String) = {
     // the embedding queries' dot kernels are the registered codegen
     // expressions (graft_dot — see graft.functions.DotProduct)
     graft.functions.GraftExtensions.register(s)
@@ -50,4282 +54,13 @@ object Queries {
     * driver's value compare sees identical types. Session TZ is pinned UTC,
     * so TZ<->NTZ casts are wall-clock identities.
     */
-  private def ntz(df: DataFrame, cols: String*): DataFrame =
+  private[graft] def ntz(df: DataFrame, cols: String*): DataFrame =
     cols.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("timestamp_ntz")))
-
-  // ---------------------------------------------------------------- A. relational
-
-  val q01 = Q("q01_pricing_summary",
-    (s, d) => li(s, d)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity")).as("sum_qty"),
-        min(col("l_quantity")).as("min_qty"),
-        max(col("l_quantity")).as("max_qty"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue")
-      ),
-    Some("""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-           | sum(l_quantity) AS sum_qty, min(l_quantity) AS min_qty,
-           | max(l_quantity) AS max_qty,
-           | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-           |FROM lineitem GROUP BY 1, 2""".stripMargin))
-
-  val q02 = Q("q02_filter_pushdown",
-    (s, d) => li(s, d)
-      .where(col("l_shipdate") >= lit("1995-06-01").cast("timestamp") && col("l_quantity") > 45)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_extendedprice")),
-    Some("""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-           |FROM lineitem
-           |WHERE l_shipdate >= TIMESTAMP '1995-06-01' AND l_quantity > 45""".stripMargin))
-
-  val q03 = Q("q03_join_nation_region",
-    (s, d) => ord(s, d)
-      .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(nat(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(reg(s, d)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("total")),
-    Some("""SELECT r_name, n_name, count(*) AS n_orders,
-           | round(sum(o_totalprice), 2) AS total
-           |FROM orders JOIN customer ON o_custkey = c_custkey
-           |JOIN nation ON c_nationkey = n_nationkey
-           |JOIN region ON n_regionkey = r_regionkey
-           |GROUP BY 1, 2""".stripMargin))
-
-  val q04 = Q("q04_topk_orders",
-    (s, d) => ord(s, d)
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .limit(10),
-    Some("""SELECT o_orderkey, o_totalprice FROM orders
-           |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin))
-
-  val q05 = Q("q05_topk_per_group",
-    (s, d) => {
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-      li(s, d).withColumn("rk", row_number().over(w))
-        .where(col("rk") <= 3)
-        .select(col("l_returnflag"), col("rk"), col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-    },
-    Some("""SELECT l_returnflag, rk, l_orderkey, l_linenumber, l_extendedprice FROM (
-           | SELECT *, row_number() OVER (PARTITION BY l_returnflag
-           |   ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rk
-           | FROM lineitem) WHERE rk <= 3""".stripMargin))
-
-  val q06 = Q("q06_distinct",
-    (s, d) => li(s, d).select(col("l_returnflag"), col("l_linestatus")).distinct(),
-    Some("SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"))
-
-  val q07 = Q("q07_running_sum",
-    (s, d) => {
-      // l_quantity is the FINAL tiebreaker: the synthetic lineitem can hold
-      // duplicate (suppkey, shipdate, orderkey, linenumber) rows (seen at
-      // sf0.1) whose intermediate cumsums would otherwise be order-ambiguous
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      li(s, d).select(
-        col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        sum(col("l_quantity")).over(w).as("running_qty"))
-    },
-    Some("""SELECT l_suppkey, l_orderkey, l_linenumber,
-           | sum(l_quantity) OVER (PARTITION BY l_suppkey
-           |   ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
-           |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-           |FROM lineitem""".stripMargin))
-
-  val q08 = Q("q08_anti_semi_join",
-    (s, d) => {
-      val o = ord(s, d)
-      val l = li(s, d).select(col("l_orderkey")).distinct()
-      o.join(l, col("o_orderkey") === col("l_orderkey"), "left_anti")
-        .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n_no_lines"))
-    },
-    Some("""SELECT o_orderstatus, count(*) AS n_no_lines FROM orders
-           |WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem)
-           |GROUP BY 1""".stripMargin))
-
-  // ---------------------------------------------------------------- B. time-series
-
-  val q10 = Q("q10_rollup_1m",
-    (s, d) => ev(s, d)
-      .groupBy(col("user_id"), date_trunc("minute", col("ts")).as("chunk_start"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("value")), 6).as("sum_v"),
-        min(col("value")).as("min_v"),
-        max(col("value")).as("max_v"),
-        min_by(col("value"), col("ts")).as("first_v"),
-        max_by(col("value"), col("ts")).as("last_v")
-      ).transform(d => ntz(d, "chunk_start")),
-    Some("""SELECT user_id, date_trunc('minute', ts) AS chunk_start, count(*) AS n,
-           | round(sum(value), 6) AS sum_v, min(value) AS min_v, max(value) AS max_v,
-           | min_by(value, ts) AS first_v, max_by(value, ts) AS last_v
-           |FROM events GROUP BY 1, 2""".stripMargin))
-
-  val q11 = Q("q11_rollup_compose_1h",
-    (s, d) => {
-      // hierarchical: 1h tier folded FROM the 1m tier (tests composition);
-      // the oracle aggregates the raw events directly — equal iff the tiers
-      // compose exactly
-      val m1 = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
-          lit("value").as("metric"), col("ts"), col("value"))
-      val tier1m = Rollup.fromPoints(m1, "minute")
-      Rollup.fromLower(tier1m, "hour")
-        .select(col("conv_id").cast("long").as("user_id"), col("chunk_start"),
-          col("n"), round(col("sum"), 6).as("sum_v"), col("min").as("min_v"), col("max").as("max_v"))
-        .transform(d => ntz(d, "chunk_start"))
-    },
-    Some("""SELECT user_id, date_trunc('hour', ts) AS chunk_start, count(*) AS n,
-           | round(sum(value), 6) AS sum_v, min(value) AS min_v, max(value) AS max_v
-           |FROM events GROUP BY 1, 2""".stripMargin))
-
-  val q12 = Q("q12_gapfill_1h",
-    (s, d) => {
-      val b = ev(s, d).groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("c"))
-      val spans = b.groupBy(col("user_id")).agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-      val grid = spans.select(col("user_id"),
-        explode(expr("sequence(h0, h1, interval 1 hour)")).as("ts"))
-      grid.join(b, grid("user_id") === b("user_id") && grid("ts") === b("h"), "left")
-        .select(grid("user_id"), grid("ts"), coalesce(col("c"), lit(0L)).as("n_events"))
-        .transform(d => ntz(d, "ts"))
-    },
-    Some("""WITH b AS (SELECT user_id, date_trunc('hour', ts) AS h, count(*) AS c
-           |  FROM events GROUP BY 1, 2),
-           |s AS (SELECT user_id, min(h) AS h0, max(h) AS h1 FROM b GROUP BY 1),
-           |g AS (SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS ts FROM s)
-           |SELECT g.user_id, g.ts, coalesce(b.c, 0) AS n_events
-           |FROM g LEFT JOIN b ON g.user_id = b.user_id AND g.ts = b.h""".stripMargin))
-
-  val q13 = Q("q13_gap_detect",
-    (s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      ev(s, d)
-        .withColumn("gap_us", unix_micros(col("ts").cast("timestamp")) - lag(unix_micros(col("ts").cast("timestamp")), 1).over(w))
-        .groupBy(col("user_id"))
-        .agg(
-          sum(when(col("gap_us") > 3600000000L, 1).otherwise(0)).as("n_gaps"),
-          max(col("gap_us")).as("max_gap_us"))
-    },
-    Some("""WITH g AS (SELECT user_id,
-           |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-           |  FROM events)
-           |SELECT user_id,
-           | CAST(sum(CASE WHEN gap_us > 3600000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps,
-           | max(gap_us) AS max_gap_us
-           |FROM g GROUP BY 1""".stripMargin))
-
-  val q14 = Q("q14_sessionize",
-    (s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val flagged = ev(s, d)
-        .withColumn("gap_us", unix_micros(col("ts").cast("timestamp")) - lag(unix_micros(col("ts").cast("timestamp")), 1).over(w))
-        .withColumn("new_s", when(col("gap_us").isNull || col("gap_us") <= 1800000000L, 0).otherwise(1))
-      val sess = flagged
-        .withColumn("session_id", sum(col("new_s")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      sess.groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"), min(col("ts")).as("session_start"), max(col("ts")).as("session_end"))
-        .transform(d => ntz(d, "session_start", "session_end"))
-    },
-    Some("""WITH g AS (SELECT user_id, ts, event_id,
-           |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-           |    OVER (PARTITION BY user_id ORDER BY ts, event_id) <= 1800000000
-           |   THEN 0
-           |   WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-           |   THEN 0 ELSE 1 END AS new_s
-           |  FROM events),
-           |se AS (SELECT user_id, ts,
-           |  CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-           |  FROM g)
-           |SELECT user_id, session_id, count(*) AS n_events,
-           | min(ts) AS session_start, max(ts) AS session_end
-           |FROM se GROUP BY 1, 2""".stripMargin))
-
-  val q15 = Q("q15_trigger_islands",
-    (s, d) => {
-      // coincidence trigger (gaps-and-islands) through the engine operator:
-      // hours where >= 3 distinct users exceed the threshold; islands of
-      // consecutive hours; drop islands shorter than 3 (reference drops
-      // periods < 3*step, /root/reference/xcorr/signal/trigger.py:96-99).
-      // bucketSteps is small on purpose so the scale-safe bucketed-islands
-      // + boundary-stitch path is what the oracle checks.
-      val cf = ev(s, d).select(col("user_id").as("key"),
-        date_trunc("hour", col("ts")).as("time"), col("value"))
-      graft.ops.Trigger.periods(cf, thrOn = 100, coincidence = 3,
-          stepSec = 3600, minDurationSteps = 3, bucketSteps = 64)
-        .select(col("period_start").as("island_start"),
-          col("period_end").as("island_end"), col("n_steps").as("n_hours"))
-        .transform(d => ntz(d, "island_start", "island_end"))
-    },
-    Some("""WITH a AS (SELECT date_trunc('hour', ts) AS m, count(DISTINCT user_id) AS n_active
-           |  FROM events WHERE value > 100 GROUP BY 1 HAVING count(DISTINCT user_id) >= 3),
-           |g AS (SELECT m, epoch_us(m) // 3600000000 - row_number() OVER (ORDER BY m) AS grp FROM a)
-           |SELECT min(m) AS island_start, max(m) AS island_end, count(*) AS n_hours
-           |FROM g GROUP BY grp HAVING count(*) >= 3""".stripMargin))
-
-  val q16 = Q("q16_running_rms",
-    (s, d) => ev(s, d)
-      .groupBy(col("user_id"),
-        expr("cast(timestamp_seconds((unix_micros(cast(ts as timestamp)) div 600000000) * 600) as timestamp_ntz)").as("bucket"))
-      .agg(round(sqrt(avg(col("value") * col("value"))), 6).as("rms")),
-    Some("""SELECT user_id, time_bucket(INTERVAL 10 MINUTE, ts) AS bucket,
-           | round(sqrt(avg(value * value)), 6) AS rms
-           |FROM events GROUP BY 1, 2""".stripMargin))
-
-  val q17 = Q("q17_demean",
-    (s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-      ev(s, d).where(col("event_type") === "click")
-        .select(col("user_id"), col("event_id"),
-          round(col("value") - avg(col("value")).over(w), 6).as("demeaned"))
-    },
-    Some("""SELECT user_id, event_id,
-           | round(value - avg(value) OVER (PARTITION BY user_id), 6) AS demeaned
-           |FROM events WHERE event_type = 'click'""".stripMargin))
-
-  val q18 = Q("q18_snr",
-    (s, d) => ev(s, d)
-      .groupBy(col("user_id"))
-      .agg(
-        round(max(when(col("event_type") === "error", abs(col("value")))), 6).as("s"),
-        round(sqrt(avg(when(col("event_type") === "view", col("value") * col("value")))), 6).as("n"),
-        round(
-          max(when(col("event_type") === "error", abs(col("value")))) /
-            sqrt(avg(when(col("event_type") === "view", col("value") * col("value")))), 6).as("snr"),
-        max_by(col("event_id"), when(col("event_type") === "error", abs(col("value"))).otherwise(lit(null))).as("peak_event")
-      ),
-    Some("""SELECT user_id,
-           | round(max(abs(value)) FILTER (event_type = 'error'), 6) AS s,
-           | round(sqrt(avg(value * value) FILTER (event_type = 'view')), 6) AS n,
-           | round(max(abs(value)) FILTER (event_type = 'error')
-           |   / sqrt(avg(value * value) FILTER (event_type = 'view')), 6) AS snr,
-           | max_by(event_id, abs(value)) FILTER (event_type = 'error') AS peak_event
-           |FROM events GROUP BY 1""".stripMargin))
-
-  val q19 = Q("q19_cc_pair_lags",
-    (s, d) => {
-      import s.implicits._
-      // hourly count series of users 1 and 2 on the COMMON gap-filled grid,
-      // cross-correlated with the FFT kernel; integer-valued series → the
-      // raw CC estimate is integral, so the kernel output rounds exactly to
-      // the time-domain oracle sum
-      val both = ev(s, d).where(col("user_id").isin(1L, 2L))
-        .select(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-      val span = both.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-      val grid = span.select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
-      val counts = both.groupBy(col("user_id"), col("h")).agg(count(lit(1)).as("c"))
-      def seriesOf(uid: Long) = grid
-        .join(counts.where(col("user_id") === uid), Seq("h"), "left")
-        .select(col("h"), coalesce(col("c"), lit(0L)).cast("double").as("v"))
-        .agg(expr("transform(array_sort(collect_list(struct(h, v))), p -> p.v)").as("vs"))
-      // distributed end-to-end: the two 1-row series aggregates meet in a
-      // 1x1 cross join and the kernel runs in a flatMap on an executor —
-      // no .collect()/.head() anywhere in the checked surface
-      val xa = seriesOf(1L).select(col("vs").as("va"))
-      val yb = seriesOf(2L).select(col("vs").as("vb"))
-      xa.crossJoin(yb).as[(Array[Double], Array[Double])]
-        .flatMap { case (va, vb) =>
-          val rxy = Cc.cc(va, vb, normalize = false)
-          val zero = rxy.length / 2
-          (-6 to 6).map(k => (k, math.round(rxy(zero + k))))
-        }
-        .toDF("lag_k", "cc_raw")
-    },
-    Some("""WITH bth AS (SELECT user_id, date_trunc('hour', ts) AS h FROM events
-           |  WHERE user_id IN (1, 2)),
-           |span AS (SELECT min(h) AS h0, max(h) AS h1 FROM bth),
-           |grid AS (SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM span),
-           |idx AS (SELECT h, row_number() OVER (ORDER BY h) - 1 AS j FROM grid),
-           |cnt AS (SELECT user_id, h, count(*) AS c FROM bth GROUP BY 1, 2),
-           |xa AS (SELECT idx.j, coalesce(cnt.c, 0) AS c FROM idx
-           |  LEFT JOIN cnt ON cnt.h = idx.h AND cnt.user_id = 1),
-           |yb AS (SELECT idx.j, coalesce(cnt.c, 0) AS c FROM idx
-           |  LEFT JOIN cnt ON cnt.h = idx.h AND cnt.user_id = 2),
-           |lags AS (SELECT unnest(generate_series(-6, 6)) AS k)
-           |SELECT lags.k AS lag_k, CAST(coalesce(sum(xa.c * yb.c), 0) AS BIGINT) AS cc_raw
-           |FROM lags JOIN xa ON true JOIN yb ON yb.j = xa.j - lags.k
-           |GROUP BY 1""".stripMargin))
-
-  val q20 = Q("q20_lag_axis",
-    (s, d) => {
-      import s.implicits._
-      val lags = Cc.lagAxis(64, 0.5)
-      s.createDataset(lags.toIndexedSeq.zipWithIndex.map { case (v, i) => (i, BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble) })
-        .toDF("i", "lag")
-    },
-    Some("""SELECT i, round((i - 63) * 0.5, 9) AS lag
-           |FROM (SELECT unnest(generate_series(0, 126)) AS i)""".stripMargin))
-
-  val q21 = Q("q21_unbias_weights",
-    (s, d) => {
-      import s.implicits._
-      val w = Cc.weight(32)
-      s.createDataset(w.toIndexedSeq.zipWithIndex.map { case (v, i) => (i, v) }).toDF("i", "w")
-    },
-    Some("""SELECT i, 32.0 / (32 - abs(i - 31)) AS w
-           |FROM (SELECT unnest(generate_series(0, 62)) AS i)""".stripMargin))
-
-  val q22 = Q("q22_gorilla_roundtrip",
-    (s, d) => {
-      // events → per-(user, day) delta-of-delta+Gorilla chunk blobs → decode
-      // → original points; oracle is the identity query, so the DuckDB
-      // compare proves the codec loses nothing on real data
-      val pts = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
-        lit("value").as("metric"), col("ts"), col("value"))
-      val chunks = Rollup.toChunks(pts, "day")
-      Rollup.fromChunks(chunks)
-        .select(col("conv_id").cast("long").as("user_id"), col("ts"), col("value"))
-        .transform(d => ntz(d, "ts"))
-    },
-    Some("SELECT user_id, ts, value FROM events"))
-
-  val q24 = Q("q24_outer_merge",
-    (s, d) => {
-      // dataset merge = full outer alignment on dim keys (reference
-      // combine_by_coords, /root/reference/xcorr/core/merge.py:58-63) —
-      // clicks and errors per (user, day) outer-joined with zero fill
-      def side(t: String, as: String) = ev(s, d).where(col("event_type") === t)
-        .groupBy(col("user_id"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as(as))
-      side("click", "n_clicks")
-        .join(side("error", "n_errors"), Seq("user_id", "day"), "full_outer")
-        .select(col("user_id"), col("day"),
-          coalesce(col("n_clicks"), lit(0L)).as("n_clicks"),
-          coalesce(col("n_errors"), lit(0L)).as("n_errors"))
-    },
-    Some("""WITH c AS (SELECT user_id, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n_clicks
-           |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-           |e AS (SELECT user_id, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n_errors
-           |  FROM events WHERE event_type = 'error' GROUP BY 1, 2)
-           |SELECT coalesce(c.user_id, e.user_id) AS user_id,
-           |  coalesce(c.day, e.day) AS day,
-           |  coalesce(n_clicks, 0) AS n_clicks, coalesce(n_errors, 0) AS n_errors
-           |FROM c FULL OUTER JOIN e ON c.user_id = e.user_id AND c.day = e.day""".stripMargin))
-
-  val q25 = Q("q25_grouping_rollup",
-    (s, d) => ev(s, d)
-      .rollup(col("event_type"), date_format(col("ts"), "yyyy-MM").as("month"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_v"))
-      // rolled-up levels emit NULL in the grouping columns on both engines;
-      // coalesce to a sentinel so the null representation never reaches the
-      // driver's hash compare
-      .select(coalesce(col("event_type"), lit("(all)")).as("event_type"),
-        coalesce(col("month"), lit("(all)")).as("month"), col("n"), col("sum_v")),
-    Some("""SELECT coalesce(event_type, '(all)') AS event_type,
-           | coalesce(strftime(ts, '%Y-%m'), '(all)') AS month,
-           | count(*) AS n, round(sum(value), 6) AS sum_v
-           |FROM events GROUP BY ROLLUP(event_type, strftime(ts, '%Y-%m'))""".stripMargin))
-
-  val q26 = Q("q26_set_ops",
-    (s, d) => {
-      def users(t: String) = ev(s, d).where(col("event_type") === t)
-        .select(col("user_id")).distinct()
-      users("click").intersect(users("error"))
-        .withColumn("in_both", lit(true))
-        .unionByName(users("view").except(users("click"))
-          .withColumn("in_both", lit(false)))
-    },
-    Some("""SELECT user_id, true AS in_both FROM (
-           |  SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-           |  INTERSECT
-           |  SELECT DISTINCT user_id FROM events WHERE event_type = 'error')
-           |UNION ALL
-           |SELECT user_id, false AS in_both FROM (
-           |  SELECT DISTINCT user_id FROM events WHERE event_type = 'view'
-           |  EXCEPT
-           |  SELECT DISTINCT user_id FROM events WHERE event_type = 'click')""".stripMargin))
-
-  val q27 = Q("q27_asof_join",
-    // as-of join: every event picks up the latest purchase value of the
-    // same user at-or-before its timestamp (AsofJoin.leftAsof — one
-    // union + one key exchange + a carry-forward window, no range join);
-    // oracled against DuckDB's native ASOF LEFT JOIN. The right side is
-    // deduped per (user_id, ts) so the match is unique by construction.
-    (s, d) => {
-      val e = ev(s, d)
-      val purchases = e.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("ref_value"))
-      graft.ops.AsofJoin.leftAsof(
-        e.select(col("event_id"), col("user_id"), col("ts"), col("event_type")),
-        purchases, keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        pick = Seq("ref_value"))
-        .transform(x => ntz(x, "ts", "asof_ts"))
-    },
-    Some("""WITH r AS (SELECT user_id, ts, max(value) AS ref_value
-           |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-           |SELECT e.event_id, e.user_id, e.ts, e.event_type,
-           |  r.ref_value, r.ts AS asof_ts
-           |FROM events e ASOF LEFT JOIN r
-           |  ON e.user_id = r.user_id AND e.ts >= r.ts""".stripMargin))
-
-  val q28 = Q("q28_percentile_rollup",
-    // exact-percentile continuous aggregate (p50/p95 per user per day) —
-    // the quantile face of the rollup tiers. Spark `percentile` and DuckDB
-    // `quantile_cont` share the linear-interpolation-at-rank-p(n-1)
-    // definition; round(6) absorbs the last-ulp interpolation arithmetic.
-    (s, d) => ev(s, d)
-      .groupBy(col("user_id"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(
-        round(expr("percentile(value, 0.5)"), 6).as("p50"),
-        round(expr("percentile(value, 0.95)"), 6).as("p95"),
-        count(lit(1)).as("n")),
-    Some("""SELECT user_id, strftime(ts, '%Y-%m-%d') AS day,
-           |  round(quantile_cont(value, 0.5), 6) AS p50,
-           |  round(quantile_cont(value, 0.95), 6) AS p95,
-           |  CAST(count(*) AS BIGINT) AS n
-           |FROM events GROUP BY 1, 2""".stripMargin))
-
-  /** q29's filter constants, computed ONCE with the exact code path the
-    * engine's registry op uses (param string → toDouble → butter →
-    * sosfiltZi), then inlined into the oracle as shortest-round-trip
-    * decimal literals (Double.toString ↔ DuckDB strtod are both
-    * correctly-rounded, so the constants are bit-identical cross-engine).
-    */
-  private lazy val q29Filter: (graft.kernel.Filter.Sos, Array[Double], String) = {
-    val freqStr = (1.0 / 43200).toString          // highpass cutoff, Hz (12 h period)
-    val fs = 1e6 / 3600000000L                    // what perKeyKernel computes for an hourly grid
-    val wn = freqStr.toDouble / (fs / 2)
-    val sos = graft.kernel.Filter.butter(2, Array(wn), "highpass")
-    require(sos.length == 1)
-    (sos(0), graft.kernel.Filter.sosfiltZi(sos)(0), freqStr)
-  }
-
-  val q29 = Q("q29_filtfilt",
-    // the zero-phase Butterworth IIR filter — long claimed "not
-    // SQL-expressible" — as a HARD oracle: filter DESIGN math stays in
-    // Scala (constants inlined as round-trip literals), and the oracle
-    // replays only scipy-semantics sosfiltfilt mechanics: odd extension,
-    // zi-seeded forward recurrence, reversal, zi-seeded backward
-    // recurrence, crop. Identical IEEE expression trees per step on
-    // identical doubles → BIT-exact output, no rounding. Engine side runs
-    // the real user surface (Preprocess registry 'filter' via
-    // perKeyKernel) on gap-filled hourly counts. The oracle fixes
-    // padlen = 9 (valid whenever every series is longer than 10 samples —
-    // the kernel's min(9, n-1) branch); a guard empties the output and
-    // fails the gate loudly if any series is ever that short.
-    (s, d) => {
-      val (_, _, freqStr) = q29Filter
-      val b = ev(s, d).where(col("user_id").isin(1L, 2L, 3L))
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("c"))
-      val spans = b.groupBy(col("user_id")).agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-      val grid = spans.select(col("user_id"),
-        explode(expr("sequence(h0, h1, interval 1 hour)")).as("ts"))
-      val series = grid
-        .join(b, grid("user_id") === b("user_id") && grid("ts") === b("h"), "left")
-        .select(grid("user_id").cast("string").as("conv_id"),
-          lit("hourly_events").as("metric"), grid("ts"),
-          coalesce(col("c"), lit(0L)).cast("double").as("value"))
-      graft.ops.Preprocess(series, Seq("filter" ->
-          Map("type" -> "highpass", "freq" -> freqStr, "order" -> "2")))
-        .select(col("conv_id").cast("long").as("user_id"), col("ts"),
-          col("value").as("filtered"))
-        .transform(x => ntz(x, "ts"))
-    },
-    Some {
-      val (sos, zi, _) = q29Filter
-      val (b0, b1, b2, a1, a2) = (sos.b0.toString, sos.b1.toString, sos.b2.toString,
-        sos.a1.toString, sos.a2.toString)
-      val (z0c, z1c) = (zi(0).toString, zi(1).toString)
-      s"""WITH RECURSIVE bb AS MATERIALIZED (SELECT user_id, date_trunc('hour', ts) AS h, count(*) AS c
-         |  FROM events WHERE user_id IN (1, 2, 3) GROUP BY 1, 2),
-         |sp AS (SELECT user_id, min(h) AS h0, max(h) AS h1 FROM bb GROUP BY 1),
-         |gr AS (SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS ts FROM sp),
-         |x AS MATERIALIZED (SELECT gr.user_id, gr.ts,
-         |    row_number() OVER (PARTITION BY gr.user_id ORDER BY gr.ts) - 1 AS i,
-         |    CAST(coalesce(bb.c, 0) AS DOUBLE) AS v
-         |  FROM gr LEFT JOIN bb ON gr.user_id = bb.user_id AND gr.ts = bb.h),
-         |nn AS MATERIALIZED (SELECT user_id, count(*) AS n FROM x GROUP BY 1),
-         |pd AS (SELECT unnest(generate_series(0, 8)) AS p),
-         |ext AS MATERIALIZED (
-         |  SELECT nn.user_id, pd.p AS i, 2 * x0.v - xr.v AS v
-         |  FROM nn JOIN pd ON true
-         |  JOIN x x0 ON x0.user_id = nn.user_id AND x0.i = 0
-         |  JOIN x xr ON xr.user_id = nn.user_id AND xr.i = 9 - pd.p
-         |  UNION ALL SELECT user_id, i + 9, v FROM x
-         |  UNION ALL
-         |  SELECT nn.user_id, nn.n + 9 + pd.p, 2 * xl.v - xr.v
-         |  FROM nn JOIN pd ON true
-         |  JOIN x xl ON xl.user_id = nn.user_id AND xl.i = nn.n - 1
-         |  JOIN x xr ON xr.user_id = nn.user_id AND xr.i = nn.n - 2 - pd.p),
-         |fwd(user_id, i, y, z0, z1) AS (
-         |  SELECT e.user_id, 0, $b0 * e.v + $z0c * e.v,
-         |    $b1 * e.v - $a1 * ($b0 * e.v + $z0c * e.v) + $z1c * e.v,
-         |    $b2 * e.v - $a2 * ($b0 * e.v + $z0c * e.v)
-         |  FROM ext e WHERE e.i = 0
-         |  UNION ALL
-         |  SELECT user_id, i, y, $b1 * v - $a1 * y + z1p, $b2 * v - $a2 * y FROM (
-         |    SELECT s.user_id, s.i + 1 AS i, e.v AS v, $b0 * e.v + s.z0 AS y, s.z1 AS z1p
-         |    FROM fwd s
-         |    JOIN nn ON nn.user_id = s.user_id
-         |    JOIN ext e ON e.user_id = s.user_id AND e.i = s.i + 1
-         |    WHERE s.i < nn.n + 17) q),
-         |fr AS MATERIALIZED (SELECT f.user_id, nn.n + 17 - f.i AS i, f.y AS v
-         |  FROM fwd f JOIN nn ON nn.user_id = f.user_id),
-         |bwd(user_id, i, y, z0, z1) AS (
-         |  SELECT e.user_id, 0, $b0 * e.v + $z0c * e.v,
-         |    $b1 * e.v - $a1 * ($b0 * e.v + $z0c * e.v) + $z1c * e.v,
-         |    $b2 * e.v - $a2 * ($b0 * e.v + $z0c * e.v)
-         |  FROM fr e WHERE e.i = 0
-         |  UNION ALL
-         |  SELECT user_id, i, y, $b1 * v - $a1 * y + z1p, $b2 * v - $a2 * y FROM (
-         |    SELECT s.user_id, s.i + 1 AS i, e.v AS v, $b0 * e.v + s.z0 AS y, s.z1 AS z1p
-         |    FROM bwd s
-         |    JOIN nn ON nn.user_id = s.user_id
-         |    JOIN fr e ON e.user_id = s.user_id AND e.i = s.i + 1
-         |    WHERE s.i < nn.n + 17) q)
-         |SELECT b.user_id, x.ts, b.y AS filtered
-         |FROM bwd b
-         |JOIN nn ON nn.user_id = b.user_id
-         |JOIN x ON x.user_id = b.user_id AND x.i = nn.n + 17 - b.i - 9
-         |WHERE nn.n + 17 - b.i BETWEEN 9 AND nn.n + 8
-         |  AND (SELECT min(n) FROM nn) > 9""".stripMargin
-    })
-
-  val q23 = Q("q23_lttb_downsample",
-    (s, d) => {
-      val pts = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
-        lit("value").as("metric"), col("ts"), col("value"))
-      Rollup.lttbTier(pts, 50)
-        .select(col("conv_id").cast("long").as("user_id"), col("ts"), col("value"))
-        .transform(d => ntz(d, "ts"))
-    },
-    // LTTB as a HARD oracle via a recursive CTE: bucket boundaries and the
-    // next-bucket centroids are selection-INDEPENDENT (precomputed in `bk`/
-    // `bkavg` with left-fold list_sum matching the kernel's ascending
-    // accumulation), so only the 48-step argmax chain is sequential — the
-    // recursive term advances every user one bucket per iteration, with
-    // row_number(area DESC, i ASC) reproducing the kernel's first-strict-max
-    // tie-break exactly (identical IEEE expression tree on both sides — no
-    // FFT noise here, unlike q57). Engine runs the hierarchical two-stage
-    // tier; stage 1 (per-day chunks) is the algorithm's own n <= threshold
-    // identity branch at every driver SF (max 11 points/chunk vs 50), which
-    // the `guard` CTE enforces: any over-threshold chunk empties the oracle
-    // and fails the gate LOUDLY instead of silently diverging.
-    Some("""WITH RECURSIVE
-           |pts AS (
-           |  SELECT user_id,
-           |    row_number() OVER (PARTITION BY user_id ORDER BY ts, value) - 1 AS i,
-           |    CAST(epoch_us(ts) AS DOUBLE) AS x, value AS y, ts, value AS v
-           |  FROM events),
-           |guard AS (SELECT max(c) AS m FROM (
-           |  SELECT count(*) AS c FROM events GROUP BY user_id, date_trunc('day', ts)) t),
-           |nn AS (SELECT user_id, count(*) AS n FROM pts GROUP BY 1),
-           |big AS (SELECT user_id, n, (n - 2) / CAST(48 AS DOUBLE) AS bs FROM nn WHERE n > 50),
-           |bk AS (
-           |  SELECT b.user_id, g.i,
-           |    CAST(trunc(g.i * b.bs) AS INT) + 1 AS b_start,
-           |    least(CAST(trunc((g.i + 1) * b.bs) AS INT) + 1, b.n - 1) AS b_end,
-           |    least(CAST(trunc((g.i + 1) * b.bs) AS INT) + 1, b.n - 1) AS c_start,
-           |    least(CAST(trunc((g.i + 2) * b.bs) AS INT) + 1, b.n) AS c_end
-           |  FROM big b CROSS JOIN (SELECT unnest(generate_series(0, 47)) AS i) g),
-           |bkavg AS (
-           |  SELECT bk.user_id, bk.i, bk.b_start, bk.b_end,
-           |    list_sum(list(p.x ORDER BY p.i)) / (bk.c_end - bk.c_start) AS avg_x,
-           |    list_sum(list(p.y ORDER BY p.i)) / (bk.c_end - bk.c_start) AS avg_y
-           |  FROM bk JOIN pts p ON p.user_id = bk.user_id AND p.i >= bk.c_start AND p.i < bk.c_end
-           |  GROUP BY 1, 2, 3, 4, bk.c_end, bk.c_start),
-           |st(user_id, i, a) AS (
-           |  SELECT user_id, 0, 0 FROM big
-           |  UNION ALL
-           |  SELECT user_id, i, a FROM (
-           |    SELECT s.user_id, s.i + 1 AS i, p.i AS a,
-           |      row_number() OVER (PARTITION BY s.user_id, s.i ORDER BY
-           |        abs((pa.x - k.avg_x) * (p.y - pa.y) - (pa.x - p.x) * (k.avg_y - pa.y)) DESC,
-           |        p.i ASC) AS rk
-           |    FROM st s
-           |    JOIN bkavg k ON k.user_id = s.user_id AND k.i = s.i
-           |    JOIN pts pa ON pa.user_id = s.user_id AND pa.i = s.a
-           |    JOIN pts p ON p.user_id = s.user_id AND p.i >= k.b_start AND p.i < k.b_end
-           |    WHERE s.i < 48) q
-           |  WHERE rk = 1),
-           |sel AS (
-           |  SELECT user_id, a AS i FROM st WHERE i >= 1
-           |  UNION ALL SELECT user_id, 0 FROM big
-           |  UNION ALL SELECT user_id, n - 1 FROM big),
-           |keep AS (
-           |  SELECT p.user_id, p.ts, p.v AS value FROM sel JOIN pts p USING (user_id, i)
-           |  UNION ALL
-           |  SELECT p.user_id, p.ts, p.v FROM pts p JOIN nn USING (user_id) WHERE nn.n <= 50)
-           |SELECT user_id, ts, value FROM keep WHERE (SELECT m FROM guard) <= 50""".stripMargin))
-
-  // ---------------------------------------------------------------- C. documents
-
-  // codegen byte-pass tokenizer, bit-equal to split(trim(text), '\\s+')
-  // (graft.functions.TokenArray; registered in docs())
-  private val tokensSpark = "graft_tokens(text)"
-  private val tokensDuck = raw"regexp_split_to_array(trim(text), '\s+')"
-
-  val q30 = Q("q30_dedup_exact",
-    (s, d) => graft.ops.Dedup.exact(docs(s, d), "doc_id", "text"),
-    Some("SELECT md5(text) AS h, count(*) AS n, min(doc_id) AS keeper FROM documents GROUP BY 1"))
-
-  val q31 = Q("q31_dedup_prefix",
-    (s, d) => graft.ops.Dedup.prefixFingerprint(docs(s, d), "doc_id", "text", k = 5),
-    Some(s"""SELECT md5(array_to_string($tokensDuck[1:5], ' ')) AS fp,
-            | count(*) AS n, min(doc_id) AS keeper
-            |FROM documents GROUP BY 1 HAVING count(*) > 1""".stripMargin))
-
-  val q32 = Q("q32_token_count",
-    (s, d) => docs(s, d).select(col("doc_id"), expr(s"size($tokensSpark)").as("n_tokens")),
-    Some(s"SELECT doc_id, len($tokensDuck) AS n_tokens FROM documents"))
-
-  val q33 = Q("q33_quality_score",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      expr(s"size($tokensSpark)").as("n_tokens"),
-      length(col("text")).as("n_chars_m"),
-      expr(s"size(filter($tokensSpark, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in'))").as("n_stop"),
-      (expr(s"size(filter($tokensSpark, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in'))") * 5
-        >= expr(s"size($tokensSpark)")).as("is_quality")),
-    Some(s"""SELECT doc_id, len($tokensDuck) AS n_tokens, length(text) AS n_chars_m,
-            | len(list_filter($tokensDuck, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS n_stop,
-            | len(list_filter($tokensDuck, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) * 5
-            |   >= len($tokensDuck) AS is_quality
-            |FROM documents""".stripMargin))
-
-  val q34 = Q("q34_lang_guess",
-    (s, d) => docs(s, d).select(
-      col("doc_id"),
-      expr(s"size(filter($tokensSpark, x -> x = 'the' OR x = 'a' OR x = 'of'))").as("en_n"),
-      expr(s"size(filter($tokensSpark, x -> x = 'scan' OR x = 'join' OR x = 'query'))").as("sql_n"))
-      .withColumn("pred", when(col("en_n") >= col("sql_n"), lit("en")).otherwise(lit("dsl"))),
-    Some(s"""SELECT doc_id,
-            | len(list_filter($tokensDuck, x -> x = 'the' OR x = 'a' OR x = 'of')) AS en_n,
-            | len(list_filter($tokensDuck, x -> x = 'scan' OR x = 'join' OR x = 'query')) AS sql_n,
-            | CASE WHEN len(list_filter($tokensDuck, x -> x = 'the' OR x = 'a' OR x = 'of'))
-            |   >= len(list_filter($tokensDuck, x -> x = 'scan' OR x = 'join' OR x = 'query'))
-            |  THEN 'en' ELSE 'dsl' END AS pred
-            |FROM documents""".stripMargin))
-
-  val q35 = Q("q35_fingerprint",
-    (s, d) => docs(s, d).select(col("doc_id"),
-      md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("fp")),
-    Some(raw"SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM documents"))
-
-  /** BPE-ish regex tokenization (the GPT-2 pre-tokenizer's class structure
-    * — letter runs | digit runs | punctuation runs — without its
-    * lookahead, so the pattern is portable across Java regex and RE2).
-    * The alternatives match disjoint character classes, so alternation
-    * order cannot differ between engines.
-    */
-  private val bpePattern = raw"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+"
-
-  val q45 = Q("q45_bpe_tokens",
-    (s, d) => docs(s, d).select(col("doc_id"),
-      expr(s"size(regexp_extract_all(text, '${bpePattern.replace("\\", "\\\\")}', 0))").as("n_bpe"),
-      expr(s"size($tokensSpark)").as("n_ws"))
-      .withColumn("bpe_per_ws",
-        when(col("n_ws") > 0, round(col("n_bpe") / col("n_ws"), 6))),
-    Some(s"""SELECT doc_id,
-            | len(regexp_extract_all(text, '$bpePattern')) AS n_bpe,
-            | len($tokensDuck) AS n_ws,
-            | CASE WHEN len($tokensDuck) > 0
-            |  THEN round(len(regexp_extract_all(text, '$bpePattern'))
-            |    / CAST(len($tokensDuck) AS DOUBLE), 6) END AS bpe_per_ws
-            |FROM documents""".stripMargin))
-
-  val q36 = Q("q36_ngram_jaccard",
-    // DF cap 100: a stop-shingle in >100 docs would make the self-join
-    // quadratic on one key; the cap applies identically in the oracle
-    (s, d) => graft.ops.Dedup.ngramJaccard(docs(s, d), "doc_id", "text",
-      n = 3, minJaccard = 0.2, dfCap = 100),
-    Some(s"""WITH toks AS (SELECT doc_id, $tokensDuck AS a FROM documents WHERE len($tokensDuck) >= 3),
-            |sh AS (SELECT DISTINCT doc_id,
-            |  unnest(list_transform(generate_series(1, len(a) - 2),
-            |    i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS sh FROM toks),
-            |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-            |rare AS (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= 100),
-            |shc AS (SELECT sh.doc_id, sh.sh FROM sh JOIN rare USING (sh)),
-            |pairs AS (SELECT x.doc_id AS d1, y.doc_id AS d2, count(*) AS inter
-            |  FROM shc x JOIN shc y ON x.sh = y.sh AND x.doc_id < y.doc_id GROUP BY 1, 2)
-            |SELECT d1, d2, inter,
-            |  inter / (s1.n_sh + s2.n_sh - inter) AS jaccard
-            |FROM pairs JOIN sizes s1 ON s1.doc_id = d1 JOIN sizes s2 ON s2.doc_id = d2
-            |WHERE inter / (s1.n_sh + s2.n_sh - inter) >= 0.2""".stripMargin))
-
-  val q37 = Q("q37_minhash_lsh",
-    // min-wise hashing in the STRING domain (lexicographic min of
-    // md5(seed || shingle)) → identical in any engine with md5; 8 hashes,
-    // 4 bands of 2 → candidate pairs sharing >= 1 band. The band-key
-    // encodings differ between engine and oracle but both are injective on
-    // the sorted member hashes, so the candidate SETS are equal.
-    (s, d) => graft.ops.Dedup.minhashLshCandidates(docs(s, d), "doc_id", "text",
-      n = 3, nHashes = 8, rowsPerBand = 2),
-    Some(s"""WITH toks AS (SELECT doc_id, $tokensDuck AS a FROM documents WHERE len($tokensDuck) >= 3),
-            |sh AS (SELECT DISTINCT doc_id,
-            |  unnest(list_transform(generate_series(1, len(a) - 2),
-            |    i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS sh FROM toks),
-            |sig AS (SELECT doc_id, seed, min(md5(seed || '|' || sh)) AS h
-            |  FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) GROUP BY 1, 2),
-            |bands AS (SELECT doc_id, seed // 2 AS band,
-            |  md5(string_agg(h, '' ORDER BY h)) AS bv FROM sig GROUP BY 1, 2)
-            |SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-            |FROM bands x JOIN bands y
-            |  ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id""".stripMargin))
-
-  /** DuckDB ±1 for simhash bit j (1-based) of an md5 hex column `h` —
-    * bit-level extraction matching Dedup.bitSign: hex digit (j-1)/4+1,
-    * weight 2^(3-(j-1)%4).
-    */
-  private def duckBitSign(j: Int): String = {
-    val dig = (j - 1) / 4 + 1
-    val w = 1 << (3 - (j - 1) % 4)
-    s"(CASE WHEN ((strpos('0123456789abcdef', substr(h, $dig, 1)) - 1) // $w) % 2 = 1 THEN 1 ELSE -1 END)"
-  }
-  private val simhashBits = 64
-
-  val q38 = Q("q38_simhash",
-    // 64-bit simhash: bit j = sign of sum over token occurrences of ±1,
-    // where the ±1 is bit j of md5(token)'s 128-bit value (bit-level, so
-    // 16-bit LSH bands have 2^16 bucket values — see q39)
-    (s, d) => graft.ops.Dedup.simhash(docs(s, d), "doc_id", "text", bits = simhashBits),
-    Some(s"""WITH toks0 AS (SELECT doc_id, unnest($tokensDuck) AS t FROM documents),
-            |toks AS (SELECT doc_id, md5(t) AS h FROM toks0),
-            |s AS (SELECT doc_id,
-            |  ${(1 to simhashBits).map(j => s"sum(${duckBitSign(j)}) AS s$j").mkString(", ")}
-            |  FROM toks GROUP BY 1)
-            |SELECT doc_id, ${(1 to simhashBits).map(j => s"CASE WHEN s$j >= 0 THEN '1' ELSE '0' END").mkString(" || ")} AS simhash
-            |FROM s""".stripMargin))
-
-  val q39 = Q("q39_simhash_candidates",
-    // near-dup candidates from the 64-bit simhash: 4 x 16-bit bands,
-    // self-join on band equality (a pair collides iff it shares at least
-    // one exact band — complete for Hamming <= nBands-1 = 3 by pigeonhole,
-    // and each band has 2^16 bucket values so buckets hold ~n/65536 docs
-    // plus real near-dup clusters, never the n/16 of a 4-bit band),
-    // then verify Hamming <= 3
-    (s, d) => graft.ops.Dedup.simhashCandidates(q38.fn(s, d),
-      bits = simhashBits, nBands = 4, maxHamming = 3),
-    Some {
-      val hamming = (1 to simhashBits)
-        .map(j => s"(CASE WHEN substr(h1, $j, 1) <> substr(h2, $j, 1) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH toks0 AS (SELECT doc_id, unnest($tokensDuck) AS t FROM documents),
-         |toks AS (SELECT doc_id, md5(t) AS h FROM toks0),
-         |sums AS (SELECT doc_id,
-         |  ${(1 to simhashBits).map(j => s"sum(${duckBitSign(j)}) AS s$j").mkString(", ")}
-         |  FROM toks GROUP BY 1),
-         |sig AS (SELECT doc_id, ${(1 to simhashBits).map(j => s"CASE WHEN s$j >= 0 THEN '1' ELSE '0' END").mkString(" || ")} AS simhash FROM sums),
-         |bands AS (SELECT doc_id, simhash, b AS band, substr(simhash, b * 16 + 1, 16) AS bits
-         |  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2,
-         |    x.simhash AS h1, y.simhash AS h2
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bits = y.bits AND x.doc_id < y.doc_id)
-         |SELECT d1, d2, $hamming AS hamming
-         |FROM cand
-         |WHERE $hamming <= 3""".stripMargin
-    })
-
-  // ---------------------------------------------------------------- D. embeddings
 
   // codegen'd dot kernel, bit-equal to the aggregate(zip_with(...)) fold
   // it replaces (graft.functions.DotProduct; registered in emb())
-  private val dotSpark = "graft_dot(%s, %s)"
-  private def vCast = "transform(embedding, x -> cast(x as double))"
-
-  val q40 = Q("q40_knn_brute",
-    (s, d) => {
-      val e = emb(s, d).select(col("vec_id"), expr(vCast).as("v"))
-      val q = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val dot = expr(dotSpark.format("qv", "v"))
-      val nq = expr(dotSpark.format("qv", "qv"))
-      val nv = expr(dotSpark.format("v", "v"))
-      val scored = e.crossJoin(broadcast(q))
-        .where(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("neighbor_id"),
-          round(dot / (sqrt(nq) * sqrt(nv)), 9).as("cosine"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-      scored.withColumn("rk", row_number().over(w)).where(col("rk") <= 3)
-    },
-    Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |  FROM embeddings),
-           |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-           |scored AS (SELECT q_id, e.vec_id AS neighbor_id,
-           |  round(list_sum(list_transform(range(1, 65), i -> qv[i] * v[i]))
-           |   / (sqrt(list_sum(list_transform(range(1, 65), i -> qv[i] * qv[i])))
-           |      * sqrt(list_sum(list_transform(range(1, 65), i -> v[i] * v[i])))), 9) AS cosine
-           |  FROM e CROSS JOIN q WHERE e.vec_id <> q_id)
-           |SELECT q_id, neighbor_id, cosine, rk FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY q_id
-           |    ORDER BY cosine DESC, neighbor_id) AS rk FROM scored)
-           |WHERE rk <= 3""".stripMargin))
-
-  val q41 = Q("q41_embedding_norms",
-    (s, d) => emb(s, d).select(col("vec_id"), col("label"),
-      round(sqrt(expr(dotSpark.format(vCast, vCast))), 9).as("l2_norm")),
-    Some("""SELECT vec_id, label,
-           | round(sqrt(list_sum(list_transform(range(1, 65),
-           |   i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))), 9) AS l2_norm
-           |FROM embeddings""".stripMargin))
-
-  /** Deterministic random-hyperplane signs: plane j, dim i → ±1 from the
-    * first hex digit of md5("j:i") — computable identically in Scala here
-    * and inlined as literals in the oracle SQL.
-    */
-  private lazy val lshPlanes: Array[Array[Int]] = graft.ops.Similarity.planes(8, 64)
-
-  val q42 = Q("q42_lsh_buckets",
-    (s, d) => {
-      val e = emb(s, d).select(col("vec_id"), expr(vCast).as("v"))
-      val bitExprs = lshPlanes.map { plane =>
-        val planeLit = plane.mkString("array(", "D,", "D)")
-        when(expr(dotSpark.format("v", planeLit)) >= 0, lit("1")).otherwise(lit("0"))
-      }
-      e.select(col("vec_id"), concat(bitExprs.toIndexedSeq: _*).as("bucket"))
-    },
-    Some {
-      val bitSqls = lshPlanes.map { plane =>
-        val planeLit = plane.mkString("[", ".0,", ".0]")
-        s"""CASE WHEN list_sum(list_transform(range(1, 65),
-           |  i -> CAST(embedding[i] AS DOUBLE) * ($planeLit)[i])) >= 0
-           | THEN '1' ELSE '0' END""".stripMargin
-      }
-      s"SELECT vec_id, ${bitSqls.mkString(" || ")} AS bucket FROM embeddings"
-    })
-
-  val q43 = Q("q43_lsh_candidates",
-    (s, d) => {
-      val b = q42.fn(s, d)
-      b.as("x").join(b.as("y"),
-          col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"), col("x.bucket").as("bucket"))
-    },
-    q42.oracle.map(bucketSql =>
-      s"""WITH b AS ($bucketSql)
-         |SELECT x.vec_id AS v1, y.vec_id AS v2, x.bucket AS bucket
-         |FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id""".stripMargin))
-
-  val q44 = Q("q44_ivf_ann",
-    // IVF-style ANN, the scale path beyond brute force (q40) and
-    // hyperplane LSH (q42/q43) — see graft.ops.Similarity.ivfTopK
-    (s, d) => graft.ops.Similarity.ivfTopK(emb(s, d), queryIds = Seq(10L, 11L, 12L),
-      k = 3, nCentroids = 8, nProbe = 2),
-    Some {
-      def dotD(a: String, b: String) =
-        s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
-      def cosD(a: String, b: String) =
-        s"${dotD(a, b)} / (sqrt(${dotD(a, a)}) * sqrt(${dotD(b, b)}))"
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-         |ac AS (SELECT e.vec_id, e.v, c.cent_id, ${cosD("e.v", "c.cv")} AS cos
-         |  FROM e CROSS JOIN c),
-         |assigned AS (SELECT vec_id, v, cent_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cent_id) AS rk
-         |  FROM ac) WHERE rk = 1),
-         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (10, 11, 12)),
-         |qc AS (SELECT q_id, qv, cent_id, ${cosD("qv", "cv")} AS cos FROM q CROSS JOIN c),
-         |probed AS (SELECT q_id, qv, cent_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, cent_id) AS rk
-         |  FROM qc) WHERE rk <= 2),
-         |cand AS (SELECT q_id, a.vec_id AS neighbor_id,
-         |    round(${cosD("qv", "a.v")}, 9) AS cosine
-         |  FROM probed p JOIN assigned a ON a.cent_id = p.cent_id
-         |  WHERE a.vec_id <> p.q_id)
-         |SELECT q_id, neighbor_id, cosine, rk FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rk
-         |  FROM cand) WHERE rk <= 3""".stripMargin
-    })
-
-  val q46 = Q("q46_embedding_neardup",
-    // embedding-cosine near-dup: LSH-bucket candidates verified by exact
-    // cosine — the dedup-by-embedding mode (graft.ops.Similarity
-    // .cosineNearDup); keeper = lower vec_id
-    (s, d) => graft.ops.Similarity.cosineNearDup(emb(s, d), minCosine = 0.2),
-    q42.oracle.map { bucketSql =>
-      def dotD(a: String, b: String) =
-        s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
-      s"""WITH b AS ($bucketSql),
-         |cand AS (SELECT x.vec_id AS v1, y.vec_id AS v2
-         |  FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |sc AS (SELECT v1 AS keeper, v2 AS dup,
-         |    round(${dotD("ea.v", "eb.v")}
-         |      / (sqrt(${dotD("ea.v", "ea.v")}) * sqrt(${dotD("eb.v", "eb.v")})), 9) AS cosine
-         |  FROM cand JOIN e ea ON ea.vec_id = v1 JOIN e eb ON eb.vec_id = v2)
-         |SELECT keeper, dup, cosine FROM sc WHERE cosine >= 0.2""".stripMargin
-    })
-
-  val q47 = Q("q47_dedup_clusters",
-    // candidate pairs → per-document cluster assignment (cluster_id = the
-    // smallest doc id reachable through the q37 MinHash-LSH pair graph;
-    // singletons map to themselves). Engine side: alternating large-star/
-    // small-star contraction — O(log² n) bounded shuffles, components never
-    // materialized on one node. Oracle side: transitive closure via a
-    // recursive CTE — feasible only at test scale, which is exactly why the
-    // engine uses star contraction instead.
-    (s, d) => graft.ops.Dedup.clusters(q37.fn(s, d), "d1", "d2",
-      docs(s, d), "doc_id"),
-    q37.oracle.map { candSql =>
-      s"""WITH RECURSIVE cand AS ($candSql),
-         |e AS (SELECT d1 AS a, d2 AS b FROM cand
-         |  UNION SELECT d2, d1 FROM cand),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.a, reach.r FROM e JOIN reach ON reach.id = e.b)
-         |SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id""".stripMargin
-    })
-
-  val q48 = Q("q48_ann_recall",
-    // evaluation surface for the ANN family: recall@3 of LSH retrieval
-    // (q42 buckets, Hamming<=1 multi-probe: the query's own bucket + its 8
-    // one-bit-flip neighbors — probe count x9, bucket space unchanged, so
-    // the pattern stays output-bounded at corpus scale) ranked by exact
-    // cosine, against the brute-force truth (q40). n_cand shows the
-    // retrieval funnel; on near-orthogonal synthetic vectors recall is
-    // legitimately low — quantifying that IS the metric's job.
-    (s, d) => {
-      val e = emb(s, d).select(col("vec_id"), expr(vCast).as("v"))
-      val buckets = q42.fn(s, d)
-      val probeExpr = // j=0: exact bucket; j=1..8: flip bit j
-        """explode(transform(sequence(0, 8), j -> CASE WHEN j = 0 THEN bucket
-          |  ELSE concat(substring(bucket, 1, j - 1),
-          |    CASE WHEN substring(bucket, j, 1) = '1' THEN '0' ELSE '1' END,
-          |    substring(bucket, j + 1, 8 - j)) END))""".stripMargin
-      val qb = buckets.where(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), expr(probeExpr).as("bucket"))
-      val cand = qb.join(buckets, Seq("bucket"))
-        .where(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"))
-      val scored = cand
-        .join(e.select(col("vec_id").as("q_id"), col("v").as("qv")), Seq("q_id"))
-        .join(e, Seq("vec_id"))
-        .select(col("q_id"), col("vec_id").as("neighbor_id"),
-          round(expr(dotSpark.format("qv", "v")) /
-            (sqrt(expr(dotSpark.format("qv", "qv"))) * sqrt(expr(dotSpark.format("v", "v")))), 9)
-            .as("cosine"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-      val retr = scored.withColumn("rk", row_number().over(w)).where(col("rk") <= 3)
-        .select(col("q_id"), col("neighbor_id"), lit(1).as("hit"))
-      val nCand = cand.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
-      q40.fn(s, d).select(col("q_id"), col("neighbor_id"))
-        .join(retr, Seq("q_id", "neighbor_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))) / 3.0, 6).as("recall_at_3"))
-        .join(nCand, Seq("q_id"), "left")
-        .select(col("q_id"), coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-          col("recall_at_3"))
-    },
-    for { knnSql <- q40.oracle; bucketSql <- q42.oracle } yield {
-      s"""WITH truth AS ($knnSql),
-         |b AS ($bucketSql),
-         |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |qb AS (SELECT vec_id AS q_id,
-         |    CASE WHEN j = 0 THEN bucket
-         |      ELSE substr(bucket, 1, j - 1)
-         |        || (CASE WHEN substr(bucket, j, 1) = '1' THEN '0' ELSE '1' END)
-         |        || substr(bucket, j + 1, 8 - j) END AS bucket
-         |  FROM b CROSS JOIN (SELECT unnest(generate_series(0, 8)) AS j)
-         |  WHERE vec_id < 5),
-         |cand AS (SELECT q_id, b.vec_id FROM qb JOIN b USING (bucket)
-         |  WHERE b.vec_id <> qb.q_id),
-         |nc AS (SELECT q_id, count(*) AS n_cand FROM cand GROUP BY 1),
-         |scored AS (SELECT c.q_id, c.vec_id AS neighbor_id,
-         |  round(list_sum(list_transform(range(1, 65), i -> eq.v[i] * en.v[i]))
-         |   / (sqrt(list_sum(list_transform(range(1, 65), i -> eq.v[i] * eq.v[i])))
-         |      * sqrt(list_sum(list_transform(range(1, 65), i -> en.v[i] * en.v[i])))), 9) AS cosine
-         |  FROM cand c JOIN e eq ON eq.vec_id = c.q_id JOIN e en ON en.vec_id = c.vec_id),
-         |retr AS (SELECT q_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY cosine DESC, neighbor_id) AS rk FROM scored) WHERE rk <= 3),
-         |rec AS (SELECT t.q_id, round(count(r.neighbor_id) / 3.0, 6) AS recall_at_3
-         |  FROM truth t LEFT JOIN retr r
-         |    ON r.q_id = t.q_id AND r.neighbor_id = t.neighbor_id
-         |  GROUP BY 1)
-         |SELECT rec.q_id, CAST(coalesce(nc.n_cand, 0) AS BIGINT) AS n_cand, rec.recall_at_3
-         |FROM rec LEFT JOIN nc USING (q_id)""".stripMargin
-    })
-
-  // ---------------------------------------------------------------- E. flagship pipeline
-
-  val q50 = Q("q50_xcorr_e2e",
-    (s, d) => {
-      // the FULL flagship composition — transcripts-shaped input →
-      // Ingest.series (gap-fill) → Correlate.windows → allPairs →
-      // ccPairs FFT kernel — over the STORED events table in an integer
-      // domain (normalize=false, integral hourly counts → the raw CC
-      // estimate rounds exactly to the oracle's time-domain lag sum).
-      // This hard-checks the two stages q53 doesn't: Ingest.series'
-      // gap-fill (sparse window assembly must reconstruct the zeros
-      // identically) and allPairs' triangular pair generation. The
-      // transcripts variant of the same composition stays golden-tested
-      // in PipelineSpec and measured in Bench.ccThroughput/Scaling.
-      import s.implicits._
-      val t = ev(s, d).where(col("user_id").isin(1L, 2L, 3L))
-        .select(col("user_id").cast("string").as("conv_id"), col("ts"),
-          col("event_type").as("text")) // single-token texts: token_volume == turn_rate
-      val series = Ingest.series(t, 3600)
-      val wins = Correlate.windows(series, windowSec = 86400, strideSec = 43200, stepSec = 3600)
-      val pairs = Correlate.allPairs(series)
-      Correlate.ccPairs(wins, pairs, stepSec = 3600, windowSec = 86400, normalize = false)
-        .map(r => (r.pair, r.metric, r.win_start, r.cc))
-        .flatMap { case (p, m, w, arr) =>
-          val zero = arr.length / 2
-          (-4 to 4).map(k => (p, m, w, k, math.round(arr(zero + k))))
-        }
-        .toDF("pair", "metric", "win_start", "lag_k", "cc_raw")
-        .transform(x => ntz(x, "win_start"))
-    },
-    Some("""WITH bth AS (SELECT user_id, date_trunc('hour', ts) AS h FROM events
-           |  WHERE user_id IN (1, 2, 3)),
-           |cnt AS (SELECT user_id, h, count(*) AS c FROM bth GROUP BY 1, 2),
-           |span AS (SELECT user_id, min(epoch(h)) AS t0, max(epoch(h)) AS t1 FROM bth GROUP BY 1),
-           |wins AS (SELECT user_id, unnest(generate_series(
-           |    CAST(ceil(t0 / 43200.0) AS BIGINT) * 43200,
-           |    CAST(floor((t1 - 86400 + 3600) / 43200.0) AS BIGINT) * 43200, 43200)) AS w
-           |  FROM span
-           |  WHERE CAST(ceil(t0 / 43200.0) AS BIGINT) * 43200
-           |    <= CAST(floor((t1 - 86400 + 3600) / 43200.0) AS BIGINT) * 43200),
-           |grid AS (SELECT user_id, w, unnest(generate_series(0, 23)) AS i FROM wins),
-           |vals AS (SELECT g.user_id, g.w, g.i, coalesce(c.c, 0) AS v
-           |  FROM grid g LEFT JOIN cnt c
-           |    ON c.user_id = g.user_id AND epoch(c.h) = g.w + g.i * 3600),
-           |prs AS (SELECT 1 AS ua, 2 AS ub UNION ALL SELECT 1, 3 UNION ALL SELECT 2, 3),
-           |mets AS (SELECT unnest(['turn_rate', 'token_volume']) AS metric),
-           |lags AS (SELECT unnest(generate_series(-4, 4)) AS k)
-           |SELECT ua || '-' || ub AS pair, metric, make_timestamp(a.w * 1000000) AS win_start,
-           |  lags.k AS lag_k, CAST(coalesce(sum(a.v * b.v), 0) AS BIGINT) AS cc_raw
-           |FROM prs
-           |JOIN vals a ON a.user_id = ua
-           |JOIN lags ON true
-           |JOIN vals b ON b.user_id = ub AND b.w = a.w AND b.i = a.i - lags.k
-           |CROSS JOIN mets
-           |GROUP BY 1, 2, 3, 4""".stripMargin))
-
-  val q51 = Q("q51_rollup_pipeline",
-    (s, d) => {
-      // the full 1m → 1h → 1d continuous-aggregate cascade over a STORED
-      // table, so the driver's DuckDB oracle can hard-check tier
-      // composition end-to-end (the oracle aggregates the raw events
-      // directly; equal iff all three tier folds compose exactly —
-      // the synthetic-transcript variant of this path stays golden-tested
-      // in PipelineSpec and measured in Bench)
-      val pts = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
-        lit("value").as("metric"), col("ts"), col("value"))
-      val (_, _, d1) = Rollup.cascade(pts)
-      d1.select(col("conv_id").cast("long").as("user_id"), col("chunk_start"),
-          col("n"), round(col("sum"), 6).as("sum_v"), col("min").as("min_v"),
-          col("max").as("max_v"), col("first").as("first_v"), col("last").as("last_v"))
-        .transform(x => ntz(x, "chunk_start"))
-    },
-    Some("""SELECT user_id, date_trunc('day', ts) AS chunk_start, count(*) AS n,
-           | round(sum(value), 6) AS sum_v, min(value) AS min_v, max(value) AS max_v,
-           | min_by(value, ts) AS first_v, max_by(value, ts) AS last_v
-           |FROM events GROUP BY 1, 2""".stripMargin))
-
-  val q53 = Q("q53_cc_windows",
-    (s, d) => {
-      // the DISTRIBUTED windowed-CC production path (Correlate.windows →
-      // broadcast pair join → mapPartitions FFT kernel) on a stored table,
-      // hard-checked against a time-domain DuckDB oracle: hourly event
-      // counts per user, 24 h windows at 12 h stride, raw (unnormalized)
-      // CC at lags -4..4. Counts are integral → the FFT estimate rounds
-      // exactly to the oracle's time-domain sum. The sparse window
-      // assembly doubles as the gap-filler: missing grid hours are exact
-      // zeros on both engines.
-      import s.implicits._
-      val cnt = ev(s, d).where(col("user_id").isin(1L, 2L, 3L))
-        .groupBy(col("user_id").cast("string").as("conv_id"),
-          date_trunc("hour", col("ts")).as("ts"))
-        .agg(count(lit(1)).cast("double").as("value"))
-        .withColumn("metric", lit("hourly_events"))
-        .select("conv_id", "metric", "ts", "value")
-      val wins = Correlate.windows(cnt, windowSec = 86400, strideSec = 43200, stepSec = 3600)
-      val pairs = Seq(("1", "2"), ("2", "3")).toDF("conv_a", "conv_b")
-      Correlate.ccPairs(wins, pairs, stepSec = 3600, windowSec = 86400, normalize = false)
-        .map(r => (r.pair, r.win_start, r.cc))
-        .flatMap { case (p, w, arr) =>
-          val zero = arr.length / 2
-          (-4 to 4).map(k => (p, w, k, math.round(arr(zero + k))))
-        }
-        .toDF("pair", "win_start", "lag_k", "cc_raw")
-        .transform(x => ntz(x, "win_start"))
-    },
-    Some("""WITH bth AS (SELECT user_id, date_trunc('hour', ts) AS h FROM events
-           |  WHERE user_id IN (1, 2, 3)),
-           |cnt AS (SELECT user_id, h, count(*) AS c FROM bth GROUP BY 1, 2),
-           |span AS (SELECT user_id, min(epoch(h)) AS t0, max(epoch(h)) AS t1 FROM bth GROUP BY 1),
-           |wins AS (SELECT user_id, unnest(generate_series(
-           |    CAST(ceil(t0 / 43200.0) AS BIGINT) * 43200,
-           |    CAST(floor((t1 - 86400 + 3600) / 43200.0) AS BIGINT) * 43200, 43200)) AS w
-           |  FROM span
-           |  WHERE CAST(ceil(t0 / 43200.0) AS BIGINT) * 43200
-           |    <= CAST(floor((t1 - 86400 + 3600) / 43200.0) AS BIGINT) * 43200),
-           |grid AS (SELECT user_id, w, unnest(generate_series(0, 23)) AS i FROM wins),
-           |vals AS (SELECT g.user_id, g.w, g.i, coalesce(c.c, 0) AS v
-           |  FROM grid g LEFT JOIN cnt c
-           |    ON c.user_id = g.user_id AND epoch(c.h) = g.w + g.i * 3600),
-           |prs AS (SELECT 1 AS ua, 2 AS ub UNION ALL SELECT 2, 3),
-           |lags AS (SELECT unnest(generate_series(-4, 4)) AS k)
-           |SELECT ua || '-' || ub AS pair, make_timestamp(a.w * 1000000) AS win_start,
-           |  lags.k AS lag_k, CAST(coalesce(sum(a.v * b.v), 0) AS BIGINT) AS cc_raw
-           |FROM prs
-           |JOIN vals a ON a.user_id = ua
-           |JOIN lags ON true
-           |JOIN vals b ON b.user_id = ub AND b.w = a.w AND b.i = a.i - lags.k
-           |GROUP BY 1, 2, 3""".stripMargin))
-
-  val q54 = Q("q54_tri_mirror",
-    (s, d) => {
-      // tri_mask / tri_mirror (reference computes the lower triangle of a
-      // symmetric matrix and mirrors it, /root/reference/xcorr/signal/
-      // tri.py:19-115): per-user day x day co-activity — engine computes
-      // day1 < day2 ONLY (half the kernel work) and unions the mirrored
-      // copy; the oracle computes both halves directly
-      val daily = ev(s, d).where(col("user_id") < 20)
-        .groupBy(col("user_id"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val lower = daily.as("a").join(daily.as("b"),
-          col("a.user_id") === col("b.user_id") && col("a.day") < col("b.day"))
-        .select(col("a.user_id").as("user_id"), col("a.day").as("day1"),
-          col("b.day").as("day2"), (col("a.n") * col("b.n")).as("prod"))
-      lower.unionByName(lower.select(col("user_id"), col("day2").as("day1"),
-        col("day1").as("day2"), col("prod")))
-    },
-    Some("""WITH dd AS (SELECT user_id, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n
-           |  FROM events WHERE user_id < 20 GROUP BY 1, 2)
-           |SELECT x.user_id, x.day AS day1, y.day AS day2,
-           |  CAST(x.n * y.n AS BIGINT) AS prod
-           |FROM dd x JOIN dd y ON x.user_id = y.user_id AND x.day <> y.day""".stripMargin))
-
-  /** Shared input for the signal-operator queries: gap-free hourly count
-    * series of users 1..3 (the sparse form — window assembly reconstructs
-    * the zeros, q53's oracle proves the equivalence).
-    */
-  /** Shared oracle fragment (q52/q56/q58): gap-filled hourly grid of
-    * per-user event counts assembled into 24 h windows at 12 h stride —
-    * the SQL mirror of `hourlySeries` + `Correlate.windows`. Pre-stripped;
-    * embed inside a stripMargin'd oracle (embedded lines carry no `|`).
-    */
-  private def hourlyGridCtes(filter: String): String =
-    s"""bth AS (SELECT user_id, date_trunc('hour', ts) AS h FROM events
-       |  WHERE $filter),
-       |cnt AS (SELECT user_id, h, count(*) AS c FROM bth GROUP BY 1, 2),
-       |span AS (SELECT user_id, min(epoch(h)) AS t0, max(epoch(h)) AS t1 FROM bth GROUP BY 1),
-       |wins AS (SELECT user_id, unnest(generate_series(
-       |    CAST(ceil(t0 / 43200.0) AS BIGINT) * 43200,
-       |    CAST(floor((t1 - 86400 + 3600) / 43200.0) AS BIGINT) * 43200, 43200)) AS w
-       |  FROM span
-       |  WHERE CAST(ceil(t0 / 43200.0) AS BIGINT) * 43200
-       |    <= CAST(floor((t1 - 86400 + 3600) / 43200.0) AS BIGINT) * 43200),
-       |grid AS (SELECT user_id, w, unnest(generate_series(0, 23)) AS i FROM wins),
-       |vals AS (SELECT g.user_id, g.w, g.i, CAST(coalesce(c.c, 0) AS DOUBLE) AS v
-       |  FROM grid g LEFT JOIN cnt c
-       |    ON c.user_id = g.user_id AND epoch(c.h) = g.w + g.i * 3600)""".stripMargin
-
-  private def hourlySeries(s: SparkSession, d: String, users: Long*): DataFrame =
-    ev(s, d).where(col("user_id").isin(users: _*))
-      .groupBy(col("user_id").cast("string").as("conv_id"),
-        date_trunc("hour", col("ts")).as("ts"))
-      .agg(count(lit(1)).cast("double").as("value"))
-      .withColumn("metric", lit("hourly_events"))
-      .select("conv_id", "metric", "ts", "value")
-
-  val q55 = Q("q55_postprocess_chain",
-    (s, d) => {
-      // the full postprocess chain (unbias → demean → taper → timeshift →
-      // highpass filtfilt → taper → per-pair lag-window) + snr over
-      // DISTRIBUTED windowed CC on a stored table — HARD-oracled since r5:
-      // the oracle chains the stage mechanics already proven in isolation
-      // (q53's time-domain CC sums, q21's weight algebra, q64's Hann edge
-      // factors, q65's exact-12-step roll, q29's zi-seeded filtfilt
-      // recursion at the SAME inlined SOS constants — wn = (1/43200) /
-      // ((1/3600)/2) is bit-identical to q29Filter's) into one composed
-      // query. The chain input (FFT-normalized CC) carries ~1e-15 relative
-      // reorder noise vs the SQL sums, so outputs round(6) (q56/q64/q65
-      // precedent); window geometry: npts=24 → 47 lags, taper m=2, roll
-      // 12 steps (delay = -(0 + (-43200))), padlen 9, taper2 m=1
-      import s.implicits._
-      val wins = Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-      val pairs = Seq(("1", "2"), ("2", "3")).toDF("conv_a", "conv_b")
-      val cc = Correlate.ccPairs(wins, pairs, 3600, 86400, normalize = true).toDF()
-      // per-pair celerity lag windows: the two pairs carry different
-      // "distances", so the chain masks them differently in ONE pass
-      // (the reference's distance(pair) mask — init.py:211-234,
-      // timelapse.py:182-186); the celerity window intersects the global
-      // [-43200, 43200] one. Toy celerities are wide (300..3000) so each
-      // window spans several 3600 s lag steps on this coarse grid:
-      // pair 1-2 keeps lag ∈ [5000, 43200], pair 2-3 ∈ [10000, 43200].
-      val dist = Seq(("1-2", 1.5e7), ("2-3", 3.0e7)).toDF("pair", "distance")
-      val post = graft.ops.Postprocess(cc, graft.ops.Postprocess.Config(
-        stepSec = 3600, unbias = true, taperSec = 7200,
-        filterFreqHz = 1.0 / 43200, filterOrder = 2, taper2Sec = 3600,
-        lagMinSec = -43200, lagMaxSec = 43200,
-        celerityMin = 300, celerityMax = 3000), Some(dist))
-      graft.ops.Postprocess.snr(post, 3600, signalBand = (-21600, 21600), noiseBand = (28800, 43200))
-        .select(col("pair"), col("metric"), col("win_start"),
-          (round(col("s"), 6) + lit(0.0)).as("s"),
-          (round(col("n"), 6) + lit(0.0)).as("n"),
-          (round(col("snr"), 6) + lit(0.0)).as("snr"),
-          (col("lag_s_max") + lit(0.0)).as("lag_s_max"))
-        .transform(x => ntz(x, "win_start"))
-    },
-    Some {
-      val (sos, zi, _) = q29Filter
-      val (b0, b1, b2, a1, a2) = (sos.b0.toString, sos.b1.toString, sos.b2.toString,
-        sos.a1.toString, sos.a2.toString)
-      val (z0c, z1c) = (zi(0).toString, zi(1).toString)
-      s"""WITH RECURSIVE ${hourlyGridCtes("user_id IN (1, 2, 3)")},
-         |prs AS (SELECT '1-2' AS pair, 1 AS ua, 2 AS ub, 15000000.0 AS dist
-         |  UNION ALL SELECT '2-3', 2, 3, 30000000.0),
-         |eng AS (SELECT user_id, w, sum(v * v) AS e FROM vals GROUP BY 1, 2),
-         |pw AS MATERIALIZED (SELECT p.pair, p.ua, p.ub, ea.w AS w,
-         |    greatest(p.dist / 3000.0, -43200.0) AS lagmin,
-         |    least(p.dist / 300.0, 43200.0) AS lagmax,
-         |    sqrt(ea.e) * sqrt(eb.e) AS nrm
-         |  FROM prs p
-         |  JOIN eng ea ON ea.user_id = p.ua
-         |  JOIN eng eb ON eb.user_id = p.ub AND eb.w = ea.w
-         |  WHERE ea.e > 0 AND eb.e > 0),
-         |ks AS (SELECT unnest(generate_series(0, 46)) AS j),
-         |ccr AS (SELECT pw.pair, pw.w, ks.j,
-         |    sum(a.v * b.v) * (1.0 / max(pw.nrm)) AS x
-         |  FROM pw JOIN ks ON true
-         |  JOIN vals a ON a.user_id = pw.ua AND a.w = pw.w
-         |  JOIN vals b ON b.user_id = pw.ub AND b.w = pw.w AND b.i = a.i - (ks.j - 23)
-         |  GROUP BY 1, 2, 3),
-         |ub AS (SELECT pair, w, j, x * (24.0 / (24 - abs(j - 23))) AS x FROM ccr),
-         |dm AS (SELECT pair, w, j, x - avg(x) OVER (PARTITION BY pair, w) AS x FROM ub),
-         |tp1 AS (SELECT pair, w, j, x * (CASE WHEN j IN (0, 46) THEN 0.0
-         |    WHEN j IN (1, 45) THEN 0.5 - 0.5 * cos(2 * pi() * 1 / 4)
-         |    ELSE 1.0 END) AS x FROM dm),
-         |sh AS MATERIALIZED (
-         |  SELECT a.pair, a.w, a.j, b.x
-         |  FROM tp1 a JOIN tp1 b ON b.pair = a.pair AND b.w = a.w
-         |    AND b.j = (a.j - 12 + 46) % 46
-         |  WHERE a.j < 46
-         |  UNION ALL SELECT pair, w, 46, 0.0 FROM pw),
-         |pd AS (SELECT unnest(generate_series(0, 8)) AS p),
-         |ext AS MATERIALIZED (
-         |  SELECT s.pair, s.w, pd.p AS i, 2 * x0.x - xr.x AS v
-         |  FROM pw s JOIN pd ON true
-         |  JOIN sh x0 ON x0.pair = s.pair AND x0.w = s.w AND x0.j = 0
-         |  JOIN sh xr ON xr.pair = s.pair AND xr.w = s.w AND xr.j = 9 - pd.p
-         |  UNION ALL SELECT pair, w, j + 9, x FROM sh
-         |  UNION ALL
-         |  SELECT s.pair, s.w, 56 + pd.p, 2 * xl.x - xr.x
-         |  FROM pw s JOIN pd ON true
-         |  JOIN sh xl ON xl.pair = s.pair AND xl.w = s.w AND xl.j = 46
-         |  JOIN sh xr ON xr.pair = s.pair AND xr.w = s.w AND xr.j = 45 - pd.p),
-         |fwd(pair, w, i, y, z0, z1) AS (
-         |  SELECT e.pair, e.w, 0, $b0 * e.v + $z0c * e.v,
-         |    $b1 * e.v - $a1 * ($b0 * e.v + $z0c * e.v) + $z1c * e.v,
-         |    $b2 * e.v - $a2 * ($b0 * e.v + $z0c * e.v)
-         |  FROM ext e WHERE e.i = 0
-         |  UNION ALL
-         |  SELECT pair, w, i, y, $b1 * v - $a1 * y + z1p, $b2 * v - $a2 * y FROM (
-         |    SELECT s.pair, s.w, s.i + 1 AS i, e.v AS v, $b0 * e.v + s.z0 AS y, s.z1 AS z1p
-         |    FROM fwd s
-         |    JOIN ext e ON e.pair = s.pair AND e.w = s.w AND e.i = s.i + 1
-         |    WHERE s.i < 64) q),
-         |fr AS MATERIALIZED (SELECT pair, w, 64 - i AS i, y AS v FROM fwd),
-         |bwd(pair, w, i, y, z0, z1) AS (
-         |  SELECT e.pair, e.w, 0, $b0 * e.v + $z0c * e.v,
-         |    $b1 * e.v - $a1 * ($b0 * e.v + $z0c * e.v) + $z1c * e.v,
-         |    $b2 * e.v - $a2 * ($b0 * e.v + $z0c * e.v)
-         |  FROM fr e WHERE e.i = 0
-         |  UNION ALL
-         |  SELECT pair, w, i, y, $b1 * v - $a1 * y + z1p, $b2 * v - $a2 * y FROM (
-         |    SELECT s.pair, s.w, s.i + 1 AS i, e.v AS v, $b0 * e.v + s.z0 AS y, s.z1 AS z1p
-         |    FROM bwd s
-         |    JOIN fr e ON e.pair = s.pair AND e.w = s.w AND e.i = s.i + 1
-         |    WHERE s.i < 64) q),
-         |flt AS MATERIALIZED (SELECT pair, w, 64 - i - 9 AS j, y AS x
-         |  FROM bwd WHERE 64 - i BETWEEN 9 AND 55),
-         |tp2 AS (SELECT pair, w, j,
-         |    x * (CASE WHEN j IN (0, 46) THEN 0.0 ELSE 1.0 END) AS x FROM flt),
-         |msk AS MATERIALIZED (SELECT t.pair, t.w, (t.j - 23) * 3600.0 AS lag, t.x
-         |  FROM tp2 t JOIN pw ON pw.pair = t.pair AND pw.w = t.w
-         |  WHERE (t.j - 23) * 3600.0 BETWEEN pw.lagmin AND pw.lagmax),
-         |agg AS MATERIALIZED (SELECT pair, w,
-         |    max(abs(x)) FILTER (lag BETWEEN -21600 AND 21600) AS s,
-         |    sqrt(avg(x * x) FILTER (lag BETWEEN 28800 AND 43200)) AS nr
-         |  FROM msk GROUP BY 1, 2),
-         |pk AS (SELECT m.pair, m.w, min(m.lag) AS lag_s_max
-         |  FROM msk m JOIN agg ON agg.pair = m.pair AND agg.w = m.w
-         |  WHERE m.lag BETWEEN -21600 AND 21600 AND abs(m.x) = agg.s
-         |  GROUP BY 1, 2)
-         |SELECT agg.pair, 'hourly_events' AS metric,
-         |  make_timestamp(agg.w * 1000000) AS win_start,
-         |  round(agg.s, 6) + 0.0 AS s, round(agg.nr, 6) + 0.0 AS n,
-         |  round(agg.s / agg.nr, 6) + 0.0 AS snr, pk.lag_s_max + 0.0 AS lag_s_max
-         |FROM agg JOIN pk ON pk.pair = agg.pair AND pk.w = agg.w""".stripMargin
-    })
-
-  val q56 = Q("q56_spectrogram_psd",
-    (s, d) => {
-      // per-window Hann PSD spectrogram CELLS, hard-checked against an
-      // explicit 8-point DFT oracle (nperseg=8 → every re/im is a 8-term
-      // trig sum, SQL-expressible the way q59 inlined classic Lomb).
-      // Values are compared as round(log10(1+psd), 6): psd spans ~9 decades
-      // here, and the log compresses the cross-engine FFT-vs-naive-DFT
-      // reorder noise (~1e-15 relative) to ~4e-16 absolute — safely inside
-      // a 1e-6 grid, where an absolute round on raw psd would not be.
-      // The 2-D peak extraction that used to ride this query stays
-      // K-tested (KernelSpec peak_local_max) and drives q52's matrix.
-      import s.implicits._
-      val wins = Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-      val specs = graft.ops.Timelapse.spectrograms(wins, 3600, npersegSamples = 8, hopSamples = 4)
-      specs.select(col("conv_id"), col("metric"), col("win_start"),
-          col("spec"), col("n_seg"), col("n_freq"))
-        .as[(String, String, java.sql.Timestamp, Array[Double], Int, Int)]
-        .flatMap { case (cid, met, w, spec, nSeg, nFreq) =>
-          for { si <- 0 until nSeg; fi <- 0 until nFreq }
-            yield (cid, met, w, si, fi, spec(si * nFreq + fi))
-        }
-        .toDF("conv_id", "metric", "win_start", "seg_idx", "freq_idx", "psd")
-        .select(col("conv_id"), col("metric"), col("win_start"),
-          col("seg_idx"), col("freq_idx"),
-          round(log10(lit(1.0) + col("psd")), 6).as("log_power"))
-        .transform(x => ntz(x, "win_start"))
-    },
-    Some(s"""WITH ${hourlyGridCtes("user_id IN (1, 2, 3)")},
-           |segs AS (SELECT unnest(generate_series(0, 4)) AS s),
-           |freqs AS (SELECT unnest(generate_series(0, 4)) AS f),
-           |win8 AS (SELECT i, 0.5 - 0.5 * cos(2 * pi() * i / 7) AS wgt
-           |  FROM (SELECT unnest(generate_series(0, 7)) AS i)),
-           |wss AS (SELECT sum(wgt * wgt) AS winsumsq FROM win8),
-           |sums AS (SELECT v.user_id, v.w, segs.s, freqs.f,
-           |    sum(v.v * w8.wgt * cos(2 * pi() * freqs.f * w8.i / 8)) AS re,
-           |    sum(v.v * w8.wgt * sin(2 * pi() * freqs.f * w8.i / 8)) AS im
-           |  FROM segs JOIN win8 w8 ON true
-           |  JOIN vals v ON v.i = segs.s * 4 + w8.i
-           |  CROSS JOIN freqs
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT CAST(user_id AS VARCHAR) AS conv_id, 'hourly_events' AS metric,
-           |  make_timestamp(w * 1000000) AS win_start, s AS seg_idx, f AS freq_idx,
-           |  round(log10(1 + (re * re + im * im) * (3600.0 / winsumsq)
-           |    * (CASE WHEN f BETWEEN 1 AND 3 THEN 2 ELSE 1 END)), 6) AS log_power
-           |FROM sums CROSS JOIN wss""".stripMargin))
-
-  val q57 = Q("q57_beamform",
-    (s, d) => {
-      // plane-wave co-array least squares per window: three "receivers"
-      // (users 1..3) on a fixed triangle, pairwise CC delays → slowness →
-      // DOA/velocity (rows-only; DOA recovery is K-tested on synthetic
-      // plane waves).
-      // Why no SQL oracle: the LSE itself is closed-form-expressible, but
-      // the delay pick is argmax over |cc| of NONNEGATIVE integer count
-      // series, where equal-sum plateaus are common (e.g. a single-spike
-      // window reads out the other series' values directly); the engine's
-      // FFT evaluates tied lags with ~1e-12 noise, so its first-strict-max
-      // tie-break is not reproducible by exact time-domain sums.
-      import s.implicits._
-      val coords = Map("1" -> (0.0, 0.0), "2" -> (1000.0, 0.0), "3" -> (0.0, 1000.0))
-      Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-        .select(col("win_start"), col("conv_id"), col("values").cast("array<double>").as("values"))
-        .as[(java.sql.Timestamp, String, Array[Double])]
-        .groupByKey(_._1)
-        .flatMapGroups { (w: java.sql.Timestamp, it: Iterator[(java.sql.Timestamp, String, Array[Double])]) =>
-          val m = it.map(r => r._2 -> r._3).toMap
-          if (m.size == 3 && m.values.forall(_.exists(_ != 0.0))) {
-            val keys = Seq("1", "2", "3")
-            val res = graft.kernel.Beamform.planeWave(
-              keys.map(coords).toArray, keys.map(m).toArray, delta = 3600.0)
-            Iterator((w, res.doaDeg, res.velocity, res.residual))
-          } else Iterator.empty
-        }
-        .toDF("win_start", "doa_deg", "velocity", "residual")
-        .transform(x => ntz(x, "win_start"))
-    },
-    None)
-
-  val q58 = Q("q58_scaleogram_ridge",
-    (s, d) => {
-      // CWT scaleogram (pywt-algorithm cmor path) per window → ridge
-      // pseudo-frequency at the window center (rows-only; the two CWT
-      // algorithms cross-validate in CwtSpec)
-      import s.implicits._
-      Correlate.windows(hourlySeries(s, d, 1L), 86400, 43200, 3600)
-        .select(col("win_start"), col("values").cast("array<double>").as("values"))
-        .as[(java.sql.Timestamp, Array[Double])]
-        .mapPartitions { it =>
-          val scales = graft.kernel.Cwt.logScales(
-            fMin = 1.0 / 43200, fMax = 1.0 / 7200, nScales = 12, delta = 3600.0)
-          it.map { case (w, values) =>
-            val (mag, freqs) = graft.kernel.Cwt.scaleogramPywt(values, 3600.0, scales)
-            val mid = values.length / 2
-            val ridge = freqs(mag.indices.maxBy(si => mag(si)(mid)))
-            (w, ridge)
-          }
-        }
-        .toDF("win_start", "ridge_freq_hz")
-        .transform(x => ntz(x, "win_start"))
-    },
-    // HARD oracle (r3): the ridge needs the CWT coefficient at ONE center
-    // index per scale — two short convolution sums against the integrated
-    // cmor1.5-1.0 wavelet, all SQL-expressible. The 1024-point wavelet
-    // integration is a running window sum; scale subsampling replays the
-    // kernel's trunc(k/(a*step)) index math; coef = -sqrt(a)*diff(conv) at
-    // the center pair. The 12 pseudo-frequencies (1/(2*6^(s/11)*3600)) are
-    // BIT-exact between Java Math.pow and DuckDB pow, and the argmax is
-    // over transcendental-valued magnitudes (no rational plateaus — unlike
-    // q52/q57's integer-domain ties), so the output needs no rounding.
-    Some(s"""WITH ${hourlyGridCtes("user_id = 1")},
-           |wgrid AS (SELECT g, -8.0 + g * (16.0 / 1023) AS t
-           |  FROM (SELECT unnest(generate_series(0, 1023)) AS g)),
-           |ipsi AS (SELECT g,
-           |    sum((1.0 / sqrt(pi() * 1.5)) * exp(-t * t / 1.5) * cos(2 * pi() * t) * (16.0 / 1023))
-           |      OVER (ORDER BY g) AS ire,
-           |    -sum((1.0 / sqrt(pi() * 1.5)) * exp(-t * t / 1.5) * sin(2 * pi() * t) * (16.0 / 1023))
-           |      OVER (ORDER BY g) AS iim
-           |  FROM wgrid),
-           |scales AS (SELECT s, 2.0 * pow(6.0, s / 11.0) AS a
-           |  FROM (SELECT unnest(generate_series(0, 11)) AS s)),
-           |sub AS (SELECT sc.s, sc.a, k.k,
-           |    CAST(trunc(k.k / (sc.a * (16.0 / 1023))) AS INT) AS j
-           |  FROM scales sc JOIN (SELECT unnest(generate_series(0, 200)) AS k) k
-           |    ON k.k <= CAST(trunc(sc.a * 16.0) AS INT)),
-           |subf AS (SELECT s, a, k, j FROM sub WHERE j < 1024),
-           |mm AS (SELECT s, count(*) AS m FROM subf GROUP BY 1),
-           |wtab AS (SELECT f.s, mm.m - 1 - f.k AS p, i.ire AS wre, i.iim AS wim
-           |  FROM subf f JOIN mm USING (s) JOIN ipsi i ON i.g = f.j),
-           |cpts AS (SELECT s, a, m, CAST(floor((m - 2) / 2.0) AS INT) + 12 AS j0
-           |  FROM mm JOIN scales USING (s)),
-           |conv AS (SELECT v.user_id, v.w, c.s, c.a, c.j0 + pd.d AS j,
-           |    sum(v.v * t.wre) AS cre, sum(v.v * t.wim) AS cim
-           |  FROM cpts c
-           |  JOIN (SELECT 0 AS d UNION ALL SELECT 1 AS d) pd ON true
-           |  JOIN vals v ON true
-           |  JOIN wtab t ON t.s = c.s AND t.p = (c.j0 + pd.d) - v.i
-           |  GROUP BY 1, 2, 3, 4, 5),
-           |coef AS (SELECT a.user_id, a.w, a.s, a.a,
-           |    sqrt(pow(-sqrt(a.a) * (b.cre - a.cre), 2)
-           |       + pow(-sqrt(a.a) * (b.cim - a.cim), 2)) AS mag
-           |  FROM conv a JOIN conv b
-           |    ON a.user_id = b.user_id AND a.w = b.w AND a.s = b.s AND b.j = a.j + 1
-           |  JOIN cpts c ON c.s = a.s AND a.j = c.j0),
-           |ridge AS (SELECT user_id, w, a FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY user_id, w ORDER BY mag DESC, s) AS rk
-           |  FROM coef) WHERE rk = 1)
-           |SELECT make_timestamp(w * 1000000) AS win_start, 1.0 / (a * 3600) AS ridge_freq_hz
-           |FROM ridge""".stripMargin))
-
-  val q59 = Q("q59_lombscargle",
-    (s, d) => {
-      // Lomb-Scargle periodogram over the IRREGULAR raw event times (the
-      // pre-gap-fill diagnostic, SURVEY §2.4) — classic Lomb components are
-      // SQL-expressible, so the kernel is oracle-checked end-to-end:
-      // per-user precentered values, per-user relative times, 4 angular
-      // frequencies; power rounded to 4 decimals (trig-sum reorder noise
-      // ~1e-7 across engines)
-      import s.implicits._
-      val freqs = Array(0.0001, 0.0002, 0.0005, 0.001)
-      ev(s, d).where(col("user_id") <= 5)
-        .select(col("user_id"),
-          (unix_micros(col("ts").cast("timestamp")).cast("double") / 1e6).as("t"),
-          col("value"))
-        .as[(Long, Double, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (uid: Long, it: Iterator[(Long, Double, Double)]) =>
-          val buf = it.toArray.sortBy(_._2)
-          val t0 = buf.head._2
-          val mean = buf.map(_._3).sum / buf.length
-          val tt = buf.map(_._2 - t0)
-          val yy = buf.map(_._3 - mean)
-          val p = graft.kernel.Signal2d.lombscargle(tt, yy, freqs)
-          freqs.indices.iterator.map(i => (uid, freqs(i), p(i)))
-        }
-        .toDF("user_id", "freq", "power")
-        .select(col("user_id"), col("freq"), round(col("power"), 4).as("power"))
-    },
-    Some("""WITH e0 AS (SELECT user_id, epoch_us(ts) / 1e6 AS t, value
-           |  FROM events WHERE user_id <= 5),
-           |e AS (SELECT user_id,
-           |    t - min(t) OVER (PARTITION BY user_id) AS t,
-           |    value - avg(value) OVER (PARTITION BY user_id) AS y
-           |  FROM e0),
-           |f AS (SELECT unnest(CAST([0.0001, 0.0002, 0.0005, 0.001] AS DOUBLE[])) AS w),
-           |p1 AS (SELECT user_id, w,
-           |    sum(sin(2 * w * t)) AS s2w, sum(cos(2 * w * t)) AS c2w
-           |  FROM e CROSS JOIN f GROUP BY 1, 2),
-           |tt AS (SELECT user_id, w, atan2(s2w, c2w) / (2 * w) AS tau FROM p1),
-           |p2 AS (SELECT e.user_id, tt.w,
-           |    sum(y * cos(w * (t - tau))) AS cs, sum(y * sin(w * (t - tau))) AS sc,
-           |    sum(pow(cos(w * (t - tau)), 2)) AS cc, sum(pow(sin(w * (t - tau)), 2)) AS ss
-           |  FROM e JOIN tt ON tt.user_id = e.user_id GROUP BY 1, 2)
-           |SELECT user_id, w AS freq,
-           |  round(0.5 * (cs * cs / cc + sc * sc / ss), 4) AS power
-           |FROM p2""".stripMargin))
-
-  val q52 = Q("q52_timelapse_matrix",
-    (s, d) => {
-      // second-order analysis: per-window spectrograms -> (time1 x time2)
-      // 2-D CC matrix, lower triangle computed + mirrored (tri_mask trick).
-      // HARD-oracled (r3) by routing over the stored events table (q50's
-      // precedent): q56's proven DFT-sum spectrogram CTE feeds direct 2-D
-      // correlation sums + argmax in SQL. The production operators
-      // (Timelapse.spectrograms -> Timelapse.matrix with the FFT cc2d
-      // kernel + extractShift2d) are exactly what runs here; cc2_max is
-      // rounded to 1e-9 on both sides (normalized value in [-1,1],
-      // FFT-vs-direct-sum noise ~1e-14). The shift COORDINATES are
-      // excluded from the oracle surface: ~3% of window pairs here sit on
-      // exact rational cc plateaus (sparse count-derived PSDs — e.g.
-      // 1/sqrt(2)), where the argmax POSITION under FFT noise is the same
-      // untestable tie q57 documents; the max VALUE is tie-invariant. The
-      // shifts stay golden-tested in TimelapseSpec.
-      import s.implicits._
-      val wins = Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-      val specs = graft.ops.Timelapse.spectrograms(wins, 3600, npersegSamples = 8, hopSamples = 4)
-      graft.ops.Timelapse.matrix(specs, 3600)
-        .select(col("conv_id"), col("metric"), col("time1"), col("time2"),
-          round(col("cc2_max"), 9).as("cc2_max"))
-        .transform(x => ntz(x, "time1", "time2"))
-    },
-    Some(s"""WITH ${hourlyGridCtes("user_id IN (1, 2, 3)")},
-           |segs AS (SELECT unnest(generate_series(0, 4)) AS s),
-           |freqs AS (SELECT unnest(generate_series(0, 4)) AS f),
-           |win8 AS (SELECT i, 0.5 - 0.5 * cos(2 * pi() * i / 7) AS wgt
-           |  FROM (SELECT unnest(generate_series(0, 7)) AS i)),
-           |wss AS (SELECT sum(wgt * wgt) AS winsumsq FROM win8),
-           |sums AS (SELECT v.user_id, v.w, segs.s, freqs.f,
-           |    sum(v.v * w8.wgt * cos(2 * pi() * freqs.f * w8.i / 8)) AS re,
-           |    sum(v.v * w8.wgt * sin(2 * pi() * freqs.f * w8.i / 8)) AS im
-           |  FROM segs JOIN win8 w8 ON true
-           |  JOIN vals v ON v.i = segs.s * 4 + w8.i
-           |  CROSS JOIN freqs
-           |  GROUP BY 1, 2, 3, 4),
-           |spec AS (SELECT user_id, w, s, f,
-           |    (re * re + im * im) * (3600.0 / winsumsq)
-           |      * (CASE WHEN f BETWEEN 1 AND 3 THEN 2 ELSE 1 END) AS p
-           |  FROM sums CROSS JOIN wss),
-           |nrm AS (SELECT user_id, w, list_sum(list(p * p ORDER BY s, f)) AS nsq
-           |  FROM spec GROUP BY 1, 2),
-           |prs AS (SELECT a.user_id, a.w AS w1, b.w AS w2, a.nsq AS n1, b.nsq AS n2
-           |  FROM nrm a JOIN nrm b ON a.user_id = b.user_id AND a.w < b.w),
-           |d1s AS (SELECT unnest(generate_series(-4, 4)) AS d1),
-           |d2s AS (SELECT unnest(generate_series(-4, 4)) AS d2),
-           |cc AS (SELECT p.user_id, p.w1, p.w2, d1s.d1, d2s.d2,
-           |    CASE WHEN sqrt(p.n1) * sqrt(p.n2) = 0 THEN 0
-           |      ELSE sum(s1.p * s2.p) / (sqrt(p.n1) * sqrt(p.n2)) END AS val
-           |  FROM prs p
-           |  JOIN d1s ON true JOIN d2s ON true
-           |  JOIN spec s1 ON s1.user_id = p.user_id AND s1.w = p.w1
-           |  JOIN spec s2 ON s2.user_id = p.user_id AND s2.w = p.w2
-           |    AND s2.s = s1.s - d1s.d1 AND s2.f = s1.f - d2s.d2
-           |  GROUP BY 1, 2, 3, 4, 5, p.n1, p.n2),
-           |best AS (SELECT user_id, w1, w2, max(val) AS val
-           |  FROM cc GROUP BY 1, 2, 3),
-           |lower AS (SELECT CAST(user_id AS VARCHAR) AS conv_id,
-           |    'hourly_events' AS metric,
-           |    make_timestamp(w1 * 1000000) AS time1, make_timestamp(w2 * 1000000) AS time2,
-           |    round(val, 9) AS cc2_max
-           |  FROM best)
-           |SELECT * FROM lower
-           |UNION ALL
-           |SELECT conv_id, metric, time2 AS time1, time1 AS time2, cc2_max
-           |FROM lower""".stripMargin))
-
-  val q60 = Q("q60_multimodal_features",
-    (s, d) => {
-      // binary media columns -> per-partition (stubbed) decode -> feature
-      // arrays; plumbing tested in MultimodalSpec — not SQL-expressible
-      val media = graft.ops.Multimodal.synthesize(s, 200)
-      graft.ops.Multimodal.extractFeatures(media)
-        .select(col("asset_id"), col("kind"),
-          round(expr("aggregate(features, 0D, (acc, v) -> acc + cast(v as double))"), 4).as("feat_sum"))
-    },
-    None)
-
-  val q61 = Q("q61_multimodal_headers",
-    (s, d) => {
-      // HARD oracle for the multimodal header-DECODE path (r3 verdict item
-      // #3): media table whose header fields are integer arithmetic of the
-      // asset id, REAL GRFT1 byte encode → real byte decode (magic/version
-      // checks, big-endian u16/u32 reads, declared-length validation), and
-      // the oracle recomputes every decoded field from generate_series
-      // arithmetic — decode-vs-truth equality, all-integer, hash-exact.
-      // Only the body math (histogram q60 / resize) stays rows-only.
-      graft.ops.Multimodal.decodeHeaders(graft.ops.Multimodal.deterministic(s, 200))
-    },
-    Some("""WITH ids AS (SELECT unnest(generate_series(0, 199)) AS i)
-           |SELECT i AS asset_id,
-           | CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-           | CAST(CASE i % 3 WHEN 0 THEN 16 + (7*i)%17 WHEN 1 THEN 0 ELSE 8 + (3*i)%9 END AS BIGINT) AS width,
-           | CAST(CASE i % 3 WHEN 0 THEN 16 + (5*i)%17 WHEN 1 THEN 0 ELSE 8 + (11*i)%9 END AS BIGINT) AS height,
-           | CAST(CASE i % 3 WHEN 1 THEN 8000 + (i%5)*2000 ELSE 0 END AS BIGINT) AS sample_rate,
-           | CAST(CASE i % 3 WHEN 1 THEN 512 + (31*i)%512 ELSE 0 END AS BIGINT) AS n_samples,
-           | CAST(CASE i % 3 WHEN 2 THEN 2 + (13*i)%15 ELSE 1 END AS BIGINT) AS n_frames,
-           | CAST(CASE i % 3 WHEN 0 THEN (16 + (7*i)%17) * (16 + (5*i)%17)
-           |   WHEN 1 THEN 2 * (512 + (31*i)%512)
-           |   ELSE (2 + (13*i)%15) * (8 + (3*i)%9) * (8 + (11*i)%9) END AS BIGINT) AS declared_body_len,
-           | CAST(CASE i % 3 WHEN 0 THEN (16 + (7*i)%17) * (16 + (5*i)%17)
-           |   WHEN 1 THEN 2 * (512 + (31*i)%512)
-           |   ELSE (2 + (13*i)%15) * (8 + (3*i)%9) * (8 + (11*i)%9) END AS BIGINT) AS actual_body_len
-           |FROM ids""".stripMargin))
-
-  val q62 = Q("q62_beamform_solve",
-    (s, d) => {
-      // q57 split (r3 verdict item #4): the beamform LSE solve stage
-      // (AᵀA)⁻¹Aᵀτ fed PINNED per-pair delays — taus derived from stored
-      // per-day event counts of three "receivers" on the fixed triangle
-      // (0,0)/(1000,0)/(0,1000), so the pair-difference matrix A is a
-      // literal and the whole solve (slowness, residual) is an identical
-      // IEEE expression tree on both engines (q29's inline-constants
-      // pattern): sx/sy/residual hash UNROUNDED. Only doa (libm atan2 /
-      // degrees ordering) and velocity (Math.hypot vs sqrt-of-squares)
-      // differ ~1 ulp across engines → round(6). The argmax delay PICK
-      // stays rows-only in q57 with its tie taxonomy documented.
-      import s.implicits._
-      ev(s, d).where(col("user_id").isin(1, 2, 3))
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(
-          sum(when(col("user_id") === 1, 1L).otherwise(0L)).as("c1"),
-          sum(when(col("user_id") === 2, 1L).otherwise(0L)).as("c2"),
-          sum(when(col("user_id") === 3, 1L).otherwise(0L)).as("c3"))
-        .where(col("c1") > 0 && col("c2") > 0 && col("c3") > 0)
-        .select(col("day"),
-          ((col("c2") - col("c1")) / 100.0).as("t12"),
-          ((col("c3") - col("c1")) / 100.0).as("t13"),
-          ((col("c3") - col("c2")) / 100.0).as("t23"))
-        .as[(java.sql.Timestamp, Double, Double, Double)]
-        .mapPartitions { it =>
-          // pairs (1,2)/(1,3)/(2,3) on the fixed triangle -> A rows
-          val a = Array(Array(1000.0, 0.0), Array(0.0, 1000.0), Array(-1000.0, 1000.0))
-          it.map { case (day, t12, t13, t23) =>
-            val r = graft.kernel.Beamform.solve(a, Array(t12, t13, t23))
-            (day, r.sx, r.sy,
-              BigDecimal(r.doaDeg).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-              if (r.velocity.isInfinite) None
-              else Some(BigDecimal(r.velocity).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble),
-              r.residual)
-          }
-        }
-        .toDF("day", "sx", "sy", "doa_deg", "velocity", "residual")
-        .transform(x => ntz(x, "day"))
-    },
-    // A = [[1000,0],[0,1000],[-1000,1000]] -> AᵀA = [[2e6,-1e6],[-1e6,2e6]],
-    // det = 3e12; sx = (2e6·b0 + 1e6·b1)/det, sy = (2e6·b1 + 1e6·b0)/det
-    // with b0 = 1000·t12 - 1000·t23, b1 = 1000·t13 + 1000·t23 — written so
-    // each product/sum matches the engine's accumulation order bitwise.
-    Some("""WITH c AS (SELECT date_trunc('day', ts) AS day,
-           |    CAST(sum(CASE WHEN user_id = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-           |    CAST(sum(CASE WHEN user_id = 2 THEN 1 ELSE 0 END) AS BIGINT) AS c2,
-           |    CAST(sum(CASE WHEN user_id = 3 THEN 1 ELSE 0 END) AS BIGINT) AS c3
-           |  FROM events WHERE user_id IN (1, 2, 3) GROUP BY 1
-           |  HAVING sum(CASE WHEN user_id = 1 THEN 1 ELSE 0 END) > 0
-           |    AND sum(CASE WHEN user_id = 2 THEN 1 ELSE 0 END) > 0
-           |    AND sum(CASE WHEN user_id = 3 THEN 1 ELSE 0 END) > 0),
-           |t AS (SELECT day, (c2 - c1) / 100.0 AS t12, (c3 - c1) / 100.0 AS t13,
-           |    (c3 - c2) / 100.0 AS t23 FROM c),
-           |b AS (SELECT day, t12, t13, t23,
-           |    1000.0 * t12 - 1000.0 * t23 AS b0,
-           |    1000.0 * t13 + 1000.0 * t23 AS b1 FROM t),
-           |sol AS (SELECT day, t12, t13, t23,
-           |    (2000000.0 * b0 + 1000000.0 * b1) / 3000000000000.0 AS sx,
-           |    (2000000.0 * b1 + 1000000.0 * b0) / 3000000000000.0 AS sy
-           |  FROM b),
-           |r AS (SELECT day, sx, sy,
-           |    1000.0 * sx + 0.0 * sy - t12 AS r1,
-           |    0.0 * sx + 1000.0 * sy - t13 AS r2,
-           |    -1000.0 * sx + 1000.0 * sy - t23 AS r3
-           |  FROM sol)
-           |SELECT day, sx, sy,
-           |  round(fmod(degrees(atan2(sx, sy)) + 360.0, 360.0), 6) AS doa_deg,
-           |  CASE WHEN sx * sx + sy * sy = 0 THEN NULL
-           |    ELSE round(1.0 / sqrt(sx * sx + sy * sy), 6) END AS velocity,
-           |  r1 * r1 + r2 * r2 + r3 * r3 AS residual
-           |FROM r""".stripMargin))
-
-  val q63 = Q("q63_asof_bucketed",
-    // the hot-key as-of variant through the SAME driver gate as q27: the
-    // identical semantics routed through AsofJoin.leftAsofBucketed
-    // ((key, 1h-bucket)-partitioned carry-forward + bucket-level boundary
-    // hand-off), oracled against DuckDB's native ASOF LEFT JOIN — so the
-    // scale path is hash-gated, not just spec-gated against the
-    // single-window form.
-    (s, d) => {
-      val e = ev(s, d)
-      val purchases = e.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("ref_value"))
-      graft.ops.AsofJoin.leftAsofBucketed(
-        e.select(col("event_id"), col("user_id"), col("ts"), col("event_type")),
-        purchases, keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        pick = Seq("ref_value"), bucketSec = 3600)
-        .transform(x => ntz(x, "ts", "asof_ts"))
-    },
-    Some("""WITH r AS (SELECT user_id, ts, max(value) AS ref_value
-           |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-           |SELECT e.event_id, e.user_id, e.ts, e.event_type,
-           |  r.ref_value, r.ts AS asof_ts
-           |FROM events e ASOF LEFT JOIN r
-           |  ON e.user_id = r.user_id AND e.ts >= r.ts""".stripMargin))
-
-  val q64 = Q("q64_taper_registry",
-    (s, d) => {
-      // another q55-chain stage isolated to a hard oracle (q29's pattern):
-      // the registry 'taper' op (edge Hann, max_percentage sizing rule)
-      // on the stored hourly series. w(i) = 0.5 - 0.5*cos(2*pi*i/(2m)) is
-      // computed by the identical IEEE expression tree in SQL; the libm
-      // cos differs ~1 ulp, so values round(6) on both sides (+0.0
-      // normalizes a potential -0.0).
-      graft.ops.Preprocess(hourlySeries(s, d, 1L, 2L, 3L),
-          Seq("taper" -> Map("max_percentage" -> "0.1")))
-        .select(col("conv_id"), col("metric"), col("ts"),
-          (round(col("value"), 6) + lit(0.0)).as("value"))
-        .transform(x => ntz(x, "ts"))
-    },
-    Some("""WITH h AS (SELECT CAST(user_id AS VARCHAR) AS conv_id,
-           |    date_trunc('hour', ts) AS ts, CAST(count(*) AS DOUBLE) AS v
-           |  FROM events WHERE user_id IN (1, 2, 3) GROUP BY 1, 2),
-           |idx AS (SELECT conv_id, ts, v,
-           |    row_number() OVER (PARTITION BY conv_id ORDER BY ts) - 1 AS i,
-           |    count(*) OVER (PARTITION BY conv_id) AS n
-           |  FROM h),
-           |par AS (SELECT *, CAST(trunc(0.1 * n) AS BIGINT) AS m FROM idx)
-           |SELECT conv_id, 'hourly_events' AS metric, ts,
-           |  round(CASE WHEN m < 1 THEN v
-           |    WHEN i < m THEN v * (0.5 - 0.5 * cos(2 * pi() * i / (2 * m)))
-           |    WHEN i >= n - m THEN v * (0.5 - 0.5 * cos(2 * pi() * (n - 1 - i) / (2 * m)))
-           |    ELSE v END, 6) + 0.0 AS value
-           |FROM par""".stripMargin))
-
-  val q65 = Q("q65_timeshift",
-    (s, d) => {
-      // the q55-chain timeshift stage isolated: an FFT phase-ramp delay of
-      // exactly 2 grid steps equals a circular roll of the (even-trimmed)
-      // series in exact arithmetic, so the whole rfft -> ramp -> irfft
-      // round-trip is oracled by pure SQL index arithmetic; FFT noise
-      // ~1e-12 on integral counts is absorbed by round(6) (+0.0 for -0.0).
-      import s.implicits._
-      hourlySeries(s, d, 1L, 2L, 3L)
-        .select(col("conv_id"),
-          unix_micros(col("ts").cast("timestamp")).as("us"), col("value"))
-        .as[(String, Long, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (cid: String, it: Iterator[(String, Long, Double)]) =>
-          val vs = it.toArray.sortBy(_._2).map(_._3)
-          val out = graft.kernel.Signal.timeshift(vs, delay = 7200.0, delta = 3600.0)
-          out.indices.iterator.map(i => (cid, i.toLong, out(i)))
-        }
-        .toDF("conv_id", "idx", "value")
-        .select(col("conv_id"), col("idx"),
-          (round(col("value"), 6) + lit(0.0)).as("value"))
-    },
-    Some("""WITH h AS (SELECT CAST(user_id AS VARCHAR) AS conv_id,
-           |    date_trunc('hour', ts) AS ts, CAST(count(*) AS DOUBLE) AS v
-           |  FROM events WHERE user_id IN (1, 2, 3) GROUP BY 1, 2),
-           |idx AS (SELECT conv_id, v,
-           |    row_number() OVER (PARTITION BY conv_id ORDER BY ts) - 1 AS i,
-           |    count(*) OVER (PARTITION BY conv_id) AS n
-           |  FROM h),
-           |t AS (SELECT conv_id, i, v, n - (n % 2) AS n2 FROM idx)
-           |SELECT a.conv_id, a.i AS idx, round(b.v, 6) + 0.0 AS value
-           |FROM t a JOIN t b
-           |  ON a.conv_id = b.conv_id AND b.i = (a.i - 2 + a.n2) % a.n2
-           |WHERE a.i < a.n2 AND b.i < a.n2""".stripMargin))
-
-  val q66 = Q("q66_multimodal_histogram",
-    (s, d) => {
-      // the multimodal BODY decode hash-gated (q61 covers headers): the
-      // deterministic table's pixel/sample bytes are integer arithmetic of
-      // (asset, index), so the per-bin feature histograms — real byte
-      // reads, big-endian s16 sample decode, intensity/amplitude binning —
-      // oracle as SQL arithmetic over generate_series. Counts recovered
-      // as integers (round(frac*total)), so the output carries no
-      // cross-engine float rounding. Only q55's 7-op composition and
-      // q57's integer-plateau argmax remain rows-only.
-      graft.ops.Multimodal.histogramCounts(graft.ops.Multimodal.deterministic(s, 200))
-    },
-    Some("""WITH ids AS (SELECT unnest(generate_series(0, 199)) AS i),
-           |dims AS (SELECT i,
-           |  CASE i % 3 WHEN 0 THEN (16 + (7*i)%17) * (16 + (5*i)%17)
-           |             WHEN 1 THEN 512 + (31*i)%512
-           |             ELSE (2 + (13*i)%15) * (8 + (3*i)%9) * (8 + (11*i)%9) END AS total
-           | FROM ids),
-           |elems AS (SELECT d.i, unnest(generate_series(0, d.total - 1)) AS j FROM dims d),
-           |binned AS (SELECT i, CASE i % 3
-           |    WHEN 1 THEN LEAST(abs((11*i + 17*j) % 65536 - 32768) // 2048, 15)
-           |    ELSE ((7*i + 31*j) % 256) // 16 END AS bin
-           |  FROM elems),
-           |counts AS (SELECT i, bin, count(*) AS c FROM binned GROUP BY 1, 2),
-           |bins AS (SELECT i, unnest(generate_series(0, 15)) AS bin FROM ids)
-           |SELECT b.i AS asset_id, CAST(b.bin AS INT) AS bin,
-           |  CAST(coalesce(c.c, 0) AS BIGINT) AS n
-           |FROM bins b LEFT JOIN counts c ON c.i = b.i AND c.bin = b.bin""".stripMargin))
-
-  val q67 = Q("q67_preprocess_chain",
-    (s, d) => {
-      // three more registry ops oracled in one chained query — clip →
-      // decimate → normalize over the stored hourly series. Every stage is
-      // per-row IEEE arithmetic / window selection on identical operands
-      // (least/greatest, row_number modulo, v / max|v|), so the output
-      // hashes UNROUNDED.
-      graft.ops.Preprocess(hourlySeries(s, d, 1L, 2L, 3L), Seq(
-          "clip" -> Map("min" -> "2", "max" -> "50"),
-          "decimate" -> Map("factor" -> "3"),
-          "normalize" -> Map.empty))
-        .transform(x => ntz(x, "ts"))
-        .select("conv_id", "metric", "ts", "value")
-    },
-    Some("""WITH h AS (SELECT CAST(user_id AS VARCHAR) AS conv_id,
-           |    date_trunc('hour', ts) AS ts, CAST(count(*) AS DOUBLE) AS v
-           |  FROM events WHERE user_id IN (1, 2, 3) GROUP BY 1, 2),
-           |c AS (SELECT conv_id, ts, least(greatest(v, 2.0), 50.0) AS v FROM h),
-           |dd AS (SELECT conv_id, ts, v,
-           |    row_number() OVER (PARTITION BY conv_id ORDER BY ts) - 1 AS rn FROM c),
-           |d2 AS (SELECT conv_id, ts, v FROM dd WHERE rn % 3 = 0),
-           |n AS (SELECT conv_id, ts,
-           |    CASE WHEN max(abs(v)) OVER (PARTITION BY conv_id) = 0 THEN v
-           |      ELSE v / max(abs(v)) OVER (PARTITION BY conv_id) END AS value
-           |  FROM d2)
-           |SELECT conv_id, 'hourly_events' AS metric, ts, value FROM n""".stripMargin))
-
-  val q68 = Q("q68_hilbert_envelope",
-    (s, d) => {
-      // the Hilbert envelope (analytic-signal magnitude) hash-oracled: on
-      // 24-point windows the FFT pipeline (forward fft -> zero negative
-      // freqs / double positive -> inverse) is a closed-form double DFT
-      // sum, fully SQL-expressible (q56's explicit-DFT precedent). FFT-vs-
-      // direct-sum noise ~1e-10 absolute on O(100) magnitudes -> round(6).
-      import s.implicits._
-      Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-        .select(col("conv_id"), col("metric"), col("win_start"),
-          col("values").cast("array<double>").as("values"))
-        .as[(String, String, java.sql.Timestamp, Array[Double])]
-        .flatMap { case (cid, met, w, vs) =>
-          val env = graft.kernel.Signal.envelope(vs)
-          env.indices.map(i => (cid, met, w, i.toLong, env(i)))
-        }
-        .toDF("conv_id", "metric", "win_start", "idx", "env")
-        .select(col("conv_id"), col("metric"), col("win_start"), col("idx"),
-          (round(col("env"), 6) + lit(0.0)).as("env"))
-        .transform(x => ntz(x, "win_start"))
-    },
-    Some(s"""WITH ${hourlyGridCtes("user_id IN (1, 2, 3)")},
-           |ks AS (SELECT unnest(generate_series(0, 23)) AS k),
-           |xk AS (SELECT v.user_id, v.w, ks.k,
-           |    sum(v.v * cos(2 * pi() * ks.k * v.i / 24)) AS xre,
-           |    -sum(v.v * sin(2 * pi() * ks.k * v.i / 24)) AS xim
-           |  FROM vals v CROSS JOIN ks GROUP BY 1, 2, 3),
-           |hh AS (SELECT k, CASE WHEN k = 0 OR k = 12 THEN 1.0
-           |    WHEN k < 12 THEN 2.0 ELSE 0.0 END AS h FROM ks),
-           |an AS (SELECT x.user_id, x.w, ii.i,
-           |    sum(h.h * (x.xre * cos(2 * pi() * x.k * ii.i / 24)
-           |             - x.xim * sin(2 * pi() * x.k * ii.i / 24))) / 24 AS are,
-           |    sum(h.h * (x.xre * sin(2 * pi() * x.k * ii.i / 24)
-           |             + x.xim * cos(2 * pi() * x.k * ii.i / 24))) / 24 AS aim
-           |  FROM xk x JOIN hh h ON h.k = x.k
-           |  CROSS JOIN (SELECT unnest(generate_series(0, 23)) AS i) ii
-           |  GROUP BY 1, 2, 3)
-           |SELECT CAST(user_id AS VARCHAR) AS conv_id, 'hourly_events' AS metric,
-           |  make_timestamp(w * 1000000) AS win_start, i AS idx,
-           |  round(sqrt(are * are + aim * aim), 6) + 0.0 AS env
-           |FROM an""".stripMargin))
-
-  val q69 = Q("q69_lanczos_resample",
-    (s, d) => {
-      // the registry interpolate/resample op (Lanczos a=3 windowed sinc)
-      // hash-oracled at a FRACTIONAL ratio (hourly grid -> 5400 s grid,
-      // ratio 1.5) so genuine half-integer sinc interpolation runs, not a
-      // sample selection. Input is the gap-filled regular hourly grid per
-      // user (the kernel's regular-spacing contract); the oracle replays
-      // the identical index arithmetic (ceil-aligned dst grid, sample-
-      // space positions, ±a lobe window, w = a·sin(πd)·sin(πd/a)/(πd)²,
-      // Σwv/Σw) — sin is libm-variant and the sum reorders, so round(6).
-      val occ = ev(s, d).where(col("user_id").isin(1, 2, 3))
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).cast("double").as("v"))
-      val spans = occ.groupBy(col("user_id")).agg(
-        min(unix_timestamp(col("h").cast("timestamp"))).as("t0"),
-        max(unix_timestamp(col("h").cast("timestamp"))).as("t1"))
-      val grid = spans.select(col("user_id"), col("t0"), col("t1"),
-          explode(expr("sequence(t0, t1, 3600)")).as("hs"))
-        .join(occ.select(col("user_id"),
-            unix_timestamp(col("h").cast("timestamp")).as("hs"), col("v")),
-          Seq("user_id", "hs"), "left")
-        .select(col("user_id").cast("string").as("conv_id"),
-          lit("hourly_events").as("metric"),
-          timestamp_seconds(col("hs")).as("ts"),
-          coalesce(col("v"), lit(0.0)).as("value"))
-      graft.ops.Preprocess(grid, Seq("interpolate" -> Map("step" -> "5400")))
-        .select(col("conv_id"), col("metric"), col("ts"),
-          (round(col("value"), 6) + lit(0.0)).as("value"))
-        .transform(x => ntz(x, "ts"))
-    },
-    Some("""WITH occ AS (SELECT user_id, CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS h,
-           |    CAST(count(*) AS DOUBLE) AS v
-           |  FROM events WHERE user_id IN (1, 2, 3) GROUP BY 1, 2),
-           |spanu AS (SELECT user_id, min(h) AS t0, max(h) AS t1 FROM occ GROUP BY 1),
-           |grid AS (SELECT s.user_id, s.t0, unnest(generate_series(s.t0, s.t1, 3600)) AS h
-           |  FROM spanu s),
-           |vals AS (SELECT g.user_id, (g.h - g.t0) // 3600 AS i, coalesce(o.v, 0.0) AS v
-           |  FROM grid g LEFT JOIN occ o ON o.user_id = g.user_id AND o.h = g.h),
-           |params AS (SELECT user_id, t0, t1,
-           |    CAST(ceil(t0 / 5400.0) AS BIGINT) * 5400 AS newt0 FROM spanu),
-           |outs AS (SELECT p.user_id, p.t0, p.newt0,
-           |    unnest(generate_series(0, (p.t1 - p.newt0) // 5400)) AS j
-           |  FROM params p WHERE p.newt0 <= p.t1),
-           |pos AS (SELECT user_id, newt0, j,
-           |    (newt0 - t0) / 3600.0 + j * 1.5 AS pp FROM outs),
-           |terms AS (SELECT pos.user_id, pos.newt0, pos.j, v.v, pos.pp - v.i AS d
-           |  FROM pos JOIN vals v ON v.user_id = pos.user_id
-           |    AND v.i >= CAST(ceil(pos.pp - 3) AS BIGINT)
-           |    AND v.i <= CAST(floor(pos.pp + 3) AS BIGINT)),
-           |w AS (SELECT *, CASE WHEN d = 0 THEN 1.0
-           |    WHEN d <= -3 OR d >= 3 THEN 0.0
-           |    ELSE 3 * sin(pi() * d) * sin(pi() * d / 3)
-           |      / ((pi() * d) * (pi() * d)) END AS wgt
-           |  FROM terms)
-           |SELECT CAST(user_id AS VARCHAR) AS conv_id, 'hourly_events' AS metric,
-           |  make_timestamp((newt0 + j * 5400) * 1000000) AS ts,
-           |  round(CASE WHEN sum(wgt) = 0 THEN 0.0
-           |    ELSE sum(wgt * v) / sum(wgt) END, 6) + 0.0 AS value
-           |FROM w GROUP BY 1, 2, 3""".stripMargin))
-
-  val q70 = Q("q70_retention_tiered",
-    (s, d) => {
-      // retention ENFORCEMENT under the driver's hash gate: build
-      // day-partitioned 1m/1h tiers from the stored events table, EXPIRE
-      // every sealed 1m day older than the newest (per-day point-count
-      // seal), answer from the surviving tiers via tieredRead, aggregate
-      // back to day grain WITH the serving-tier label. The oracle
-      // aggregates raw events directly and derives the label from the
-      // documented policy (old days -> tier_1h, newest -> tier_1m): equal
-      // iff the tier folds compose exactly AND expiry routed each day to
-      // exactly the tier the policy says. Numerics identical to q51's
-      // cascade path (sum round(6), min/max/n/first/last exact).
-      import graft.jobs.RetentionJob
-      val store = s"/tmp/graft-q70-store-${Integer.toHexString(d.hashCode)}"
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(store), true)
-      val pts = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
-        lit("value").as("metric"), col("ts"), col("value"))
-      val (m1, h1, _) = Rollup.cascade(pts)
-      def writeTier(df: DataFrame, name: String): Unit =
-        df.withColumn("day", to_date(col("chunk_start")))
-          .write.mode("overwrite").partitionBy("day").parquet(s"$store/$name")
-      writeTier(m1, "tier_1m")
-      writeTier(h1, "tier_1h")
-      val days = RetentionJob.partitionDays(s, s"$store/tier_1m")
-      val st = RetentionJob.expire(s, store, olderThan = days.last)
-      require(st.uncovered.isEmpty && st.expired.sorted == days.init.sorted,
-        s"q70 expiry must drop exactly the sealed days ${days.init}, got $st")
-      RetentionJob.tieredRead(s, store, Seq("tier_1m", "tier_1h"))
-        .groupBy(col("conv_id").cast("long").as("user_id"),
-          col("day").cast("timestamp_ntz").as("day"), col("tier"))
-        .agg(sum(col("n")).as("n"), round(sum(col("sum")), 6).as("sum_v"),
-          min(col("min")).as("min_v"), max(col("max")).as("max_v"),
-          min_by(col("first"), col("chunk_start")).as("first_v"),
-          max_by(col("last"), col("chunk_start")).as("last_v"))
-    },
-    Some("""WITH mx AS (SELECT max(date_trunc('day', ts)) AS md FROM events)
-           |SELECT user_id, date_trunc('day', ts) AS day,
-           |  CASE WHEN date_trunc('day', ts) < (SELECT md FROM mx)
-           |    THEN 'tier_1h' ELSE 'tier_1m' END AS tier,
-           |  count(*) AS n, round(sum(value), 6) AS sum_v,
-           |  min(value) AS min_v, max(value) AS max_v,
-           |  min_by(value, ts) AS first_v, max_by(value, ts) AS last_v
-           |FROM events GROUP BY 1, 2, 3""".stripMargin))
-
-  val q71 = Q("q71_beamform_delay_ties",
-    (s, d) => {
-      // q57's argmax delay-pick stage made hash-oracle-able (closing the
-      // r3/r4 tie taxonomy): instead of ONE pick among FFT-noise-scrambled
-      // exact ties, emit the tie-INVARIANT surface — per (window, pair)
-      // the round-9 |cc| maximum AND the full SET of lags attaining it.
-      // Set membership compares round-9 values: true plateaus on these
-      // 24-sample integer count series are rationals whose distinct values
-      // gap by >= 1/(norm product) ~ 1e-6 >> 1e-9, while the engine's
-      // pow2-FFT reorder noise (~1e-13) vanishes at round-9 — so the FFT
-      // cc and the oracle's exact time-domain sums agree on both the max
-      // and the members. With q62 (LSE solve) this hash-gates every q57
-      // stage; only the arbitrary first-of-ties pick stays rows-only.
-      import s.implicits._
-      Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-        .select(col("win_start"), col("conv_id"), col("values").cast("array<double>").as("values"))
-        .as[(java.sql.Timestamp, String, Array[Double])]
-        .groupByKey(_._1)
-        .flatMapGroups { (w: java.sql.Timestamp, it: Iterator[(java.sql.Timestamp, String, Array[Double])]) =>
-          val m = it.map(r => r._2 -> r._3).toMap
-          if (m.size == 3 && m.values.forall(_.exists(_ != 0.0))) {
-            Iterator(("1", "2"), ("1", "3"), ("2", "3")).flatMap { case (a, b) =>
-              val rxy = graft.kernel.Cc.cc(m(a), m(b), normalize = true)
-              val center = rxy.length / 2
-              val r9 = rxy.map(v => BigDecimal(math.abs(v))
-                .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0)
-              val mx = r9.max
-              r9.indices.filter(i => r9(i) == mx)
-                .map(i => (w, s"$a-$b", (i - center).toLong, mx))
-            }
-          } else Iterator.empty
-        }
-        .toDF("win_start", "pair", "lag_shift", "cc_abs_max")
-        .transform(x => ntz(x, "win_start"))
-    },
-    Some(s"""WITH ${hourlyGridCtes("user_id IN (1, 2, 3)")},
-           |nrm AS (SELECT user_id, w, sqrt(sum(v * v)) AS nr FROM vals GROUP BY 1, 2),
-           |ok AS (SELECT w FROM nrm WHERE nr > 0 GROUP BY w HAVING count(*) = 3),
-           |prs AS (SELECT '1-2' AS pair, 1 AS ua, 2 AS ub
-           |  UNION ALL SELECT '1-3', 1, 3 UNION ALL SELECT '2-3', 2, 3),
-           |cc AS (SELECT p.pair, va.w, va.i - vb.i AS lag,
-           |    round(abs(sum(va.v * vb.v) * (1.0 / (na.nr * nb.nr))), 9) + 0.0 AS a9
-           |  FROM prs p
-           |  JOIN vals va ON va.user_id = p.ua
-           |  JOIN vals vb ON vb.user_id = p.ub AND vb.w = va.w
-           |  JOIN ok o ON o.w = va.w
-           |  JOIN nrm na ON na.user_id = p.ua AND na.w = va.w
-           |  JOIN nrm nb ON nb.user_id = p.ub AND nb.w = va.w
-           |  GROUP BY 1, 2, 3, na.nr, nb.nr),
-           |mx AS (SELECT pair, w, max(a9) AS m FROM cc GROUP BY 1, 2)
-           |SELECT make_timestamp(c.w * 1000000) AS win_start, c.pair,
-           |  CAST(c.lag AS BIGINT) AS lag_shift, c.a9 AS cc_abs_max
-           |FROM cc c JOIN mx ON mx.pair = c.pair AND mx.w = c.w AND c.a9 = mx.m""".stripMargin))
-
-  val q72 = Q("q72_streaming_rollup_1h",
-    (s, d) => {
-      // the LIVE Structured Streaming cascade fold under the driver's hash
-      // gate: stage the sealed 1m tier as a parquet stream source, run
-      // StreamingRollup.fromSealed(hour) as a REAL streaming query
-      // (append after watermark close, checkpointed, AvailableNow), read
-      // the sink back. Identical semantics to q11's batch Rollup.fromLower
-      // -> REUSES q11's oracle SQL verbatim (q63/q27 same-oracle
-      // precedent): equal iff the streaming fold seals every 1h cell
-      // exactly as the batch fold composes it. Append mode emits only
-      // windows the watermark CLOSED, so one sentinel sealed cell 2h past
-      // the real horizon (filtered back out) pushes the global watermark
-      // over every real window end before the trigger drains.
-      import org.apache.spark.sql.streaming.Trigger
-      val base = s"/tmp/graft-q72-${Integer.toHexString(d.hashCode)}"
-      val bp = new org.apache.hadoop.fs.Path(base)
-      bp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(bp, true)
-      val m1 = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
-        lit("value").as("metric"), col("ts"), col("value"))
-      val tier1m = Rollup.fromPoints(m1, "minute")
-      val sentinel = tier1m
-        .agg((max(col("chunk_start")) + expr("INTERVAL 2 HOURS")).as("chunk_start"))
-        .select(lit("__wm__").as("conv_id"), lit("value").as("metric"),
-          col("chunk_start"), lit(1L).as("n"), lit(0.0).as("sum"),
-          lit(0.0).as("min"), lit(0.0).as("max"), lit(0.0).as("first"),
-          lit(0.0).as("last"))
-      tier1m.unionByName(sentinel).write.parquet(s"$base/in_1m")
-      val q = graft.streaming.StreamingRollup.fromSealed(
-        s.readStream.schema(s.read.parquet(s"$base/in_1m").schema)
-          .parquet(s"$base/in_1m"), "hour")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base/out_1h")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$base/out_1h")
-        .where(col("conv_id") =!= "__wm__")
-        .select(col("conv_id").cast("long").as("user_id"), col("chunk_start"),
-          col("n"), round(col("sum"), 6).as("sum_v"),
-          col("min").as("min_v"), col("max").as("max_v"))
-        .transform(x => ntz(x, "chunk_start"))
-    },
-    Some("""SELECT user_id, date_trunc('hour', ts) AS chunk_start, count(*) AS n,
-           | round(sum(value), 6) AS sum_v, min(value) AS min_v, max(value) AS max_v
-           |FROM events GROUP BY 1, 2""".stripMargin))
-
-  val q73 = Q("q73_repetition_profile",
-    // within-doc repetition counts (Gopher/MassiveText-shaped quality
-    // rule, graft.ops.TextQuality) — integer counts + integer-arithmetic
-    // flag, so the oracle is exact with zero float discipline needed
-    (s, d) => graft.ops.TextQuality.repetition(docs(s, d), "doc_id", "text"),
-    Some(raw"""WITH w AS (
-              |  SELECT doc_id,
-              |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ws,
-              |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS ln
-              |  FROM documents),
-              |g AS (
-              |  SELECT doc_id, ws, ln,
-              |    list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1]) AS g2,
-              |    list_transform(range(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS g3
-              |  FROM w),
-              |tc AS (
-              |  SELECT doc_id, max(c) AS top2 FROM (
-              |    SELECT doc_id, gr, count(*) AS c
-              |    FROM (SELECT doc_id, unnest(g2) AS gr FROM g) GROUP BY 1, 2)
-              |  GROUP BY 1)
-              |SELECT g.doc_id,
-              |  len(ws) AS n_words, len(list_distinct(ws)) AS n_uniq_words,
-              |  len(g2) AS n_2grams, len(list_distinct(g2)) AS n_uniq_2grams,
-              |  len(g3) AS n_3grams, len(list_distinct(g3)) AS n_uniq_3grams,
-              |  len(ln) AS n_lines, len(list_distinct(ln)) AS n_uniq_lines,
-              |  coalesce(tc.top2, 0) AS top_2gram_count,
-              |  (len(g2) - len(list_distinct(g2))) * 5 > len(g2)
-              |    OR (len(ln) - len(list_distinct(ln))) * 10 > len(ln) * 3 AS is_repetitive
-              |FROM g LEFT JOIN tc ON g.doc_id = tc.doc_id""".stripMargin))
-
-  val q74 = Q("q74_tfidf_topk",
-    // corpus term salience (graft.ops.TextRank.topTerms): top-3 terms per
-    // doc by tf × the RATIONAL BM25 idf argument (N-df+0.5)/(df+0.5) — no
-    // ln on the gated surface (DuckDB ln and Java Math.log differ by 1 ulp
-    // at df=398/N=500 on this box); the rank uses the unrounded bit-exact
-    // double, ties broken by term asc
-    (s, d) => graft.ops.TextRank.topTerms(docs(s, d), "doc_id", "text", k = 3),
-    Some(s"""WITH tfc AS (
-            |  SELECT doc_id, term, count(*) AS tf FROM (
-            |    SELECT doc_id, unnest($tokensDuck) AS term FROM documents)
-            |  GROUP BY 1, 2),
-            |dfc AS (SELECT term, count(*) AS term_df FROM tfc GROUP BY 1),
-            |nn AS (SELECT count(*) AS n_docs FROM documents),
-            |scored AS (
-            |  SELECT doc_id, term, tf, term_df,
-            |    tf * ((n_docs - term_df + 0.5::DOUBLE) / (term_df + 0.5::DOUBLE)) AS s
-            |  FROM tfc JOIN dfc USING (term) CROSS JOIN nn),
-            |r AS (SELECT *, row_number() OVER (
-            |    PARTITION BY doc_id ORDER BY s DESC, term ASC) AS rnk
-            |  FROM scored)
-            |SELECT doc_id, term, tf, term_df, round(s, 6) AS score, rnk
-            |FROM r WHERE rnk <= 3""".stripMargin))
-
-  val q75 = Q("q75_contamination",
-    // train/test contamination (graft.ops.Contamination.flag): word
-    // 5-gram shingle overlap of each corpus doc against the benchmark
-    // holdout (doc_id % 10 == 0); integer counts, int/int IEEE rate,
-    // integer cross-multiplied flag at 10%
-    (s, d) => graft.ops.Contamination.flag(docs(s, d), "doc_id", "text",
-      benchPred = col("doc_id") % 10 === 0, n = 5, thresholdPct = 10),
-    Some(s"""WITH toks AS (SELECT doc_id, $tokensDuck AS a FROM documents
-            |  WHERE len($tokensDuck) >= 5),
-            |sh AS (SELECT DISTINCT doc_id,
-            |  unnest(list_transform(generate_series(1, len(a) - 4),
-            |    i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2] || ' ' || a[i+3] || ' ' || a[i+4])) AS sh
-            |  FROM toks),
-            |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 = 0)
-            |SELECT s.doc_id, count(*) AS n_sh, count(b.sh) AS n_hit,
-            |  round(count(b.sh) / count(*), 6) AS rate,
-            |  count(b.sh) * 100 >= count(*) * 10 AS contaminated
-            |FROM sh s LEFT JOIN bench b USING (sh)
-            |WHERE s.doc_id % 10 <> 0 GROUP BY 1""".stripMargin))
-
-  // 0..255 from the first two md5 hex digits, DuckDB spelling (no conv()
-  // in v1.0 — hex-digit position in the alphabet string instead; all
-  // integer arithmetic so the two engines cannot disagree)
-  private def duckBucket(idExpr: String): String =
-    s"(strpos('0123456789abcdef', substr(md5(CAST($idExpr AS VARCHAR)), 1, 1)) - 1) * 16" +
-      s" + (strpos('0123456789abcdef', substr(md5(CAST($idExpr AS VARCHAR)), 2, 1)) - 1)"
-
-  val q76 = Q("q76_hash_split",
-    // deterministic train/val/test assignment (graft.ops.Sampling
-    // .hashSplit): a pure per-row map — a doc's split never changes when
-    // the corpus grows, unlike rand()-sampling
-    (s, d) => graft.ops.Sampling.hashSplit(docs(s, d), "doc_id")
-      .select("doc_id", "bucket", "split"),
-    Some(s"""WITH b AS (SELECT doc_id, ${duckBucket("doc_id")} AS bucket FROM documents)
-            |SELECT doc_id, bucket,
-            |  CASE WHEN bucket < 230 THEN 'train' WHEN bucket < 243 THEN 'val'
-            |   WHEN bucket IS NOT NULL THEN 'test' END AS split
-            |FROM b""".stripMargin))
-
-  val q77 = Q("q77_source_rebalance",
-    // source-mixture rebalancing (graft.ops.Sampling.rebalance):
-    // hash-rate downsample of every source toward the smallest source's
-    // count; integer cross-multiplied keep rule, no division anywhere
-    (s, d) => graft.ops.Sampling.rebalance(docs(s, d), "doc_id", "source"),
-    Some(s"""WITH b AS (SELECT doc_id, source, ${duckBucket("doc_id")} AS bucket FROM documents),
-            |c AS (SELECT source, count(*) AS n_source FROM documents GROUP BY 1),
-            |m AS (SELECT min(n_source) AS min_count FROM c)
-            |SELECT doc_id, source, bucket, n_source, min_count,
-            |  bucket * n_source < min_count * 256 AS kept
-            |FROM b JOIN c USING (source) CROSS JOIN m""".stripMargin))
-
-  val q78 = Q("q78_curation_pipeline",
-    // the documents-side flagship COMPOSITION (graft.ops.Curation.curate):
-    // Gopher repetition filter + minWords -> exact-dedup keeper ->
-    // 5-gram decontamination vs the doc_id%10 holdout -> hash split.
-    // Every stage decision is integer/string domain, so the whole chain
-    // hash-oracles with zero float discipline
-    (s, d) => graft.ops.Curation.curate(docs(s, d), "doc_id", "text",
-      benchPred = col("doc_id") % 10 === 0),
-    Some(raw"""WITH w AS (SELECT doc_id, text,
-              |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ws,
-              |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS ln
-              |  FROM documents),
-              |g AS (SELECT doc_id, text, ws, ln,
-              |    list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1]) AS g2
-              |  FROM w),
-              |s1 AS (SELECT doc_id, text, len(ws) AS n_words FROM g
-              |  WHERE NOT ((len(g2) - len(list_distinct(g2))) * 5 > len(g2)
-              |      OR (len(ln) - len(list_distinct(ln))) * 10 > len(ln) * 3)
-              |    AND len(ws) >= 5),
-              |kp AS (SELECT md5(text) AS h, min(doc_id) AS keeper FROM s1 GROUP BY 1),
-              |s2 AS (SELECT s1.doc_id, s1.n_words FROM s1
-              |  JOIN kp ON md5(s1.text) = kp.h AND s1.doc_id = kp.keeper),
-              |toks AS (SELECT doc_id, ${tokensDuck} AS a FROM documents WHERE len(${tokensDuck}) >= 5),
-              |sh AS (SELECT DISTINCT doc_id,
-              |    unnest(list_transform(generate_series(1, len(a) - 4),
-              |      i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2] || ' ' || a[i+3] || ' ' || a[i+4])) AS sh
-              |  FROM toks),
-              |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 = 0),
-              |cont AS (SELECT s.doc_id, count(*) AS n_sh, count(b.sh) AS n_hit
-              |  FROM sh s JOIN s2 USING (doc_id) LEFT JOIN bench b USING (sh)
-              |  WHERE s.doc_id % 10 <> 0 GROUP BY 1),
-              |s3 AS (SELECT s2.doc_id, s2.n_words, c.n_sh, c.n_hit
-              |  FROM s2 JOIN cont c USING (doc_id)
-              |  WHERE NOT (c.n_hit * 100 >= c.n_sh * 10))
-              |SELECT doc_id, n_words, n_sh, n_hit, ${duckBucket("doc_id")} AS bucket,
-              |  CASE WHEN ${duckBucket("doc_id")} < 230 THEN 'train'
-              |       WHEN ${duckBucket("doc_id")} < 243 THEN 'val'
-              |       WHEN ${duckBucket("doc_id")} IS NOT NULL THEN 'test' END AS split
-              |FROM s3""".stripMargin))
-
-  val q79 = Q("q79_dedup_lines",
-    // the line-level REWRITE behind q73's flag (graft.ops.TextQuality
-    // .dedupLines): duplicated non-blank lines removed keeping first
-    // occurrence; gated on the rebuilt text itself (md5 + the string)
-    (s, d) => graft.ops.TextQuality.dedupLines(docs(s, d), "doc_id", "text"),
-    Some(raw"""WITH w AS (SELECT doc_id,
-              |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS ln
-              |  FROM documents),
-              |k AS (SELECT doc_id, ln,
-              |    list_filter(ln, (l, i) -> list_position(ln, l) = i) AS kept
-              |  FROM w)
-              |SELECT doc_id, len(ln) AS n_lines, len(kept) AS n_kept,
-              |  md5(array_to_string(kept, chr(10))) AS clean_fp,
-              |  array_to_string(kept, chr(10)) AS clean_text
-              |FROM k""".stripMargin))
-
-  // --------------------------------------------- F. product quantization ANN
-
-  val q80 = Q("q80_pq_codes",
-    // product-quantization encode (Jégou et al. 2011): 8 subspaces x 8 dims,
-    // 16 sub-centroids (the lowest-id vectors — the deterministic codebook
-    // stand-in q44 established); codes are INTEGER surfaces, so the whole
-    // compress step hash-oracles with zero float discipline beyond the
-    // argmin agreeing (ordered sub-distance folds on both sides). One row
-    // per (vector, subspace) relationally — graft.ops.Similarity.pqEncode.
-    (s, d) => graft.ops.Similarity.pqEncode(emb(s, d))
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub_m", "code"))),
-    Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |  FROM embeddings),
-           |cb AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 16),
-           |sc AS (SELECT e.vec_id, m.m, cb.cent_id,
-           |    list_sum(list_transform(range(1, 9), i ->
-           |      (v[m.m * 8 + i] - cv[m.m * 8 + i]) * (v[m.m * 8 + i] - cv[m.m * 8 + i]))) AS d
-           |  FROM e CROSS JOIN (SELECT unnest(range(0, 8)) AS m) m CROSS JOIN cb)
-           |SELECT vec_id, m AS sub_m, cent_id AS code FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, cent_id) AS rk
-           |  FROM sc) WHERE rk = 1""".stripMargin))
-
-  /** q81/q83 share the PQ ADC retrieval SQL; built once so a tie-discipline
-    * change edits exactly one string.
-    */
-  private lazy val pqAnnSql: String =
-    """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |  FROM embeddings),
-      |cb AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 16),
-      |sc AS (SELECT e.vec_id, m.m, cb.cent_id,
-      |    list_sum(list_transform(range(1, 9), i ->
-      |      (v[m.m * 8 + i] - cv[m.m * 8 + i]) * (v[m.m * 8 + i] - cv[m.m * 8 + i]))) AS d
-      |  FROM e CROSS JOIN (SELECT unnest(range(0, 8)) AS m) m CROSS JOIN cb),
-      |codes AS (SELECT vec_id, m, cent_id AS code FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, cent_id) AS rk
-      |  FROM sc) WHERE rk = 1),
-      |ca AS (SELECT vec_id, list(code ORDER BY m) AS codes FROM codes GROUP BY vec_id),
-      |cbl AS (SELECT list(cv ORDER BY cent_id) AS cbs FROM cb),
-      |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (20, 21, 22)),
-      |adcs AS (SELECT q_id, ca.vec_id AS neighbor_id,
-      |    round(list_sum(list_transform(range(0, 8), m ->
-      |      list_sum(list_transform(range(1, 9), i ->
-      |        (qv[m * 8 + i] - cbs[codes[m + 1] + 1][m * 8 + i])
-      |        * (qv[m * 8 + i] - cbs[codes[m + 1] + 1][m * 8 + i]))))), 9) AS adc
-      |  FROM ca CROSS JOIN q CROSS JOIN cbl WHERE ca.vec_id <> q_id)
-      |SELECT q_id, neighbor_id, adc, rk FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adc, neighbor_id) AS rk
-      |  FROM adcs) WHERE rk <= 3""".stripMargin
-
-  val q81 = Q("q81_pq_ann",
-    // PQ ANN by asymmetric distance (query unquantized, per-query LUT of
-    // sub-distances, candidates ranked by nSub lookups+adds) — the
-    // memory-compressed scale path: at k<=256 the codes table is nSub
-    // BYTES/vector, ~32x smaller than the fp32 corpus. Engine: broadcast
-    // LUT rows, one codes scan, no corpus shuffle. Oracle replays the
-    // identical ordered folds (inner dims ascending, outer subspaces
-    // ascending), round(adc, 9), tie -> neighbor_id (the q40 discipline).
-    (s, d) => graft.ops.Similarity.pqTopK(emb(s, d), Seq(20L, 21L, 22L), 3),
-    Some(pqAnnSql))
-
-  val q82 = Q("q82_l2_brute",
-    // exact squared-L2 top-k — the brute-force truth q83 grades PQ against
-    // (graft.ops.Similarity.l2TopK); broadcast queries, streaming corpus
-    (s, d) => graft.ops.Similarity.l2TopK(emb(s, d), Seq(20L, 21L, 22L), 3),
-    Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           |  FROM embeddings),
-           |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (20, 21, 22)),
-           |sc AS (SELECT q_id, e.vec_id AS neighbor_id,
-           |    round(list_sum(list_transform(range(1, 65), i ->
-           |      (qv[i] - v[i]) * (qv[i] - v[i]))), 9) AS l2sq
-           |  FROM e CROSS JOIN q WHERE e.vec_id <> q_id)
-           |SELECT q_id, neighbor_id, l2sq, rk FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY l2sq, neighbor_id) AS rk
-           |  FROM sc) WHERE rk <= 3""".stripMargin))
-
-  val q83 = Q("q83_pq_recall",
-    // recall@3 of PQ-ADC retrieval vs the exact-L2 truth — the tuning
-    // surface for (nSub, k): INTEGER hit counts per query (count of
-    // non-null join markers, both engines), so the evaluation itself is
-    // hash-exact. Mirrors q48 (the LSH recall gate) on the PQ path.
-    (s, d) => {
-      val pq = graft.ops.Similarity.pqTopK(emb(s, d), Seq(20L, 21L, 22L), 3)
-        .select(col("q_id"), col("neighbor_id"), lit(1).as("hit"))
-      graft.ops.Similarity.l2TopK(emb(s, d), Seq(20L, 21L, 22L), 3)
-        .select(col("q_id"), col("neighbor_id"))
-        .join(pq, Seq("q_id", "neighbor_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("hit")).as("n_hits"), count(lit(1)).as("n_truth"))
-    },
-    for { l2Sql <- q82.oracle } yield {
-      s"""WITH pq AS ($pqAnnSql),
-         |l2 AS ($l2Sql),
-         |p AS (SELECT q_id, neighbor_id, 1 AS hit FROM pq)
-         |SELECT q_id, count(hit) AS n_hits, count(*) AS n_truth
-         |FROM l2 LEFT JOIN p USING (q_id, neighbor_id) GROUP BY q_id""".stripMargin
-    })
-
-  val q84 = Q("q84_gopher_quality",
-    // Gopher document-level quality gate (Rae et al. 2021 A1.1, the
-    // word-level subset): word-count band, mean word length in [3,10],
-    // >=80% alphabetic words, >=2 stopwords — every rule integer
-    // cross-multiplied (graft.ops.TextQuality.gopherQuality), so the gate
-    // hash-oracles exactly. [25,80] brackets this corpus's 10..99 word
-    // range so both rejection tails are exercised.
-    (s, d) => graft.ops.TextQuality.gopherQuality(docs(s, d), "doc_id", "text", 25, 80),
-    Some(s"""WITH w AS (SELECT doc_id,
-            |    list_filter($tokensDuck, x -> x <> '') AS ws FROM documents),
-            |c AS (SELECT doc_id, len(ws) AS n_words,
-            |    -- DuckDB list_sum([]) is NULL where Spark's aggregate fold
-            |    -- is 0, hence the coalesce; but it must fire ONLY on the
-            |    -- empty list — a NULL text is NULL on the engine side too
-            |    -- CAST: list_sum returns HUGEINT, which surfaces as float64
-            |    -- through the driver's type-sensitive hash (r5 q84 FAIL —
-            |    -- the round-1 q13/q14/q19 class); the engine side is BIGINT
-            |    CASE WHEN ws IS NULL THEN NULL
-            |      ELSE CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0) AS BIGINT)
-            |      END AS n_word_chars,
-            |    len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha_words,
-            |    len(list_filter(ws, x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS n_stop
-            |  FROM w)
-            |SELECT doc_id, n_words, n_word_chars, n_alpha_words, n_stop,
-            |  (n_words >= 25 AND n_words <= 80) AS ok_word_count,
-            |  (n_word_chars >= n_words * 3
-            |    AND n_word_chars <= n_words * 10) AS ok_mean_len,
-            |  (n_alpha_words * 5 >= n_words * 4) AS ok_alpha,
-            |  (n_stop >= 2) AS ok_stop,
-            |  ((n_words >= 25 AND n_words <= 80)
-            |    AND (n_word_chars >= n_words * 3
-            |         AND n_word_chars <= n_words * 10)
-            |    AND (n_alpha_words * 5 >= n_words * 4)
-            |    AND (n_stop >= 2)) AS is_clean
-            |FROM c""".stripMargin))
-
-  val q85 = Q("q85_stratified_sample",
-    // exact-n deterministic per-source sample: the n lowest (md5(id), id)
-    // rows per stratum — a reproducible uniform draw whose members never
-    // change run to run (graft.ops.Sampling.stratified); rank surface is
-    // integer + md5 string order, both engines agree exactly
-    (s, d) => graft.ops.Sampling.stratified(docs(s, d), "doc_id", "source", 7),
-    Some("""SELECT doc_id, source, sample_rk FROM (
-           |  SELECT doc_id, source, row_number() OVER (PARTITION BY source
-           |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS sample_rk
-           |  FROM documents) WHERE sample_rk <= 7""".stripMargin))
-
-  val q86 = Q("q86_ivfpq_ann",
-    // IVF-PQ (Jégou et al. 2011 §IV, non-residual ADC — FAISS IVFPQ with
-    // by_residual=false): coarse inverted lists bound the candidates
-    // (nProbe=2 of 8 lists), PQ codes bound the per-candidate memory —
-    // the composition real billion-vector serving uses. Routing = q44's
-    // max-cosine discipline; ranking = q81's round-9 ADC with neighbor_id
-    // ties. Oracle recomputes the ADC directly from the codes (the
-    // engine's LUT is an evaluation-order-identical factoring).
-    (s, d) => graft.ops.Similarity.ivfPqTopK(emb(s, d), Seq(20L, 21L, 22L), 3),
-    Some {
-      def dotD(a: String, b: String) =
-        s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
-      def cosD(a: String, b: String) =
-        s"${dotD(a, b)} / (sqrt(${dotD(a, a)}) * sqrt(${dotD(b, b)}))"
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |co AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-         |ac AS (SELECT e.vec_id, e.v, co.cent_id, ${cosD("e.v", "co.cv")} AS cos
-         |  FROM e CROSS JOIN co),
-         |assigned AS (SELECT vec_id, cent_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cent_id) AS rk
-         |  FROM ac) WHERE rk = 1),
-         |cb AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 16),
-         |sc AS (SELECT e.vec_id, m.m, cb.cent_id,
-         |    list_sum(list_transform(range(1, 9), i ->
-         |      (v[m.m * 8 + i] - cv[m.m * 8 + i]) * (v[m.m * 8 + i] - cv[m.m * 8 + i]))) AS d
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 8)) AS m) m CROSS JOIN cb),
-         |codes AS (SELECT vec_id, m, cent_id AS code FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, cent_id) AS rk
-         |  FROM sc) WHERE rk = 1),
-         |ca AS (SELECT vec_id, list(code ORDER BY m) AS codes FROM codes GROUP BY vec_id),
-         |cbl AS (SELECT list(cv ORDER BY cent_id) AS cbs FROM cb),
-         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id IN (20, 21, 22)),
-         |qc AS (SELECT q_id, qv, co.cent_id, ${cosD("qv", "co.cv")} AS cos
-         |  FROM q CROSS JOIN co),
-         |probed AS (SELECT q_id, qv, cent_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, cent_id) AS rk
-         |  FROM qc) WHERE rk <= 2),
-         |adcs AS (SELECT q_id, a.vec_id AS neighbor_id,
-         |    round(list_sum(list_transform(range(0, 8), m ->
-         |      list_sum(list_transform(range(1, 9), i ->
-         |        (qv[m * 8 + i] - cbs[codes[m + 1] + 1][m * 8 + i])
-         |        * (qv[m * 8 + i] - cbs[codes[m + 1] + 1][m * 8 + i]))))), 9) AS adc
-         |  FROM probed p JOIN assigned a ON a.cent_id = p.cent_id
-         |  JOIN ca ON ca.vec_id = a.vec_id CROSS JOIN cbl
-         |  WHERE a.vec_id <> p.q_id)
-         |SELECT q_id, neighbor_id, adc, rk FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY adc, neighbor_id) AS rk
-         |  FROM adcs) WHERE rk <= 3""".stripMargin
-    })
-
-  val q87 = Q("q87_pq_neardup",
-    // embedding near-dup with PQ-code-PREFIX blocking (the dedup mode a
-    // stored PQ index gives for free): the candidate self-join runs on
-    // the codes table alone — k^prefix blocks bound the funnel (16²=256
-    // here, 954 candidates of 124,750 possible pairs at sf0.001) — then
-    // exact cosine verifies. Same verify/keeper discipline as q46; the
-    // block key is injective (joined with '-') so the string-key engine
-    // join equals the oracle's list-slice equality.
-    (s, d) => graft.ops.Similarity.pqNearDup(emb(s, d), minCosine = 0.2),
-    Some {
-      def dotD(a: String, b: String) =
-        s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |cb AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 16),
-         |sc AS (SELECT e.vec_id, m.m, cb.cent_id,
-         |    list_sum(list_transform(range(1, 9), i ->
-         |      (v[m.m * 8 + i] - cv[m.m * 8 + i]) * (v[m.m * 8 + i] - cv[m.m * 8 + i]))) AS d
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 8)) AS m) m CROSS JOIN cb),
-         |codes AS (SELECT vec_id, m, cent_id AS code FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d, cent_id) AS rk
-         |  FROM sc) WHERE rk = 1),
-         |ca AS (SELECT vec_id, list(code ORDER BY m) AS codes FROM codes GROUP BY vec_id),
-         |cand AS (SELECT x.vec_id AS v1, y.vec_id AS v2 FROM ca x JOIN ca y
-         |  ON x.codes[1:2] = y.codes[1:2] AND x.vec_id < y.vec_id),
-         |scv AS (SELECT v1 AS keeper, v2 AS dup,
-         |    round(${dotD("a.v", "b.v")}
-         |      / (sqrt(${dotD("a.v", "a.v")}) * sqrt(${dotD("b.v", "b.v")})), 9) AS cosine
-         |  FROM cand JOIN e a ON a.vec_id = v1 JOIN e b ON b.vec_id = v2)
-         |SELECT keeper, dup, cosine FROM scv WHERE cosine >= 0.2""".stripMargin
-    })
-
-  // --------------------------------------- G. sketches / boilerplate / intervals
-
-  /** q88's input: the corpus with deterministic boilerplate lines appended
-    * (the q61/q66 synthesize-inside-the-query pattern — the real corpus is
-    * single-line, so cross-document repeated lines are manufactured from
-    * the row's own columns, identically on both engines): a universal
-    * footer (doc-freq = corpus size), a per-source footer (doc-freq =
-    * source size), a modulo promo line (doc-freq ≈ n/7), and a unique ref
-    * line (doc-freq 1).
-    */
-  private def boilerDocs(s: SparkSession, d: String): DataFrame =
-    docs(s, d).withColumn("text2", concat(
-      col("text"), lit("\nsubscribe to our newsletter\ncopyright "),
-      col("source"), lit("\npromo "), (col("doc_id") % 7).cast("string"),
-      lit("\nref "), col("doc_id").cast("string")))
-
-  private val boilerDocsDuck =
-    // || not concat(): Spark's concat NULL-propagates, DuckDB's concat
-    // skips NULL args — a NULL-text doc must go NULL on BOTH engines
-    // || ends each line (never starts one): this snippet is re-embedded in
-    // q88's stripMargin block, which would strip a line-leading || to |
-    """SELECT doc_id, text || chr(10) || 'subscribe to our newsletter' ||
-      |    chr(10) || 'copyright ' || source ||
-      |    chr(10) || 'promo ' || CAST(doc_id % 7 AS VARCHAR) ||
-      |    chr(10) || 'ref ' || CAST(doc_id AS VARCHAR) AS text2
-      |  FROM documents""".stripMargin
-
-  val q88 = Q("q88_boilerplate_lines",
-    // cross-corpus boilerplate stripping (graft.ops.TextQuality
-    // .boilerplate): lines in >= 30 distinct docs removed everywhere,
-    // order preserved; gated on the rebuilt text + its md5. At sf0.01 the
-    // universal footer (500 docs) and the promo line (~71) strip, the
-    // per-source footer (25) and the body/ref lines stay.
-    (s, d) => graft.ops.TextQuality.boilerplate(boilerDocs(s, d), "doc_id", "text2", 30),
-    Some(raw"""WITH base AS ($boilerDocsDuck),
-              |w AS (SELECT doc_id,
-              |    list_filter(list_transform(string_split(text2, chr(10)), x -> trim(x)), x -> x <> '') AS ln
-              |  FROM base),
-              |e AS (SELECT doc_id, unnest(ln) AS line, unnest(range(1, len(ln) + 1)) AS pos FROM w),
-              |f AS (SELECT line, count(DISTINCT doc_id) AS dfreq FROM e GROUP BY 1),
-              |j AS (SELECT e.doc_id, e.pos, e.line, f.dfreq >= 30 AS boiler
-              |  FROM e JOIN f USING (line))
-              |SELECT doc_id, count(*) AS n_lines,
-              |  count(*) FILTER (WHERE boiler) AS n_boiler,
-              |  count(*) FILTER (WHERE NOT boiler) AS n_kept,
-              |  md5(string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE NOT boiler)) AS clean_fp,
-              |  string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE NOT boiler) AS clean_text
-              |FROM j GROUP BY 1""".stripMargin))
-
-  private val q89Oracle =
-    raw"""WITH h AS (SELECT md5(CAST(user_id AS VARCHAR)) AS hx FROM events
-              |  WHERE user_id IS NOT NULL),
-              |r AS (SELECT
-              |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-              |      + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1) AS bucket,
-              |    length(regexp_extract(substr(hx, 3, 12), '^(0*)', 1)) AS z,
-              |    substr(substr(hx, 3, 12), length(regexp_extract(substr(hx, 3, 12), '^(0*)', 1)) + 1, 1) AS d
-              |  FROM h)
-              |SELECT bucket, max(CASE WHEN z = 12 THEN 49
-              |  ELSE 4 * z + (CASE WHEN d >= '8' THEN 0 WHEN d >= '4' THEN 1
-              |                     WHEN d >= '2' THEN 2 ELSE 3 END) + 1 END) AS register
-              |FROM r GROUP BY 1""".stripMargin
-
-  val q89 = Q("q89_hll_registers",
-    // HyperLogLog register table over event user_ids (graft.ops.Sketch
-    // .hllRegisters, p=8): a pure-INTEGER mergeable sketch in the md5 hex
-    // domain — bucket = first 2 hex digits, rho = 1 + leading zero bits of
-    // the next 12, via a regexp zero-run + ASCII CASE ladder both engines
-    // evaluate identically (no float log2). The estimate/merge laws are
-    // spec-gated (SketchSpec); the driver gate hashes the registers.
-    (s, d) => graft.ops.Sketch.hllRegisters(ev(s, d), "user_id", 8),
-    Some(q89Oracle))
-
-  val q90 = Q("q90_heavy_hitters",
-    // frequency sketch -> exact verify (graft.ops.Sketch.heavyHitters):
-    // per-partition Misra-Gries candidates (a provable superset of every
-    // word with freq > N/k), then exact counts over the broadcast
-    // candidate set only — output exact and partitioning-independent, the
-    // full-vocabulary groupBy never happens. k=30 splits this corpus's
-    // 31-word vocabulary (~15 above, ~16 below), so both the keep and the
-    // drop side of the threshold are exercised.
-    (s, d) => graft.ops.Sketch.heavyHitters(
-      docs(s, d).select(explode(expr(
-        raw"graft_words(text)")).as("item")),
-      "item", 30),
-    Some(raw"""WITH w AS (SELECT unnest(list_filter($tokensDuck, x -> x <> '')) AS item
-              |  FROM documents),
-              |t AS (SELECT count(*) AS n_total FROM w)
-              |SELECT item, count(*) AS n, min(t.n_total) AS n_total
-              |FROM w CROSS JOIN t GROUP BY 1
-              |HAVING count(*) * 30 > min(t.n_total)""".stripMargin))
-
-  val q91 = Q("q91_interval_overlap",
-    // interval-overlap join (graft.ops.IntervalJoin.overlap): per-user
-    // click activity windows [ts, ts+6h) x error windows [ts, ts+4h) that
-    // intersect — exploded to 6 h buckets so the join is a plain hash
-    // equi-join on (user_id, bucket) with arithmetic pair-dedup, never a
-    // nested-loop range join (plan-gated in PlanSpec).
-    (s, d) => {
-      val e = ev(s, d)
-      val l = e.where(col("event_type") === "click").select(
-        col("user_id"), col("event_id").as("l_id"),
-        col("ts").as("l_start"), (col("ts") + expr("INTERVAL 6 HOURS")).as("l_end"))
-      val r = e.where(col("event_type") === "error").select(
-        col("user_id"), col("event_id").as("r_id"),
-        col("ts").as("r_start"), (col("ts") + expr("INTERVAL 4 HOURS")).as("r_end"))
-      graft.ops.IntervalJoin.overlap(l, r, "user_id", bucketSec = 21600)
-    },
-    Some("""WITH l AS (SELECT user_id, event_id AS l_id, ts AS ls,
-           |    ts + INTERVAL 6 HOUR AS le FROM events WHERE event_type = 'click'),
-           |r AS (SELECT user_id, event_id AS r_id, ts AS rs,
-           |    ts + INTERVAL 4 HOUR AS re FROM events WHERE event_type = 'error')
-           |SELECT l.user_id, l_id, r_id,
-           |  epoch_us(least(le, re)) - epoch_us(greatest(ls, rs)) AS overlap_us
-           |FROM l JOIN r ON l.user_id = r.user_id AND ls < re AND rs < le""".stripMargin))
-
-  /** DuckDB integer from the first `digits` hex chars of expression `h` —
-    * the strpos ladder q89 introduced, generalized (no 0x cast: DuckDB and
-    * Spark `conv` must agree digit-by-digit, so both use base-16 positional
-    * arithmetic spelled out).
-    */
-  private def hexIntDuck(h: String, digits: Int): String =
-    (1 to digits).map { i =>
-      val w = (1 to (digits - i)).foldLeft(1L)((a, _) => a * 16)
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1) * $w"
-    }.mkString(" + ")
-
-  val q92 = Q("q92_cms_grid",
-    // count-min sketch grid over document words (graft.ops.Sketch
-    // .cmsCounts, d=4, w=256): a pure-INTEGER mergeable frequency sketch —
-    // cell (r, c) counts items whose md5(r || ':' || item) starts with hex
-    // c. Merge law + overestimate guarantee + partition-independence are
-    // spec-gated (SketchSpec); the driver gate hashes the whole grid.
-    (s, d) => graft.ops.Sketch.cmsCounts(
-      docs(s, d).select(explode(expr(
-        raw"graft_words(text)")).as("item")),
-      "item", d = 4, wHex = 2),
-    Some(raw"""WITH w AS (SELECT unnest(list_filter($tokensDuck, x -> x <> '')) AS item
-              |  FROM documents),
-              |c AS (SELECT t.r AS cms_row,
-              |    md5(CAST(t.r AS VARCHAR) || ':' || item) AS h
-              |  FROM w CROSS JOIN range(4) t(r))
-              |SELECT cms_row, ${hexIntDuck("h", 2)} AS cms_col, count(*) AS cnt
-              |FROM c GROUP BY 1, 2""".stripMargin))
-
-  val q93 = Q("q93_bloom_probe",
-    // Bloom-filter membership (graft.ops.Sketch.bloomBits +
-    // bloomMightContain, k=4, m=65536) built over event_ids, probed with
-    // item = event_id*2 — half the probes are present (even ids below n),
-    // half absent, so the gate pins the exact deterministic false-positive
-    // set at each scale (none at sf0.001's 6% fill; a handful at sf0.01's
-    // 45% fill). The no-false-negative law is structural (present items'
-    // bits are set by construction); the spec adds the fp-rate band.
-    (s, d) => {
-      val bits = graft.ops.Sketch.bloomBits(ev(s, d), "event_id", k = 4, mHex = 4)
-      val probes = ev(s, d).select((col("event_id") * 2).as("item"))
-      graft.ops.Sketch.bloomMightContain(bits, probes, k = 4, mHex = 4)
-    },
-    Some(raw"""WITH bits AS (SELECT DISTINCT
-              |    ${hexIntDuck("md5(CAST(t.r AS VARCHAR) || ':' || CAST(event_id AS VARCHAR))", 4)} AS bit,
-              |    1 AS is_set
-              |  FROM events CROSS JOIN range(4) t(r)),
-              |probes AS (SELECT event_id * 2 AS item FROM events),
-              |cells AS (SELECT item,
-              |    ${hexIntDuck("md5(CAST(t.r AS VARCHAR) || ':' || CAST(item AS VARCHAR))", 4)} AS bit
-              |  FROM probes CROSS JOIN range(4) t(r))
-              |SELECT item, count(*) = sum(coalesce(is_set, 0)) AS might_contain
-              |FROM cells LEFT JOIN bits USING (bit) GROUP BY 1""".stripMargin))
-
-  val q94 = Q("q94_cohort_retention",
-    // cohort retention matrix (graft.ops.Funnel.cohortRetention): users
-    // bucketed by first-activity day, counted at each later active-day
-    // offset. Raw events collapse to distinct (user, day) FIRST, so
-    // everything downstream is bounded by users x days, not event volume.
-    (s, d) => ntz(graft.ops.Funnel.cohortRetention(ev(s, d), "user_id", "ts"),
-      "cohort_day"),
-    Some("""WITH ud AS (SELECT DISTINCT user_id AS u, date_trunc('day', ts) AS day
-           |    FROM events WHERE user_id IS NOT NULL),
-           |c AS (SELECT u, min(day) AS cohort_day FROM ud GROUP BY 1)
-           |SELECT c.cohort_day,
-           |  date_diff('day', c.cohort_day, ud.day) AS offset_days,
-           |  count(*) AS n_users
-           |FROM ud JOIN c USING (u) GROUP BY 1, 2""".stripMargin))
-
-  val q95 = Q("q95_ordered_funnel",
-    // strict first-match conversion funnel view -> click -> purchase
-    // (graft.ops.Funnel.orderedFunnel): per user, each step's first
-    // occurrence STRICTLY after the previous step's completion; one
-    // groupBy + an in-row fold over per-step sorted times (no step joins).
-    // The oracle takes the equivalent sequential-min formulation.
-    (s, d) => ntz(graft.ops.Funnel.orderedFunnel(
-      ev(s, d), "user_id", "ts", "event_type",
-      Seq("view", "click", "purchase")), "t_first", "t_last"),
-    Some("""WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-           |    WHERE event_type = 'view' AND user_id IS NOT NULL GROUP BY 1),
-           |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-           |    JOIN s1 USING (user_id) WHERE e.event_type = 'click' AND e.ts > s1.t1
-           |    GROUP BY 1),
-           |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-           |    JOIN s2 USING (user_id) WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-           |    GROUP BY 1)
-           |SELECT s1.user_id,
-           |  CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-           |       ELSE 1 END AS stage_reached,
-           |  t1 AS t_first, coalesce(t3, t2, t1) AS t_last
-           |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""".stripMargin))
-
-  val q96 = Q("q96_hll_by_day",
-    // GROUPED HLL: one register table per day (graft.ops.Sketch
-    // .hllRegistersBy) — the scale answer to count(DISTINCT user) GROUP BY
-    // day: <=256 integer rows per day instead of a daily shuffle of the
-    // whole id population, and day sketches FOLD to month/total (q97)
-    // without revisiting raw data, which exact distinct cannot do.
-    (s, d) => ntz(graft.ops.Sketch.hllRegistersBy(
-      ev(s, d).withColumn("day", date_trunc("day", col("ts"))),
-      Seq("day"), "user_id", 8), "day"),
-    Some(raw"""WITH h AS (SELECT date_trunc('day', ts) AS day,
-              |    md5(CAST(user_id AS VARCHAR)) AS hx FROM events
-              |  WHERE user_id IS NOT NULL),
-              |r AS (SELECT day,
-              |    (strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-              |      + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1) AS bucket,
-              |    length(regexp_extract(substr(hx, 3, 12), '^(0*)', 1)) AS z,
-              |    substr(substr(hx, 3, 12), length(regexp_extract(substr(hx, 3, 12), '^(0*)', 1)) + 1, 1) AS d
-              |  FROM h)
-              |SELECT day, bucket, max(CASE WHEN z = 12 THEN 49
-              |  ELSE 4 * z + (CASE WHEN d >= '8' THEN 0 WHEN d >= '4' THEN 1
-              |                     WHEN d >= '2' THEN 2 ELSE 3 END) + 1 END) AS register
-              |FROM r GROUP BY 1, 2""".stripMargin))
-
-  val q97 = Q("q97_hll_fold",
-    // the sketch-tier mergeability LAW under the driver hash gate: folding
-    // the per-day register tables (q96's surface) down to the total
-    // sketch equals sketching the whole input directly — so this query
-    // reuses q89's oracle SQL VERBATIM (the q72-reuses-q11 pattern). This
-    // is what makes grouped HLL retention-tier-compatible: expire raw
-    // days, keep 256-row sketches, still answer global distincts.
-    (s, d) => graft.ops.Sketch.foldRegisters(
-      graft.ops.Sketch.hllRegistersBy(
-        ev(s, d).withColumn("day", date_trunc("day", col("ts"))),
-        Seq("day"), "user_id", 8),
-      Nil),
-    Some(q89Oracle))
-
-  val q98 = Q("q98_hybrid_rrf",
-    // hybrid retrieval (graft.ops.Retrieval): an INTEGER term-overlap
-    // lexical leg (top-20) + the q40-style exact-cosine vector leg
-    // (top-20, round-9 like every cosine surface), fused by reciprocal-
-    // rank fusion rrf = sum 1/(60 + rank) — rank-domain, so the fused
-    // score is a 2-term commutative IEEE sum, hash-exact UNROUNDED (the
-    // q62 precedent). Probes = docs 0-4 (the q40 convention); doc_id and
-    // vec_id are the aligned corpus ids.
-    (s, d) => {
-      val lex = graft.ops.Retrieval.termOverlapTopN(
-        docs(s, d), "doc_id", "text",
-        docs(s, d).where(col("doc_id") < 5), "doc_id", n = 20)
-      val e = emb(s, d).select(col("vec_id"), expr(vCast).as("v"))
-      val qv = e.where(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val scored = e.crossJoin(broadcast(qv))
-        .where(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("doc_id"),
-          round(expr(dotSpark.format("qv", "v")) /
-            (sqrt(expr(dotSpark.format("qv", "qv"))) * sqrt(expr(dotSpark.format("v", "v")))), 9)
-            .as("cosine"))
-      val vw = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("doc_id"))
-      val vec = scored.withColumn("rk", row_number().over(vw)).where(col("rk") <= 20)
-      graft.ops.Retrieval.rrfFuse(Seq(lex, vec), "doc_id", k = 60, topN = 10)
-    },
-    Some(raw"""WITH dt AS (SELECT doc_id,
-              |    unnest(list_distinct(list_filter($tokensDuck, x -> x <> ''))) AS w
-              |  FROM documents),
-              |qt AS (SELECT doc_id AS q_id, w FROM dt WHERE doc_id < 5),
-              |ov AS (SELECT qt.q_id, dt.doc_id, count(*) AS overlap
-              |  FROM dt JOIN qt USING (w) WHERE dt.doc_id <> qt.q_id GROUP BY 1, 2),
-              |lex AS (SELECT q_id, doc_id, rk FROM (SELECT q_id, doc_id, row_number()
-              |    OVER (PARTITION BY q_id ORDER BY overlap DESC, doc_id) AS rk FROM ov)
-              |  WHERE rk <= 20),
-              |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              |  FROM embeddings),
-              |qe AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-              |sc AS (SELECT q_id, e.vec_id AS doc_id,
-              |  round(list_sum(list_transform(range(1, 65), i -> qv[i] * v[i]))
-              |   / (sqrt(list_sum(list_transform(range(1, 65), i -> qv[i] * qv[i])))
-              |      * sqrt(list_sum(list_transform(range(1, 65), i -> v[i] * v[i])))), 9) AS cosine
-              |  FROM e CROSS JOIN qe WHERE e.vec_id <> q_id),
-              |vec AS (SELECT q_id, doc_id, rk FROM (SELECT q_id, doc_id, row_number()
-              |    OVER (PARTITION BY q_id ORDER BY cosine DESC, doc_id) AS rk FROM sc)
-              |  WHERE rk <= 20),
-              |fused AS (SELECT q_id, doc_id, sum(CAST(1.0 AS DOUBLE) / (60 + rk)) AS rrf
-              |  FROM (SELECT * FROM lex UNION ALL SELECT * FROM vec) GROUP BY 1, 2)
-              |SELECT q_id, doc_id, rrf, rank FROM (SELECT q_id, doc_id, rrf,
-              |    row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
-              |  FROM fused)
-              |WHERE rank <= 10""".stripMargin))
-
-  val q99 = Q("q99_windowed_funnel",
-    // q95's funnel with a 48 h first-touch conversion window: later steps
-    // must land strictly after the previous step AND within 48 h of the
-    // user's FIRST view (no re-anchoring). The oracle adds the horizon
-    // bound to each sequential min.
-    (s, d) => ntz(graft.ops.Funnel.orderedFunnel(
-      ev(s, d), "user_id", "ts", "event_type",
-      Seq("view", "click", "purchase"), horizonSec = Some(48L * 3600)),
-      "t_first", "t_last"),
-    Some("""WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-           |    WHERE event_type = 'view' AND user_id IS NOT NULL GROUP BY 1),
-           |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-           |    JOIN s1 USING (user_id) WHERE e.event_type = 'click'
-           |    AND e.ts > s1.t1 AND e.ts <= s1.t1 + INTERVAL 48 HOUR
-           |    GROUP BY 1),
-           |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-           |    JOIN s2 USING (user_id) JOIN s1 USING (user_id)
-           |    WHERE e.event_type = 'purchase'
-           |    AND e.ts > s2.t2 AND e.ts <= s1.t1 + INTERVAL 48 HOUR
-           |    GROUP BY 1)
-           |SELECT s1.user_id,
-           |  CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-           |       ELSE 1 END AS stage_reached,
-           |  t1 AS t_first, coalesce(t3, t2, t1) AS t_last
-           |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""".stripMargin))
-
-  /** Shared input for q100/q102: the per-event_type 1-minute count series,
-    * gap-filled to a regular grid (the q12 pattern at minute resolution) —
-    * the precondition [[graft.ops.SeriesStats]] documents for lead(k) to
-    * mean exactly k grid steps.
-    */
-  private def minuteCountSeries(s: SparkSession, d: String): DataFrame = {
-    val b = ev(s, d).groupBy(col("event_type"), date_trunc("minute", col("ts")).as("m"))
-      .agg(count(lit(1)).as("c"))
-    val spans = b.groupBy(col("event_type")).agg(min(col("m")).as("m0"), max(col("m")).as("m1"))
-    val grid = spans.select(col("event_type"),
-      explode(expr("sequence(m0, m1, interval 1 minute)")).as("ts"))
-    grid.join(b, grid("event_type") === b("event_type") && grid("ts") === b("m"), "left")
-      .select(grid("event_type"), grid("ts"), coalesce(col("c"), lit(0L)).as("x"))
-  }
-
-  private val minuteSeriesDuck =
-    raw"""b AS (SELECT event_type, date_trunc('minute', ts) AS m, count(*) AS c
-         |  FROM events GROUP BY 1, 2),
-         |s AS (SELECT event_type, min(m) AS m0, max(m) AS m1 FROM b GROUP BY 1),
-         |g AS (SELECT event_type, unnest(generate_series(m0, m1, INTERVAL 1 MINUTE)) AS ts FROM s),
-         |f AS (SELECT g.event_type, g.ts, CAST(coalesce(b.c, 0) AS BIGINT) AS x
-         |  FROM g LEFT JOIN b ON g.event_type = b.event_type AND g.ts = b.m)""".stripMargin
-
-  val q100 = Q("q100_acf",
-    // per-key autocorrelation at lags 1..5 over the gap-filled 1-minute
-    // count series (graft.ops.SeriesStats.acf) — the series-vs-itself
-    // analog of the reference's pairwise CC (signal/correlate.py:17-101).
-    // All Pearson partials are exact integer sums (hash-stable under any
-    // partitioning); acf itself is ONE double expression over those
-    // integers, round-9. The oracle replays the pairing with explicit
-    // lead(1..5) windows on the identical filled grid (a lag self-join
-    // is quadratic in DuckDB — no equi-key on time).
-    (s, d) => graft.ops.SeriesStats.acf(
-      minuteCountSeries(s, d), Seq("event_type"), "ts", "x", maxLag = 5),
-    Some(raw"""WITH $minuteSeriesDuck,
-              |p0 AS (SELECT event_type, x,
-              |    lead(x, 1) OVER w AS y1, lead(x, 2) OVER w AS y2,
-              |    lead(x, 3) OVER w AS y3, lead(x, 4) OVER w AS y4,
-              |    lead(x, 5) OVER w AS y5
-              |  FROM f WINDOW w AS (PARTITION BY event_type ORDER BY ts)),
-              |u AS (SELECT event_type, 1 AS lag, x, y1 AS y FROM p0 UNION ALL
-              |  SELECT event_type, 2, x, y2 FROM p0 UNION ALL
-              |  SELECT event_type, 3, x, y3 FROM p0 UNION ALL
-              |  SELECT event_type, 4, x, y4 FROM p0 UNION ALL
-              |  SELECT event_type, 5, x, y5 FROM p0),
-              |p AS (SELECT event_type, CAST(lag AS INTEGER) AS lag, x, y
-              |  FROM u WHERE y IS NOT NULL),
-              |a AS (SELECT event_type, lag, count(*) AS n_pairs,
-              |  CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-              |  CAST(sum(x*y) AS BIGINT) AS sxy, CAST(sum(x*x) AS BIGINT) AS sxx,
-              |  CAST(sum(y*y) AS BIGINT) AS syy FROM p GROUP BY 1, 2)
-              |SELECT event_type, lag, n_pairs, sx, sy, sxy, sxx, syy,
-              |  CASE WHEN sqrt(CAST(n_pairs*sxx - sx*sx AS DOUBLE) * CAST(n_pairs*syy - sy*sy AS DOUBLE)) = 0
-              |    THEN NULL
-              |    ELSE round(CAST(n_pairs*sxy - sx*sy AS DOUBLE)
-              |      / sqrt(CAST(n_pairs*sxx - sx*sx AS DOUBLE) * CAST(n_pairs*syy - sy*sy AS DOUBLE)), 9) END AS acf
-              |FROM a""".stripMargin))
-
-  val q101 = Q("q101_transitions",
-    // first-order state-transition matrix over per-user event sequences
-    // (graft.ops.SeriesStats.transitions): counts are exact integers; the
-    // row-normalized p is one integer division, round-9. event_id is the
-    // unique tiebreaker so the per-user sequence is total (q13 precedent).
-    (s, d) => graft.ops.SeriesStats.transitions(
-      ev(s, d), "user_id", "ts", "event_type", tieCols = Seq("event_id")),
-    Some("""WITH s AS (SELECT user_id, event_type AS from_state,
-           |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_state
-           |  FROM events WHERE user_id IS NOT NULL)
-           |SELECT from_state, to_state, count(*) AS n_trans,
-           |  round(CAST(count(*) AS DOUBLE) / CAST(sum(count(*)) OVER (PARTITION BY from_state) AS DOUBLE), 9) AS p
-           |FROM s WHERE to_state IS NOT NULL GROUP BY 1, 2""".stripMargin))
-
-  val q102 = Q("q102_mad_anomaly",
-    // rolling-median/MAD anomaly flags over the gap-filled minute series
-    // (graft.ops.SeriesStats.rollingMadAnomaly, ±2-row window, k=3).
-    // Entirely in the exact integer domain — med2 = 2*median,
-    // mad4 = 4*MAD, flag = 2*|2x - med2| > k*mad4 — so the output hashes
-    // identically under any partitioning and any engine (no float
-    // median/quantile semantics to reconcile).
-    (s, d) => ntz(graft.ops.SeriesStats.rollingMadAnomaly(
-      minuteCountSeries(s, d), Seq("event_type"), "ts", "x", halfWin = 2, k = 3), "ts"),
-    Some(raw"""WITH $minuteSeriesDuck,
-              |w AS (SELECT event_type, ts, x,
-              |    list_sort(list(x) OVER (PARTITION BY event_type ORDER BY ts
-              |      ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)) AS win
-              |  FROM f),
-              |m AS (SELECT event_type, ts, x, win, len(win) AS n,
-              |    CASE WHEN len(win) % 2 = 1 THEN 2 * win[(len(win)+1)//2]
-              |         ELSE win[len(win)//2] + win[len(win)//2 + 1] END AS med2
-              |  FROM w),
-              |d AS (SELECT event_type, ts, x, med2, n,
-              |    list_sort(list_transform(win, v -> abs(2*v - med2))) AS dev2 FROM m),
-              |z AS (SELECT event_type, ts, x, med2,
-              |    CASE WHEN n % 2 = 1 THEN 2 * dev2[(n+1)//2]
-              |         ELSE dev2[n//2] + dev2[n//2 + 1] END AS mad4
-              |  FROM d)
-              |SELECT event_type, ts, x, CAST(med2 AS BIGINT) AS med2, CAST(mad4 AS BIGINT) AS mad4,
-              |  (2 * abs(2*x - med2) > 3 * mad4) AS is_anomaly
-              |FROM z""".stripMargin))
-
-  val q103 = Q("q103_lm_support",
-    // KenLM-style LM quality filter (graft.ops.LmScore.supportScore): a
-    // bigram model from the reference slice (doc_id % 10 == 0, the q75
-    // holdout convention) scores the rest by exact-integer model support.
-    // All aggregates are integer sums; the two rates are single int/int
-    // divisions round-6; the low-quality flag is integer cross-multiplied
-    // (no ln on the gated surface — see LmScore scaladoc).
-    (s, d) => {
-      val dd = docs(s, d)
-      val ref = dd.where(col("doc_id") % 10 === 0)
-      graft.ops.LmScore.supportScore(
-        dd.where(col("doc_id") % 10 =!= 0),
-        graft.ops.LmScore.bigramCounts(ref, "doc_id", "text"),
-        graft.ops.LmScore.unigramCounts(ref, "doc_id", "text"),
-        "doc_id", "text")
-    },
-    Some(s"""WITH toks AS (SELECT doc_id, $tokensDuck AS a FROM documents
-            |  WHERE len($tokensDuck) >= 2),
-            |tr AS (SELECT doc_id,
-            |    unnest(list_transform(generate_series(1, len(a) - 1), i -> a[i])) AS w1,
-            |    unnest(list_transform(generate_series(1, len(a) - 1), i -> a[i+1])) AS w2
-            |  FROM toks),
-            |big AS (SELECT w1, w2, count(*) AS c2 FROM tr WHERE doc_id % 10 = 0 GROUP BY 1, 2),
-            |uni AS (SELECT w1, count(*) AS c1 FROM tr WHERE doc_id % 10 = 0 GROUP BY 1),
-            |sc AS (SELECT t.doc_id, count(*) AS n_big,
-            |    count(*) - count(b.c2) AS n_unk,
-            |    CAST(coalesce(sum(b.c2), 0) AS BIGINT) AS support,
-            |    CAST(coalesce(sum(u.c1), 0) AS BIGINT) AS uni_support
-            |  FROM tr t LEFT JOIN big b ON t.w1 = b.w1 AND t.w2 = b.w2
-            |    LEFT JOIN uni u ON t.w1 = u.w1
-            |  WHERE t.doc_id % 10 <> 0 GROUP BY 1)
-            |SELECT doc_id, n_big, n_unk, support, uni_support,
-            |  round(CAST(support AS DOUBLE) / CAST(n_big AS DOUBLE), 6) AS avg_support,
-            |  round(CAST(n_unk AS DOUBLE) / CAST(n_big AS DOUBLE), 6) AS unk_rate,
-            |  n_unk * 100 >= n_big * 50 AS is_lowq
-            |FROM sc""".stripMargin))
-
-  val q104 = Q("q104_trailing_mad",
-    // trailing-window MAD flags (graft.ops.SeriesStats.trailingMadAnomaly,
-    // last-4-rows window, k=3): q102's exact integer surface with a
-    // past-only frame, so every flag is final on arrival — the batch
-    // definition the StreamingAnomaly live face is spec-equal to.
-    (s, d) => ntz(graft.ops.SeriesStats.trailingMadAnomaly(
-      minuteCountSeries(s, d), Seq("event_type"), "ts", "x", win = 4, k = 3), "ts"),
-    Some(raw"""WITH $minuteSeriesDuck,
-              |w AS (SELECT event_type, ts, x,
-              |    list_sort(list(x) OVER (PARTITION BY event_type ORDER BY ts
-              |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)) AS win
-              |  FROM f),
-              |m AS (SELECT event_type, ts, x, win, len(win) AS n,
-              |    CASE WHEN len(win) % 2 = 1 THEN 2 * win[(len(win)+1)//2]
-              |         ELSE win[len(win)//2] + win[len(win)//2 + 1] END AS med2
-              |  FROM w),
-              |d AS (SELECT event_type, ts, x, med2, n,
-              |    list_sort(list_transform(win, v -> abs(2*v - med2))) AS dev2 FROM m),
-              |z AS (SELECT event_type, ts, x, med2,
-              |    CASE WHEN n % 2 = 1 THEN 2 * dev2[(n+1)//2]
-              |         ELSE dev2[n//2] + dev2[n//2 + 1] END AS mad4
-              |  FROM d)
-              |SELECT event_type, ts, x, CAST(med2 AS BIGINT) AS med2, CAST(mad4 AS BIGINT) AS mad4,
-              |  (2 * abs(2*x - med2) > 3 * mad4) AS is_anomaly
-              |FROM z""".stripMargin))
-
-  /** PII-laced text derived deterministically from the documents table —
-    * the synthetic corpus is word-soup (letters only), so q105 injects
-    * emails/phones/IPs from doc_id arithmetic, identically in both
-    * engines, then scrubs them. Presence varies by doc (mod-classes) so
-    * the counts exercise 0 and 1 per category.
-    */
-  private val piiTextSpark: org.apache.spark.sql.Column = concat(
-    when(col("doc_id") % 3 === 0, concat(lit("mail u"), col("doc_id").cast("string"),
-      lit("@ex"), (col("doc_id") % 7).cast("string"), lit(".org "))).otherwise(lit("")),
-    substring(coalesce(col("text"), lit("")), 1, 80),
-    when(col("doc_id") % 4 === 1, concat(lit(" call +31"),
-      (col("doc_id") + 6000000L).cast("string"))).otherwise(lit("")),
-    when(col("doc_id") % 5 === 2, concat(lit(" or "), (col("doc_id") % 900 + 100).cast("string"),
-      lit("-555-"), (col("doc_id") % 9000 + 1000).cast("string"))).otherwise(lit("")),
-    when(col("doc_id") % 2 === 0, concat(lit(" ip 10."), (col("doc_id") % 256).cast("string"),
-      lit(".0."), (col("doc_id") % 100).cast("string"))).otherwise(lit("")))
-
-  private val piiTextDuck: String =
-    """(CASE WHEN doc_id % 3 = 0 THEN 'mail u' || CAST(doc_id AS VARCHAR) || '@ex'
-      |   || CAST(doc_id % 7 AS VARCHAR) || '.org ' ELSE '' END)
-      | || substr(coalesce(text, ''), 1, 80)
-      | || (CASE WHEN doc_id % 4 = 1 THEN ' call +31' || CAST(doc_id + 6000000 AS VARCHAR) ELSE '' END)
-      | || (CASE WHEN doc_id % 5 = 2 THEN ' or ' || CAST(doc_id % 900 + 100 AS VARCHAR)
-      |   || '-555-' || CAST(doc_id % 9000 + 1000 AS VARCHAR) ELSE '' END)
-      | || (CASE WHEN doc_id % 2 = 0 THEN ' ip 10.' || CAST(doc_id % 256 AS VARCHAR)
-      |   || '.0.' || CAST(doc_id % 100 AS VARCHAR) ELSE '' END)""".stripMargin.replace("\n", " ")
-
-  val q105 = Q("q105_pii_scrub",
-    // PII redaction (graft.ops.TrainPrep.scrubPii): sequential
-    // email→phone→IP regex passes, each category counted on the text as
-    // it stands when scrubbed. The patterns use only the Java-regex ∩ RE2
-    // common subset (char classes, bounded quantifiers, \b, alternation)
-    // so the full CLEAN STRING hash-matches RE2 byte-for-byte — the
-    // privacy-scrub stage every released corpus runs (pure per-row map,
-    // zero shuffle)
-    (s, d) => graft.ops.TrainPrep.scrubPii(
-      docs(s, d).select(col("doc_id"), piiTextSpark.as("text")), "text")
-      .select(col("doc_id"), col("n_emails").cast("long").as("n_emails"),
-        col("n_phones").cast("long").as("n_phones"),
-        col("n_ips").cast("long").as("n_ips"), col("clean")),
-    Some(raw"""WITH t AS (SELECT doc_id, $piiTextDuck AS text FROM documents),
-              |s1 AS (SELECT doc_id,
-              |    len(regexp_extract_all(text, '${graft.ops.TrainPrep.EmailRe}')) AS n_emails,
-              |    regexp_replace(text, '${graft.ops.TrainPrep.EmailRe}', '<EMAIL>', 'g') AS t FROM t),
-              |s2 AS (SELECT doc_id, n_emails,
-              |    len(regexp_extract_all(t, '${graft.ops.TrainPrep.PhoneRe}')) AS n_phones,
-              |    regexp_replace(t, '${graft.ops.TrainPrep.PhoneRe}', '<PHONE>', 'g') AS t FROM s1)
-              |SELECT doc_id, n_emails, n_phones,
-              |  len(regexp_extract_all(t, '${graft.ops.TrainPrep.IpRe}')) AS n_ips,
-              |  regexp_replace(t, '${graft.ops.TrainPrep.IpRe}', '<IP>', 'g') AS clean
-              |FROM s2""".stripMargin))
-
-  val q106 = Q("q106_seq_packing",
-    // GPT-style sequence packing (graft.ops.TrainPrep.pack): docs laid
-    // head-to-tail in (md5-shard, id) order, token stream cut every 128
-    // tokens — which training sequences each doc lands in. One shuffle on
-    // the shard key; the per-shard cumsum is the parallelism unit, no
-    // global sort anywhere
-    (s, d) => graft.ops.TrainPrep.pack(docs(s, d), "doc_id", "text",
-      budget = 128, nShards = 8),
-    Some(s"""WITH b AS (SELECT doc_id, (${duckBucket("doc_id")}) % 8 AS shard,
-            |    CAST(len($tokensDuck) AS BIGINT) AS n_tok FROM documents),
-            |o AS (SELECT doc_id, shard, n_tok,
-            |    -- CAST: the window sum is HUGEINT → float64 under the
-            |    -- driver's type-sensitive hash (r5 q106 FAIL); BIGINT here
-            |    -- keeps tok_offset and the // results integer on both sides
-            |    CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-            |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS tok_offset
-            |  FROM b WHERE n_tok >= 1)
-            |SELECT doc_id, shard, n_tok, tok_offset,
-            |  tok_offset // 128 AS first_seq,
-            |  (tok_offset + n_tok - 1) // 128 AS last_seq,
-            |  (tok_offset + n_tok - 1) // 128 - tok_offset // 128 + 1 AS n_seqs
-            |FROM o""".stripMargin))
-
-  val q107 = Q("q107_token_chunks",
-    // sliding-window chunking (graft.ops.TrainPrep.chunk): 32-token
-    // windows at stride 24, final windows partial, chunk text rebuilt
-    // from the token array (canonical single-space) — the long-context /
-    // retrieval splitter. Pure per-row explode, zero shuffle
-    (s, d) => graft.ops.TrainPrep.chunk(docs(s, d), "doc_id", "text",
-      chunkSize = 32, stride = 24),
-    Some(s"""WITH w AS (SELECT doc_id, $tokensDuck AS ws FROM documents),
-            |n AS (SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS n FROM w WHERE len(ws) >= 1),
-            |e AS (SELECT doc_id, ws, n, unnest(generate_series(0, n - 1, 24)) AS tok_start FROM n)
-            |SELECT doc_id, tok_start // 24 AS chunk_idx, tok_start,
-            |  least(32, n - tok_start) AS tok_len,
-            |  array_to_string(list_slice(ws, tok_start + 1, tok_start + least(32, n - tok_start)), ' ') AS chunk_text
-            |FROM e""".stripMargin))
-
-  val q108 = Q("q108_m4_downsample",
-    // M4 pixel-bucket downsampling (graft.ops.Rollup.m4, VLDB'14) over
-    // the gap-filled minute series: 256 buckets per event_type, each
-    // keeping {min, max, first, last, n} — the error-free line-chart
-    // reduction, LTTB's deterministic sibling (q23). Bucket index is pure
-    // BIGINT µs arithmetic; all stats are integer extrema / arg-extrema
-    // on the unique grid ts, so the table is hash-exact by construction.
-    (s, d) => ntz(graft.ops.Rollup.m4(
-      minuteCountSeries(s, d), Seq("event_type"), "ts", "x", width = 256), "ts_first"),
-    Some(raw"""WITH $minuteSeriesDuck,
-              |sp AS (SELECT event_type, min(epoch_us(ts)) AS t0u, max(epoch_us(ts)) AS t1u
-              |  FROM f GROUP BY 1),
-              |bk AS (SELECT f.event_type,
-              |    ((epoch_us(f.ts) - sp.t0u) * 256) // (sp.t1u - sp.t0u + 1) AS bucket,
-              |    f.ts, f.x
-              |  FROM f JOIN sp ON f.event_type = sp.event_type)
-              |SELECT event_type, bucket, count(*) AS n, min(x) AS x_min, max(x) AS x_max,
-              |  arg_min(x, ts) AS x_first, arg_max(x, ts) AS x_last, min(ts) AS ts_first
-              |FROM bk GROUP BY 1, 2""".stripMargin))
-
-  val q109 = Q("q109_hist_by_day",
-    // mergeable distribution tier (graft.ops.Sketch.histByKey): per
-    // (event_type, day), 20 equi-width bins of `value` over [0, 500) —
-    // integer counts, ONE IEEE bin expression per row; the day tables are
-    // the retention-tier unit q110 folds.
-    (s, d) => ntz(graft.ops.Sketch.histByKey(
-      ev(s, d).withColumn("day", date_trunc("day", col("ts"))),
-      Seq("event_type", "day"), "value", lo = 0.0, hi = 500.0, nBins = 20), "day"),
-    Some("""SELECT event_type, date_trunc('day', ts) AS day,
-           |  LEAST(19, GREATEST(0, CAST(floor((value - 0.0) * 20 / 500.0) AS INTEGER))) AS bin,
-           |  count(*) AS cnt
-           |FROM events WHERE value IS NOT NULL GROUP BY 1, 2, 3""".stripMargin))
-
-  val q110 = Q("q110_hist_fold",
-    // the histogram tier law, oracle-shaped like q97's HLL fold: folding
-    // the per-day bin counts to event_type (graft.ops.Sketch.histFold,
-    // sum per bin) must equal the histogram computed directly over all
-    // rows — bin-exact, the property that lets a 100 TB scan build days
-    // once and answer any coarser tier without revisiting raw data.
-    (s, d) => graft.ops.Sketch.histFold(
-      graft.ops.Sketch.histByKey(
-        ev(s, d).withColumn("day", date_trunc("day", col("ts"))),
-        Seq("event_type", "day"), "value", lo = 0.0, hi = 500.0, nBins = 20),
-      Seq("event_type")),
-    Some("""SELECT event_type,
-           |  LEAST(19, GREATEST(0, CAST(floor((value - 0.0) * 20 / 500.0) AS INTEGER))) AS bin,
-           |  count(*) AS cnt
-           |FROM events WHERE value IS NOT NULL GROUP BY 1, 2""".stripMargin))
-
-  /** q111's input: the q12-pattern count series at HOUR resolution (720
-    * grid steps over the 30-day span — the recursion depth the oracle's
-    * recursive CTE replays).
-    */
-  private def hourCountSeries(s: SparkSession, d: String): DataFrame = {
-    val b = ev(s, d).groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
-    val spans = b.groupBy(col("event_type")).agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-    val grid = spans.select(col("event_type"),
-      explode(expr("sequence(h0, h1, interval 1 hour)")).as("ts"))
-    grid.join(b, grid("event_type") === b("event_type") && grid("ts") === b("h"), "left")
-      .select(grid("event_type"), grid("ts"), coalesce(col("c"), lit(0L)).as("x"))
-  }
-
-  private val hourSeriesDuck =
-    raw"""b AS (SELECT event_type, date_trunc('hour', ts) AS h, count(*) AS c
-         |  FROM events GROUP BY 1, 2),
-         |s AS (SELECT event_type, min(h) AS h0, max(h) AS h1 FROM b GROUP BY 1),
-         |g AS (SELECT event_type, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS ts FROM s),
-         |f AS (SELECT g.event_type, g.ts, CAST(coalesce(b.c, 0) AS BIGINT) AS x
-         |  FROM g LEFT JOIN b ON g.event_type = b.event_type AND g.ts = b.h)""".stripMargin
-
-  val q111 = Q("q111_ewma_hourly",
-    // α=1/2 EWMA smoothing (graft.ops.SeriesStats.ewma) over the hourly
-    // count series: sₜ = (xₜ + sₜ₋₁)/2 — halving is exact in binary, so
-    // the per-key recursion (typed flatMapSortedGroups, O(1) state) is
-    // bit-identical to the oracle's recursive CTE evaluating the same
-    // IEEE ops in the same series order. No rounding anywhere.
-    (s, d) => graft.ops.SeriesStats.ewma(
-      hourCountSeries(s, d), "event_type", "ts", "x"),
-    Some(raw"""WITH RECURSIVE $hourSeriesDuck,
-              |fi AS (SELECT event_type, ts, x,
-              |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY ts) AS BIGINT) AS idx
-              |  FROM f),
-              |r AS (SELECT event_type, ts, idx, x, CAST(x AS DOUBLE) AS ewma
-              |    FROM fi WHERE idx = 1
-              |  UNION ALL
-              |  SELECT fi.event_type, fi.ts, fi.idx, fi.x,
-              |    (CAST(fi.x AS DOUBLE) + r.ewma) / 2
-              |  FROM fi JOIN r ON fi.event_type = r.event_type AND fi.idx = r.idx + 1)
-              |SELECT event_type, ts, x, ewma FROM r""".stripMargin))
-
-  val q112 = Q("q112_shared_spans",
-    // passage-level dedup (graft.ops.Dedup.sharedSpans): matching 3-gram
-    // positions per doc pair grouped into diagonal runs (constant p1−p2,
-    // consecutive p1) — a run of r shingles is a verbatim shared passage
-    // of r+2 tokens. Per pair: longest run, run count, matched positions
-    // — aggregate-only (no argmax row: the q57 tie lesson), exact
-    // integers; the dfCap=100 stop-shingle anti-join applies identically
-    // in the oracle (the q36 discipline).
-    (s, d) => graft.ops.Dedup.sharedSpans(docs(s, d), "doc_id", "text",
-      n = 3, dfCap = 100, minRun = 2),
-    Some(s"""WITH toks AS (SELECT doc_id, $tokensDuck AS a FROM documents WHERE len($tokensDuck) >= 3),
-            |sh AS (SELECT doc_id,
-            |    unnest(generate_series(0, len(a) - 3)) AS pos,
-            |    unnest(list_transform(generate_series(1, len(a) - 2),
-            |      i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2])) AS sh
-            |  FROM toks),
-            |rare AS (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= 100),
-            |shc AS (SELECT s.doc_id, s.pos, s.sh FROM sh s JOIN rare USING (sh)),
-            |hits AS (SELECT x.doc_id AS d1, y.doc_id AS d2, x.pos AS p1, x.pos - y.pos AS diag
-            |  FROM shc x JOIN shc y ON x.sh = y.sh AND x.doc_id < y.doc_id),
-            |isl AS (SELECT d1, d2, diag, p1,
-            |    p1 - row_number() OVER (PARTITION BY d1, d2, diag ORDER BY p1) AS grp
-            |  FROM hits),
-            |runs AS (SELECT d1, d2, diag, grp, count(*) AS run_len
-            |  FROM isl GROUP BY 1, 2, 3, 4)
-            |SELECT d1, d2, max(run_len) AS max_run,
-            |  count(*) FILTER (WHERE run_len >= 2) AS n_runs,
-            |  CAST(sum(run_len) AS BIGINT) AS matched
-            |FROM runs GROUP BY 1, 2 HAVING max(run_len) >= 2""".stripMargin))
-
-  val q113 = Q("q113_cusum",
-    // two-sided CUSUM changepoint detection (graft.ops.SeriesStats.cusum,
-    // Page 1954) over the hourly count series: sp/sn accumulate deviations
-    // beyond slack k=1 from the per-key integer mean, alarm above h=30.
-    // EVERY quantity is a BIGINT (mu = sum div n is floor division of
-    // non-negative counts) — the recursion is exact, no IEEE anywhere, so
-    // the oracle's recursive CTE replays it bit-for-bit (q111's discipline
-    // without even the float determinism argument).
-    (s, d) => graft.ops.SeriesStats.cusum(
-      hourCountSeries(s, d), "event_type", "ts", "x", k = 1L, h = 30L),
-    Some(raw"""WITH RECURSIVE $hourSeriesDuck,
-              |m AS (SELECT event_type, CAST(sum(x) // count(*) AS BIGINT) AS mu
-              |  FROM f GROUP BY 1),
-              |fi AS (SELECT f.event_type, f.ts, f.x, m.mu,
-              |    CAST(row_number() OVER (PARTITION BY f.event_type ORDER BY f.ts) AS BIGINT) AS idx
-              |  FROM f JOIN m USING (event_type)),
-              |r AS (SELECT event_type, ts, idx, x, mu,
-              |    greatest(0, x - mu - 1) AS sp, greatest(0, mu - x - 1) AS sn
-              |    FROM fi WHERE idx = 1
-              |  UNION ALL
-              |  SELECT fi.event_type, fi.ts, fi.idx, fi.x, fi.mu,
-              |    greatest(0, r.sp + fi.x - fi.mu - 1),
-              |    greatest(0, r.sn + fi.mu - fi.x - 1)
-              |  FROM fi JOIN r ON fi.event_type = r.event_type AND fi.idx = r.idx + 1)
-              |SELECT event_type, ts, x, mu, sp AS cusum_pos, sn AS cusum_neg,
-              |  (sp > 30 OR sn > 30) AS is_shift FROM r""".stripMargin))
-
-  val q114 = Q("q114_kmeans_refine",
-    // one Lloyd refinement step for the coarse quantizer (graft.ops
-    // .Similarity.kmeansRefine) — the clustering stage of SemDeDup-style
-    // semantic dedup. Assignment is q44's max-cosine broadcast fold
-    // (ties to lowest cent_id); the centroid update accumulates each
-    // component in FIXED-POINT (floor(x·2^20) as BIGINT — exact: float32
-    // times a power of two is exact in double), so the integer sums
-    // commute and the refined centroids hash identically under any
-    // partitioning; c_new is one double division over exact integers.
-    (s, d) => graft.ops.Similarity.kmeansRefine(emb(s, d), nCentroids = 8),
-    Some {
-      def dotD(a: String, b: String) =
-        s"list_sum(list_transform(range(1, 65), i -> $a[i] * $b[i]))"
-      def cosD(a: String, b: String) =
-        s"${dotD(a, b)} / (sqrt(${dotD(a, a)}) * sqrt(${dotD(b, b)}))"
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |c AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 8),
-         |ac AS (SELECT e.vec_id, e.v, c.cent_id, ${cosD("e.v", "c.cv")} AS cos
-         |  FROM e CROSS JOIN c),
-         |assigned AS (SELECT vec_id, v, cent_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cent_id) AS rk
-         |  FROM ac) WHERE rk = 1),
-         |fx AS (SELECT cent_id,
-         |    CAST(unnest(generate_series(0, 63)) AS INTEGER) AS dim,
-         |    unnest(list_transform(range(1, 65),
-         |      i -> CAST(floor(v[i] * 1048576) AS BIGINT))) AS fx
-         |  FROM assigned)
-         |SELECT cent_id, dim, count(*) AS n, CAST(sum(fx) AS BIGINT) AS sum_fx,
-         |  round(CAST(sum(fx) AS BIGINT) / (1048576 * count(*)), 9) AS c_new
-         |FROM fx GROUP BY 1, 2""".stripMargin
-    })
-
-  /** DuckDB replica of WinnowUtil's normalize+hash pipeline: per doc, the
-    * filtered ASCII-folded codepoint list, then the k=5 polynomial rolling
-    * hashes (direct O(k) sums — max term 122*257^4 < 2^63, mod at the end).
-    */
-  private val winnowHashesDuck: String =
-    """cs AS (SELECT doc_id,
-      |    list_filter(list_transform(range(1, length(coalesce(text, '')) + 1),
-      |      i -> CASE WHEN unicode(substr(coalesce(text, ''), i, 1)) BETWEEN 97 AND 122
-      |             THEN unicode(substr(coalesce(text, ''), i, 1))
-      |           WHEN unicode(substr(coalesce(text, ''), i, 1)) BETWEEN 65 AND 90
-      |             THEN unicode(substr(coalesce(text, ''), i, 1)) + 32
-      |           WHEN unicode(substr(coalesce(text, ''), i, 1)) BETWEEN 48 AND 57
-      |             THEN unicode(substr(coalesce(text, ''), i, 1))
-      |           END), c -> c IS NOT NULL) AS cs
-      |  FROM documents),
-      |hs AS (SELECT doc_id, len(cs) - 4 AS m,
-      |    list_transform(range(1, greatest(len(cs) - 4, 0) + 1),
-      |      i -> (cs[i]*4362470401 + cs[i+1]*16974593 + cs[i+2]*66049
-      |            + cs[i+3]*257 + cs[i+4]) % 1000000007) AS hs
-      |  FROM cs WHERE len(cs) >= 5)""".stripMargin
-
-  val q115 = Q("q115_winnow_fp",
-    // winnowing document fingerprints (graft.functions.WinnowFingerprints,
-    // the MOSS rolling-hash algorithm, k=5 w=4): the DISTINCT rightmost-min
-    // (pos, hash) selections over every w-window of k-gram hashes. The
-    // kernel is one codegen'd byte pass per row; the oracle replays the
-    // identical integer arithmetic with list functions and picks each
-    // window's rightmost minimum via list_position over the reversed slice.
-    // Every output is exact-integer -> hash gate.
-    (s, d) => graft.ops.Winnow.fingerprints(docs(s, d), "doc_id", "text", k = 5, w = 4),
-    Some(s"""WITH $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |sel AS (SELECT doc_id, e,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp,
-    -- reversed-slice index p maps back to global hash index e - p + 1
-            |    e - list_position(list_reverse(list_slice(hs, greatest(1, e - 3), e)),
-            |                      list_min(list_slice(hs, greatest(1, e - 3), e))) + 1 AS pos0
-            |  FROM win)
-            |SELECT DISTINCT doc_id,
-            |  CAST(pos0 AS INTEGER) AS pos, CAST(fp AS BIGINT) AS fp
-            |FROM sel""".stripMargin))
-
-  val q116 = Q("q116_winnow_pairs",
-    // winnowing near-dup candidates (graft.ops.Winnow.candidatePairs): the
-    // bucketed self-equi-join on fingerprint VALUES with the MOSS
-    // document-frequency cap (df in [2, 50]) applied BEFORE the join — the
-    // skew guard that bounds bucket fan-out at corpus scale. n_shared =
-    // distinct shared hashes; pairs kept at >= 2 (one k+w-1 = 8-char run
-    // can collide by chance; two fingerprints mean two separate runs).
-    (s, d) => graft.ops.Winnow.candidatePairs(docs(s, d), "doc_id", "text",
-      k = 5, w = 4, minShared = 2, maxDf = 50),
-    Some(s"""WITH $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |fp AS (SELECT DISTINCT doc_id AS id,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp
-            |  FROM win),
-            |rare AS (SELECT fp FROM fp GROUP BY fp
-            |  HAVING count(*) BETWEEN 2 AND 50)
-            |SELECT x.id AS a, y.id AS b, count(DISTINCT x.fp) AS n_shared
-            |FROM fp x JOIN rare USING (fp) JOIN fp y USING (fp)
-            |WHERE x.id < y.id
-            |GROUP BY 1, 2 HAVING count(DISTINCT x.fp) >= 2""".stripMargin))
-
-  val q117 = Q("q117_langid",
-    // n-gram language ID (graft.ops.LangId — Cavnar-Trenkle profile
-    // scoring): padded char trigrams of the squeezed a-z text, rank-
-    // weighted BIGINT sums against the frozen en/de/es profiles, argmax
-    // with alpha-first ties plus the best-minus-runner-up margin. The
-    // synthetic corpus is word soup (its English-y vocabulary happens to
-    // be dense in de-profile endings like 'en '/'er ', so 'de' wins) — the
-    // gate checks the MECHANISM (exact scores under the identical literal
-    // profiles on both engines), not corpus realism; LangIdSpec classifies
-    // real en/de/es snippets correctly.
-    (s, d) => graft.ops.LangId.classify(docs(s, d), "text")
-      .select("doc_id", "s_de", "s_en", "s_es", "lang_pred", "margin"),
-    Some {
-      val profRows = graft.ops.LangId.profiles.toSeq.sortBy(_._1).flatMap {
-        case (l, ts) => ts.map { case (t, wt) => s"('$l', '$t', $wt)" }
-      }.mkString(", ")
-      s"""WITH prof(lang, tri, w) AS (VALUES $profRows),
-         |n AS (SELECT doc_id,
-         |    ' ' || trim(regexp_replace(lower(coalesce(text, '')), '[^a-z]+', ' ', 'g')) || ' ' AS s
-         |  FROM documents),
-         |tg AS (SELECT doc_id, unnest(list_transform(
-         |    range(1, greatest(length(s) - 1, 1)), i -> substr(s, i, 3))) AS g
-         |  FROM n WHERE length(s) >= 3),
-         |sc AS (SELECT tg.doc_id,
-         |    CAST(coalesce(sum(CASE WHEN p.lang = 'de' THEN p.w END), 0) AS BIGINT) AS s_de,
-         |    CAST(coalesce(sum(CASE WHEN p.lang = 'en' THEN p.w END), 0) AS BIGINT) AS s_en,
-         |    CAST(coalesce(sum(CASE WHEN p.lang = 'es' THEN p.w END), 0) AS BIGINT) AS s_es
-         |  FROM tg LEFT JOIN prof p ON tg.g = p.tri GROUP BY 1),
-         |fl AS (SELECT d.doc_id, coalesce(sc.s_de, 0) AS s_de,
-         |    coalesce(sc.s_en, 0) AS s_en, coalesce(sc.s_es, 0) AS s_es
-         |  FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id)
-         |SELECT doc_id, s_de, s_en, s_es,
-         |  CASE WHEN s_de >= s_en AND s_de >= s_es THEN 'de'
-         |       WHEN s_en >= s_es THEN 'en' ELSE 'es' END AS lang_pred,
-         |  greatest(s_de, s_en, s_es)
-         |    - (s_de + s_en + s_es - greatest(s_de, s_en, s_es)
-         |       - least(s_de, s_en, s_es)) AS margin
-         |FROM fl""".stripMargin
-    })
-
-  val q118 = Q("q118_ensemble_neardup",
-    // ensemble near-dup verdict: LEXICAL candidates (q116's winnow
-    // fingerprint pairs) cross-checked by the SEMANTIC leg (embedding
-    // cosine over the aligned doc_id=vec_id vectors, q40's round-9
-    // discipline). Production pipelines gate deletion on both legs
-    // agreeing — lexical-only pairs are often boilerplate collisions,
-    // semantic-only pairs are paraphrases a fingerprint can't see. Two
-    // hash equi-joins bring the vectors to the (already bucketed-join-
-    // bounded) candidate set; no new shuffle shape.
-    (s, d) => {
-      val pairs = graft.ops.Winnow.candidatePairs(docs(s, d), "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 50)
-      val e = emb(s, d).select(col("vec_id"), expr(vCast).as("v"))
-      pairs
-        .join(e.select(col("vec_id").as("a"), col("v").as("va")), "a")
-        .join(e.select(col("vec_id").as("b"), col("v").as("vb")), "b")
-        .select(col("a"), col("b"), col("n_shared"),
-          round(expr(dotSpark.format("va", "vb")) /
-            (sqrt(expr(dotSpark.format("va", "va"))) *
-             sqrt(expr(dotSpark.format("vb", "vb")))), 9).as("cosine"))
-        .withColumn("both_agree", col("cosine") >= 0.2)
-    },
-    Some(s"""WITH $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |fp AS (SELECT DISTINCT doc_id AS id,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp
-            |  FROM win),
-            |rare AS (SELECT fp FROM fp GROUP BY fp
-            |  HAVING count(*) BETWEEN 2 AND 50),
-            |pairs AS (SELECT x.id AS a, y.id AS b, count(DISTINCT x.fp) AS n_shared
-            |  FROM fp x JOIN rare USING (fp) JOIN fp y USING (fp)
-            |  WHERE x.id < y.id
-            |  GROUP BY 1, 2 HAVING count(DISTINCT x.fp) >= 2),
-            |ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            |  FROM embeddings)
-            |SELECT a, b, n_shared,
-            |  round(list_sum(list_transform(range(1, 65), i -> ea.v[i] * eb.v[i]))
-            |   / (sqrt(list_sum(list_transform(range(1, 65), i -> ea.v[i] * ea.v[i])))
-            |      * sqrt(list_sum(list_transform(range(1, 65), i -> eb.v[i] * eb.v[i])))), 9) AS cosine,
-            |  round(list_sum(list_transform(range(1, 65), i -> ea.v[i] * eb.v[i]))
-            |   / (sqrt(list_sum(list_transform(range(1, 65), i -> ea.v[i] * ea.v[i])))
-            |      * sqrt(list_sum(list_transform(range(1, 65), i -> eb.v[i] * eb.v[i])))), 9) >= 0.2 AS both_agree
-            |FROM pairs JOIN ev ea ON pairs.a = ea.vec_id
-            |  JOIN ev eb ON pairs.b = eb.vec_id""".stripMargin))
-
-  val q119 = Q("q119_viz_serve",
-    // resolution-aware tier serving (graft.ops.Rollup.pickTierStep/serve):
-    // three dashboard requests over the same cascade, each resolving to a
-    // different tier — 2h/200pt -> 1m cells, 5d/200pt -> 1h, 28d/100pt ->
-    // 1d. The tier choice is pure integer arithmetic on request constants
-    // (ceil(span/step) <= maxPoints, finest wins), so the oracle hard-codes
-    // each request's step and aggregates raw events at that grain — equal
-    // iff BOTH the picker arithmetic and the tier composition are right.
-    // Sums are round-6 (reordering); first/last omitted (duplicate raw ts
-    // within a cell would make min_by ties engine-dependent).
-    (s, d) => {
-      val pts = ev(s, d).select(col("event_type").as("conv_id"),
-        lit("value").as("metric"), col("ts"), col("value"))
-      val (m1, h1, d1) = Rollup.cascade(pts)
-      val tiers = Map(60L -> m1, 3600L -> h1, 86400L -> d1)
-      def req(id: Int, t0: String, t1: String, mp: Long) =
-        Rollup.serve(tiers, java.sql.Timestamp.valueOf(t0),
-            java.sql.Timestamp.valueOf(t1), mp)
-          .select(lit(id).as("req_id"), col("step_sec"),
-            col("conv_id").as("event_type"), col("chunk_start"),
-            col("n"), round(col("sum"), 6).as("sum_v"),
-            col("min").as("min_v"), col("max").as("max_v"))
-      req(1, "2024-01-02 00:00:00", "2024-01-02 02:00:00", 200L)
-        .unionAll(req(2, "2024-01-05 00:00:00", "2024-01-10 00:00:00", 200L))
-        .unionAll(req(3, "2024-01-01 00:00:00", "2024-01-29 00:00:00", 100L))
-        .transform(x => ntz(x, "chunk_start"))
-    },
-    Some("""SELECT 1 AS req_id, CAST(60 AS BIGINT) AS step_sec, event_type,
-           |  date_trunc('minute', ts) AS chunk_start, count(*) AS n,
-           |  round(sum(value), 6) AS sum_v, min(value) AS min_v, max(value) AS max_v
-           |FROM events
-           |WHERE date_trunc('minute', ts) >= TIMESTAMP '2024-01-02 00:00:00'
-           |  AND date_trunc('minute', ts) < TIMESTAMP '2024-01-02 02:00:00'
-           |GROUP BY 3, 4
-           |UNION ALL
-           |SELECT 2, CAST(3600 AS BIGINT), event_type,
-           |  date_trunc('hour', ts), count(*),
-           |  round(sum(value), 6), min(value), max(value)
-           |FROM events
-           |WHERE date_trunc('hour', ts) >= TIMESTAMP '2024-01-05 00:00:00'
-           |  AND date_trunc('hour', ts) < TIMESTAMP '2024-01-10 00:00:00'
-           |GROUP BY 3, 4
-           |UNION ALL
-           |SELECT 3, CAST(86400 AS BIGINT), event_type,
-           |  date_trunc('day', ts), count(*),
-           |  round(sum(value), 6), min(value), max(value)
-           |FROM events
-           |WHERE date_trunc('day', ts) >= TIMESTAMP '2024-01-01 00:00:00'
-           |  AND date_trunc('day', ts) < TIMESTAMP '2024-01-29 00:00:00'
-           |GROUP BY 3, 4""".stripMargin))
-
-  val q120 = Q("q120_seasonal_decompose",
-    // classical seasonal decomposition (graft.ops.SeriesStats
-    // .seasonalDecompose — the statsmodels moving-average method) of the
-    // hourly count series with a daily season: trend = centered 2×MA(24)
-    // carried as the exact BIGINT t2 (= 48·trend), detrended det = 48x−t2,
-    // seasonal = per-(key, hour-of-day) mean of det as the exact pair
-    // (s_sum, s_n), remainder numerator det·s_n − s_sum — every integer
-    // exact under any partitioning, the three readable doubles are single
-    // divisions round-6. Interior rows only (full ±12 window).
-    (s, d) => ntz(graft.ops.SeriesStats.seasonalDecompose(
-      hourCountSeries(s, d), "event_type", "ts", "x",
-      period = 24, stepSec = 3600L), "ts"),
-    Some(raw"""WITH $hourSeriesDuck,
-              |wf AS (SELECT event_type, ts, x,
-              |    count(*) OVER w25 AS n_win,
-              |    CAST(sum(x) OVER w25 + sum(x) OVER w23 AS BIGINT) AS t2
-              |  FROM f
-              |  WINDOW w25 AS (PARTITION BY event_type ORDER BY ts
-              |      ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING),
-              |    w23 AS (PARTITION BY event_type ORDER BY ts
-              |      ROWS BETWEEN 11 PRECEDING AND 11 FOLLOWING)),
-              |i AS (SELECT event_type, ts, x, t2, 48*x - t2 AS det,
-              |    CAST(EXTRACT(hour FROM ts) AS INTEGER) AS phase
-              |  FROM wf WHERE n_win = 25),
-              |p AS (SELECT event_type, phase,
-              |    CAST(sum(det) AS BIGINT) AS s_sum, count(*) AS s_n
-              |  FROM i GROUP BY 1, 2)
-              |SELECT i.event_type, i.ts, i.x, i.phase, i.t2, i.det,
-              |  p.s_sum, p.s_n,
-              |  round(i.t2 / 48.0, 6) AS trend_r,
-              |  round(p.s_sum / (p.s_n * 48.0), 6) AS seasonal_r,
-              |  round((i.det * p.s_n - p.s_sum) / (p.s_n * 48.0), 6) AS resid_r
-              |FROM i JOIN p ON i.event_type = p.event_type
-              |  AND i.phase = p.phase""".stripMargin))
-
-  val q121 = Q("q121_lagged_corr",
-    // lead/lag Pearson sweep between every pair of hourly event-type
-    // series (graft.ops.SeriesStats.laggedCorr): for each unordered pair
-    // and lag L ∈ [-2, 2] hours, the correlation of (x_a(t), x_b(t+L))
-    // over the overlap. Sufficient statistics and Pearson numerators/
-    // denominators are exact BIGINTs under any partitioning; corr_r is
-    // one double expression (sqrt is correctly rounded per IEEE),
-    // round-6, NULL on constant series. One shifted-ts equi-join shuffle
-    // + a map-side-combined (pair × lag)-row aggregate.
-    (s, d) => graft.ops.SeriesStats.laggedCorr(
-      hourCountSeries(s, d), "event_type", "ts", "x",
-      maxLag = 2, stepSec = 3600L),
-    Some(raw"""WITH $hourSeriesDuck,
-              |l AS (SELECT unnest(range(-2, 3)) AS lg),
-              |gg AS (SELECT a.event_type AS key_a, b.event_type AS key_b,
-              |    CAST(l.lg AS INTEGER) AS "lag", count(*) AS n,
-              |    CAST(sum(a.x) AS BIGINT) AS sa, CAST(sum(b.x) AS BIGINT) AS sb,
-              |    CAST(sum(a.x * a.x) AS BIGINT) AS saa,
-              |    CAST(sum(b.x * b.x) AS BIGINT) AS sbb,
-              |    CAST(sum(a.x * b.x) AS BIGINT) AS sab
-              |  FROM f a, l, f b
-              |  WHERE b.ts = a.ts + l.lg * INTERVAL 1 HOUR
-              |    AND a.event_type < b.event_type
-              |  GROUP BY 1, 2, 3)
-              |SELECT key_a, key_b, "lag", n, sa, sb, saa, sbb, sab,
-              |  n*sab - sa*sb AS num, n*saa - sa*sa AS dena,
-              |  n*sbb - sb*sb AS denb,
-              |  CASE WHEN n*saa - sa*sa > 0 AND n*sbb - sb*sb > 0
-              |    THEN round((n*sab - sa*sb) / sqrt(
-              |      CAST(n*saa - sa*sa AS DOUBLE) * CAST(n*sbb - sb*sb AS DOUBLE)), 6)
-              |  END AS corr_r
-              |FROM gg""".stripMargin))
-
-  val q122 = Q("q122_daily_trend",
-    // per-(event_type, day) OLS trend of the hourly series on the
-    // hour-of-day regressor (graft.ops.SeriesStats.dailyTrend): exact
-    // BIGINT normal-equation pieces, slope/intercept numerators and the
-    // shared denominator, round-6 readable slope_r/icept_r (NULL when
-    // den = 0). One map-side-combined groupBy — no window, no join.
-    (s, d) => ntz(graft.ops.SeriesStats.dailyTrend(
-      hourCountSeries(s, d), "event_type", "ts", "x"), "day"),
-    Some(raw"""WITH $hourSeriesDuck,
-              |gg AS (SELECT event_type, date_trunc('day', ts) AS day,
-              |    count(*) AS n,
-              |    CAST(sum(EXTRACT(hour FROM ts)) AS BIGINT) AS st,
-              |    CAST(sum(x) AS BIGINT) AS sx,
-              |    CAST(sum(EXTRACT(hour FROM ts) * EXTRACT(hour FROM ts)) AS BIGINT) AS stt,
-              |    CAST(sum(EXTRACT(hour FROM ts) * x) AS BIGINT) AS stx
-              |  FROM f GROUP BY 1, 2)
-              |SELECT event_type, day, n, st, sx, stt, stx,
-              |  n*stt - st*st AS den,
-              |  n*stx - st*sx AS slope_num,
-              |  sx*stt - st*stx AS icept_num,
-              |  CASE WHEN n*stt - st*st != 0 THEN
-              |    round((n*stx - st*sx) / CAST(n*stt - st*st AS DOUBLE), 6) END AS slope_r,
-              |  CASE WHEN n*stt - st*st != 0 THEN
-              |    round((sx*stt - st*stx) / CAST(n*stt - st*st AS DOUBLE), 6) END AS icept_r
-              |FROM gg""".stripMargin))
-
-  val q123 = Q("q123_pagerank",
-    // PageRank document centrality (graft.ops.Graph.pageRank) over the
-    // winnowing near-dup graph (q116's candidate pairs, symmetrized):
-    // 3 iterations of rank = (1-d) + d·Σ rank(u)/deg(u), d = 0.85, the
-    // unnormalized GraphX staticPageRank convention — the score that
-    // picks the canonical representative of a template family. Degrees
-    // and the iteration count are exact; ranks carry only per-neighbor
-    // float-sum reorder noise (~1e-15 relative), read round-6 (the
-    // q55/q56 float-sum precedent). The oracle unrolls the same three
-    // join+agg iterations as chained CTEs.
-    (s, d) => {
-      val ds = docs(s, d)
-      val pairs = graft.ops.Winnow.candidatePairs(ds, "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 50)
-      graft.ops.Graph.pageRank(ds, "doc_id", pairs, "a", "b",
-          iterations = 3, d = 0.85)
-        .select(col("doc_id"), round(col("rank"), 6).as("rank_r"))
-    },
-    Some(s"""WITH $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |fp AS (SELECT DISTINCT doc_id AS id,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp
-            |  FROM win),
-            |rare AS (SELECT fp FROM fp GROUP BY fp
-            |  HAVING count(*) BETWEEN 2 AND 50),
-            |pr AS (SELECT x.id AS a, y.id AS b
-            |  FROM fp x JOIN rare USING (fp) JOIN fp y USING (fp)
-            |  WHERE x.id < y.id
-            |  GROUP BY 1, 2 HAVING count(DISTINCT x.fp) >= 2),
-            |sym AS (SELECT a AS src, b AS dst FROM pr
-            |  UNION ALL SELECT b, a FROM pr),
-            |deg AS (SELECT src, count(*) AS dg FROM sym GROUP BY 1),
-            |n0 AS (SELECT doc_id AS id, CAST(1.0 AS DOUBLE) AS rk FROM documents),
-            |c1 AS (SELECT s.dst AS id, sum(r.rk / d.dg) AS c
-            |  FROM sym s JOIN n0 r ON s.src = r.id JOIN deg d ON s.src = d.src
-            |  GROUP BY 1),
-            |n1 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n0 n LEFT JOIN c1 c USING (id)),
-            |c2 AS (SELECT s.dst AS id, sum(r.rk / d.dg) AS c
-            |  FROM sym s JOIN n1 r ON s.src = r.id JOIN deg d ON s.src = d.src
-            |  GROUP BY 1),
-            |n2 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n1 n LEFT JOIN c2 c USING (id)),
-            |c3 AS (SELECT s.dst AS id, sum(r.rk / d.dg) AS c
-            |  FROM sym s JOIN n2 r ON s.src = r.id JOIN deg d ON s.src = d.src
-            |  GROUP BY 1),
-            |n3 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n2 n LEFT JOIN c3 c USING (id))
-            |SELECT id AS doc_id, round(rk, 6) AS rank_r FROM n3""".stripMargin))
-
-  val q124 = Q("q124_holt",
-    // Holt's linear smoothing (graft.ops.SeriesStats.holt, α = β = 1/2)
-    // over the hourly count series: level l = (x + (l' + b'))/2, trend
-    // b = ((l − l') + b')/2, forecast = l + b. The per-key recursion is a
-    // fixed sequence of IEEE double ops in series order — bit-identical
-    // to the oracle's recursive CTE replaying the same expressions (the
-    // q111 EWMA discipline; the oracle recomputes the level expression
-    // inside the trend term — same ops, same value). No rounding.
-    (s, d) => graft.ops.SeriesStats.holt(
-      hourCountSeries(s, d), "event_type", "ts", "x"),
-    Some(raw"""WITH RECURSIVE $hourSeriesDuck,
-              |fi AS (SELECT event_type, ts, x,
-              |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY ts) AS BIGINT) AS idx
-              |  FROM f),
-              |r AS (SELECT event_type, ts, idx, x,
-              |    CAST(x AS DOUBLE) AS level, CAST(0 AS DOUBLE) AS trend
-              |    FROM fi WHERE idx = 1
-              |  UNION ALL
-              |  SELECT fi.event_type, fi.ts, fi.idx, fi.x,
-              |    (CAST(fi.x AS DOUBLE) + (r.level + r.trend)) / 2,
-              |    (((CAST(fi.x AS DOUBLE) + (r.level + r.trend)) / 2 - r.level)
-              |      + r.trend) / 2
-              |  FROM fi JOIN r ON fi.event_type = r.event_type AND fi.idx = r.idx + 1)
-              |SELECT event_type, ts, x, level, trend,
-              |  level + trend AS forecast FROM r""".stripMargin))
-
-  val q125 = Q("q125_canonical_pick",
-    // the dedup KEEP/DROP decision end-to-end: connected components over
-    // the winnow near-dup graph (Dedup.clusters — large/small-star) joined
-    // with PageRank centrality over the SAME graph (Graph.pageRank), then
-    // per cluster the most-central doc wins (rank_r desc, doc_id asc —
-    // deterministic because the order key is the ROUNDED rank). Output
-    // per doc: cluster, size, centrality, is_keep. The oracle composes
-    // q47's transitive-closure CTE with q123's unrolled iterations.
-    (s, d) => {
-      val ds = docs(s, d)
-      // both consumers (clusters AND pageRank) lineage-truncate their
-      // inputs; checkpointing the SHARED pair table first means the
-      // winnow fingerprint pipeline runs once, not twice (bench: q125
-      // 7.2 → ~4 s)
-      val pairs = graft.ops.Winnow.candidatePairs(ds, "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 50).localCheckpoint(eager = false)
-      val cl = graft.ops.Dedup.clusters(pairs, "a", "b", ds, "doc_id")
-      val pr = graft.ops.Graph.pageRank(ds, "doc_id", pairs, "a", "b",
-          iterations = 3, d = 0.85)
-        .select(col("doc_id"), round(col("rank"), 6).as("rank_r"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("cluster_id"))
-      val wo = w.orderBy(col("rank_r").desc, col("doc_id").asc)
-      cl.join(pr, "doc_id")
-        .withColumn("cluster_size", count(lit(1)).over(w))
-        .withColumn("is_keep", row_number().over(wo) === 1)
-    },
-    Some(s"""WITH RECURSIVE $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |fp AS (SELECT DISTINCT doc_id AS id,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp
-            |  FROM win),
-            |rare AS (SELECT fp FROM fp GROUP BY fp
-            |  HAVING count(*) BETWEEN 2 AND 50),
-            |pr AS (SELECT x.id AS a, y.id AS b
-            |  FROM fp x JOIN rare USING (fp) JOIN fp y USING (fp)
-            |  WHERE x.id < y.id
-            |  GROUP BY 1, 2 HAVING count(DISTINCT x.fp) >= 2),
-            |e AS (SELECT a, b FROM pr UNION SELECT b, a FROM pr),
-            |reach(id, r) AS (
-            |  SELECT doc_id, doc_id FROM documents
-            |  UNION
-            |  SELECT e.a, reach.r FROM e JOIN reach ON reach.id = e.b),
-            |cl AS (SELECT id AS doc_id, min(r) AS cluster_id
-            |  FROM reach GROUP BY id),
-            |deg AS (SELECT a AS src, count(*) AS dg FROM e GROUP BY 1),
-            |n0 AS (SELECT doc_id AS id, CAST(1.0 AS DOUBLE) AS rk FROM documents),
-            |c1 AS (SELECT s.b AS id, sum(r.rk / d.dg) AS c
-            |  FROM e s JOIN n0 r ON s.a = r.id JOIN deg d ON s.a = d.src
-            |  GROUP BY 1),
-            |n1 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n0 n LEFT JOIN c1 c USING (id)),
-            |c2 AS (SELECT s.b AS id, sum(r.rk / d.dg) AS c
-            |  FROM e s JOIN n1 r ON s.a = r.id JOIN deg d ON s.a = d.src
-            |  GROUP BY 1),
-            |n2 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n1 n LEFT JOIN c2 c USING (id)),
-            |c3 AS (SELECT s.b AS id, sum(r.rk / d.dg) AS c
-            |  FROM e s JOIN n2 r ON s.a = r.id JOIN deg d ON s.a = d.src
-            |  GROUP BY 1),
-            |n3 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n2 n LEFT JOIN c3 c USING (id)),
-            |j AS (SELECT cl.doc_id, cl.cluster_id, round(n3.rk, 6) AS rank_r
-            |  FROM cl JOIN n3 ON cl.doc_id = n3.id)
-            |SELECT doc_id, cluster_id, rank_r,
-            |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-            |  row_number() OVER (PARTITION BY cluster_id
-            |    ORDER BY rank_r DESC, doc_id ASC) = 1 AS is_keep
-            |FROM j""".stripMargin))
-
-  val q126 = Q("q126_zorder_layout",
-    // Morton/Z-order layout key (graft.functions.Zorder — a codegen'd
-    // BinaryExpression): z = interleave(series code, minute index), the
-    // sort key that makes parquet row-group min/max stats tight on BOTH
-    // the key and time axes (Delta/Iceberg OPTIMIZE ZORDER BY; the
-    // reference's one-axis analog is its (pair, year, doy) directory
-    // nesting). Gated as the per-2^24-z-block locality profile: row
-    // count, distinct keys and the exact mi/z extents per block — pure
-    // integer arithmetic; the oracle replays the identical 5-step
-    // magic-number spread chain in SQL.
-    (s, d) => {
-      val e = ev(s, d)
-      val codes = e.select("event_type").distinct()
-        .withColumn("code",
-          (row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy("event_type")) - 1).cast("long"))
-      // events.ts is NTZ; session TZ is pinned UTC, so the cast is identity.
-      // `div` = integer division (Column `/` would be double division)
-      e.selectExpr("event_type",
-          "unix_micros(cast(ts as timestamp)) div 60000000 as mi")
-        .join(broadcast(codes), "event_type")
-        .withColumn("z", graft.functions.Zorder(col("code"), col("mi")))
-        .groupBy(shiftright(col("z"), 24).as("zb"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("event_type")).as("n_keys"),
-          min(col("mi")).as("min_mi"), max(col("mi")).as("max_mi"),
-          min(col("z")).as("min_z"), max(col("z")).as("max_z"))
-    },
-    Some(raw"""WITH m AS (SELECT event_type, epoch_us(ts) // 60000000 AS mi
-              |  FROM events),
-              |c AS (SELECT event_type,
-              |    CAST(row_number() OVER (ORDER BY event_type) - 1 AS BIGINT) AS code
-              |  FROM (SELECT DISTINCT event_type FROM events)),
-              |j AS (SELECT m.event_type, m.mi, c.code FROM m JOIN c USING (event_type)),
-              |s0 AS (SELECT *, code & 4294967295 AS a0, mi & 4294967295 AS b0 FROM j),
-              |s1 AS (SELECT *, (a0 | (a0 << 16)) & 281470681808895 AS a1,
-              |    (b0 | (b0 << 16)) & 281470681808895 AS b1 FROM s0),
-              |s2 AS (SELECT *, (a1 | (a1 << 8)) & 71777214294589695 AS a2,
-              |    (b1 | (b1 << 8)) & 71777214294589695 AS b2 FROM s1),
-              |s3 AS (SELECT *, (a2 | (a2 << 4)) & 1085102592571150095 AS a3,
-              |    (b2 | (b2 << 4)) & 1085102592571150095 AS b3 FROM s2),
-              |s4 AS (SELECT *, (a3 | (a3 << 2)) & 3689348814741910323 AS a4,
-              |    (b3 | (b3 << 2)) & 3689348814741910323 AS b4 FROM s3),
-              |s5 AS (SELECT *, (a4 | (a4 << 1)) & 6148914691236517205 AS a5,
-              |    (b4 | (b4 << 1)) & 6148914691236517205 AS b5 FROM s4),
-              |zt AS (SELECT event_type, mi, a5 | (b5 << 1) AS z FROM s5)
-              |SELECT z >> 24 AS zb, count(*) AS n,
-              |  count(DISTINCT event_type) AS n_keys,
-              |  min(mi) AS min_mi, max(mi) AS max_mi,
-              |  min(z) AS min_z, max(z) AS max_z
-              |FROM zt GROUP BY 1""".stripMargin))
-
-  val q127 = Q("q127_session_paths",
-    // top-k session paths (graft.ops.Funnel.sessionPaths): q14's ≤30 min
-    // sessionization, each session's first 3 event types '>'-joined in
-    // (ts, event_id) total order, path frequencies + distinct users,
-    // top-10 by (n_sessions desc, path) — the Sankey/flow query. Exact
-    // integers and strings end-to-end; the engine's array_sort-over-
-    // structs assembly equals the oracle's ordered string_agg because
-    // both replay the same total order.
-    (s, d) => graft.ops.Funnel.sessionPaths(ev(s, d), "user_id", "ts",
-      "event_id", "event_type", gapSec = 1800L, maxSteps = 3, k = 10),
-    Some("""WITH g AS (SELECT user_id, ts, event_id, event_type,
-           |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-           |    OVER (PARTITION BY user_id ORDER BY ts, event_id) <= 1800000000
-           |   THEN 0
-           |   WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-           |   THEN 0 ELSE 1 END AS new_s
-           |  FROM events),
-           |se AS (SELECT user_id, ts, event_id, event_type,
-           |  CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid
-           |  FROM g),
-           |st AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid
-           |    ORDER BY ts, event_id) AS step FROM se),
-           |p AS (SELECT user_id, sid,
-           |    string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-           |  FROM st WHERE step <= 3 GROUP BY 1, 2),
-           |c AS (SELECT path, count(*) AS n_sessions,
-           |    count(DISTINCT user_id) AS n_users FROM p GROUP BY 1)
-           |SELECT path, n_sessions, n_users,
-           |  CAST(row_number() OVER (ORDER BY n_sessions DESC, path ASC) AS INTEGER) AS rank
-           |FROM c QUALIFY rank <= 10""".stripMargin))
-
-  val q128 = Q("q128_phrase_search",
-    // exact phrase search over a positional index (graft.ops.Retrieval
-    // .phraseSearch): posexplode both sides, ONE term equi-join, anchor
-    // arithmetic (pos − offset), full occurrence ⇔ votes == phrase
-    // length. Output per (phrase, doc): occurrence count + first anchor —
-    // exact integers. Three probe phrases of lengths 2/2/3 exercise the
-    // duplicate-term and multi-offset paths.
-    (s, d) => {
-      import s.implicits._
-      val phrases = Seq(("p1", "fast table"), ("p2", "table table"),
-        ("p3", "scan slow fast")).toDF("q_id", "phrase")
-      graft.ops.Retrieval.phraseSearch(docs(s, d), "doc_id", "text",
-        phrases, "q_id", "phrase")
-    },
-    Some(raw"""WITH ph(q_id, phrase) AS (VALUES ('p1', 'fast table'),
-              |    ('p2', 'table table'), ('p3', 'scan slow fast')),
-              |dtk AS (SELECT doc_id, list_filter(
-              |    regexp_split_to_array(trim(coalesce(text, '')), '\s+'),
-              |    w -> w != '') AS t FROM documents),
-              |dt AS (SELECT doc_id, unnest(range(1, len(t) + 1)) - 1 AS pos,
-              |    unnest(t) AS w FROM dtk),
-              |qtk AS (SELECT q_id, list_filter(
-              |    regexp_split_to_array(trim(phrase), '\s+'),
-              |    w -> w != '') AS t FROM ph),
-              |qt AS (SELECT q_id, unnest(range(1, len(t) + 1)) - 1 AS i,
-              |    unnest(t) AS w FROM qtk),
-              |ql AS (SELECT q_id, len(t) AS plen FROM qtk),
-              |v AS (SELECT q.q_id, d.doc_id, d.pos - q.i AS anchor,
-              |    count(*) AS votes
-              |  FROM dt d JOIN qt q USING (w)
-              |  GROUP BY 1, 2, 3 HAVING anchor >= 0)
-              |SELECT v.q_id, v.doc_id, count(*) AS n_hits,
-              |  min(anchor) AS first_pos
-              |FROM v JOIN ql USING (q_id) WHERE votes = plen
-              |GROUP BY 1, 2""".stripMargin))
-
-  val q129 = Q("q129_lerp_join",
-    // linear-interpolating as-of join (graft.ops.AsofJoin.lerp): probes
-    // every 90 min across each key's span read the hourly series BETWEEN
-    // samples — bracketing grid points via one union+sort window (prev
-    // carry + strict-next lookahead share the sort), exact BIGINT
-    // num/den_us, value_r one division round-6 (exact-on-grid probes
-    // return the grid value exactly, the same CASE order as the oracle's
-    // double ASOF join).
-    (s, d) => {
-      val g = hourCountSeries(s, d)
-      val spans = g.groupBy(col("event_type"))
-        .agg(min(col("ts")).as("t0"), max(col("ts")).as("t1"))
-      val probes = spans.select(col("event_type"),
-        explode(expr("sequence(t0, t1, interval 90 minutes)")).as("pts"))
-      ntz(graft.ops.AsofJoin.lerp(probes, g, Seq("event_type"),
-        "pts", "ts", "x"), "pts", "prev_ts", "next_ts")
-    },
-    Some(raw"""WITH $hourSeriesDuck,
-              |sp AS (SELECT event_type, min(ts) AS t0, max(ts) AS t1
-              |  FROM f GROUP BY 1),
-              |p AS (SELECT event_type,
-              |    unnest(generate_series(t0, t1, INTERVAL 90 MINUTE)) AS pts
-              |  FROM sp),
-              |pv AS (SELECT p.event_type, p.pts, f.ts AS prev_ts, f.x AS prev_x
-              |  FROM p ASOF LEFT JOIN f
-              |    ON p.event_type = f.event_type AND p.pts >= f.ts),
-              |nx AS (SELECT p.event_type, p.pts, f.ts AS next_ts, f.x AS next_x
-              |  FROM p ASOF LEFT JOIN f
-              |    ON p.event_type = f.event_type AND p.pts < f.ts),
-              |j AS (SELECT pv.event_type, pv.pts, pv.prev_ts, pv.prev_x,
-              |    nx.next_ts, nx.next_x
-              |  FROM pv JOIN nx ON pv.event_type = nx.event_type
-              |    AND pv.pts = nx.pts)
-              |SELECT event_type, pts, prev_ts, prev_x, next_ts, next_x,
-              |  CASE WHEN prev_ts IS NOT NULL AND next_ts IS NOT NULL THEN
-              |    prev_x * (epoch_us(next_ts) - epoch_us(pts))
-              |      + next_x * (epoch_us(pts) - epoch_us(prev_ts)) END AS num,
-              |  CASE WHEN prev_ts IS NOT NULL AND next_ts IS NOT NULL THEN
-              |    epoch_us(next_ts) - epoch_us(prev_ts) END AS den_us,
-              |  CASE WHEN prev_ts = pts THEN round(CAST(prev_x AS DOUBLE), 6)
-              |    WHEN prev_ts IS NOT NULL AND next_ts IS NOT NULL THEN
-              |      round((prev_x * (epoch_us(next_ts) - epoch_us(pts))
-              |        + next_x * (epoch_us(pts) - epoch_us(prev_ts)))
-              |        / CAST(epoch_us(next_ts) - epoch_us(prev_ts) AS DOUBLE), 6)
-              |  END AS value_r
-              |FROM j""".stripMargin))
-
-  val q130 = Q("q130_twap",
-    // time-weighted average per (event_type, day) over the IRREGULAR raw
-    // event stream (graft.ops.SeriesStats.twap): step-function integral
-    // from first observation to day end, same-ts ties ordered by
-    // event_id. n/span_us exact BIGINTs (span telescopes to day_end −
-    // first_ts); twap_r round-6 (per-row value·dt products are single
-    // IEEE multiplies; the sum carries ~1e-16 reorder noise only).
-    (s, d) => ntz(graft.ops.SeriesStats.twap(ev(s, d), "event_type", "ts",
-      "event_id", "value"), "day"),
-    Some(raw"""WITH w AS (SELECT event_type, date_trunc('day', ts) AS day,
-              |    value, epoch_us(ts) AS tu,
-              |    lead(epoch_us(ts)) OVER (PARTITION BY event_type, date_trunc('day', ts)
-              |      ORDER BY ts, event_id) AS nxt,
-              |    epoch_us(date_trunc('day', ts)) + 86400000000 AS de
-              |  FROM events),
-              |dtd AS (SELECT event_type, day, value,
-              |    coalesce(nxt, de) - tu AS dt FROM w)
-              |SELECT event_type, day, count(*) AS n,
-              |  CAST(sum(dt) AS BIGINT) AS span_us,
-              |  round(sum(value * dt) / sum(dt), 6) AS twap_r
-              |FROM dtd GROUP BY 1, 2""".stripMargin))
-
-  val q131 = Q("q131_gini_diversity",
-    // behavioral diversity per user (graft.ops.Funnel.giniDiversity):
-    // Gini impurity of the event-type mix — the exact-rational stand-in
-    // for entropy (ln is not bit-portable; the q74 lesson). All pieces
-    // exact BIGINTs; gini_r one division round-6. Two map-side-combined
-    // groupBys, no join.
-    (s, d) => graft.ops.Funnel.giniDiversity(ev(s, d), "user_id", "event_type"),
-    Some(raw"""WITH c AS (SELECT user_id, event_type, count(*) AS c
-              |  FROM events GROUP BY 1, 2),
-              |g AS (SELECT user_id, CAST(sum(c) AS BIGINT) AS n,
-              |    count(*) AS n_types, CAST(sum(c * c) AS BIGINT) AS sum_sq
-              |  FROM c GROUP BY 1)
-              |SELECT user_id, n, n_types, sum_sq,
-              |  n*n - sum_sq AS gini_num, n*n AS gini_den,
-              |  round((n*n - sum_sq) / CAST(n*n AS DOUBLE), 6) AS gini_r
-              |FROM g""".stripMargin))
-
-  val q132 = Q("q132_fuzzy_pairs",
-    // edit-distance-1 fuzzy pairs via SymSpell deletion-neighborhood
-    // blocking (graft.ops.Dedup.fuzzyPairs): one equi-join on the
-    // {self} ∪ {one-deletion} variant sets of 16-char prefixes (fan-out
-    // exactly 17 per doc, never an all-pairs edit-distance join), then
-    // exact levenshtein verification — integer DP, bit-portable. The
-    // typo/near-miss complement to the shingle dedup family.
-    (s, d) => graft.ops.Dedup.fuzzyPairs(docs(s, d), "doc_id", "text",
-      prefixLen = 16),
-    Some(raw"""WITH t AS (SELECT doc_id, substr(trim(text), 1, 16) AS s
-              |  FROM documents
-              |  WHERE text IS NOT NULL AND length(trim(text)) >= 16),
-              |v AS (SELECT doc_id, s, unnest(list_distinct(list_append(
-              |    list_transform(range(1, length(s) + 1),
-              |      i -> substr(s, 1, i - 1) || substr(s, i + 1)), s))) AS var
-              |  FROM t),
-              |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
-              |    a.s AS s1, b.s AS s2
-              |  FROM v a JOIN v b ON a.var = b.var AND a.doc_id < b.doc_id)
-              |SELECT d1, d2, s1, s2,
-              |  CAST(levenshtein(s1, s2) AS INTEGER) AS dist
-              |FROM cand WHERE levenshtein(s1, s2) <= 1""".stripMargin))
-
-  val q133 = Q("q133_triangles",
-    // triangle counts + local clustering coefficient (graft.ops.Graph
-    // .triangles) over the winnow near-dup graph: canonical a<b<c wedge
-    // join + closing-edge probe (two hash equi-joins), per-node corner
-    // explode — exact integers; coeff_r = 2·tri/(deg·(deg−1)) round-6,
-    // NULL below deg 2. Reads template families (near-cliques, coeff→1)
-    // apart from boilerplate hubs (stars, coeff→0) — the complement of
-    // q123's centrality.
-    (s, d) => {
-      val ds = docs(s, d)
-      val pairs = graft.ops.Winnow.candidatePairs(ds, "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 50)
-      graft.ops.Graph.triangles(ds, "doc_id", pairs, "a", "b")
-    },
-    Some(s"""WITH $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |fp AS (SELECT DISTINCT doc_id AS id,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp
-            |  FROM win),
-            |rare AS (SELECT fp FROM fp GROUP BY fp
-            |  HAVING count(*) BETWEEN 2 AND 50),
-            |pr AS (SELECT x.id AS a, y.id AS b
-            |  FROM fp x JOIN rare USING (fp) JOIN fp y USING (fp)
-            |  WHERE x.id < y.id
-            |  GROUP BY 1, 2 HAVING count(DISTINCT x.fp) >= 2),
-            |deg AS (SELECT id, count(*) AS deg FROM (
-            |    SELECT a AS id FROM pr UNION ALL SELECT b FROM pr)
-            |  GROUP BY 1),
-            |tri AS (SELECT e1.a, e1.b, e2.b AS c
-            |  FROM pr e1 JOIN pr e2 ON e1.b = e2.a
-            |  JOIN pr e3 ON e1.a = e3.a AND e2.b = e3.b),
-            |pn AS (SELECT id, count(*) AS tri_n FROM (
-            |    SELECT a AS id FROM tri UNION ALL SELECT b FROM tri
-            |    UNION ALL SELECT c FROM tri)
-            |  GROUP BY 1)
-            |SELECT d.doc_id, coalesce(deg.deg, 0) AS deg,
-            |  coalesce(pn.tri_n, 0) AS tri_n,
-            |  CASE WHEN coalesce(deg.deg, 0) >= 2 THEN
-            |    round(2 * coalesce(pn.tri_n, 0)
-            |      / CAST(deg.deg * (deg.deg - 1) AS DOUBLE), 6) END AS coeff_r
-            |FROM documents d
-            |LEFT JOIN deg ON d.doc_id = deg.id
-            |LEFT JOIN pn ON d.doc_id = pn.id""".stripMargin))
-
-  /** q134/q135 shared oracle prefix: re-derive every deterministic-media
-    * BODY byte from (asset, index) arithmetic (the q66 discipline — audio
-    * bytes are the BE s16 hi/lo split), then the 4-byte rolling-hash CDC
-    * boundaries and per-chunk integer fingerprints.
-    */
-  private val cdcChunksDuck: String =
-    raw"""ids AS (SELECT unnest(generate_series(0, 199)) AS i),
-         |dims AS (SELECT i, CASE i % 3
-         |    WHEN 0 THEN (16 + (7*i)%17) * (16 + (5*i)%17)
-         |    WHEN 1 THEN 2 * (512 + (31*i)%512)
-         |    ELSE (2 + (13*i)%15) * (8 + (3*i)%9) * (8 + (11*i)%9) END AS blen
-         |  FROM ids),
-         |bts AS (SELECT i, unnest(generate_series(0, blen - 1)) AS j FROM dims),
-         |bv AS (SELECT i, j, CASE WHEN i % 3 = 1 THEN
-         |      -- BE s16 of u - 32768: two's complement flips the hi bit,
-         |      -- so hi = ((u + 32768) % 65536) // 256, lo = u % 256
-         |      CASE WHEN j % 2 = 0
-         |           THEN (((11*i + 17*(j//2)) % 65536 + 32768) % 65536) // 256
-         |           ELSE ((11*i + 17*(j//2)) % 65536) % 256 END
-         |    ELSE (7*i + 31*j) % 256 END AS b
-         |  FROM bts),
-         |rb AS (SELECT i, j, b,
-         |    lag(b, 1) OVER w AS b1, lag(b, 2) OVER w AS b2,
-         |    lag(b, 3) OVER w AS b3
-         |  FROM bv WINDOW w AS (PARTITION BY i ORDER BY j)),
-         |be AS (SELECT rb.i, rb.j, rb.b,
-         |    CASE WHEN rb.j >= 3 AND (rb.b3*16974593 + rb.b2*66049
-         |        + rb.b1*257 + rb.b) % 1000000007 % 32 = 0 THEN 1
-         |      WHEN rb.j = d.blen - 1 THEN 1 ELSE 0 END AS is_end
-         |  FROM rb JOIN dims d ON rb.i = d.i),
-         |ck AS (SELECT i, j, b, CAST(coalesce(sum(is_end)
-         |    OVER (PARTITION BY i ORDER BY j
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         |    AS chunk_idx
-         |  FROM be),
-         |cs AS (SELECT i, chunk_idx, min(j) AS s, count(*) AS len,
-         |    CAST(sum(b) AS BIGINT) AS fp_sum
-         |  FROM ck GROUP BY 1, 2),
-         |fps AS (SELECT ck.i, ck.chunk_idx, cs.s, cs.len, cs.fp_sum,
-         |    CAST(sum((ck.j - cs.s + 1) * ck.b) % 1000000007 AS BIGINT) AS fp_pos
-         |  FROM ck JOIN cs ON ck.i = cs.i AND ck.chunk_idx = cs.chunk_idx
-         |  GROUP BY 1, 2, 3, 4, 5)""".stripMargin
-
-  val q134 = Q("q134_cdc_chunks",
-    // content-defined chunking over the raw media bodies (graft.ops
-    // .Multimodal.cdcChunks): boundaries where the 4-byte 257-base
-    // rolling hash ≡ 0 (mod 32), per-chunk position-weighted + plain
-    // byte-sum fingerprints — all exact integers, one pass per blob. The
-    // oracle re-derives every body byte from the deterministic table's
-    // arithmetic and replays the identical boundary/fingerprint math.
-    (s, d) => graft.ops.Multimodal.cdcChunks(
-      graft.ops.Multimodal.deterministic(s, 200), mask = 32),
-    Some(s"""WITH $cdcChunksDuck
-            |SELECT i AS asset_id, CAST(chunk_idx AS INT) AS chunk_idx,
-            |  CAST(s AS INT) AS start, CAST(len AS INT) AS len,
-            |  fp_pos, fp_sum
-            |FROM fps""".stripMargin))
-
-  val q135 = Q("q135_cdc_dedup",
-    // chunk-level dedup over q134's CDC chunks: identical (len, fp_pos,
-    // fp_sum) chunks across assets collapse to one stored copy — the
-    // storage win whole-blob hashing cannot see (every blob here is
-    // unique, yet arithmetic bodies share many content-aligned
-    // segments). Exact integers: copies, distinct assets, total bytes
-    // deduped, keeper = min (asset, chunk).
-    (s, d) => {
-      val ch = graft.ops.Multimodal.cdcChunks(
-        graft.ops.Multimodal.deterministic(s, 200), mask = 32)
-      ch.groupBy(col("len"), col("fp_pos"), col("fp_sum"))
-        .agg(count(lit(1)).as("n_copies"),
-          countDistinct(col("asset_id")).as("n_assets"),
-          // composite (asset, chunk) keeper as one BIGINT — min over a
-          // struct is not portable to the oracle engine
-          min(col("asset_id") * 1000000L + col("chunk_idx")).as("__k"))
-        .where(col("n_copies") > 1)
-        .select(col("len"), col("fp_pos"), col("fp_sum"), col("n_copies"),
-          col("n_assets"), expr("__k div 1000000L").as("keeper_asset"),
-          (col("__k") % 1000000L).cast("int").as("keeper_chunk"),
-          ((col("n_copies") - 1) * col("len")).as("bytes_saved"))
-    },
-    Some(s"""WITH $cdcChunksDuck,
-            |g AS (SELECT len, fp_pos, fp_sum, count(*) AS n_copies,
-            |    count(DISTINCT i) AS n_assets,
-            |    min(i * 1000000 + chunk_idx) AS k
-            |  FROM fps GROUP BY 1, 2, 3 HAVING count(*) > 1)
-            |SELECT CAST(len AS INT) AS len, fp_pos, fp_sum, n_copies,
-            |  n_assets, k // 1000000 AS keeper_asset,
-            |  CAST(k % 1000000 AS INT) AS keeper_chunk,
-            |  (n_copies - 1) * len AS bytes_saved
-            |FROM g""".stripMargin))
-
-  val q136 = Q("q136_dispersion",
-    // per-(event_type, day) dispersion profile of the hourly counts
-    // (graft.ops.SeriesStats.dispersion): exact n/Σx/Σx² + the BIGINT
-    // variance numerator, round-6 mean/variance/Fano/CV² — the
-    // burstiness dashboard (Fano 1 = Poisson, ≫1 = bursty). One
-    // map-side-combined groupBy.
-    (s, d) => ntz(graft.ops.SeriesStats.dispersion(
-      hourCountSeries(s, d), "event_type", "ts", "x"), "day"),
-    Some(raw"""WITH $hourSeriesDuck,
-              |gg AS (SELECT event_type, date_trunc('day', ts) AS day,
-              |    count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
-              |    CAST(sum(x * x) AS BIGINT) AS sxx
-              |  FROM f GROUP BY 1, 2)
-              |SELECT event_type, day, n, sx, sxx,
-              |  n*sxx - sx*sx AS var_num,
-              |  round(sx / CAST(n AS DOUBLE), 6) AS mean_r,
-              |  CASE WHEN n >= 2 THEN
-              |    round((n*sxx - sx*sx) / CAST(n*(n-1) AS DOUBLE), 6) END AS var_r,
-              |  CASE WHEN n >= 2 AND sx > 0 THEN
-              |    round((n*sxx - sx*sx) / CAST((n-1)*sx AS DOUBLE), 6) END AS fano_r,
-              |  CASE WHEN n >= 2 AND sx > 0 THEN
-              |    round((n*sxx - sx*sx) * n / CAST((n-1)*sx*sx AS DOUBLE), 6) END AS cv2_r
-              |FROM gg""".stripMargin))
-
-  val q137 = Q("q137_top_movers",
-    // day-over-day top movers (graft.ops.SeriesStats.topMovers): per-key
-    // daily event counts, lag-1 window for the previous ACTIVE day,
-    // exact delta + round-6 relative change, per-day top-5 by (|delta|,
-    // key). Bounded by keys × days — all small-table work after one
-    // count groupBy.
-    (s, d) => ntz(graft.ops.SeriesStats.topMovers(ev(s, d), "event_type",
-      "ts", k = 5), "day", "prev_day"),
-    Some(raw"""WITH g AS (SELECT event_type, date_trunc('day', ts) AS day,
-              |    count(*) AS cnt FROM events GROUP BY 1, 2),
-              |l AS (SELECT event_type, day, cnt,
-              |    lag(day) OVER w AS prev_day, lag(cnt) OVER w AS prev_cnt
-              |  FROM g WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-              |d AS (SELECT *, cnt - prev_cnt AS delta,
-              |    round((cnt - prev_cnt) / CAST(prev_cnt AS DOUBLE), 6) AS pct_r
-              |  FROM l WHERE prev_cnt IS NOT NULL)
-              |SELECT event_type, day, cnt, prev_day, prev_cnt, delta, pct_r,
-              |  CAST(row_number() OVER (PARTITION BY day
-              |    ORDER BY abs(delta) DESC, event_type) AS INTEGER) AS rank
-              |FROM d QUALIFY rank <= 5""".stripMargin))
-
-  val q138 = Q("q138_user_lifecycle",
-    // daily user lifecycle (graft.ops.Funnel.userLifecycle): per active
-    // day, distinct actives, NEW users (first active day), last-seen
-    // users (retrospective churn label) and returning = active − new.
-    // One distinct collapse + per-user span agg + day join — exact
-    // integers end-to-end.
-    (s, d) => ntz(graft.ops.Funnel.userLifecycle(ev(s, d), "user_id", "ts"),
-      "day"),
-    Some(raw"""WITH ud AS (SELECT DISTINCT user_id,
-              |    date_trunc('day', ts) AS day FROM events),
-              |sp AS (SELECT user_id, min(day) AS fd, max(day) AS ld
-              |  FROM ud GROUP BY 1)
-              |SELECT ud.day, count(*) AS n_active,
-              |  CAST(sum(CASE WHEN ud.day = sp.fd THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-              |  CAST(sum(CASE WHEN ud.day = sp.ld THEN 1 ELSE 0 END) AS BIGINT) AS n_last_seen,
-              |  count(*) - CAST(sum(CASE WHEN ud.day = sp.fd THEN 1 ELSE 0 END) AS BIGINT) AS n_returning
-              |FROM ud JOIN sp USING (user_id)
-              |GROUP BY 1""".stripMargin))
-
-  val q139 = Q("q139_step_latency",
-    // time-to-convert distribution for the view→click funnel edge
-    // (graft.ops.Funnel.stepLatency): first-view anchor, first strictly-
-    // later click, per anchor-day cohort — entered/converted counts and
-    // exact min/max µs latency, p50/p95 over WHOLE SECONDS round-6 (q28
-    // interpolation parity holds at second magnitude; µs-scale values
-    // ~1e12 differ by 1 ulp cross-engine — caught by the sf0.1 replay).
-    (s, d) => ntz(graft.ops.Funnel.stepLatency(ev(s, d), "user_id", "ts",
-      "event_type", from = "view", to = "click"), "day"),
-    Some(raw"""WITH a AS (SELECT user_id, min(epoch_us(ts)) AS a_us
-              |  FROM events WHERE event_type = 'view' AND user_id IS NOT NULL
-              |  GROUP BY 1),
-              |c AS (SELECT a.user_id, min(epoch_us(e.ts) - a.a_us) AS lat
-              |  FROM a JOIN events e ON e.user_id = a.user_id
-              |    AND e.event_type = 'click' AND epoch_us(e.ts) > a.a_us
-              |  GROUP BY 1),
-              |j AS (SELECT a.user_id, a.a_us, c.lat
-              |  FROM a LEFT JOIN c ON a.user_id = c.user_id)
-              |SELECT date_trunc('day', make_timestamp(a_us)) AS day,
-              |  count(*) AS n_entered, count(lat) AS n_converted,
-              |  CAST(min(lat) AS BIGINT) AS min_lat_us,
-              |  CAST(max(lat) AS BIGINT) AS max_lat_us,
-              |  round(quantile_cont(lat // 1000000, 0.5), 6) AS p50_s_r,
-              |  round(quantile_cont(lat // 1000000, 0.95), 6) AS p95_s_r
-              |FROM j GROUP BY 1""".stripMargin))
-
-  val q140 = Q("q140_props_stats",
-    // semi-structured column extraction: pull the integer `k` out of the
-    // JSON `props` string with a regexp (codegen'd regexp_extract — the
-    // portable cross-engine idiom; JSON-path functions differ between
-    // engines) and aggregate exact per-type stats. Spark's cast('' as
-    // long) and the oracle's NULLIF(…, '')::BIGINT both null absent
-    // matches, so malformed/missing props degrade identically.
-    (s, d) => ev(s, d)
-      .withColumn("k",
-        regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("long"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), count(col("k")).as("n_k"),
-        sum(col("k")).as("sum_k"), min(col("k")).as("min_k"),
-        max(col("k")).as("max_k"),
-        countDistinct(col("k")).as("n_distinct_k")),
-    Some(raw"""WITH x AS (SELECT event_type,
-              |    CAST(NULLIF(regexp_extract(props, '"k": (\d+)', 1), '') AS BIGINT) AS k
-              |  FROM events)
-              |SELECT event_type, count(*) AS n, count(k) AS n_k,
-              |  CAST(sum(k) AS BIGINT) AS sum_k, min(k) AS min_k,
-              |  max(k) AS max_k, count(DISTINCT k) AS n_distinct_k
-              |FROM x GROUP BY 1""".stripMargin))
-
-  val q141 = Q("q141_corpus_overlap",
-    // corpus-to-corpus overlap (graft.ops.Dedup.corpusOverlap): exact
-    // Jaccard of the two doc_id-parity halves' text-hash sets next to
-    // its 32-seed MinHash estimate (Broder agreement fraction, the same
-    // md5 min-hash domain as q37). One row: all counts exact BIGINTs,
-    // jac_r/est_r single round-6 divisions — the q48-style estimator-vs-
-    // truth surface at corpus granularity.
-    (s, d) => {
-      val ds = docs(s, d)
-      graft.ops.Dedup.corpusOverlap(
-        ds.where(col("doc_id") % 2 === 0),
-        ds.where(col("doc_id") % 2 === 1), "text", k = 32)
-    },
-    Some(raw"""WITH ha AS (SELECT DISTINCT md5(text) AS h FROM documents
-              |  WHERE text IS NOT NULL AND doc_id % 2 = 0),
-              |hb AS (SELECT DISTINCT md5(text) AS h FROM documents
-              |  WHERE text IS NOT NULL AND doc_id % 2 = 1),
-              |js AS (SELECT unnest(range(0, 32)) AS j),
-              |ma AS (SELECT j, min(md5(CAST(j AS VARCHAR) || '|' || h)) AS m_a
-              |  FROM ha, js GROUP BY 1),
-              |mb AS (SELECT j, min(md5(CAST(j AS VARCHAR) || '|' || h)) AS m_b
-              |  FROM hb, js GROUP BY 1),
-              |ag AS (SELECT CAST(sum(CASE WHEN ma.m_a = mb.m_b THEN 1 ELSE 0 END)
-              |    AS BIGINT) AS n_agree
-              |  FROM ma JOIN mb USING (j)),
-              |tr AS (SELECT (SELECT count(*) FROM ha) AS n_a,
-              |    (SELECT count(*) FROM hb) AS n_b,
-              |    (SELECT count(*) FROM ha JOIN hb USING (h)) AS n_inter)
-              |SELECT n_a, n_b, n_inter, n_a + n_b - n_inter AS n_union,
-              |  CASE WHEN n_a + n_b - n_inter > 0 THEN
-              |    round(n_inter / CAST(n_a + n_b - n_inter AS DOUBLE), 6) END AS jac_r,
-              |  n_agree, CAST(32 AS BIGINT) AS k,
-              |  round(n_agree / 32.0, 6) AS est_r
-              |FROM tr, ag""".stripMargin))
-
-  val q142 = Q("q142_mix_drift",
-    // day-over-day event-mix drift (graft.ops.SeriesStats.mixDrift): the
-    // two-sample chi-square per cell collapsed to the exact integer
-    // ratio (o1·N2 − o2·N1)² / (N1·N2·(o1+o2)) — chi2_num/chi2_den are
-    // BIGINTs under any partitioning, cell_r one round-6 division, no
-    // expected-frequency floats. Types present on only one of the two
-    // days still form cells (o = 0 on the other side).
-    (s, d) => ntz(graft.ops.SeriesStats.mixDrift(ev(s, d), "event_type",
-      "ts"), "day", "prev_day"),
-    Some(raw"""WITH bd AS (SELECT date_trunc('day', ts) AS day, event_type,
-              |    count(*) AS o FROM events GROUP BY 1, 2),
-              |dy AS (SELECT day, lag(day) OVER (ORDER BY day) AS prev_day
-              |  FROM (SELECT DISTINCT day FROM bd)),
-              |dp AS (SELECT * FROM dy WHERE prev_day IS NOT NULL),
-              |cur AS (SELECT dp.day, dp.prev_day, bd.event_type, bd.o AS o2
-              |  FROM dp JOIN bd USING (day)),
-              |prv AS (SELECT dp.day, dp.prev_day, bd.event_type, bd.o AS o1
-              |  FROM dp JOIN bd ON bd.day = dp.prev_day),
-              |cells AS (SELECT coalesce(cur.day, prv.day) AS day,
-              |    coalesce(cur.prev_day, prv.prev_day) AS prev_day,
-              |    coalesce(cur.event_type, prv.event_type) AS event_type,
-              |    CAST(coalesce(prv.o1, 0) AS BIGINT) AS o1,
-              |    CAST(coalesce(cur.o2, 0) AS BIGINT) AS o2
-              |  FROM cur FULL JOIN prv ON cur.day = prv.day
-              |    AND cur.prev_day = prv.prev_day
-              |    AND cur.event_type = prv.event_type),
-              |t AS (SELECT day, prev_day, CAST(sum(o1) AS BIGINT) AS n1,
-              |    CAST(sum(o2) AS BIGINT) AS n2
-              |  FROM cells GROUP BY 1, 2)
-              |SELECT c.day, c.prev_day, c.event_type, c.o1, c.o2,
-              |  t.n1, t.n2,
-              |  (c.o1*t.n2 - c.o2*t.n1) * (c.o1*t.n2 - c.o2*t.n1) AS chi2_num,
-              |  t.n1 * t.n2 * (c.o1 + c.o2) AS chi2_den,
-              |  CASE WHEN t.n1 * t.n2 * (c.o1 + c.o2) > 0 THEN
-              |    round((c.o1*t.n2 - c.o2*t.n1) * (c.o1*t.n2 - c.o2*t.n1)
-              |      / CAST(t.n1 * t.n2 * (c.o1 + c.o2) AS DOUBLE), 6) END AS cell_r
-              |FROM cells c JOIN t USING (day, prev_day)""".stripMargin))
-
-  val q143 = Q("q143_pagerank_weighted",
-    // WEIGHTED PageRank over the winnow graph (graft.ops.Graph.pageRank
-    // with weightCol = n_shared): contribution w·rank/wdeg, so a doc tied
-    // to its family by many shared fingerprints pulls harder than a
-    // 2-fingerprint brush. Same 3-iteration unrolled-CTE oracle as q123
-    // with the weight riding the sym/deg/contribution algebra; ranks
-    // round-6 (float-sum reorder noise only).
-    (s, d) => {
-      val ds = docs(s, d)
-      val pairs = graft.ops.Winnow.candidatePairs(ds, "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 50)
-      graft.ops.Graph.pageRank(ds, "doc_id", pairs, "a", "b",
-          iterations = 3, d = 0.85, weightCol = Some("n_shared"))
-        .select(col("doc_id"), round(col("rank"), 6).as("rank_r"))
-    },
-    Some(s"""WITH $winnowHashesDuck,
-            |win AS (SELECT doc_id, m, hs,
-            |    unnest(range(least(4, m), m + 1)) AS e
-            |  FROM hs),
-            |fp AS (SELECT DISTINCT doc_id AS id,
-            |    list_min(list_slice(hs, greatest(1, e - 3), e)) AS fp
-            |  FROM win),
-            |rare AS (SELECT fp FROM fp GROUP BY fp
-            |  HAVING count(*) BETWEEN 2 AND 50),
-            |prw AS (SELECT x.id AS a, y.id AS b,
-            |    CAST(count(DISTINCT x.fp) AS BIGINT) AS w
-            |  FROM fp x JOIN rare USING (fp) JOIN fp y USING (fp)
-            |  WHERE x.id < y.id
-            |  GROUP BY 1, 2 HAVING count(DISTINCT x.fp) >= 2),
-            |sym AS (SELECT a AS src, b AS dst, w FROM prw
-            |  UNION ALL SELECT b, a, w FROM prw),
-            |deg AS (SELECT src, CAST(sum(w) AS BIGINT) AS dg
-            |  FROM sym GROUP BY 1),
-            |n0 AS (SELECT doc_id AS id, CAST(1.0 AS DOUBLE) AS rk FROM documents),
-            |c1 AS (SELECT s.dst AS id, sum(s.w * r.rk / d.dg) AS c
-            |  FROM sym s JOIN n0 r ON s.src = r.id JOIN deg d ON s.src = d.src
-            |  GROUP BY 1),
-            |n1 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n0 n LEFT JOIN c1 c USING (id)),
-            |c2 AS (SELECT s.dst AS id, sum(s.w * r.rk / d.dg) AS c
-            |  FROM sym s JOIN n1 r ON s.src = r.id JOIN deg d ON s.src = d.src
-            |  GROUP BY 1),
-            |n2 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n1 n LEFT JOIN c2 c USING (id)),
-            |c3 AS (SELECT s.dst AS id, sum(s.w * r.rk / d.dg) AS c
-            |  FROM sym s JOIN n2 r ON s.src = r.id JOIN deg d ON s.src = d.src
-            |  GROUP BY 1),
-            |n3 AS (SELECT n.id, (1.0 - 0.85) + 0.85 * coalesce(c.c, 0.0) AS rk
-            |  FROM n2 n LEFT JOIN c3 c USING (id))
-            |SELECT id AS doc_id, round(rk, 6) AS rank_r FROM n3""".stripMargin))
+  private[graft] val dotSpark = "graft_dot(%s, %s)"
+  private[graft] def vCast = "transform(embedding, x -> cast(x as double))"
 
   val all: Seq[Q] = Seq(
     q01, q02, q03, q04, q05, q06, q07, q08,

@@ -251,12 +251,9 @@ object Main {
         Ingest.bucketed(in, c.long("step_sec", 60)), c.long("step_sec", 60), "minute")
     val h1 = graft.ops.Rollup.fromLower(m1, "hour")
     val d1 = graft.ops.Rollup.fromLower(h1, "day")
-    def writeTier(df: DataFrame, name: String): Unit =
-      df.withColumn("day", to_date(col("chunk_start")))
-        .write.mode("overwrite").partitionBy("day").parquet(s"${c("output")}/$name")
-    writeTier(m1, "tier_1m")
-    writeTier(h1, "tier_1h")
-    writeTier(d1, "tier_1d")
+    Seq(m1 -> "tier_1m", h1 -> "tier_1h", d1 -> "tier_1d").foreach { case (df, name) =>
+      graft.jobs.RetentionJob.writeTier(df, s"${c("output")}/$name")
+    }
     s"rollup -> ${c("output")}/tier_{1m,1h,1d}"
   }
 
@@ -460,7 +457,7 @@ object Main {
     def runStage(df: DataFrame, name: String): Unit = {
       // day partitioning = the retention unit (graft.jobs.RetentionJob
       // expires a sealed day with one partition drop)
-      val q = df.withColumn("day", to_date(col("chunk_start")))
+      val q = graft.jobs.RetentionJob.withDay(df)
         .writeStream.outputMode("append").format("parquet")
         .option("path", s"$out/$name")
         .option("checkpointLocation", s"$out/_checkpoints/$name")

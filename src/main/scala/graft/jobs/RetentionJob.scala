@@ -21,9 +21,9 @@ import graft.meta.TableFormat
   * higher tier) — and every expiry is snapshot-logged through the same
   * `_snapshots` commit log the process job uses.
   *
-  * Store layout (what `cli.Main` rollup/streamrollup write): one dir per
-  * tier (`tier_1m`, `tier_1h`, `tier_1d`), each parquet partitioned by
-  * `day=YYYY-MM-DD`. Partition dirs are the unit of expiry — a drop is one
+  * Store layout (written through [[withDay]]/[[writeTier]] by `cli.Main`
+  * rollup/streamrollup): one dir per tier (`tier_1m`, `tier_1h`,
+  * `tier_1d`), each parquet partitioned by `day=YYYY-MM-DD`. Partition dirs are the unit of expiry — a drop is one
   * recursive delete per day, no rewrite, exactly the Iceberg
   * drop-partition/expire-snapshot shape.
   *
@@ -58,10 +58,19 @@ object RetentionJob {
       .sorted
   }
 
+  /** A tier's cells tagged with the store's partition column: the UTC
+    * `day` of `chunk_start`.
+    */
+  private[graft] def withDay(tier: DataFrame): DataFrame =
+    tier.withColumn("day", to_date(col("chunk_start")))
+
+  /** Write a batch tier to `path` in the store layout, replacing it. */
+  private[graft] def writeTier(tier: DataFrame, path: String): Unit =
+    withDay(tier).write.mode("overwrite").partitionBy("day").parquet(path)
+
   private def readTier(spark: SparkSession, dir: String): DataFrame = {
     val df = spark.read.parquet(dir)
-    if (df.columns.contains("day")) df
-    else df.withColumn("day", to_date(col("chunk_start")))
+    if (df.columns.contains("day")) df else withDay(df)
   }
 
   /** Read a day-partitioned tier by EXPLICIT partition paths. Two reasons

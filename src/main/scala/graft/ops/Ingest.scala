@@ -28,10 +28,12 @@ object Ingest {
   def tokenCount(c: Column): Column = graft.functions.TokenCount(c)
 
   /** Per-(conv, bucket) turn_rate and token_volume — the two metrics the
-    * engine derives from transcripts (BASELINE.json north_star).
+    * engine derives from transcripts (BASELINE.json north_star). Buckets
+    * floor, so a pre-epoch turn lands in the bucket that starts at or
+    * before it.
     */
   def bucketed(transcripts: DataFrame, stepSec: Long): DataFrame = {
-    val b = timestamp_seconds((unix_timestamp(col("ts")) / stepSec).cast("long") * stepSec)
+    val b = timestamp_seconds(expr(Rollup.floorDiv("unix_timestamp(ts)", stepSec)) * stepSec)
     transcripts
       .groupBy(col("conv_id"), b.as("ts"))
       .agg(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.codec.{ChunkBlob, Lttb}
@@ -39,20 +39,26 @@ object Rollup {
         max_by(col("value"), col("ts")).as("last")
       )
 
+  /** The fold of lower-tier cells into a higher-tier cell: counts and sums
+    * add, extrema fold, and first/last follow the lower `chunk_start`
+    * (unique per key). Shared by [[fromLower]] and the streaming cascade
+    * (`StreamingRollup.fromSealed`).
+    */
+  private[graft] val foldCols: Seq[Column] = Seq(
+    sum(col("n")).as("n"),
+    sum(col("sum")).as("sum"),
+    min(col("min")).as("min"),
+    max(col("max")).as("max"),
+    min_by(col("first"), col("chunk_start")).as("first"),
+    max_by(col("last"), col("chunk_start")).as("last"))
+
   /** Higher tier from a lower tier — the hierarchical re-aggregation
     * (SURVEY.md §2.6 "Aggregations"): stats compose exactly.
     */
   def fromLower(lower: DataFrame, unit: String): DataFrame =
     lower
       .groupBy(col("conv_id"), col("metric"), date_trunc(unit, col("chunk_start")).as("chunk_start"))
-      .agg(
-        sum(col("n")).as("n"),
-        sum(col("sum")).as("sum"),
-        min(col("min")).as("min"),
-        max(col("max")).as("max"),
-        min_by(col("first"), col("chunk_start")).as("first"),
-        max_by(col("last"), col("chunk_start")).as("last")
-      )
+      .agg(foldCols.head, foldCols.tail: _*)
 
   private val unitMicros: Map[String, Long] = Map(
     "minute" -> 60000000L, "hour" -> 3600000000L, "day" -> 86400000000L)

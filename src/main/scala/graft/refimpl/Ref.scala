@@ -23,7 +23,7 @@ object Ref {
     val stepMs = stepSec * 1000
     val byConv = transcripts.groupBy(_.conv_id)
     byConv.toSeq.sortBy(_._1).flatMap { case (cid, turns) =>
-      val buckets = turns.groupBy(t => (t.ts.getTime / stepMs) * stepMs)
+      val buckets = turns.groupBy(t => Math.floorDiv(t.ts.getTime, stepMs) * stepMs)
       val t0 = buckets.keys.min
       val t1 = buckets.keys.max
       (t0 to t1 by stepMs).flatMap { ts =>
@@ -36,11 +36,11 @@ object Ref {
     }
   }
 
-  /** Truncate epoch-ms to a UTC calendar unit (minute/hour/day). */
+  /** Floor epoch-ms to a UTC calendar unit (minute/hour/day). */
   def truncMs(tsMs: Long, unit: String): Long = unit match {
-    case "minute" => (tsMs / 60000L) * 60000L
-    case "hour"   => (tsMs / 3600000L) * 3600000L
-    case "day"    => (tsMs / 86400000L) * 86400000L
+    case "minute" => Math.floorDiv(tsMs, 60000L) * 60000L
+    case "hour"   => Math.floorDiv(tsMs, 3600000L) * 3600000L
+    case "day"    => Math.floorDiv(tsMs, 86400000L) * 86400000L
     case u        => throw new IllegalArgumentException(u)
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Ingest
+import graft.ops.{Ingest, Rollup}
 
 /** Structured Streaming tier-1 rollup — the streaming layer SURVEY.md §2.6
   * sketches (the reference itself is batch-incremental via status flags;
@@ -43,13 +43,7 @@ object StreamingRollup {
     lower
       .withWatermark("chunk_start", lateness)
       .groupBy(col("conv_id"), col("metric"), window(col("chunk_start"), span))
-      .agg(
-        sum(col("n")).as("n"),
-        sum(col("sum")).as("sum"),
-        min(col("min")).as("min"),
-        max(col("max")).as("max"),
-        min_by(col("first"), col("chunk_start")).as("first"),
-        max_by(col("last"), col("chunk_start")).as("last"))
+      .agg(Rollup.foldCols.head, Rollup.foldCols.tail: _*)
       .select(col("conv_id"), col("metric"), col("window.start").as("chunk_start"),
         col("n"), col("sum"), col("min"), col("max"), col("first"), col("last"))
   }

@@ -641,6 +641,57 @@ class OpsSpec extends AnyFunSuite {
     assert(pos.map(_._2).toSeq == Seq(10L, 13L))
   }
 
+  test("pre-epoch turns bucket and roll up like their shifted-positive twin, engine and reference") {
+    import spark.implicits._
+    import graft.core.Transcript
+    import graft.ops.Rollup
+    import graft.refimpl.Ref
+    // the same sub-minute turn pattern a day before and a day after the
+    // epoch; offsets straddle minute, hour and day boundaries (truncation
+    // toward zero put a turn at -30 s in the 0 s bucket)
+    val offsetsSec = Seq(-30L, -5L, 0L, 15L, 29L, 30L, 59L, 61L, 125L, 3599L, 3601L, 7205L)
+    def turns(baseMs: Long) = offsetsSec.zipWithIndex.map { case (o, i) =>
+      Transcript("c", i, "user", "w " * (i + 1), "", new java.sql.Timestamp(baseMs + o * 1000L))
+    }
+    val stepSec = 10L
+    val dayMs = 86400000L
+    type Tiers = Seq[Map[(String, String, Long), Ref.Stats]]
+    // the rollup command's path: tier1FromBuckets -> fromLower -> fromLower
+    def engine(t: Seq[Transcript]): Tiers = {
+      val m1 = Rollup.tier1FromBuckets(Ingest.bucketed(spark.createDataset(t).toDF(), stepSec),
+        stepSec, "minute")
+      val h1 = Rollup.fromLower(m1, "hour")
+      val d1 = Rollup.fromLower(h1, "day")
+      Seq(m1, h1, d1).map(_.collect().map { r =>
+        (r.getString(0), r.getString(1), r.getTimestamp(2).getTime) ->
+          Ref.Stats(r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
+            r.getDouble(7), r.getDouble(8))
+      }.toMap)
+    }
+    def reference(t: Seq[Transcript]): Tiers = {
+      val m1 = Ref.rollup(Ref.series(t, stepSec), "minute")
+      val h1 = Ref.rollupFromLower(m1, "hour")
+      Seq(m1, h1, Ref.rollupFromLower(h1, "day"))
+    }
+    // the first few cells where two tiers disagree (an empty list if none)
+    def differ(a: Map[(String, String, Long), Ref.Stats], b: Map[(String, String, Long), Ref.Stats]) =
+      (a.keySet ++ b.keySet).toSeq.filter(k => a.get(k) != b.get(k)).sortBy(_._3).take(3)
+        .map(k => s"$k: ${a.get(k)} vs ${b.get(k)}")
+    val neg = engine(turns(-dayMs))
+    val pos = engine(turns(dayMs))
+    val (refNeg, refPos) = (reference(turns(-dayMs)), reference(turns(dayMs)))
+    Seq("1m", "1h", "1d").zipWithIndex.foreach { case (tier, i) =>
+      val d1 = differ(neg(i), refNeg(i))
+      assert(d1.isEmpty, s"$tier: pre-epoch engine vs reference: $d1")
+      val d2 = differ(pos(i), refPos(i))
+      assert(d2.isEmpty, s"$tier: post-epoch engine vs reference: $d2")
+      val shifted = neg(i).map { case ((c, m, ts), st) => (c, m, ts + 2 * dayMs) -> st }
+      val d3 = differ(shifted, pos(i))
+      assert(d3.isEmpty, s"$tier: pre-epoch twin shifted by two days vs post-epoch twin: $d3")
+    }
+    assert(neg(0).keys.map(_._3).min == -dayMs - 60000L, "the -30 s turn opens the minute before")
+  }
+
   test("TextQuality.repetition: counts and flag on handcrafted repetitive/clean/degenerate docs") {
     import spark.implicits._
     val docs = Seq(

@@ -108,10 +108,16 @@ def main(sfdir, outdir):
             print(f"FAIL {name}: " + "; ".join(msgs[:3]))
     # rows-only checks
     queries = set(d.split('/')[-1] for d in glob.glob(f"{outdir}/q*"))
-    for name in sorted(queries - set(oracle)):
+    rows_only = sorted(queries - set(oracle))
+    for name in rows_only:
         n = len(pd.read_parquet(f"{outdir}/{name}"))
-        print(f"ROWS {name}: {n} rows {'OK' if n > 0 else 'EMPTY!'}")
-    print(f"\n{n_pass} pass, {n_fail} fail of {len(oracle)} oracle-checked")
+        if n > 0:
+            print(f"ROWS {name}: {n} rows OK")
+        else:
+            print(f"FAIL {name}: rows-only query returned 0 rows")
+            n_fail += 1
+    print(f"\n{n_pass} pass, {n_fail} fail of {len(oracle)} oracle-checked"
+          f" + {len(rows_only)} rows-only")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
