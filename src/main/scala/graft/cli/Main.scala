@@ -1,11 +1,13 @@
 package graft.cli
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.jobs.ProcessJob
-import graft.meta.TableIO
-import graft.ops.{Correlate, Ingest, Postprocess, Timelapse, Trigger}
+import graft.core.RollupRow
+import graft.jobs.{ProcessJob, RetentionJob}
+import graft.jobs.RetentionJob.ladder
+import graft.meta.TableFormat
+import graft.ops.{Correlate, Ingest, Postprocess, Rollup, Timelapse, Trigger}
 
 /** Config-file-driven console entry points — the user surface the reference
   * registers as console_scripts (/root/reference/setup.cfg:51-59:
@@ -15,7 +17,7 @@ import graft.ops.{Correlate, Ingest, Postprocess, Timelapse, Trigger}
   *
   * {{{
   * spark-submit --class graft.cli.Main xcorrspark.jar <command> <config.properties>
-  * commands: cc | snr | ct | psd | plmax | timelapse | beamform | rollup | dedup | asof | streamrollup | retention | curate | prep | ann | distinct | anomaly
+  * commands: cc | snr | ct | psd | plmax | timelapse | beamform | rollup | dedup | asof | streamrollup | retention | serve | curate | prep | ann | distinct | anomaly
   * }}}
   *
   * The config is a flat java.util.Properties file; every command reads
@@ -56,14 +58,21 @@ object Main {
     s
   }
 
-  /** Long-form series from either a transcripts table or an already-long
-    * (conv_id, metric, ts, value) table.
+  /** Complete windows (Correlate.windows; keys step_sec, window_sec,
+    * stride_sec) of the long-form series from either a transcripts table
+    * or an already-long (conv_id, metric, ts, value) table.
     */
-  private def seriesOf(spark: SparkSession, c: Conf): DataFrame = {
+  private def windowsOf(spark: SparkSession, c: Conf): DataFrame = {
+    val step = c.long("step_sec", 60)
     val in = spark.read.parquet(c("input"))
-    if (in.columns.contains("metric")) in
-    else Ingest.seriesSparse(in, c.long("step_sec", 60))
+    val series = if (in.columns.contains("metric")) in else Ingest.seriesSparse(in, step)
+    Correlate.windows(series, c.long("window_sec", 86400), c.long("stride_sec", 43200), step)
   }
+
+  /** PSD spectrograms of [[windowsOf]] (keys nperseg, hop). */
+  private def spectrogramsOf(spark: SparkSession, c: Conf): DataFrame =
+    Timelapse.spectrograms(windowsOf(spark, c), c.long("step_sec", 60).toDouble,
+      c.int("nperseg", 64), c.int("hop", 16))
 
   /** cc — the production driver (↔ scripts/cc.py + core/process.py):
     * transcripts → checkpoint-resumable pairwise windowed CC table.
@@ -156,12 +165,7 @@ object Main {
     * stride_sec, nperseg, hop.
     */
   def psd(spark: SparkSession, c: Conf): String = {
-    val step = c.long("step_sec", 60)
-    val wins = Correlate.windows(seriesOf(spark, c),
-      c.long("window_sec", 86400), c.long("stride_sec", 43200), step)
-    Timelapse.spectrograms(wins, step.toDouble,
-        c.int("nperseg", 64), c.int("hop", 16))
-      .write.mode("overwrite").parquet(c("output"))
+    spectrogramsOf(spark, c).write.mode("overwrite").parquet(c("output"))
     s"psd -> ${c("output")}"
   }
 
@@ -172,13 +176,10 @@ object Main {
     */
   def plmax(spark: SparkSession, c: Conf): String = {
     import spark.implicits._
-    val step = c.long("step_sec", 60)
     val minDist = c.int("min_distance", 1)
     val thrRel = c.dbl("threshold_rel", 0.1)
     val maxPeaks = c.int("max_peaks", 3)
-    val wins = Correlate.windows(seriesOf(spark, c),
-      c.long("window_sec", 86400), c.long("stride_sec", 43200), step)
-    Timelapse.spectrograms(wins, step.toDouble, c.int("nperseg", 64), c.int("hop", 16))
+    spectrogramsOf(spark, c)
       .select(col("conv_id"), col("metric"), col("win_start"),
         col("spec"), col("n_seg"), col("n_freq"))
       .as[(String, String, java.sql.Timestamp, Array[Double], Int, Int)]
@@ -198,42 +199,23 @@ object Main {
     * (↔ xcorr-timelapse). Keys as psd.
     */
   def timelapse(spark: SparkSession, c: Conf): String = {
-    val step = c.long("step_sec", 60)
-    val wins = Correlate.windows(seriesOf(spark, c),
-      c.long("window_sec", 86400), c.long("stride_sec", 43200), step)
-    val specs = Timelapse.spectrograms(wins, step.toDouble,
-      c.int("nperseg", 64), c.int("hop", 16))
-    Timelapse.matrix(specs, step.toDouble)
+    Timelapse.matrix(spectrogramsOf(spark, c), c.long("step_sec", 60).toDouble)
       .write.mode("overwrite").parquet(c("output"))
     s"timelapse -> ${c("output")}"
   }
 
-  /** beamform — plane-wave least squares per window (↔ xcorr-beamform):
-    * series + receiver coordinates → DOA/velocity. Keys: input, output,
-    * step_sec, window_sec, stride_sec, coords (conv_id:x:y,conv_id:x:y,…).
+  /** beamform — plane-wave least squares per (metric, window)
+    * (↔ xcorr-beamform; Correlate.planeWaves): series + receiver
+    * coordinates → one (metric, win_start, doa_deg, velocity, residual)
+    * row per window. Keys: input, output, step_sec, window_sec,
+    * stride_sec, coords (conv_id:x:y,conv_id:x:y,…).
     */
   def beamform(spark: SparkSession, c: Conf): String = {
-    import spark.implicits._
-    val step = c.long("step_sec", 60)
     val coords: Map[String, (Double, Double)] = c("coords").split(",").map { s =>
       val Array(id, x, y) = s.trim.split(":")
       id -> ((x.toDouble, y.toDouble))
     }.toMap
-    val wins = Correlate.windows(seriesOf(spark, c),
-      c.long("window_sec", 86400), c.long("stride_sec", 43200), step)
-    wins.select(col("win_start"), col("conv_id"), col("values").cast("array<double>").as("values"))
-      .as[(java.sql.Timestamp, String, Array[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (w, it) =>
-        val m = it.map(r => r._2 -> r._3).toMap
-        val keys = coords.keys.toSeq.sorted.filter(m.contains)
-        if (keys.size >= 3 && keys.forall(k => m(k).exists(_ != 0.0))) {
-          val res = graft.kernel.Beamform.planeWave(
-            keys.map(coords).toArray, keys.map(m).toArray, delta = step.toDouble)
-          Iterator((w, res.doaDeg, res.velocity, res.residual))
-        } else Iterator.empty
-      }
-      .toDF("win_start", "doa_deg", "velocity", "residual")
+    Correlate.planeWaves(windowsOf(spark, c), coords, c.long("step_sec", 60))
       .write.mode("overwrite").parquet(c("output"))
     s"beamform -> ${c("output")}"
   }
@@ -245,14 +227,14 @@ object Main {
     */
   def rollup(spark: SparkSession, c: Conf): String = {
     val in = spark.read.parquet(c("input"))
-    val m1 =
-      if (in.columns.contains("metric")) graft.ops.Rollup.fromPoints(in, "minute")
-      else graft.ops.Rollup.tier1FromBuckets(
-        Ingest.bucketed(in, c.long("step_sec", 60)), c.long("step_sec", 60), "minute")
-    val h1 = graft.ops.Rollup.fromLower(m1, "hour")
-    val d1 = graft.ops.Rollup.fromLower(h1, "day")
-    Seq(m1 -> "tier_1m", h1 -> "tier_1h", d1 -> "tier_1d").foreach { case (df, name) =>
-      graft.jobs.RetentionJob.writeTier(df, s"${c("output")}/$name")
+    val unit = ladder.head.unit
+    val first =
+      if (in.columns.contains("metric")) Rollup.fromPoints(in, unit)
+      else Rollup.tier1FromBuckets(
+        Ingest.bucketed(in, c.long("step_sec", 60)), c.long("step_sec", 60), unit)
+    val tiers = ladder.tail.scanLeft(first)((lower, t) => Rollup.fromLower(lower, t.unit))
+    ladder.zip(tiers).foreach { case (t, df) =>
+      RetentionJob.writeTier(df, s"${c("output")}/${t.dir}")
     }
     s"rollup -> ${c("output")}/tier_{1m,1h,1d}"
   }
@@ -273,29 +255,42 @@ object Main {
     * compact_snapshots.
     */
   def retention(spark: SparkSession, c: Conf): String = {
-    import graft.jobs.RetentionJob
     val store = c("input")
-    val lower = c.get("lower_tier", "tier_1m")
-    val upper = c.get("upper_tier", "tier_1h")
-    val olderThan = c.opt("older_than").getOrElse {
-      val days = RetentionJob.partitionDays(spark, s"$store/$lower")
-      require(days.nonEmpty, s"no day partitions under $store/$lower and no older_than given")
-      java.time.LocalDate.parse(days.last)
-        .minusDays(c.long("keep_days", 30)).toString
-    }
-    val st = RetentionJob.expire(spark, store, olderThan, lower, upper,
-      maxPartitions = c.int("max_partitions", -1))
-    val compacted = c.opt("compact_tier")
-      .map(t => RetentionJob.compactTier(spark, store, t, c.int("target_files", 1)))
-      .getOrElse(Nil)
-    // fold the manifest AFTER this run's own snapshot records are appended,
-    // so the run that just happened is inside the checkpoint too
-    val pruned = if (c.bool("compact_snapshots", true))
-      graft.meta.TableFormat.compactSnapshots(store) else 0
+    val lower = c.get("lower_tier", ladder(0).dir)
+    val done = retentionStep(spark, c, store, lower, c.get("upper_tier", ladder(1).dir),
+      c.opt("older_than"), c.long("keep_days", 30), c.int("max_partitions", -1),
+      c.opt("compact_tier")
+        .map(t => RetentionJob.compactTier(spark, store, t, c.int("target_files", 1)))
+        .getOrElse(Nil))
+    require(done.nonEmpty, s"no day partitions under $store/$lower and no older_than given")
+    val (st, compacted, pruned) = done.get
     s"retention: expired ${st.expired.size} of ${st.candidates.size} candidate days " +
       s"(${st.pointsExpired} pts; uncovered skipped: ${st.uncovered.size}); " +
       s"compacted ${compacted.size} partitions; manifest files pruned: $pruned"
   }
+
+  /** The retention step of `retention` and `streamrollup`: expire `lower`
+    * days older than `olderThan` — by default `keepDays` before the newest
+    * `lower` day — once `upper` seals them, run `compact`, then fold the
+    * store's `_snapshots` manifest (key compact_snapshots). The fold runs
+    * AFTER this run's own snapshot records are appended, so the run that
+    * just happened is inside the checkpoint too. None when no `olderThan`
+    * is given and `lower` has no day partitions.
+    */
+  private def retentionStep(
+      spark: SparkSession, c: Conf, store: String, lower: String, upper: String,
+      olderThan: Option[String], keepDays: => Long, maxPartitions: Int = -1,
+      compact: => Seq[String] = Nil
+  ): Option[(RetentionJob.ExpiryStats, Seq[String], Int)] =
+    olderThan
+      .orElse(RetentionJob.partitionDays(spark, s"$store/$lower").lastOption
+        .map(java.time.LocalDate.parse(_).minusDays(keepDays).toString))
+      .map { horizon =>
+        val st = RetentionJob.expire(spark, store, horizon, lower, upper, maxPartitions)
+        val compacted = compact
+        val pruned = if (c.bool("compact_snapshots", true)) TableFormat.compactSnapshots(store) else 0
+        (st, compacted, pruned)
+      }
 
   /** dedup — near-duplicate cluster assignment over a documents table
     * (engine-new; no reference counterpart). Keys: input (parquet with
@@ -450,14 +445,14 @@ object Main {
     */
   def streamrollup(spark: SparkSession, c: Conf): String = {
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.types.DateType
     import graft.streaming.StreamingRollup
     val out = c("output")
     val lateness = c.get("lateness", "5 minutes")
     def runStage(df: DataFrame, name: String): Unit = {
       // day partitioning = the retention unit (graft.jobs.RetentionJob
       // expires a sealed day with one partition drop)
-      val q = graft.jobs.RetentionJob.withDay(df)
+      val q = RetentionJob.withDay(df)
         .writeStream.outputMode("append").format("parquet")
         .option("path", s"$out/$name")
         .option("checkpointLocation", s"$out/_checkpoints/$name")
@@ -466,37 +461,27 @@ object Main {
         .start()
       q.awaitTermination()
     }
-    val statsSchema = StructType(Seq(
-      StructField("conv_id", StringType), StructField("metric", StringType),
-      StructField("chunk_start", TimestampType), StructField("n", LongType),
-      StructField("sum", DoubleType), StructField("min", DoubleType),
-      StructField("max", DoubleType), StructField("first", DoubleType),
-      StructField("last", DoubleType), StructField("day", DateType)))
+    val statsSchema = Encoders.product[RollupRow].schema.add("day", DateType)
     val inSchema = spark.read.parquet(c("input")).schema
     runStage(StreamingRollup.tier1Stats(
-      spark.readStream.schema(inSchema).parquet(c("input")), lateness), "tier_1m")
+      spark.readStream.schema(inSchema).parquet(c("input")), lateness), ladder.head.dir)
     // higher tiers fold the SEALED lower stream; 0 s lateness — the lower
     // tier's watermark already absorbed event lateness
-    runStage(StreamingRollup.fromSealed(
-      spark.readStream.schema(statsSchema).parquet(s"$out/tier_1m"), "hour"), "tier_1h")
-    runStage(StreamingRollup.fromSealed(
-      spark.readStream.schema(statsSchema).parquet(s"$out/tier_1h"), "day"), "tier_1d")
+    ladder.zip(ladder.tail).foreach { case (lower, upper) =>
+      runStage(StreamingRollup.fromSealed(
+        spark.readStream.schema(statsSchema).parquet(s"$out/${lower.dir}"), upper.unit), upper.dir)
+    }
     // optional in-pipeline retention: with the higher tiers freshly sealed,
     // expire 1m days older than `retention_keep_days` (idempotent — a day
-    // the 1h tier has not fully sealed is skipped, never deleted)
+    // the 1h tier has not fully sealed is skipped, never deleted); the
+    // manifest fold matters here too: this cron loop is exactly the writer
+    // that grows _snapshots one record per run
     val ret = c.opt("retention_keep_days").map { kd =>
-      import graft.jobs.RetentionJob
-      val days = RetentionJob.partitionDays(spark, s"$out/tier_1m")
-      if (days.isEmpty) "; retention: no 1m partitions yet"
-      else {
-        val horizon = java.time.LocalDate.parse(days.last).minusDays(kd.toLong).toString
-        val st = RetentionJob.expire(spark, out, horizon)
-        // same manifest fold as the `retention` command: this cron loop is
-        // exactly the writer that grows _snapshots one record per run
-        val pruned = if (c.bool("compact_snapshots", true))
-          graft.meta.TableFormat.compactSnapshots(out) else 0
-        s"; retention: expired ${st.expired.size} 1m days, ${st.uncovered.size} unsealed kept" +
-          s"; manifest files pruned: $pruned"
+      retentionStep(spark, c, out, ladder(0).dir, ladder(1).dir, None, kd.toLong) match {
+        case None => "; retention: no 1m partitions yet"
+        case Some((st, _, pruned)) =>
+          s"; retention: expired ${st.expired.size} 1m days, ${st.uncovered.size} unsealed kept" +
+            s"; manifest files pruned: $pruned"
       }
     }.getOrElse("")
     s"streamrollup: tiers 1m/1h/1d (resumable checkpoints) -> $out$ret"
@@ -680,10 +665,10 @@ object Main {
 
   /** serve — answer one dashboard request from a tier store written by
     * `rollup`/`streamrollup`: pick the finest tier whose grid fits
-    * `max_points` over [t0, t1) (graft.ops.Rollup.pickTierStep — a 1h
-    * panel reads 1m cells, a 90-day panel reads 1d cells, raw points are
-    * never scanned), read ONLY that tier with day-partition pruning, tag
-    * rows with the chosen step. Keys: input (store dir containing
+    * `max_points` over [t0, t1) (graft.ops.Rollup.serve — a 1h panel
+    * reads 1m cells, a 90-day panel reads 1d cells, raw points are never
+    * scanned), read ONLY that tier with day-partition pruning, tag rows
+    * with the chosen step. Keys: input (store dir containing
     * tier_1m/tier_1h/tier_1d), t0, t1 ('yyyy-MM-dd HH:mm:ss'),
     * max_points, output. Downsampling below the tier grid is the viz
     * ops' job (Rollup.m4 / lttbTier) — serve routes, it does not resample.
@@ -692,18 +677,12 @@ object Main {
     val t0 = java.sql.Timestamp.valueOf(c("t0"))
     val t1 = java.sql.Timestamp.valueOf(c("t1"))
     require(t1.after(t0), s"empty request window: t0=$t0 t1=$t1")
-    val tiers = Map(60L -> "tier_1m", 3600L -> "tier_1h", 86400L -> "tier_1d")
-    val spanSec = math.max(1L, (t1.getTime - t0.getTime) / 1000L)
-    val step = graft.ops.Rollup.pickTierStep(spanSec, c.long("max_points", 1000), tiers.keys.toSeq)
-    val tier = spark.read.parquet(s"${c("input")}/${tiers(step)}")
-    val pruned = // day is the stores' partition column — prune before filter
-      if (tier.columns.contains("day"))
-        tier.where(col("day").between(to_date(lit(t0)), to_date(lit(t1))))
-      else tier
-    pruned.where(col("chunk_start") >= lit(t0) && col("chunk_start") < lit(t1))
-      .withColumn("step_sec", lit(step))
+    val dirs = ladder.map(t => t.stepSec -> t.dir).toMap
+    var step = 0L // the tier Rollup.serve picks
+    Rollup.serve({ s => step = s; spark.read.parquet(s"${c("input")}/${dirs(s)}") },
+        t0, t1, c.long("max_points", 1000))
       .write.mode("overwrite").parquet(c("output"))
-    s"serve: step=${step}s span=${spanSec}s -> ${c("output")}"
+    s"serve: step=${step}s over [$t0, $t1) -> ${c("output")}"
   }
 
   val commands: Map[String, (SparkSession, Conf) => String] = Map(

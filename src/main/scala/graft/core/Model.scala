@@ -5,9 +5,6 @@ import java.sql.Timestamp
 /** Core row types of the engine (SURVEY.md §1.3 Spark mapping).
   *
   * `Transcript` is the input-table shape from BASELINE.json `input_hint`;
-  * `SeriesPoint` is the gap-filled regular grid (↔ the reference's
-  * preprocessed regular-rate trace — regular-spacing invariant at
-  * /root/reference/xcorr/signal/correlate.py:314-318);
   * `CcRow` mirrors the reference CC dataset variables
   * (/root/reference/xcorr/core/init.py:25-327);
   * `RollupRow` is the engine-new continuous-aggregate cell whose stats
@@ -22,20 +19,6 @@ final case class Transcript(
     text: String,
     tool: String,
     ts: Timestamp
-)
-
-final case class SeriesPoint(
-    conv_id: String,
-    metric: String,
-    ts: Timestamp,
-    value: Double
-)
-
-final case class SeriesWindow(
-    conv_id: String,
-    metric: String,
-    win_start: Timestamp,
-    values: Array[Float] // float32-packed for the shuffle (↔ init.py:84-85 dtype)
 )
 
 final case class CcRow(

@@ -22,8 +22,9 @@ import graft.meta.TableFormat
   * `_snapshots` commit log the process job uses.
   *
   * Store layout (written through [[withDay]]/[[writeTier]] by `cli.Main`
-  * rollup/streamrollup): one dir per tier (`tier_1m`, `tier_1h`,
-  * `tier_1d`), each parquet partitioned by `day=YYYY-MM-DD`. Partition dirs are the unit of expiry — a drop is one
+  * rollup/streamrollup): one dir per [[ladder]] tier (`tier_1m`,
+  * `tier_1h`, `tier_1d`), each parquet partitioned by `day=YYYY-MM-DD`.
+  * Partition dirs are the unit of expiry — a drop is one
   * recursive delete per day, no rewrite, exactly the Iceberg
   * drop-partition/expire-snapshot shape.
   *
@@ -57,6 +58,18 @@ object RetentionJob {
       .map(_.getPath.getName.stripPrefix("day="))
       .sorted
   }
+
+  /** One tier of the store: its directory under the store root, the
+    * rollup unit (a `date_trunc` level) its cells span, and that unit in
+    * seconds.
+    */
+  final case class Tier(dir: String, unit: String, stepSec: Long)
+
+  /** The store's tier ladder, finest first: each tier folds the one
+    * before it.
+    */
+  val ladder: Seq[Tier] = Seq(
+    Tier("tier_1m", "minute", 60L), Tier("tier_1h", "hour", 3600L), Tier("tier_1d", "day", 86400L))
 
   /** A tier's cells tagged with the store's partition column: the UTC
     * `day` of `chunk_start`.
@@ -99,8 +112,8 @@ object RetentionJob {
       spark: SparkSession,
       storeDir: String,
       olderThan: String,
-      lowerTier: String = "tier_1m",
-      upperTier: String = "tier_1h",
+      lowerTier: String = ladder(0).dir,
+      upperTier: String = ladder(1).dir,
       maxPartitions: Int = -1
   ): ExpiryStats = {
     val lowerDir = s"$storeDir/$lowerTier"
@@ -246,7 +259,7 @@ object RetentionJob {
   def tieredRead(
       spark: SparkSession,
       storeDir: String,
-      tiers: Seq[String] = Seq("tier_1m", "tier_1h", "tier_1d")
+      tiers: Seq[String] = ladder.map(_.dir)
   ): DataFrame = {
     val daysByTier = tiers.map(t => t -> partitionDays(spark, s"$storeDir/$t"))
     var served = Set.empty[String]

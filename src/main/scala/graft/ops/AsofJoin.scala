@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** As-of join — the canonical time-series join Spark has no native operator
   * for: attach to every left row the LATEST right row with
@@ -46,6 +47,23 @@ object AsofJoin {
       leftTs: String, rightTs: String, pick: Seq[String],
       toleranceSec: Option[Long] = None, tiebreak: Seq[String] = Nil
   ): DataFrame = {
+    val (tagged, rType) = tag(left, right, keys, leftTs, rightTs, pick, tiebreak)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order(tiebreak): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val carried = tagged
+      .withColumn("__r", last(col("__r"), ignoreNulls = true).over(w))
+    project(masked(carried, rType, toleranceSec).where(col("__side") === 1), pick)
+  }
+
+  /** Both sides tagged and unioned for the carry-forward window: right
+    * rows are side 0 with `__r`, left rows side 1 with the whole left row
+    * in `__l`; `__ts` is the event time and `__tb_*` the tiebreaks.
+    * Returns the union and the type of `__r`.
+    */
+  private def tag(
+      left: DataFrame, right: DataFrame, keys: Seq[String],
+      leftTs: String, rightTs: String, pick: Seq[String], tiebreak: Seq[String]
+  ): (DataFrame, DataType) = {
     require(pick.nonEmpty, "pick at least one right column")
     val reserved = pick :+ "asof_ts"
     require(left.columns.intersect(reserved).isEmpty,
@@ -70,49 +88,29 @@ object AsofJoin {
         tbTypes.map { case (c, t) => lit(null).cast(t).as(s"__tb_$c") }: _*)
     val rWithL = r.withColumn("__l", lit(null).cast(lWithR.schema("__l").dataType))
       .select(lWithR.columns.map(col).toIndexedSeq: _*)
+    (rWithL.unionByName(lWithR), rType)
+  }
 
-    // right rows sort BEFORE left rows at equal ts (asof <= semantics)
-    val ord: Seq[Column] = col("__ts") +: col("__side") +:
-      tiebreak.map(c => col(s"__tb_$c"))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  /** Carry-forward sort: right rows BEFORE left rows at equal ts (asof <=). */
+  private def order(tiebreak: Seq[String]): Seq[Column] =
+    col("__ts") +: col("__side") +: tiebreak.map(c => col(s"__tb_$c"))
 
-    val carried = rWithL.unionByName(lWithR)
-      .withColumn("__r", last(col("__r"), ignoreNulls = true).over(w))
-    val matched = toleranceSec match {
+  /** Null the matched `__r` when it is older than `toleranceSec`. */
+  private def masked(df: DataFrame, rType: DataType, toleranceSec: Option[Long]): DataFrame =
+    toleranceSec match {
       case Some(tol) =>
         val stale = col("__r").isNull ||
           (unix_micros(col("__ts").cast("timestamp")) -
             unix_micros(col("__r.asof_ts").cast("timestamp"))) > tol * 1000000L
-        carried.withColumn("__r", when(stale, lit(null).cast(rType)).otherwise(col("__r")))
-      case None => carried
+        df.withColumn("__r", when(stale, lit(null).cast(rType)).otherwise(col("__r")))
+      case None => df
     }
-    matched.where(col("__side") === 1)
-      .select(col("__l.*") +: (pick.map(c => col(s"__r.$c").as(c)) :+
-        col("__r.asof_ts").as("asof_ts")): _*)
-  }
 
-  /** Hot-key variant of [[leftAsof]]: identical semantics (asserted
-    * equal on seeded random data in OpsSpec), but the carry-forward window
-    * partitions by (key, `bucketSec` time bucket) so a single
-    * pathologically hot key's history spreads across partitions instead of
-    * having to fit one. The per-bucket boundary hand-off runs on the
-    * BUCKET-LEVEL table (one row per (key, bucket) — bounded by
-    * time-range / bucketSec, not by row count), the same islands pattern
-    * as Trigger.periods (Trigger.scala:44-113):
-    *
-    *  1. within-bucket pass — the leftAsof union + running-last window,
-    *     partitioned by (key, bucket);
-    *  2. hand-off — per (key, bucket) the LATEST right struct, carried to
-    *     later buckets by a window over the tiny bucket-level rows (left
-    *     probes sort BEFORE right bucket-lasts at equal bucket, so a probe
-    *     sees only strictly-earlier buckets);
-    *  3. a left row's match = its within-bucket carry, else the hand-off
-    *     from earlier buckets.
-    *
-    * Pick `bucketSec` so one key's rows per bucket fit a partition
-    * (e.g. a day for a key logging thousands of rows per second).
-    */
+  /** The output: left columns + `pick` + `asof_ts`. */
+  private def project(df: DataFrame, pick: Seq[String]): DataFrame =
+    df.select(col("__l.*") +: (pick.map(c => col(s"__r.$c").as(c)) :+
+      col("__r.asof_ts").as("asof_ts")): _*)
+
   /** Choose [[leftAsofBucketed]]'s `bucketSec` from the data instead of
     * asking the caller to hand-pick it: one pass over both sides computes
     * each key's row RATE (rows / active seconds, min/max/count only — all
@@ -150,6 +148,27 @@ object AsofJoin {
     else math.max(1L, math.min((targetRowsPerBucket / maxRate).toLong, 365L * 86400L))
   }
 
+  /** Hot-key variant of [[leftAsof]]: identical semantics (asserted
+    * equal on seeded random data in OpsSpec), but the carry-forward window
+    * partitions by (key, `bucketSec` time bucket) so a single
+    * pathologically hot key's history spreads across partitions instead of
+    * having to fit one. The per-bucket boundary hand-off runs on the
+    * BUCKET-LEVEL table (one row per (key, bucket) — bounded by
+    * time-range / bucketSec, not by row count), the same islands pattern
+    * as Trigger.periods (Trigger.scala:44-113):
+    *
+    *  1. within-bucket pass — the leftAsof union + running-last window,
+    *     partitioned by (key, bucket);
+    *  2. hand-off — per (key, bucket) the LATEST right struct, carried to
+    *     later buckets by a window over the tiny bucket-level rows (left
+    *     probes sort BEFORE right bucket-lasts at equal bucket, so a probe
+    *     sees only strictly-earlier buckets);
+    *  3. a left row's match = its within-bucket carry, else the hand-off
+    *     from earlier buckets.
+    *
+    * Pick `bucketSec` so one key's rows per bucket fit a partition
+    * (e.g. a day for a key logging thousands of rows per second).
+    */
   def leftAsofBucketed(
       left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, pick: Seq[String],
@@ -157,38 +176,15 @@ object AsofJoin {
       toleranceSec: Option[Long] = None, tiebreak: Seq[String] = Nil
   ): DataFrame = {
     require(bucketSec > 0, "bucketSec must be positive")
-    require(pick.nonEmpty, "pick at least one right column")
-    val reserved = pick :+ "asof_ts"
-    require(left.columns.intersect(reserved).isEmpty,
-      s"left columns collide with the output: ${left.columns.intersect(reserved).mkString(", ")}")
-    val leftStruct = struct(left.columns.map(col).toIndexedSeq: _*)
-    val tbTypes = tiebreak.map(c => c -> right.schema(c).dataType)
+    val (tagged, rType) = tag(left, right, keys, leftTs, rightTs, pick, tiebreak)
     val bucketUs = bucketSec * 1000000L
 
-    val rStruct = struct(col(rightTs).as("asof_ts") +: pick.map(col): _*)
-    val r = right.select(
-      keys.map(col) ++ Seq(
-        col(rightTs).as("__ts"), lit(0).as("__side"), rStruct.as("__r")) ++
-        tiebreak.map(c => col(c).as(s"__tb_$c")): _*)
-    val rType = r.schema("__r").dataType
-    val lWithR = left.select(
-      keys.map(col) ++ Seq(
-        col(leftTs).as("__ts"), lit(1).as("__side"),
-        lit(null).cast(rType).as("__r"), leftStruct.as("__l")) ++
-        tbTypes.map { case (c, t) => lit(null).cast(t).as(s"__tb_$c") }: _*)
-    val rWithL = r.withColumn("__l", lit(null).cast(lWithR.schema("__l").dataType))
-      .select(lWithR.columns.map(col).toIndexedSeq: _*)
-
-    // floor division (DIV truncates toward zero; pre-epoch needs the floor)
-    val withBkt = rWithL.unionByName(lWithR)
+    val withBkt = tagged
       .withColumn("__us", unix_micros(col("__ts").cast("timestamp")))
-      .withColumn("__bkt", expr(
-        s"__us DIV $bucketUs + (CASE WHEN __us % $bucketUs < 0 THEN -1 ELSE 0 END)"))
+      .withColumn("__bkt", expr(Rollup.floorDiv("__us", bucketUs)))
 
     // 1. within-bucket carry — the leftAsof window, bucket-partitioned
-    val ord: Seq[Column] = col("__ts") +: col("__side") +:
-      tiebreak.map(c => col(s"__tb_$c"))
-    val wIn = Window.partitionBy(keys.map(col) :+ col("__bkt"): _*).orderBy(ord: _*)
+    val wIn = Window.partitionBy(keys.map(col) :+ col("__bkt"): _*).orderBy(order(tiebreak): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = withBkt
       .withColumn("__rin", last(col("__r"), ignoreNulls = true).over(wIn))
@@ -215,20 +211,11 @@ object AsofJoin {
       .where(col("__bside") === 0)
       .select(keys.map(col) ++ Seq(col("__bkt"), col("__rprev")): _*)
 
-    // 3. combine; then the leftAsof tolerance/projection verbatim
+    // 3. combine; then the leftAsof tolerance/projection
     val combined = carried.where(col("__side") === 1)
       .join(carryIn, keys :+ "__bkt")
       .withColumn("__r", coalesce(col("__rin"), col("__rprev")))
-    val matched = toleranceSec match {
-      case Some(tol) =>
-        val stale = col("__r").isNull ||
-          (unix_micros(col("__ts").cast("timestamp")) -
-            unix_micros(col("__r.asof_ts").cast("timestamp"))) > tol * 1000000L
-        combined.withColumn("__r", when(stale, lit(null).cast(rType)).otherwise(col("__r")))
-      case None => combined
-    }
-    matched.select(col("__l.*") +: (pick.map(c => col(s"__r.$c").as(c)) :+
-      col("__r.asof_ts").as("asof_ts")): _*)
+    project(masked(combined, rType, toleranceSec), pick)
   }
 
   /** Linear-INTERPOLATING as-of join: for every probe timestamp, attach

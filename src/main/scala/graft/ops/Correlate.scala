@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.core.CcRow
-import graft.kernel.Cc
+import graft.kernel.{Beamform, Cc}
 
 /** Pairwise windowed cross-correlation — the engine's flagship operator
   * (reference inner loop: /root/reference/xcorr/core/process.py:82-172,
@@ -313,6 +313,34 @@ object Correlate {
           delta, halfWin, normalize, unbiased, clipLagSec, hashInputs)
       }
     }
+  }
+
+  /** Plane-wave beamforming per (metric, window) (↔ xcorr-beamform):
+    * the [[windows]] of the conversations in `coords` are the receivers,
+    * and [[Beamform.planeWave]] solves each (metric, win_start) group
+    * with its receivers in conv_id order. A group with fewer than 3 such
+    * receivers, or with an all-zero receiver window, yields no row.
+    *
+    * @param coords receiver (x, y) per conv_id
+    * @return (metric, win_start, doa_deg, velocity, residual)
+    */
+  def planeWaves(wins: DataFrame, coords: Map[String, (Double, Double)], stepSec: Long): DataFrame = {
+    val spark = wins.sparkSession
+    import spark.implicits._
+    wins.select(col("metric"), col("win_start"), col("conv_id"),
+        col("values").cast("array<double>").as("values"))
+      .as[(String, Timestamp, String, Array[Double])]
+      .groupByKey(r => (r._1, r._2))
+      .flatMapGroups { (key: (String, Timestamp), it: Iterator[(String, Timestamp, String, Array[Double])]) =>
+        val m = it.map(r => r._3 -> r._4).toMap
+        val keys = coords.keys.toSeq.sorted.filter(m.contains)
+        if (keys.size >= 3 && keys.forall(k => m(k).exists(_ != 0.0))) {
+          val res = Beamform.planeWave(
+            keys.map(coords).toArray, keys.map(m).toArray, delta = stepSec.toDouble)
+          Iterator((key._1, key._2, res.doaDeg, res.velocity, res.residual))
+        } else Iterator.empty
+      }
+      .toDF("metric", "win_start", "doa_deg", "velocity", "residual")
   }
 
   private def sha256Floats(a: Array[Float], b: Array[Float]): String = {

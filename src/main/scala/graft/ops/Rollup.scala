@@ -363,16 +363,23 @@ object Rollup {
   }
 
   /** Serve one viz request from the pre-built tiers: pick the step for
-    * [t0, t1) via [[pickTierStep]], then return that tier's rows in range,
-    * tagged with the chosen step. `tiers` maps step-seconds to the tier
-    * table (chunk_start + stats); the range filter is a partition-prunable
-    * predicate on the tier's own chunk_start.
+    * [t0, t1) via [[pickTierStep]], then return the rows of `tier(step)` —
+    * the ONLY tier read — in range, tagged with the chosen step. `tier`
+    * maps each 1m/1h/1d step in seconds to that tier table (chunk_start +
+    * stats), e.g. a `Map[Long, DataFrame]`; a tier with the store's `day`
+    * partition column is pruned to the request's days before the
+    * chunk_start range filter.
     */
-  def serve(tiers: Map[Long, DataFrame], t0: java.sql.Timestamp,
+  def serve(tier: Long => DataFrame, t0: java.sql.Timestamp,
             t1: java.sql.Timestamp, maxPoints: Long): DataFrame = {
     val spanSec = math.max(1L, (t1.getTime - t0.getTime) / 1000L)
-    val step = pickTierStep(spanSec, maxPoints, tiers.keys.toSeq)
-    tiers(step)
+    val step = pickTierStep(spanSec, maxPoints)
+    val cells = tier(step)
+    val inDays =
+      if (cells.columns.contains("day"))
+        cells.where(col("day").between(to_date(lit(t0)), to_date(lit(t1))))
+      else cells
+    inDays
       .where(col("chunk_start") >= lit(t0) && col("chunk_start") < lit(t1))
       .withColumn("step_sec", lit(step))
   }

@@ -312,22 +312,10 @@ private[graft] trait SignalQueries {
       // window reads out the other series' values directly); the engine's
       // FFT evaluates tied lags with ~1e-12 noise, so its first-strict-max
       // tie-break is not reproducible by exact time-domain sums.
-      import s.implicits._
       val coords = Map("1" -> (0.0, 0.0), "2" -> (1000.0, 0.0), "3" -> (0.0, 1000.0))
-      Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600)
-        .select(col("win_start"), col("conv_id"), col("values").cast("array<double>").as("values"))
-        .as[(java.sql.Timestamp, String, Array[Double])]
-        .groupByKey(_._1)
-        .flatMapGroups { (w: java.sql.Timestamp, it: Iterator[(java.sql.Timestamp, String, Array[Double])]) =>
-          val m = it.map(r => r._2 -> r._3).toMap
-          if (m.size == 3 && m.values.forall(_.exists(_ != 0.0))) {
-            val keys = Seq("1", "2", "3")
-            val res = graft.kernel.Beamform.planeWave(
-              keys.map(coords).toArray, keys.map(m).toArray, delta = 3600.0)
-            Iterator((w, res.doaDeg, res.velocity, res.residual))
-          } else Iterator.empty
-        }
-        .toDF("win_start", "doa_deg", "velocity", "residual")
+      Correlate.planeWaves(
+          Correlate.windows(hourlySeries(s, d, 1L, 2L, 3L), 86400, 43200, 3600), coords, 3600)
+        .select(col("win_start"), col("doa_deg"), col("velocity"), col("residual"))
         .transform(x => ntz(x, "win_start"))
     },
     None)

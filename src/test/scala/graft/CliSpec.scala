@@ -168,6 +168,82 @@ class CliSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.max("count")).collect()(0).getLong(0) <= 3)
   }
 
+  test("timelapse command equals the library spectrogram matrix on the same keys") {
+    import graft.ops.{Correlate, Ingest, Timelapse}
+    val tDir = out()
+    cli.Main.run("timelapse", conf(
+      "input" -> transcriptsPath, "output" -> tDir,
+      "step_sec" -> "60", "window_sec" -> "1800", "stride_sec" -> "900",
+      "nperseg" -> "8", "hop" -> "4"))
+    val want = Timelapse.matrix(Timelapse.spectrograms(
+      Correlate.windows(Ingest.seriesSparse(spark.read.parquet(transcriptsPath), 60), 1800, 900, 60),
+      60.0, 8, 4), 60.0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(want.columns.map(df.col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+    val got = rows(spark.read.parquet(tDir))
+    assert(got.nonEmpty && got == rows(want))
+  }
+
+  test("retention command: keep_days=0 after rollup expires every older 1m day; tiered per-day sums unchanged") {
+    import org.apache.spark.sql.functions.{col, sum}
+    import graft.jobs.RetentionJob
+    val inDir = Files.createTempDirectory("ret-in").toString + "/t"
+    Transcripts.generate(spark, 3, 1600).toDF().write.parquet(inDir)
+    val store = out()
+    cli.Main.run("rollup", conf("input" -> inDir, "output" -> store, "step_sec" -> "60"))
+    val days = RetentionJob.partitionDays(spark, s"$store/tier_1m")
+    assert(days.size > 1, s"fixture must span several days: $days")
+    def perDay = RetentionJob.tieredRead(spark, store)
+      .groupBy(col("day")).agg(sum(col("n")))
+      .collect().map(_.toString).sorted.toSeq
+    val before = perDay
+    val msg = cli.Main.run("retention", conf("input" -> store, "keep_days" -> "0"))
+    assert(msg.startsWith(s"retention: expired ${days.size - 1} of ${days.size - 1} candidate days"), msg)
+    assert(RetentionJob.partitionDays(spark, s"$store/tier_1m") == Seq(days.last))
+    assert(perDay == before)
+  }
+
+  test("beamform command: one row per (metric, window), each the plane-wave kernel over that metric's windows") {
+    import spark.implicits._
+    // 3 receivers x 2 metrics on a 60 s grid; each metric's wave reaches
+    // the receivers with its own delays (samples)
+    val rnd = new scala.util.Random(3)
+    val sig = Array.fill(260)(rnd.nextInt(9).toDouble)
+    val delays = Map("m1" -> Map("a" -> 0, "b" -> 2, "c" -> 0), "m2" -> Map("a" -> 0, "b" -> 0, "c" -> 3))
+    val inDir = out()
+    (for { (m, dm) <- delays.toSeq; (cv, dl) <- dm.toSeq; i <- 0 until 240 }
+      yield (cv, m, new java.sql.Timestamp(1704067200000L + i * 60000L), sig(i + 10 - dl)))
+      .toDF("conv_id", "metric", "ts", "value").write.parquet(inDir)
+    val coords = Map("a" -> ((0.0, 0.0)), "b" -> ((1000.0, 0.0)), "c" -> ((0.0, 1000.0)))
+    val bDir = out()
+    cli.Main.run("beamform", conf("input" -> inDir, "output" -> bDir,
+      "step_sec" -> "60", "window_sec" -> "3600", "stride_sec" -> "1800",
+      "coords" -> "a:0:0,b:1000:0,c:0:1000"))
+    type Out = (String, java.sql.Timestamp, Double, Double, Double)
+    val got = spark.read.parquet(bDir)
+      .select("metric", "win_start", "doa_deg", "velocity", "residual")
+      .as[(String, java.sql.Timestamp, Double, Double, Double)].collect().toSeq
+    val want = graft.ops.Correlate.windows(spark.read.parquet(inDir), 3600, 1800, 60)
+      .select($"metric", $"win_start", $"conv_id", $"values".cast("array<double>"))
+      .as[(String, java.sql.Timestamp, String, Array[Double])].collect().toSeq
+      .groupBy(r => (r._1, r._2)).toSeq.map { case ((m, w), rs) =>
+        val byConv = rs.map(r => r._3 -> r._4).toMap
+        val keys = Seq("a", "b", "c")
+        val res = graft.kernel.Beamform.planeWave(
+          keys.map(coords).toArray, keys.map(byConv).toArray, delta = 60.0)
+        (m, w, res.doaDeg, res.velocity, res.residual): Out
+      }
+    def key(r: Out) = (r._1, r._2.getTime)
+    assert(want.map(_._1).toSet == Set("m1", "m2"))
+    assert(got.map(key).distinct.size == got.size, "one row per (metric, win_start)")
+    assert(got.sortBy(key) == want.sortBy(key))
+    // and each metric recovers its own wave: m1 reaches b (1000 m east)
+    // 2 steps late, m2 reaches c (1000 m north) 3 steps late
+    def near(a: Double, b: Double) = math.abs(a - b) < 1e-9
+    assert(got.filter(_._1 == "m1").forall(r => near(r._3, 90.0) && near(r._4, 1000.0 / 120)))
+    assert(got.filter(_._1 == "m2").forall(r => near(r._3, 0.0) && near(r._4, 1000.0 / 180)))
+  }
+
   test("dedup and asof commands run end-to-end from properties files") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

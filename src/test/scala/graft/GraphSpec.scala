@@ -25,22 +25,39 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
   }
 
-  test("pageRank: star graph matches the hand-run double recursion; isolated node is 1-d") {
-    // star: a-b, a-c, a-d; e isolated. deg(a)=3, deg(b/c/d)=1.
-    val edges = Seq(("a", "b"), ("a", "c"), ("a", "d"))
-    val nodes = Seq("a", "b", "c", "d", "e")
-    // run the identical IEEE recursion on the driver
-    var ra = 1.0; var rl = 1.0 // leaf ranks stay equal by symmetry
-    for (_ <- 1 to 3) {
+  // star: a-b, a-c, a-d; e isolated. deg(a)=3, deg(b/c/d)=1.
+  private val starEdges = Seq(("a", "b"), ("a", "c"), ("a", "d"))
+  private val starNodes = Seq("a", "b", "c", "d", "e")
+
+  /** The identical IEEE recursion on the driver: (hub rank, leaf rank) —
+    * leaf ranks stay equal by symmetry.
+    */
+  private def starRecursion(iters: Int): (Double, Double) = {
+    var ra = 1.0; var rl = 1.0
+    for (_ <- 1 to iters) {
       val ra2 = (1.0 - 0.85) + 0.85 * (rl / 1.0 + rl / 1.0 + rl / 1.0)
       val rl2 = (1.0 - 0.85) + 0.85 * (ra / 3.0)
       ra = ra2; rl = rl2
     }
-    val got = ranks(edges, nodes, iters = 3)
+    (ra, rl)
+  }
+
+  test("pageRank: star graph matches the hand-run double recursion; isolated node is 1-d") {
+    val (ra, rl) = starRecursion(3)
+    val got = ranks(starEdges, starNodes, iters = 3)
     assert(got("a") == ra)
     assert(Seq("b", "c", "d").forall(k => got(k) == rl))
     assert(got("e") == (1.0 - 0.85)) // isolated fixpoint, exactly
     assert(got("a") > got("b")) // hub is most central
+  }
+
+  test("pageRank: star graph at 10 iterations (pinned per iteration) matches the double recursion") {
+    // iterations > 8 takes the eager pin-and-drop path instead of one lazy plan
+    val (ra, rl) = starRecursion(10)
+    val got = ranks(starEdges, starNodes, iters = 10)
+    assert(got("a") == ra)
+    assert(Seq("b", "c", "d").forall(k => got(k) == rl))
+    assert(got("e") == (1.0 - 0.85))
   }
 
   test("pageRank: edge direction, duplicates and self-loops don't change the result") {
