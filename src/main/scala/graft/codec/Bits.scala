@@ -5,8 +5,6 @@ final class BitWriter(initialWords: Int = 16) {
   private var words = new Array[Long](initialWords)
   private var bitLen = 0L
 
-  def lengthBits: Long = bitLen
-
   def writeBit(b: Int): Unit = writeBits(b.toLong & 1L, 1)
 
   /** Write the low `n` bits of `v` (1 <= n <= 64), most significant first. */

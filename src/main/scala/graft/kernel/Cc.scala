@@ -144,27 +144,15 @@ object Cc {
     w
   }
 
-  /** Sample (or time) shift at the maximum of Rxy (cc.py:144-206):
-    * zero index = len/2 (integer division), ties → first maximum.
+  /** Sample (or time) shift at the maximum of Rxy, and that maximum
+    * (cc.py:144-206): zero index = len/2 (integer division), ties → first
+    * maximum.
     */
-  def extractShift(rxy: Array[Double], delta: Double = 1.0): Double = {
-    val zero = rxy.length / 2
-    (argmax(rxy) - zero) * delta
-  }
-
   def extractShiftAndMax(rxy: Array[Double], delta: Double = 1.0): (Double, Double) = {
     val zero = rxy.length / 2
     val idx = argmax(rxy)
     ((idx - zero) * delta, rxy(idx))
   }
-
-  def computeShiftAndMax(
-      x: Array[Double],
-      y: Array[Double],
-      delta: Double = 1.0,
-      normalize: Boolean = true
-  ): (Double, Double) =
-    extractShiftAndMax(cc(x, y, normalize = normalize), delta)
 
   private def argmax(a: Array[Double]): Int = {
     var best = 0

@@ -44,18 +44,6 @@ object Signal {
     out
   }
 
-  /** Divide by the L2 norm (reference norm1d,
-    * /root/reference/xcorr/signal/normalize.py:33-93).
-    */
-  def normalizeL2(x: Array[Double]): Array[Double] = {
-    var s = 0.0
-    var i = 0
-    while (i < x.length) { s += x(i) * x(i); i += 1 }
-    val norm = math.sqrt(s)
-    val inv = if (norm == 0) 0.0 else 1.0 / norm
-    x.map(_ * inv)
-  }
-
   /** sqrt(mean(x^2)) skipping NaNs (/root/reference/xcorr/signal/rms.py:23-68). */
   def rms(x: Array[Double]): Double = {
     var s = 0.0

@@ -111,43 +111,6 @@ object AsofJoin {
     df.select(col("__l.*") +: (pick.map(c => col(s"__r.$c").as(c)) :+
       col("__r.asof_ts").as("asof_ts")): _*)
 
-  /** Choose [[leftAsofBucketed]]'s `bucketSec` from the data instead of
-    * asking the caller to hand-pick it: one pass over both sides computes
-    * each key's row RATE (rows / active seconds, min/max/count only — all
-    * map-side-combinable), and the bucket is sized so the HOTTEST key puts
-    * ~`targetRowsPerBucket` rows in one bucket:
-    *
-    *   bucketSec = targetRowsPerBucket / max_key(rate),  clamped [1s, 1y]
-    *
-    * Rationale: the within-bucket window partitions on (key, bucket), so
-    * the only thing that must fit a task is one key's rows per bucket —
-    * rate × bucketSec. Sizing by the hottest key is conservative for all
-    * others (they get fewer rows per bucket, never more). The default
-    * target (4M rows ≈ a few hundred MB of union rows) leaves headroom
-    * under a 1-2 GB task budget; semantics are bucket-size-invariant
-    * (OpsSpec asserts equality at hand-picked AND auto sizes), so the
-    * choice only affects parallelism, never results.
-    */
-  def autoBucketSec(
-      left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTs: String, rightTs: String,
-      targetRowsPerBucket: Long = 4000000L
-  ): Long = {
-    require(targetRowsPerBucket > 0, "targetRowsPerBucket must be positive")
-    val both = left.select(keys.map(col) :+
-        unix_micros(col(leftTs).cast("timestamp")).as("__us"): _*)
-      .unionByName(right.select(keys.map(col) :+
-        unix_micros(col(rightTs).cast("timestamp")).as("__us"): _*))
-    val row = both.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-        ((max(col("__us")) - min(col("__us"))) / 1e6).as("__span"))
-      .agg(max(col("__n") / greatest(col("__span"), lit(1.0))).as("maxRate"))
-      .collect()(0) // 1-row planning agg, like allPairs' guard count
-    val maxRate = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-    if (maxRate <= 0) 86400L
-    else math.max(1L, math.min((targetRowsPerBucket / maxRate).toLong, 365L * 86400L))
-  }
-
   /** Hot-key variant of [[leftAsof]]: identical semantics (asserted
     * equal on seeded random data in OpsSpec), but the carry-forward window
     * partitions by (key, `bucketSec` time bucket) so a single

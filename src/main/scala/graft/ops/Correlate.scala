@@ -117,7 +117,7 @@ object Correlate {
   /** The grid the window operators assume: window and stride are whole
     * numbers of grid steps, and consecutive windows leave no gap.
     */
-  private[graft] def checkGrid(windowSec: Long, strideSec: Long, stepSec: Long): Unit = {
+  private def checkGrid(windowSec: Long, strideSec: Long, stepSec: Long): Unit = {
     require(windowSec % stepSec == 0, "window must be a multiple of the grid step")
     require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
     require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
@@ -125,11 +125,9 @@ object Correlate {
 
   /** Every NONZERO point of `series`, once per window it falls in: the
     * input columns plus `win_start_s`, the window start in epoch seconds.
-    * Shared by [[windows]] and the streaming operator
-    * (graft.streaming.StreamingCc); [[pointCols]] gives each point's place
-    * in its window.
+    * [[pointCols]] gives each point's place in its window.
     */
-  private[graft] def windowPoints(
+  private def windowPoints(
       series: DataFrame,
       windowSec: Long,
       strideSec: Long,
@@ -151,7 +149,7 @@ object Correlate {
   /** A [[windowPoints]] row's grid offset in its window (`idx`) and its
     * float32 value (`v`).
     */
-  private[graft] def pointCols(stepSec: Long): Seq[Column] = Seq(
+  private def pointCols(stepSec: Long): Seq[Column] = Seq(
     ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
     col("value").cast("float").as("v"))
 
@@ -159,7 +157,7 @@ object Correlate {
     * side 0 for conv_a and 1 for conv_b. Joined on conv_id, it tags windows
     * or points with every (pair, side) they serve.
     */
-  private[graft] def pairSides(pairs: DataFrame): DataFrame =
+  private def pairSides(pairs: DataFrame): DataFrame =
     pairs
       .select(col("conv_a").as("conv_id"),
         concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(0).as("side"))
@@ -196,12 +194,10 @@ object Correlate {
       .select(col("a.conv_id").as("conv_a"), col("b.conv_id").as("conv_b"))
   }
 
-  /** The per-(pair, window) kernel body shared by [[ccPairs]] and the
-    * streaming operator (graft.streaming.StreamingCc): widens the float32
-    * windows to double and correlates them — identical math, so a sealed
-    * streaming window equals its batch row (asserted in IoStreamingSpec).
+  /** The per-(pair, window) body of [[ccPairs]]: widens the float32
+    * windows to double and correlates them.
     */
-  private[graft] def kernelRow(
+  private def kernelRow(
       pairId: String, metric: String, winStart: Timestamp,
       vaF: Array[Float], vbF: Array[Float],
       delta: Double, halfWin: Double,
@@ -229,10 +225,8 @@ object Correlate {
       if (i0 == 0 && i1 == nn - 1) rxy
       else java.util.Arrays.copyOfRange(rxy, i0, i1 + 1)
     // shift/cc_max from the STORED array, so they stay consistent with
-    // the data when clipped (ties → first maximum, as Cc.extractShift)
-    var jm = 0
-    var j = 1
-    while (j < clipped.length) { if (clipped(j) > clipped(jm)) jm = j; j += 1 }
+    // the data when clipped: its zero index is halfKeep = length/2
+    val (shift, ccMax) = Cc.extractShiftAndMax(clipped, delta)
     CcRow(
       pair = pairId,
       metric = metric,
@@ -244,8 +238,8 @@ object Correlate {
       pair_offset = 0.0,
       // first sample start vs window center (init.py:290-302)
       time_offset = -halfWin,
-      shift = (jm + i0 - (n - 1)) * delta,
-      cc_max = clipped(jm),
+      shift = shift,
+      cc_max = ccMax,
       npts = n,
       lag0 = i0,
       // optional per-cell input digest (↔ the reference's

@@ -26,9 +26,8 @@ object Dedup {
 
   /** The ONE spelling of the per-row shingle array (duplicates kept,
     * CASE-guarded for short docs — sequence() would count DOWN on an
-    * empty range). [[shingles]] explodes it; streaming curation
-    * array_distincts it per row; the DuckDB oracles mirror it. Any fix to
-    * the shingle lambda lands here once.
+    * empty range). [[shingles]] explodes it; the DuckDB oracles mirror
+    * it. Any fix to the shingle lambda lands here once.
     */
   def shingleArrayExpr(toksCol: String, n: Int): String =
     // r6: the codegen ShingleArray expression (one loop emitting the
@@ -367,11 +366,8 @@ object Dedup {
     var converged = e.isEmpty
     var it = 0
     while (!converged && it < maxIter) {
-      val tR0 = System.nanoTime()
       val next = truncate(smallStar(largeStar(e)))
       val nfp = fingerprint(next)
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        println(f"[clusters] round $it: ${(System.nanoTime() - tR0) / 1e9}%.3f s, edges ${nfp._1}")
       if (nfp == fp) {
         // The fingerprint is probabilistic (count + xxhash64 sum): a
         // collision between consecutive DIFFERENT edge sets would

@@ -122,18 +122,6 @@ object Funnel {
       timestamp_micros(col("__t")).as("t_last"))
   }
 
-  /** The funnel rolled up to the report surface: one row per stage with
-    * the user count that reached AT LEAST that stage (monotone
-    * decreasing) — n_stage(1) is the funnel's entry population.
-    */
-  def funnelCounts(events: DataFrame, userCol: String, tsCol: String,
-      typeCol: String, steps: Seq[String]): DataFrame = {
-    val f = orderedFunnel(events, userCol, tsCol, typeCol, steps)
-    f.select(col("stage_reached"),
-        explode(expr(s"sequence(1, stage_reached)")).as("stage"))
-      .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
-  }
-
   /** Top-k session paths: sessionize per user (same ≤ gapSec rule as the
     * q14 operator, ties broken by the id column), take each session's
     * first `maxSteps` event types in time order, and rank the resulting

@@ -12,10 +12,9 @@ import org.apache.spark.sql.types._
   * Real-world image/audio codecs (JPEG/FLAC/...) do NOT ship in this
   * container, so payloads use **GRFT1** — a deliberately trivial media
   * container defined here — and the decode path is REAL parsing of real
-  * bytes: magic/version validation, per-kind headers, pixel/sample math,
-  * average-pool resize, frame seeking. Swapping in production codecs
-  * replaces only the container branch of `parseHeader`/`body` readers; the
-  * Spark-side contract (schema, batch shape, partitioning, decode-once
+  * bytes: magic/version validation, per-kind headers, pixel/sample math.
+  * Swapping in production codecs replaces only the container branch of
+  * `parseHeader`/`body` readers; the Spark-side contract (schema, batch shape, partitioning, decode-once
   * fusion) is identical.
   *
   * GRFT1 layout (big-endian):
@@ -255,74 +254,6 @@ object Multimodal {
     }
     if (total > 0) { var j = 0; while (j < 16) { hist(j) /= total; j += 1 } }
     hist
-  }
-
-  /** Average-pool an image (or one video frame) to outW × outH — the real
-    * resize math over real pixels (values 0..255).
-    */
-  def resizePooled(bytes: Array[Byte], outW: Int, outH: Int, frameIdx: Int = 0): Array[Float] = {
-    val h = parseHeader(bytes)
-    require(h.kind == 0 || h.kind == 2, "resize needs pixels")
-    require(frameIdx >= 0 && frameIdx < h.nFrames, s"frame $frameIdx of ${h.nFrames}")
-    val off = h.bodyOffset + (if (h.kind == 2) frameIdx * h.width * h.height else 0)
-    val out = new Array[Float](outW * outH)
-    var oy = 0
-    while (oy < outH) {
-      val y0 = oy * h.height / outH
-      val y1 = math.max((oy + 1) * h.height / outH, y0 + 1)
-      var ox = 0
-      while (ox < outW) {
-        val x0 = ox * h.width / outW
-        val x1 = math.max((ox + 1) * h.width / outW, x0 + 1)
-        var s = 0.0
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) { s += (bytes(off + y * h.width + x) & 0xff); x += 1 }
-          y += 1
-        }
-        out(oy * outW + ox) = (s / ((y1 - y0) * (x1 - x0))).toFloat
-        ox += 1
-      }
-      oy += 1
-    }
-    out
-  }
-
-  /** Seek one video frame's pixels (real offset arithmetic, no full scan). */
-  def frameSlice(bytes: Array[Byte], frameIdx: Int): Array[Byte] = {
-    val h = parseHeader(bytes)
-    require(h.kind == 2, "frame seek needs a video payload")
-    require(frameIdx >= 0 && frameIdx < h.nFrames, s"frame $frameIdx of ${h.nFrames}")
-    val sz = h.width * h.height
-    java.util.Arrays.copyOfRange(bytes, h.bodyOffset + frameIdx * sz, h.bodyOffset + (frameIdx + 1) * sz)
-  }
-
-  /** Frame sampling: every k-th frame index per video (metadata only). */
-  def sampleFrames(media: DataFrame, everyK: Int): DataFrame =
-    media.where(col("kind") === "video")
-      .select(col("asset_id"),
-        explode(expr(s"sequence(0, n_frames - 1, $everyK)")).as("frame_idx"))
-
-  /** Frame sampling WITH decode: seek each sampled frame and emit its mean
-    * intensity — explode + per-row real slice, partition preserved.
-    */
-  def sampleFrameFeatures(media: DataFrame, everyK: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.where(col("kind") === "video")
-      .select(col("asset_id"), col("bytes"),
-        explode(expr(s"sequence(0, n_frames - 1, $everyK)")).as("frame_idx"))
-      .as[(Long, Array[Byte], Int)]
-      .mapPartitions { it =>
-        it.map { case (id, bytes, idx) =>
-          val f = frameSlice(bytes, idx)
-          var s = 0.0
-          f.foreach(b => s += (b & 0xff))
-          (id, idx, (s / f.length).toFloat)
-        }
-      }
-      .toDF("asset_id", "frame_idx", "frame_mean")
   }
 
   /** Feature-extract: mapPartitions over the binary column, one decode per

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.kernel.{Filter, Signal}
-import graft.meta.Hasher
 
 /** Declarative per-metric preprocessing registry — the Spark re-expression
   * of the reference's operation registry + generic evaluator
@@ -189,11 +188,4 @@ object Preprocess {
         throw new IllegalArgumentException(s"unknown preprocess operation '$name'"))
       op(df, params)
     }
-
-  /** Canonical sha256 of the op list (↔ hash_operations,
-    * process.py:557-566) — stored in manifests / table properties and
-    * revalidated before reusing materialized series.
-    */
-  def hashOps(ops: Seq[(String, Map[String, String])]): String =
-    Hasher.hashObj(ops.map { case (n, p) => Map("op" -> n, "params" -> p) })
 }

@@ -439,8 +439,7 @@ object SeriesStats {
     * anywhere in the output.
     *
     * Scale shape: ONE shuffle on the key; keys are the parallelism unit,
-    * state is O(1) — the same shape the streaming faces use, so a
-    * `flatMapGroupsWithState` port is mechanical.
+    * state is O(1) — the shape a `flatMapGroupsWithState` port needs.
     */
   def holt(df: DataFrame, keyCol: String, tsCol: String,
            valueCol: String): DataFrame = {

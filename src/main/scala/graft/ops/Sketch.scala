@@ -56,10 +56,9 @@ object Sketch {
       .agg(max(col("rho")).as("register"))
 
   /** (passthrough keys..., bucket, rho) cells — the shared hash/rho
-    * projection under [[hllRegisters]], [[hllRegistersBy]] and the
-    * streaming face (graft.streaming.StreamingSketch).
+    * projection under [[hllRegisters]] and [[hllRegistersBy]].
     */
-  private[graft] def bucketRho(df: DataFrame, idCol: String, p: Int,
+  private def bucketRho(df: DataFrame, idCol: String, p: Int,
       keyCols: Seq[String]): DataFrame = {
     require(p % 4 == 0 && p >= 4 && p <= 16, s"p must be a multiple of 4 in [4,16], got $p")
     val bHex = p / 4
@@ -131,11 +130,11 @@ object Sketch {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** The ONE histogram bin definition (shared by [[histByKey]] and the
-    * streaming face): `floor((v − lo) · nBins / (hi − lo))` clamped to
+  /** The ONE histogram bin definition (used by [[histByKey]]):
+    * `floor((v − lo) · nBins / (hi − lo))` clamped to
     * [0, nBins−1] — a single IEEE expression per row on constants.
     */
-  def binExpr(valCol: String, lo: Double, hi: Double, nBins: Int): Column = {
+  private def binExpr(valCol: String, lo: Double, hi: Double, nBins: Int): Column = {
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
     require(hi > lo, s"need hi > lo, got [$lo, $hi]")
     least(lit(nBins - 1), greatest(lit(0),
@@ -245,7 +244,7 @@ object Sketch {
     * array — a single input scan regardless of d (a per-hash union would
     * rescan the source d times).
     */
-  private[graft] def cellsExpr(d: Int, itemExpr: String, hex: Int): String =
+  private def cellsExpr(d: Int, itemExpr: String, hex: Int): String =
     (0 until d).map(r =>
       s"struct($r as r, ${hashCol(r, itemExpr, hex)} as c)").mkString("array(", ", ", ")")
 
@@ -261,22 +260,6 @@ object Sketch {
   /** Merge two CMS grids over the same (d, wHex) geometry: per-cell sum. */
   def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).groupBy(col("cms_row"), col("cms_col")).agg(sum(col("cnt")).as("cnt"))
-
-  /** Point-frequency estimates for `queries` (one column `item`) against a
-    * CMS grid: min over the d per-row cells (missing cell = 0). Runs as a
-    * broadcast-able equi-join on (row, cms_col) — the grid is ≤ d·16^wHex
-    * rows by construction, so serving estimates never shuffles the grid.
-    * Output: (item, est); est >= the true frequency, always.
-    */
-  def cmsEstimate(cms: DataFrame, queries: DataFrame, d: Int = 4, wHex: Int = 2): DataFrame = {
-    val cells = registered(queries)
-      .select(col("item"),
-        explode(expr(cellsExpr(d, "cast(item as string)", wHex))).as("__cell"))
-      .select(col("item"), col("__cell.r").as("cms_row"), col("__cell.c").as("cms_col"))
-    cells.join(broadcast(cms), Seq("cms_row", "cms_col"), "left")
-      .groupBy(col("item"))
-      .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
-  }
 
   /** Bloom filter as a set-bit position table: k md5-derived hashes per
     * item into m = 16^mHex positions; the filter is the DISTINCT position

@@ -238,7 +238,7 @@ object TextQuality {
 
   /** Append `n_words` + `is_repetitive` to the input, keeping every input
     * column — the form a pipeline uses when the text must survive
-    * downstream (e.g. streaming curation). Same word/gram/line
+    * downstream (e.g. [[Curation.curate]]). Same word/gram/line
     * expressions and the same flag rule as [[repetition]]; still a pure
     * per-row codegen map, so it is streaming-safe with no state.
     */

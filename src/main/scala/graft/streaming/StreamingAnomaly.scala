@@ -17,9 +17,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * flag per input row. State per key is the last `win - 1` values
   * (a few longs — bounded by construction, unlike time-range state).
   *
-  * Ordering contract (same as the other sealed-input streaming faces):
-  * rows may arrive unordered WITHIN a micro-batch (they are sorted per
-  * key before folding) but batches must not interleave time across
+  * Ordering contract: rows may arrive unordered WITHIN a micro-batch
+  * (they are sorted per key before folding) but batches must not interleave time across
   * batch boundaries — the upstream is a sealed, in-order feed such as
   * the tier-1 rollup sink. [[fold]] is the pure per-key step; the
   * split-vs-whole law (folding a prefix, carrying the tail, folding the

@@ -105,13 +105,6 @@ class FunnelSpec extends AnyFunSuite {
     for ((u, s) <- s3) assert(f2(u) == math.min(s, 2), s"user $u")
   }
 
-  test("funnelCounts: monotone nonincreasing; stage-k count = users with stage_reached >= k") {
-    val counts = Funnel.funnelCounts(funnelFixture, "user_id", "ts", "event_type",
-        Seq("A", "B", "C"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(counts == Map(1 -> 5L, 2 -> 4L, 3 -> 1L))
-  }
-
   test("orderedFunnel horizon: later steps must land within the first-touch window; no re-anchoring") {
     import spark.implicits._
     val ev = Seq(

@@ -196,40 +196,6 @@ class IoStreamingSpec extends AnyFunSuite {
     assert(TableFormat.snapshots(dir).map(_("n")) == Seq("1", "2", "3", "4"))
   }
 
-  test("streaming trigger sessionizer (flatMapGroupsWithState) == batch islands on sealed periods") {
-    import spark.implicits._
-    import graft.streaming.StreamingTrigger
-    val step = 60L
-    def ts(i: Int) = new java.sql.Timestamp(1704067200000L + i * step * 1000)
-    // active steps with several islands; the last island is left "open"
-    // (could still be extended) so only sealed islands may be emitted
-    val onSteps = Seq(5, 6, 7, 8, 20, 21, 40, 41, 42, 43, 44, 80, 81, 82)
-    val active = onSteps.map(i => (ts(i), 2L))
-    val dir = java.nio.file.Files.createTempDirectory("stream-trig").toString
-    active.toDF("time", "n_on").write.mode("overwrite").parquet(dir)
-    val streamIn = spark.readStream
-      .schema("time timestamp, n_on long").parquet(dir)
-    val q = StreamingTrigger.sessionize(streamIn, step, minDurationSteps = 3)
-      .writeStream.outputMode("append").format("memory").queryName("stream_trigger")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT period_start, period_end, n_steps FROM stream_trigger")
-      .collect().map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getLong(2))).sortBy(_._1.getTime)
-    // batch reference on the same steps: the final island (80..82) is NOT
-    // sealed at end-of-stream (watermark == max event time), so streaming
-    // must emit exactly the earlier islands that pass minDuration
-    val cf = active.map { case (t, _) => ("k1", t, 5.0) }
-      .flatMap(r => Seq(r, ("k2", r._2, 5.0))).toDF("key", "time", "value")
-    val batch = graft.ops.Trigger.periods(cf, 1.0, 2, step, minDurationSteps = 3)
-      .orderBy("period_start")
-      .collect().map(r => (r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
-    val sealedBatch = batch.filter(_._2.getTime < ts(82).getTime)
-    assert(got.toSeq == sealedBatch.toSeq,
-      s"streaming ${got.toSeq} != sealed batch ${sealedBatch.toSeq}")
-    assert(got.nonEmpty)
-  }
-
   test("streaming cascade: 1h from sealed 1m, then 1d from sealed 1h == batch fromLower") {
     import spark.implicits._
     // ~3-day span so day-tier cells actually seal
@@ -361,106 +327,6 @@ class IoStreamingSpec extends AnyFunSuite {
         "window 8 must contain the in-horizon late row, window 12 stays open")
   }
 
-  test("streaming windowed CC: sealed windows equal the batch kernel bit-for-bit") {
-    import spark.implicits._
-    import graft.ops.{Correlate, Ingest}
-    // dense two-conv activity so every candidate window has data on both
-    // sides (streaming omits all-zero windows; head-of-feed windows with
-    // leading zeros are a documented semantic difference, so the assertion
-    // is batch-sealed ⊆ streaming with identical arrays)
-    val t = Transcripts.generate(spark, 2, 400).toDF()
-    val series = Ingest.seriesSparse(t, 60).cache()
-    val dir = java.nio.file.Files.createTempDirectory("stream-cc").toString
-    series.write.mode("overwrite").parquet(dir)
-    val pairs = Seq(("conv-000000", "conv-000001")).toDF("conv_a", "conv_b")
-
-    val streamIn = spark.readStream.schema(series.schema).parquet(dir)
-    val q = graft.streaming.StreamingCc.ccWindows(streamIn, pairs, 1800, 900, 60)
-      .writeStream.outputMode("append").format("memory").queryName("stream_cc")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT pair, metric, win_start, cc, status FROM stream_cc")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getTimestamp(2).getTime,
-        r.getSeq[Double](3).toList, r.getByte(4)))
-    assert(got.nonEmpty, "no sealed windows emitted")
-    val gotKeys = got.map(x => (x._1, x._2, x._3)).toSet
-    assert(gotKeys.size == got.length, "duplicate emission for a sealed window")
-
-    // batch reference restricted to windows the final watermark sealed AND
-    // with signal on both sides (status=1): a both-sides-silent window has
-    // no streaming state to seal — the batch path only knows to emit its
-    // -1 row from the observed span, which a live feed does not have
-    val maxTsMs = series.agg(max("ts")).collect()(0).getTimestamp(0).getTime
-    val batch = Correlate.ccPairs(Correlate.windows(series, 1800, 900, 60), pairs, 60, 1800)
-      .toDF().collect()
-      .map(r => (r.getString(0), r.getString(1), r.getTimestamp(2).getTime,
-        r.getSeq[Double](3).toList, r.getByte(4)))
-      .filter(x => x._3 + 1800 * 1000L < maxTsMs && x._5 == 1)
-    assert(batch.nonEmpty, "fixture produced no sealed batch windows")
-    val gotMap = got.map(x => (x._1, x._2, x._3) -> ((x._4, x._5))).toMap
-    batch.foreach { case (p, m, w, cc, st) =>
-      val g = gotMap.get((p, m, w))
-      assert(g.isDefined, s"batch window ($p,$m,$w) missing from the stream")
-      assert(g.get._1 == cc && g.get._2 == st, s"window ($p,$m,$w) differs from batch")
-    }
-  }
-
-  test("streaming exact dedup keeps one doc per content hash (bounded state)") {
-    import spark.implicits._
-    import graft.streaming.StreamingDedup
-    def ts(i: Int) = new java.sql.Timestamp(1704067200000L + i * 1000L)
-    // 30 docs, 10 distinct texts, duplicates arriving within the horizon
-    val docs = (0 until 30).map(i => (i.toLong, ts(i), s"doc text number ${i % 10}"))
-      .toDF("doc_id", "ts", "text")
-    val dir = java.nio.file.Files.createTempDirectory("stream-dedup").toString
-    docs.write.mode("overwrite").parquet(dir)
-    val streamIn = spark.readStream.schema(docs.schema).parquet(dir)
-    val q = StreamingDedup.distinctDocs(streamIn, horizon = "10 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("stream_dedup")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT content_hash FROM stream_dedup").collect().map(_.getString(0))
-    assert(got.length == 10, s"expected 10 distinct hashes, got ${got.length}")
-    assert(got.distinct.length == 10)
-  }
-
-  test("streaming curation equals batch Curation on sealed in-order input") {
-    import spark.implicits._
-    def ts(i: Int) = new java.sql.Timestamp(1704067200000L + i * 1000L)
-    val rows = Seq(
-      (0L, "w1 w2 w3 w4 w5 w6"),                        // bench
-      (1L, "spam spam spam spam spam spam spam spam"),  // repetitive
-      (2L, "tiny doc"),                                 // < minWords
-      (3L, "alpha beta gamma delta epsilon"),           // survivor
-      (4L, "dup text goes here exactly now"),           // dup keeper (first-seen == min id)
-      (5L, "dup text goes here exactly now"),           // dropped dup
-      (6L, "w1 w2 w3 w4 w5 zz"),                        // contaminated
-      (10L, "p q r s t"))                               // bench
-    val docs = rows.zipWithIndex
-      .map { case ((id, tx), i) => (id, ts(i), tx) }.toDF("doc_id", "ts", "text")
-    val dir = java.nio.file.Files.createTempDirectory("stream-curate").toString
-    // one partition, id order: first-seen == min-id so the two dedup faces agree
-    docs.orderBy("doc_id").coalesce(1).write.mode("overwrite").parquet(dir)
-    val q = graft.streaming.StreamingCuration.curate(
-        spark.readStream.schema(docs.schema).parquet(dir),
-        bench = docs.where(col("doc_id") % 10 === 0),
-        benchPred = col("doc_id") % 10 === 0)
-      .writeStream.outputMode("append").format("memory").queryName("stream_curate")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql(
-      "SELECT doc_id, n_words, n_sh, n_hit, bucket, split FROM stream_curate")
-    val want = graft.ops.Curation.curate(docs, "doc_id", "text",
-      benchPred = col("doc_id") % 10 === 0)
-    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-      s"stream=${got.collect().mkString(";")} batch=${want.collect().mkString(";")}")
-    assert(got.count() == 2) // docs 3 and 4
-  }
-
   test("gopherQuality + pqEncodeWith run unchanged over a stream (stateless maps == batch)") {
     import org.apache.spark.sql.streaming.Trigger
     // both ops are pure per-row codegen maps — the claim here is that they
@@ -498,89 +364,5 @@ class IoStreamingSpec extends AnyFunSuite {
       .selectExpr("vec_id", "concat_ws('-', codes) AS code_s")
     assert(pGot.count() == 500 &&
       pGot.exceptAll(pWant).count() == 0 && pWant.exceptAll(pGot).count() == 0)
-  }
-
-  test("streaming as-of join: sealed left rows equal the batch operator") {
-    import spark.implicits._
-    def t(s: Long) = new java.sql.Timestamp(s * 1000L)
-    // two keys; lefts every 60 s, rights every 150 s (unique right ts/key)
-    val lefts = (for {
-      k <- Seq("A", "B"); i <- 0 until 60
-    } yield (k, t(1000000L + i * 60), (if (k == "A") 0 else 1000) + i.toLong))
-      .toDF("key", "ts", "event_id")
-    val rights = (for {
-      k <- Seq("A", "B"); i <- 0 until 20
-    } yield (k, t(1000000L + 30 + i * 150), (if (k == "A") 0.5 else 100.5) + i))
-      .toDF("key", "ts", "ref_value")
-    val lDir = java.nio.file.Files.createTempDirectory("asof-l").toString
-    val rDir = java.nio.file.Files.createTempDirectory("asof-r").toString
-    lefts.write.mode("overwrite").parquet(lDir)
-    rights.write.mode("overwrite").parquet(rDir)
-
-    val q = graft.streaming.StreamingAsof.leftAsof(
-        spark.readStream.schema(lefts.schema).parquet(lDir),
-        spark.readStream.schema(rights.schema).parquet(rDir))
-      .writeStream.outputMode("append").format("memory").queryName("stream_asof")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT key, event_id, ref_value, asof_ts FROM stream_asof")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        ((Option(r.get(2)).map(_.asInstanceOf[Double]),
-          Option(r.getTimestamp(3)).map(_.getTime))))
-      .toMap
-
-    // batch reference, restricted to lefts the final global watermark
-    // sealed (min of the two inputs' max event times, strict)
-    val wmMs = math.min(
-      lefts.agg(max("ts")).collect()(0).getTimestamp(0).getTime,
-      rights.agg(max("ts")).collect()(0).getTimestamp(0).getTime)
-    val batch = graft.ops.AsofJoin.leftAsof(
-        lefts, rights, Seq("key"), "ts", "ts", Seq("ref_value"))
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getLong(2),
-        Option(r.get(3)).map(_.asInstanceOf[Double]),
-        Option(r.getTimestamp(4)).map(_.getTime)))
-      .filter(_._2 < wmMs)
-    assert(batch.nonEmpty && got.nonEmpty)
-    batch.foreach { case (k, _, id, v, rts) =>
-      val g = got.get((k, id))
-      assert(g.isDefined, s"sealed left ($k,$id) missing from the stream")
-      assert(g.get == ((v, rts)), s"($k,$id): stream ${g.get} != batch ${(v, rts)}")
-    }
-    // no duplicates, no unsealed emissions
-    assert(got.size == batch.length,
-      s"stream emitted ${got.size} rows, batch sealed set has ${batch.length}")
-
-    // tolerance path: matches older than 120 s are nulled, and the carry
-    // becomes GC-able — still equal to the batch operator
-    val q2 = graft.streaming.StreamingAsof.leftAsof(
-        spark.readStream.schema(lefts.schema).parquet(lDir),
-        spark.readStream.schema(rights.schema).parquet(rDir),
-        toleranceSec = Some(120L))
-      .writeStream.outputMode("append").format("memory").queryName("stream_asof_tol")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination(120000)
-    val gotTol = spark.sql("SELECT key, event_id, ref_value, asof_ts FROM stream_asof_tol")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        ((Option(r.get(2)).map(_.asInstanceOf[Double]),
-          Option(r.getTimestamp(3)).map(_.getTime))))
-      .toMap
-    val batchTol = graft.ops.AsofJoin.leftAsof(
-        lefts, rights, Seq("key"), "ts", "ts", Seq("ref_value"),
-        toleranceSec = Some(120L))
-      .collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getLong(2),
-        Option(r.get(3)).map(_.asInstanceOf[Double]),
-        Option(r.getTimestamp(4)).map(_.getTime)))
-      .filter(_._2 < wmMs)
-    assert(batchTol.exists(_._4.isEmpty), "fixture must exercise stale-match nulling")
-    batchTol.foreach { case (k, _, id, v, rts) =>
-      assert(gotTol.get((k, id)).contains((v, rts)),
-        s"tolerance ($k,$id): stream ${gotTol.get((k, id))} != batch ${(v, rts)}")
-    }
   }
 }

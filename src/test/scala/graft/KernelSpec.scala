@@ -46,7 +46,7 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("cc shift extraction: y=roll(x,3) peaks at shift -3") {
-    val (shift, max) = Cc.computeShiftAndMax(x16, y16, delta = 1.0)
+    val (shift, max) = Cc.extractShiftAndMax(Cc.cc(x16, y16), 1.0)
     assert(shift == -3.0)
     assert(math.abs(max - 0.5088421448474494) < 1e-9)
   }

@@ -60,46 +60,7 @@ class MultimodalSpec extends AnyFunSuite {
       val truncated = java.util.Arrays.copyOf(bytes, bytes.length - 1)
       intercept[IllegalArgumentException](Multimodal.parseHeader(truncated))
       intercept[IllegalArgumentException](Multimodal.decodeFeatures(truncated))
-      if (r.getString(1) == "video") {
-        val nf = r.getInt(6)
-        intercept[IllegalArgumentException](Multimodal.resizePooled(bytes, 4, 4, frameIdx = nf))
-        intercept[IllegalArgumentException](Multimodal.resizePooled(bytes, 4, 4, frameIdx = -1))
-      }
     }
-  }
-
-  test("resize average-pool and frame seek are real math over real pixels") {
-    // a constant image pools to the constant
-    val w = 12; val h = 10
-    val bb = java.nio.ByteBuffer.allocate(10 + w * h)
-    bb.put(Multimodal.Magic).put(1.toByte).put(0.toByte).putShort(w.toShort).putShort(h.toShort)
-    (0 until w * h).foreach(_ => bb.put(77.toByte))
-    val pooled = Multimodal.resizePooled(bb.array(), 4, 4)
-    assert(pooled.length == 16 && pooled.forall(v => math.abs(v - 77.0) < 1e-5))
-    // a video frame slice returns exactly that frame's bytes
-    val media = Multimodal.synthesize(spark, 9)
-    val v = media.where(col("kind") === "video").orderBy("asset_id").limit(1).collect()(0)
-    val bytes = v.getAs[Array[Byte]]("bytes")
-    val hd = Multimodal.parseHeader(bytes)
-    val f1 = Multimodal.frameSlice(bytes, 1)
-    assert(f1.length == hd.width * hd.height)
-    assert(f1.sameElements(java.util.Arrays.copyOfRange(
-      bytes, hd.bodyOffset + f1.length, hd.bodyOffset + 2 * f1.length)))
-    // distributed per-frame means from real seeks
-    val fm = Multimodal.sampleFrameFeatures(media, everyK = 2).collect()
-    assert(fm.nonEmpty)
-    fm.foreach(r => assert(r.getFloat(2) >= 0f && r.getFloat(2) <= 255f))
-  }
-
-  test("frame sampling explodes every-kth frame for videos only") {
-    val media = Multimodal.synthesize(spark, 30)
-    val frames = Multimodal.sampleFrames(media, everyK = 4)
-    val joined = frames.join(media, "asset_id")
-    assert(joined.where(col("kind") =!= "video").count() == 0)
-    // each asset's frame count == ceil(n_frames / 4)
-    val bad = joined.groupBy(col("asset_id"), col("n_frames")).count()
-      .where(col("count") =!= ceil(col("n_frames") / 4.0).cast("long"))
-    assert(bad.count() == 0)
   }
 
   test("similarity ops: exact top-k matches brute-force local computation") {

@@ -3,13 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Accessors._
 import graft.kernel.{Cc, Filter, Signal}
 import graft.ops.{Correlate, Ingest, Postprocess, Preprocess}
 import graft.synth.Transcripts
 
-/** Preprocess registry, postprocess chain, custom TokenCount expression and
-  * the accessor API.
+/** Preprocess registry, postprocess chain and custom TokenCount
+  * expression.
   */
 class OpsSpec extends AnyFunSuite {
 
@@ -74,11 +73,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("preprocess fold order + hash stability") {
-    val ops = Seq("demean" -> Map.empty[String, String], "normalize" -> Map.empty[String, String])
-    val h1 = Preprocess.hashOps(ops)
-    val h2 = Preprocess.hashOps(ops)
-    assert(h1 == h2 && h1.length == 64)
-    assert(Preprocess.hashOps(ops.reverse) != h1, "order must matter")
     intercept[IllegalArgumentException](Preprocess(series, Seq("nope" -> Map.empty)))
   }
 
@@ -100,10 +94,6 @@ class OpsSpec extends AnyFunSuite {
     want = Signal.taper(want, 0.1)
     assert(got.length == want.length)
     got.zip(want).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
-    // declarative configs can now NAME the kernel ops — and the op-list
-    // hash (the reuse-revalidation gate) covers them
-    assert(Preprocess.hashOps(ops).length == 64)
-    assert(Preprocess.hashOps(ops) != Preprocess.hashOps(ops.take(1)))
     // degenerate taper: n < 1/max_percentage gives edge width m < 1 — the
     // op must be a no-op, not a 1-sample window (q64's m<1 oracle branch)
     val tiny = (0 until 8).map(i => ("c1", "m", ts(i), i.toDouble))
@@ -320,15 +310,6 @@ class OpsSpec extends AnyFunSuite {
     assert(rows.count() > 0, "driver smoke-checks rows>0 on entry()")
   }
 
-  test("accessor API chains the pipeline fluently") {
-    import spark.implicits._
-    val t = Transcripts.generate(spark, 4, 100).toDF()
-    val m1 = t.xcorr.series(60).xcorr.rollup("minute")
-    assert(m1.count() > 0)
-    val viz = t.xcorr.series(60).xcorr.lttb(20)
-    assert(viz.groupBy("conv_id", "metric").count().agg(max("count")).collect()(0).getLong(0) <= 20)
-  }
-
   test("simhash 16-bit bands keep bucket occupancy << n (the 4-bit-band O(n^2/16) failure mode)") {
     // the property the old 16-bit/4-bit-band domain violated: a 4-bit band
     // has only 16 values, so every bucket held ~n/16 docs and the band
@@ -506,17 +487,6 @@ class OpsSpec extends AnyFunSuite {
             .collect().toMap
           assert(gotB == got, s"trial $trial tol=$tol bucket=$bucketSec: bucketed != single-window")
         }
-        // AUTO-chosen bucket (no hand-picking): a small target forces the
-        // hottest key's rate to split the 500 s span; results must be
-        // bucket-size-invariant
-        val auto = graft.ops.AsofJoin.autoBucketSec(lDf, rDf, Seq("k"), "ts", "ts",
-          targetRowsPerBucket = 16)
-        assert(auto >= 1L && auto < 500L, s"auto bucket $auto should split the 500 s span")
-        val gotA = graft.ops.AsofJoin.leftAsofBucketed(lDf, rDf, Seq("k"), "ts", "ts",
-            Seq("ref"), bucketSec = auto, toleranceSec = tol)
-          .select(col("event_id"), col("ref")).as[(Long, Option[Double])]
-          .collect().toMap
-        assert(gotA == got, s"trial $trial tol=$tol auto bucket=$auto: != single-window")
         // a key with NO right rows at all: every left row must still come
         // back, unmatched (the bucket-level hand-off has no rows to carry)
         val loneKey = lefts.map { case (_, t, id) => ("kNONE", t, id + 1000L) }

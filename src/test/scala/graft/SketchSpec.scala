@@ -114,79 +114,6 @@ class SketchSpec extends AnyFunSuite {
         .select(col("event_type"), col("bin"), col("cnt").cast("long"))))
   }
 
-  test("StreamingSketch: sealed-window registers == batch hllRegistersBy on the same days") {
-    val evB = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("sketch-in").toString
-    evB.write.mode("overwrite").parquet(dir)
-    val streamIn = spark.readStream.schema(evB.schema).parquet(dir)
-    val q = graft.streaming.StreamingSketch
-      .hllRegistersByWindow(streamIn, "ts", "user_id", span = "1 day")
-      .writeStream.outputMode("append").format("memory").queryName("stream_hll")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT day, bucket, register FROM stream_hll")
-    // append emits only watermark-CLOSED windows: all days strictly before
-    // the max-ts day
-    val maxTs = evB.agg(max("ts")).head.get(0) // LocalDateTime (ts is NTZ)
-    val want = Sketch.hllRegistersBy(
-        evB.withColumn("day", date_trunc("day", col("ts"))), Seq("day"), "user_id")
-      .where(col("day") + expr("interval 1 day") <= lit(maxTs))
-      // the stream side watermarks on TIMESTAMP (ltz); align types for the
-      // row-string compare (UTC session -> identical wall clock)
-      .withColumn("day", col("day").cast("timestamp"))
-    assert(got.count() > 0 && rows(got) == rows(want))
-  }
-
-  test("StreamingSketch CMS: sealed-window grids == batch cmsCounts per day") {
-    val evB = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("cms-in").toString
-    evB.write.mode("overwrite").parquet(dir)
-    val streamIn = spark.readStream.schema(evB.schema).parquet(dir)
-    val q = graft.streaming.StreamingSketch
-      .cmsByWindow(streamIn, "ts", "event_type", span = "1 day")
-      .writeStream.outputMode("append").format("memory").queryName("stream_cms")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT day, cms_row, cms_col, cnt FROM stream_cms")
-    val maxTs = evB.agg(max("ts")).head.get(0)
-    val days = evB.select(date_trunc("day", col("ts")).as("day")).distinct()
-      .where(col("day") + expr("interval 1 day") <= lit(maxTs))
-      .collect().map(_.get(0))
-    assert(days.nonEmpty && got.count() > 0)
-    val want = days.map { d =>
-      graft.ops.Sketch.cmsCounts(
-          evB.where(date_trunc("day", col("ts")) === lit(d)), "event_type")
-        .withColumn("day", lit(d).cast("timestamp"))
-        .select("day", "cms_row", "cms_col", "cnt")
-    }.reduce(_ unionByName _)
-    assert(rows(got) == rows(want))
-  }
-
-  test("StreamingSketch hist: sealed-window bins == batch histByKey per day") {
-    val evB = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("hist-in").toString
-    evB.write.mode("overwrite").parquet(dir)
-    val streamIn = spark.readStream.schema(evB.schema).parquet(dir)
-    val q = graft.streaming.StreamingSketch
-      .histByWindow(streamIn, "ts", "value", lo = 0.0, hi = 500.0, nBins = 20,
-        span = "1 day")
-      .writeStream.outputMode("append").format("memory").queryName("stream_hist")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql("SELECT day, bin, cnt FROM stream_hist")
-    val maxTs = evB.agg(max("ts")).head.get(0)
-    val want = Sketch.histByKey(
-        evB.withColumn("day", date_trunc("day", col("ts"))), Seq("day"),
-        "value", lo = 0.0, hi = 500.0, nBins = 20)
-      .where(col("day") + expr("interval 1 day") <= lit(maxTs))
-      .withColumn("day", col("day").cast("timestamp"))
-      .select("day", "bin", "cnt")
-    assert(got.count() > 0 && rows(got) == rows(want))
-  }
-
   // ---------------------------------------------------------- heavy hitters
 
   test("heavyHitters: equals the exact full groupBy, under any partitioning") {
@@ -227,24 +154,12 @@ class SketchSpec extends AnyFunSuite {
       rows(Sketch.cmsCounts(items.repartition(11), "item")))
     assert(rows(Sketch.cmsMerge(Sketch.cmsCounts(a, "item"), Sketch.cmsCounts(b, "item"))) ==
       rows(Sketch.cmsCounts(items, "item")))
-  }
-
-  test("cmsEstimate: every estimate >= the true frequency; grid mass conserved per row") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val items = docs.select(explode(
-      expr("filter(split(trim(text), '\\\\s+'), w -> w != '')")).as("item"))
-    val exact = items.groupBy("item").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val cms = Sketch.cmsCounts(items, "item", d = 4, wHex = 2)
     // each of the 4 rows holds exactly N total mass
-    val perRow = cms.groupBy("cms_row").agg(sum("cnt").as("mass"))
+    val perRow = Sketch.cmsCounts(items, "item", d = 4, wHex = 2)
+      .groupBy("cms_row").agg(sum("cnt").as("mass"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val n = exact.values.sum
+    val n = items.count()
     assert(perRow == (0 until 4).map(_ -> n).toMap)
-    val est = Sketch.cmsEstimate(cms, items.distinct(), d = 4, wHex = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est.keySet == exact.keySet)
-    for ((k, e) <- est) assert(e >= exact(k), s"$k: est $e < exact ${exact(k)}")
   }
 
   // ------------------------------------------------------------------ bloom

@@ -83,46 +83,6 @@ class StreamingAnomalySpec extends AnyFunSuite {
     assert(got.where(col("is_anomaly") && col("x") === 500L).count() == 1)
   }
 
-  test("StreamingHolt.fold: split-vs-whole law holds bit-for-bit at every split") {
-    import graft.streaming.StreamingHolt
-    val rows = Seq(5L, 8L, 50L, 3L, 6L, 4L, 99L, 5L).zipWithIndex
-      .map { case (x, i) => (ts(i), x) }
-    val init = StreamingHolt.HoltState(started = false, 0.0, 0.0)
-    val (whole, stW) = StreamingHolt.fold(init, rows)
-    for (split <- 0 to rows.length) {
-      val (a, stA) = StreamingHolt.fold(init, rows.take(split))
-      val (b, stB) = StreamingHolt.fold(stA, rows.drop(split))
-      assert(a ++ b == whole, s"split=$split: smoothed rows differ")
-      assert(stB == stW, s"split=$split: carried state differs")
-    }
-  }
-
-  test("streaming Holt == batch SeriesStats.holt on the same sealed rows, bit-equal") {
-    import spark.implicits._
-    import graft.streaming.StreamingHolt
-    val rows = (0 until 50).flatMap(i =>
-      Seq(("A", i, (3 + (i * i % 7)).toLong), ("B", i, (i % 5).toLong)))
-    val df = seriesDf(rows)
-    val dir = java.nio.file.Files.createTempDirectory("holt-in").toString
-    df.write.mode("overwrite").parquet(dir)
-    val q = StreamingHolt.smooth(
-        spark.readStream.schema(df.schema).parquet(dir), "k", "ts", "x")
-      .writeStream.outputMode("append").format("memory").queryName("holt_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.sql(
-      "SELECT key, CAST(ts AS TIMESTAMP_NTZ) AS ts, x, level, trend, forecast FROM holt_stream")
-    val want = SeriesStats.holt(df, "k", "ts", "x")
-      .select(col("k").as("key"), col("ts"), col("x"),
-        col("level"), col("trend"), col("forecast"))
-    assert(got.count() == df.count(), "one smoothed row per input row")
-    val cols = got.columns.toSeq
-    val diff = got.union(want.select(cols.map(col): _*))
-      .groupBy(cols.map(col): _*).count().where(col("count") =!= 2)
-    assert(diff.count() == 0, "streaming Holt differs from the batch operator")
-  }
-
   test("trailing window never sees the future: a later spike cannot flag an earlier row") {
     // centered q102-style window WOULD flag row 2 (its window holds the
     // spike); the trailing window must not
