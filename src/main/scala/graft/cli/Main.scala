@@ -465,8 +465,7 @@ object Main {
     val inSchema = spark.read.parquet(c("input")).schema
     runStage(StreamingRollup.tier1Stats(
       spark.readStream.schema(inSchema).parquet(c("input")), lateness), ladder.head.dir)
-    // higher tiers fold the SEALED lower stream; 0 s lateness — the lower
-    // tier's watermark already absorbed event lateness
+    // higher tiers fold the SEALED lower stream
     ladder.zip(ladder.tail).foreach { case (lower, upper) =>
       runStage(StreamingRollup.fromSealed(
         spark.readStream.schema(statsSchema).parquet(s"$out/${lower.dir}"), upper.unit), upper.dir)

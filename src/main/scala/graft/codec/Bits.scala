@@ -47,8 +47,6 @@ final class BitReader(bytes: Array[Byte]) {
   private var pos = 0L
   private val nBits = bytes.length.toLong * 8
 
-  def remaining: Long = nBits - pos
-
   def readBit(): Int = readBits(1).toInt
 
   def readBits(n: Int): Long = {

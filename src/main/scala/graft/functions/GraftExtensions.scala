@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL surface for the engine's codegen expressions.
@@ -29,88 +29,54 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def one(name: String, build: Expression => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+  private type Builder = Seq[Expression] => Expression
+
+  /** `name`'s `injectFunction` triple; its builder rejects a call whose
+    * argument count is not the number of `params`.
+    */
+  private def fn(name: String, params: String*)(build: Builder)
+      : (FunctionIdentifier, ExpressionInfo, Builder) =
     (FunctionIdentifier(name),
       new ExpressionInfo(getClass.getName, name),
       args => {
-        require(args.length == 1, s"$name expects 1 argument, got ${args.length}")
-        build(args.head)
+        require(args.length == params.length,
+          if (params.length == 1) s"$name expects 1 argument, got ${args.length}"
+          else s"$name expects ${params.mkString("(", ", ", ")")}, got ${args.length} arguments")
+        build(args)
       })
 
+  /** The value of a constant integer argument; `what` names it in the error. */
+  private def intArg(what: String, e: Expression): Int =
+    if (e.foldable && e.dataType == IntegerType) e.eval().asInstanceOf[Int]
+    else throw new IllegalArgumentException(s"$what must be an integer literal, got $e")
+
   /** (identifier, info, builder) triples in `injectFunction` shape. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    one("graft_token_count", TokenCount(_)),
-    one("graft_chunk_decode", ChunkDecode(_)),
-    (FunctionIdentifier("graft_densify_float"),
-      new ExpressionInfo(getClass.getName, "graft_densify_float"),
-      args => {
-        require(args.length == 2,
-          s"graft_densify_float expects (points, npts), got ${args.length} arguments")
-        val npts = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case e if e.foldable && e.dataType == IntegerType =>
-            e.eval().asInstanceOf[Int]
-          case other => throw new IllegalArgumentException(
-            s"graft_densify_float npts must be an integer literal, got $other")
-        }
-        DensifyFloat(args.head, npts)
-      }),
-    (FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(getClass.getName, "graft_zorder"),
-      args => {
-        require(args.length == 2,
-          s"graft_zorder expects (a, b), got ${args.length} arguments")
-        Zorder.widened(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(getClass.getName, "graft_dot"),
-      args => {
-        require(args.length == 2,
-          s"graft_dot expects (a, b), got ${args.length} arguments")
-        DotProduct(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(getClass.getName, "graft_l2sq"),
-      args => {
-        require(args.length == 4,
-          s"graft_l2sq expects (a, b, off, len), got ${args.length} arguments")
-        L2Sq(args.head, args(1), args(2), args(3))
-      }),
-    (FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(getClass.getName, "graft_shingles"),
-      args => {
-        require(args.length == 2,
-          s"graft_shingles expects (tokens, n), got ${args.length} arguments")
-        val n = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case e if e.foldable && e.dataType == IntegerType =>
-            e.eval().asInstanceOf[Int]
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles n must be an integer literal, got $other")
-        }
-        ShingleArray(args.head, n)
-      }),
-    one("graft_tokens", TokenArray(_, dropEmpties = false)),
-    one("graft_words", TokenArray(_, dropEmpties = true)),
-    (FunctionIdentifier("graft_md5int"),
-      new ExpressionInfo(getClass.getName, "graft_md5int"),
-      args => {
-        require(args.length == 2,
-          s"graft_md5int expects (str, nHex), got ${args.length} arguments")
-        val n = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case e if e.foldable && e.dataType == IntegerType =>
-            e.eval().asInstanceOf[Int]
-          case other => throw new IllegalArgumentException(
-            s"graft_md5int nHex must be an integer literal, got $other")
-        }
-        Md5PrefixInt(args.head, n)
-      }))
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("graft_token_count", "text")(a => TokenCount(a(0))),
+    fn("graft_chunk_decode", "chunk")(a => ChunkDecode(a(0))),
+    fn("graft_densify_float", "points", "npts")(a =>
+      DensifyFloat(a(0), intArg("graft_densify_float npts", a(1)))),
+    fn("graft_zorder", "a", "b")(a => Zorder.widened(a(0), a(1))),
+    fn("graft_dot", "a", "b")(a => DotProduct(a(0), a(1))),
+    fn("graft_l2sq", "a", "b", "off", "len")(a => L2Sq(a(0), a(1), a(2), a(3))),
+    fn("graft_shingles", "tokens", "n")(a =>
+      ShingleArray(a(0), intArg("graft_shingles n", a(1)))),
+    fn("graft_tokens", "text")(a => TokenArray(a(0), dropEmpties = false)),
+    fn("graft_words", "text")(a => TokenArray(a(0), dropEmpties = true)),
+    fn("graft_md5int", "str", "nHex")(a =>
+      Md5PrefixInt(a(0), intArg("graft_md5int nHex", a(1)))))
 
   /** Register into an ALREADY-RUNNING session (current + future queries). */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (id, info, builder) =>
       org.apache.spark.sql.GraftSqlShim.registerFunction(spark, id, info, builder)
     }
+
+  /** `df` after registering the functions on its session: the entry point
+    * of an op whose plan calls them by name.
+    */
+  private[graft] def registered(df: DataFrame): DataFrame = {
+    register(df.sparkSession)
+    df
+  }
 }

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -31,6 +31,8 @@ import graft.ops.{Correlate, Ingest}
   *  - per-partition lineage + metrics land in the manifest rows, and the
   *    job config hash is revalidated like the reference's preprocess hash
   *    gate (/root/reference/xcorr/core/process.py:68-73).
+  *  - a run into a directory whose table properties fail their own
+  *    metadata hash, or name another job config, fails before any work.
   *
   * All filesystem probes go through Hadoop `FileSystem`, so manifests and
   * snapshots work on cluster storage (HDFS/S3), not only local disk.
@@ -74,6 +76,32 @@ object ProcessJob {
     false
   }
 
+  /** The config-hash gate: when `outDir` already holds table properties,
+    * they must pass their own metadata hash and carry `cfgHash` as the job
+    * config — appending cells of a second config would leave `readCc` to
+    * pick between equal-status rows of both.
+    */
+  private def checkStoredConfig(spark: SparkSession, outDir: String, cfgHash: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(outDir, "_table_properties.json")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) return
+    val props = TableFormat.readProps(outDir)
+    val stored = props.getOrElse("sha256_hash_metadata", "")
+    val recomputed = Hasher.hashObj(props)
+    if (stored != recomputed)
+      throw new IllegalStateException(s"$outDir: table properties fail their metadata " +
+        s"hash: stored=$stored recomputed=$recomputed")
+    val job = props.getOrElse("job_config_sha256", "")
+    if (job != cfgHash)
+      throw new IllegalStateException(s"$outDir holds cells of job config $job, " +
+        s"not this run's $cfgHash: write to a new output directory")
+  }
+
+  /** The manifest key `metric|pair|epoch seconds` of a row with `metric`
+    * and `win_start` columns and the given pair id.
+    */
+  private[graft] def partitionKey(pair: Column): Column =
+    concat_ws("|", col("metric"), pair, unix_timestamp(col("win_start")))
+
   def readManifest(spark: SparkSession, outDir: String): DataFrame = {
     import spark.implicits._
     val p = manifestPath(outDir)
@@ -114,6 +142,7 @@ object ProcessJob {
       maxWindows: Int = -1,
       retryMissing: Boolean = false
   ): Stats = {
+    checkStoredConfig(spark, outDir, cfg.hash)
     val jobId = s"ccjob-${cfg.hash.take(12)}"
 
     // one materialization of the series feeds BOTH the work-list planning
@@ -138,9 +167,7 @@ object ProcessJob {
       .join(broadcast(pairs), Seq("conv_a"))
       .join(b, Seq("conv_b", "metric", "win_start"))
       .select(
-        concat_ws("|", col("metric"),
-          concat(col("conv_a"), lit("-"), col("conv_b")),
-          unix_timestamp(col("win_start"))).as("partition_key"),
+        partitionKey(Correlate.pairId).as("partition_key"),
         col("conv_a"), col("conv_b"), col("metric"), col("win_start")
       )
 
@@ -173,10 +200,9 @@ object ProcessJob {
       val wins = Correlate.windows(pendingSeries, cfg.windowSec, cfg.strideSec, cfg.stepSec)
       val cc = Correlate
         .ccPairs(wins, pendingPairs, cfg.stepSec, cfg.windowSec, cfg.normalize,
-          unbiased = false, clipLagSec = cfg.clipLagSec, hashInputs = cfg.hashInputs)
+          clipLagSec = cfg.clipLagSec, hashInputs = cfg.hashInputs)
         .toDF()
-        .withColumn("partition_key",
-          concat_ws("|", col("metric"), col("pair"), unix_timestamp(col("win_start"))))
+        .withColumn("partition_key", partitionKey(col("pair")))
         .join(pendingKeys, Seq("partition_key"), "left_semi")
 
       val ccCached = cc.cache()

@@ -5,12 +5,13 @@ package graft.kernel
   *
   *  - both inputs are left zero-padded to `nn = 2n-1` (`xx[nn-n:] = x`),
   *  - `Rxy = fftshift(Re(ifft(fft(xx) * conj(fft(yy)))))`,
-  *  - optional normalization by `‖x‖·‖y‖`,
-  *  - optional unbias weights `w[k] = n/(n-|k|)` over lag index
-  *    `k = i-(n-1)` (cc.py:111-141 documents this; its arange stop is
-  *    off-by-two and truncates the last two weights — we implement the
-  *    documented full-length semantics, which is also what
-  *    `unbias_weights` slices from in practice).
+  *  - optional normalization by `‖x‖·‖y‖`.
+  *
+  * The unbias weights `w[k] = n/(n-|k|)` over lag index `k = i-(n-1)` are
+  * [[weight]] (cc.py:111-141 documents this; its arange stop is
+  * off-by-two and truncates the last two weights — we implement the
+  * documented full-length semantics, which is also what `unbias_weights`
+  * slices from in practice).
   *
   * Both real-input FFTs are computed with a single complex FFT (pack x in
   * the real part, y in the imaginary part, split by Hermitian symmetry), so
@@ -19,31 +20,24 @@ package graft.kernel
 object Cc {
 
   /** Cross-correlate x and y. Returns the fftshift-ed estimate of length
-    * 2n-1 (pad=true) or n (pad=false).
+    * 2n-1.
     *
     * Transform size: the OUTPUT is the reference's 2n-1 lags, but the
     * linear correlation is transform-size-agnostic for any N >= 2n-1, and
     * 2n-1 is always odd — computing at exactly 2n-1 runs Bluestein
-    * (~4 power-of-two transforms of TWICE the size per correlation). The
-    * pad=true path therefore transforms at the next power of two >= 2n-1
-    * (one radix-2 forward + one inverse) and assembles the 2n-1 lags from
-    * the circular result — >3x kernel speedup at the flagship window
-    * lengths, values equal to the exact-size transform up to ~1e-15
-    * relative (FP reordering only; all integral-domain oracles and the
-    * 1e-9 numpy fixtures are unaffected). pad=false keeps the exact size:
-    * circular correlation at n IS the requested semantics there.
+    * (~4 power-of-two transforms of TWICE the size per correlation). It
+    * therefore transforms at the next power of two >= 2n-1 (one radix-2
+    * forward + one inverse) and assembles the 2n-1 lags from the circular
+    * result — >3x kernel speedup at the flagship window lengths, values
+    * equal to the exact-size transform up to ~1e-15 relative (FP
+    * reordering only; all integral-domain oracles and the 1e-9 numpy
+    * fixtures are unaffected).
     */
-  def cc(
-      x: Array[Double],
-      y: Array[Double],
-      normalize: Boolean = true,
-      pad: Boolean = true,
-      unbiased: Boolean = false
-  ): Array[Double] = {
+  def cc(x: Array[Double], y: Array[Double], normalize: Boolean = true): Array[Double] = {
     val n = x.length
     require(y.length == n, "x and y must have the same length")
-    val nn = if (pad) 2 * n - 1 else n
-    val nt = if (pad && !Fft.isPow2(nn)) Integer.highestOneBit(nn) * 2 else nn
+    val nn = 2 * n - 1
+    val nt = if (!Fft.isPow2(nn)) Integer.highestOneBit(nn) * 2 else nn
     // packed complex buffer (thread-local scratch — only the returned array
     // is freshly allocated): re = x, im = y, zero-padded to nt.
     // END padding (not the reference's left pad): correlation is invariant
@@ -99,46 +93,34 @@ object Cc {
     Fft.ifft(re, im)
     // assemble the nn lags in fftshift order (lag of out[i] = i-(n-1)):
     // negative lag -j lives at c[nt-j], positive lag m at c[m]
-    val shifted =
-      if (!pad || nt == nn) Fft.fftshift(re)
-      else {
-        val out = new Array[Double](nn)
-        var t = 0
-        while (t < n - 1) { out(t) = re(nt - (n - 1) + t); t += 1 }
-        while (t < nn) { out(t) = re(t - (n - 1)); t += 1 }
-        out
-      }
-    if (unbiased) {
-      val w = weightCached(nn)
-      k = 0
-      while (k < nn) { shifted(k) *= w(k); k += 1 }
+    if (nt == nn) Fft.fftshift(re)
+    else {
+      val out = new Array[Double](nn)
+      var t = 0
+      while (t < n - 1) { out(t) = re(nt - (n - 1) + t); t += 1 }
+      while (t < nn) { out(t) = re(t - (n - 1)); t += 1 }
+      out
     }
-    shifted
   }
-
-  private val weightCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Double]]()
-  private def weightCached(nn: Int): Array[Double] =
-    weightCache.computeIfAbsent(nn, k => weight(k, pad = false))
 
   /** Lag axis in seconds: fftshift(fftfreq(nn, 1/(nn*delta)))
     * (cc.py:82-108). For nn = 2n-1 this is (i-(n-1))*delta.
     */
-  def lagAxis(n: Int, delta: Double, pad: Boolean = true): Array[Double] = {
-    val nn = if (pad) 2 * n - 1 else n
+  def lagAxis(n: Int, delta: Double): Array[Double] = {
+    val nn = 2 * n - 1
     Fft.fftshift(Fft.fftfreq(nn, 1.0 / (nn * delta)))
   }
 
-  /** Unbias weight vector over the full lag axis: w[i] = N/(N-|i-(N-1)|)
-    * with N = (nn+1)/2 (cc.py:111-141 documented semantics, full length).
+  /** Unbias weight vector over the full lag axis of length nn = 2n-1:
+    * w[i] = n/(n-|i-(n-1)|) (cc.py:111-141 documented semantics, full
+    * length).
     */
-  def weight(n: Int, pad: Boolean = true, clip: Double = Double.NaN): Array[Double] = {
-    val nn = if (pad) 2 * n - 1 else n
-    val nc = (nn + 1) / 2
+  def weight(n: Int): Array[Double] = {
+    val nn = 2 * n - 1
     val w = new Array[Double](nn)
     var i = 0
     while (i < nn) {
-      w(i) = nc.toDouble / (nc - math.abs(i - (nc - 1)))
-      if (!clip.isNaN && w(i) > clip) w(i) = clip
+      w(i) = n.toDouble / (n - math.abs(i - (n - 1)))
       i += 1
     }
     w

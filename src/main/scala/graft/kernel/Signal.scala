@@ -23,36 +23,6 @@ object Signal {
     out
   }
 
-  /** Remove a least-squares linear trend fit on (t, x) with NaNs excluded
-    * from the fit (reference detrend type 'linear', detrend.py:87-99).
-    */
-  def detrendLinear(x: Array[Double], t: Array[Double]): Array[Double] = {
-    var n = 0
-    var st = 0.0; var sx = 0.0; var stt = 0.0; var stx = 0.0
-    var i = 0
-    while (i < x.length) {
-      val v = x(i)
-      if (!v.isNaN) { n += 1; st += t(i); sx += v; stt += t(i) * t(i); stx += t(i) * v }
-      i += 1
-    }
-    val denom = n * stt - st * st
-    val slope = if (n < 2 || denom == 0) 0.0 else (n * stx - st * sx) / denom
-    val icept = if (n == 0) 0.0 else (sx - slope * st) / n
-    val out = new Array[Double](x.length)
-    i = 0
-    while (i < x.length) { out(i) = x(i) - (slope * t(i) + icept); i += 1 }
-    out
-  }
-
-  /** sqrt(mean(x^2)) skipping NaNs (/root/reference/xcorr/signal/rms.py:23-68). */
-  def rms(x: Array[Double]): Double = {
-    var s = 0.0
-    var n = 0
-    var i = 0
-    while (i < x.length) { val v = x(i); if (!v.isNaN) { s += v * v; n += 1 }; i += 1 }
-    if (n == 0) Double.NaN else math.sqrt(s / n)
-  }
-
   /** Symmetric Hann window of length m (scipy.signal.windows.hann(m, sym=True)). */
   def hann(m: Int): Array[Double] = {
     if (m == 1) return Array(1.0)

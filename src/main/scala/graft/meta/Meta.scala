@@ -96,28 +96,6 @@ object TableFormat {
   import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.fs.{FileContext, Options, Path}
 
-  /** True when a real Iceberg runtime is on the classpath. The sandbox
-    * ships none (zero egress, SURVEY §7.0), so the sidecar emulation below
-    * is the active path; on a cluster with the iceberg-spark-runtime jar
-    * this flips and [[icebergSessionConfigs]] wires the native catalog —
-    * the adaptivity is spec-gated (skipped-unless-present) in
-    * IoStreamingSpec so the claim stays executable either way.
-    */
-  lazy val icebergAvailable: Boolean =
-    try { Class.forName("org.apache.iceberg.spark.SparkCatalog"); true }
-    catch { case _: ClassNotFoundException | _: NoClassDefFoundError => false }
-
-  /** Session configs for the native path (a Hadoop-catalog warehouse —
-    * swap type/uri for Hive/REST catalogs). `spark.sql.extensions` is a
-    * static conf: apply these at SparkSession BUILD time, before the
-    * context exists.
-    */
-  def icebergSessionConfigs(warehouse: String, catalog: String = "graft"): Map[String, String] = Map(
-    "spark.sql.extensions" -> "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-    s"spark.sql.catalog.$catalog" -> "org.apache.iceberg.spark.SparkCatalog",
-    s"spark.sql.catalog.$catalog.type" -> "hadoop",
-    s"spark.sql.catalog.$catalog.warehouse" -> warehouse)
-
   /** The active session's Hadoop conf when inside a Spark job; a default
     * conf (core-site.xml discovery) otherwise — keeps this layer usable
     * from plain JVM tools.
@@ -151,16 +129,8 @@ object TableFormat {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
-    val raw =
-      try new String(in.readAllBytes(), UTF_8)
-      finally in.close()
-    // minimal flat-object JSON parse (we only ever write flat string maps)
-    val s = raw.trim.stripPrefix("{").stripSuffix("}")
-    if (s.isEmpty) Map.empty
-    else {
-      val re = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      re.findAllMatchIn(s).map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
-    }
+    try parseFlat(new String(in.readAllBytes(), UTF_8))
+    finally in.close()
   }
 
   /** Append a snapshot record (history lineage — the reference's
@@ -325,6 +295,7 @@ object TableFormat {
     doomed.count(n => fs.delete(new Path(snapDir, n), false))
   }
 
+  /** Minimal flat-object JSON parse: this layer only writes flat string maps. */
   private def parseFlat(raw: String): Map[String, String] = {
     val s = raw.trim.stripPrefix("{").stripSuffix("}")
     if (s.isEmpty) Map.empty[String, String]

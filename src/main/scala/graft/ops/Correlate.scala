@@ -153,17 +153,20 @@ object Correlate {
     ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
     col("value").cast("float").as("v"))
 
+  /** The stored pair id `conv_a-conv_b` of a row with `conv_a`/`conv_b`
+    * columns — the `pair` of every CC row and of the job's work list.
+    */
+  private[graft] def pairId: Column = concat(col("conv_a"), lit("-"), col("conv_b"))
+
   /** One row per (conversation, pair) it belongs to: (conv_id, pair, side),
     * side 0 for conv_a and 1 for conv_b. Joined on conv_id, it tags windows
     * or points with every (pair, side) they serve.
     */
   private def pairSides(pairs: DataFrame): DataFrame =
     pairs
-      .select(col("conv_a").as("conv_id"),
-        concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(0).as("side"))
+      .select(col("conv_a").as("conv_id"), pairId.as("pair"), lit(0).as("side"))
       .unionByName(pairs
-        .select(col("conv_b").as("conv_id"),
-          concat(col("conv_a"), lit("-"), col("conv_b")).as("pair"), lit(1).as("side")))
+        .select(col("conv_b").as("conv_id"), pairId.as("pair"), lit(1).as("side")))
 
   /** All unordered conv pairs (convA < convB) present in the series — the
     * reference's `triu_indices` co-array / tri_mask "compute half" trick
@@ -201,7 +204,7 @@ object Correlate {
       pairId: String, metric: String, winStart: Timestamp,
       vaF: Array[Float], vbF: Array[Float],
       delta: Double, halfWin: Double,
-      normalize: Boolean, unbiased: Boolean, clipLagSec: Double,
+      normalize: Boolean, clipLagSec: Double,
       hashInputs: Boolean
   ): CcRow = {
     val va = toDoubles(vaF)
@@ -211,7 +214,7 @@ object Correlate {
     // (/root/reference/xcorr/core/init.py:244-247) instead of emitting
     // a spurious zero correlation
     val degenerate = va.forall(_ == 0.0) || vb.forall(_ == 0.0)
-    val rxy = Cc.cc(va, vb, normalize = normalize, unbiased = unbiased)
+    val rxy = Cc.cc(va, vb, normalize)
     val n = va.length
     val nn = rxy.length // 2n-1
     // clip by lag INDEX (lag(i) = (i-(n-1))·delta exactly): |lag|<=clip
@@ -270,7 +273,6 @@ object Correlate {
       stepSec: Long,
       windowSec: Long,
       normalize: Boolean = true,
-      unbiased: Boolean = false,
       clipLagSec: Double = -1,
       hashInputs: Boolean = false
   ): Dataset[CcRow] = {
@@ -304,7 +306,7 @@ object Correlate {
     joined.mapPartitions { it =>
       it.map { case (pairId, metric, winStart, vaF, vbF) =>
         kernelRow(pairId, metric, winStart, vaF, vbF,
-          delta, halfWin, normalize, unbiased, clipLagSec, hashInputs)
+          delta, halfWin, normalize, clipLagSec, hashInputs)
       }
     }
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.registered
 
 /** Text-dedup operator library (training-data-pipeline extensions — engine-
   * new, no reference counterpart): exact, prefix-fingerprint, n-gram
@@ -37,11 +38,6 @@ object Dedup {
     // single per-row pass immune to optimizer inlining. Callers must have
     // run GraftExtensions.register on the session ([[registered]]).
     s"graft_shingles($toksCol, $n)"
-
-  private def registered(df: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(df.sparkSession)
-    df
-  }
 
   /** word `n`-gram shingles, distinct per (id, shingle).
     *

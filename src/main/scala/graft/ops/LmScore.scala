@@ -9,24 +9,16 @@ import org.apache.spark.sql.functions._
   * model trained on a trusted reference corpus; keep the head, drop the
   * tail).
   *
-  * Two scoring surfaces, deliberately split (the [[TextRank]] precedent):
-  *
-  *  - [[supportScore]] is the hash-gateable surface: per document the
-  *    EXACT-INTEGER bigram-model supports — how many transitions the
-  *    model has seen (`n_big`/`n_unk`), and the summed model counts
-  *    behind them (`support`, `uni_support`). Every aggregate is an
-  *    integer sum, exact under any partitioning and any engine; the two
-  *    rates are single int/int IEEE divisions (round-6) and the low-
-  *    quality flag is integer cross-multiplied. No logarithm anywhere:
-  *    a per-doc log-prob is a SUM of floats whose value depends on
-  *    reduction order, which the driver's cross-engine hash gate cannot
-  *    tolerate (and DuckDB's `ln` differs from `Math.log` by 1 ulp —
-  *    measured, see `TextRank`).
-  *  - [[avgLogProb]] is the literal add-one-smoothed bigram log-prob
-  *    (what a KenLM user reads) for API consumers; it is spec-gated with
-  *    a tolerance in LmScoreSpec, not hash-gated, for the float-sum
-  *    reason above. Ranking by it and by `avg_support` agree on the
-  *    gross head/tail split that the filter actually acts on.
+  * [[supportScore]] is hash-gateable (the [[TextRank]] precedent): per
+  * document it gives the EXACT-INTEGER bigram-model supports — how many
+  * transitions the model has seen (`n_big`/`n_unk`), and the summed model
+  * counts behind them (`support`, `uni_support`). Every aggregate is an
+  * integer sum, exact under any partitioning and any engine; the two rates
+  * are single int/int IEEE divisions (round-6) and the low-quality flag is
+  * integer cross-multiplied. No logarithm anywhere: a per-doc log-prob is
+  * a SUM of floats whose value depends on reduction order, which the
+  * cross-engine oracle hash gate cannot tolerate (and DuckDB's `ln`
+  * differs from `Math.log` by 1 ulp — measured, see `TextRank`).
   *
   * Scale shape: transitions are O(total tokens) rows built with the
   * inlining-safe zip_with-over-slices form (a lambda body that touches
@@ -109,30 +101,5 @@ object LmScore {
       round(col("support").cast("double") / col("n_big").cast("double"), 6).as("avg_support"),
       round(col("n_unk").cast("double") / col("n_big").cast("double"), 6).as("unk_rate"),
       (col("n_unk") * lit(100L) >= col("n_big") * lit(unkPctThreshold.toLong)).as("is_lowq"))
-  }
-
-  /** Literal add-one-smoothed bigram average log-probability per doc:
-    * (1/n_big) Σ ln((c2+1)/(c1+V)) with V = |model transition-start
-    * vocabulary| + 1 (the +1 absorbs unseen w1). API surface only — the
-    * per-doc sum of logs is reduction-order-dependent at the few-ulp
-    * level, so this is spec-gated (tolerance), never hash-gated.
-    */
-  def avgLogProb(
-      docs: DataFrame,
-      refBigrams: DataFrame,
-      refUnigrams: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame = {
-    val v = refUnigrams.agg((count(lit(1)) + lit(1L)).as("vocab"))
-    val tr = transitions(docs, idCol, textCol)
-    tr.join(refBigrams, Seq("w1", "w2"), "left")
-      .join(refUnigrams, Seq("w1"), "left")
-      .crossJoin(broadcast(v))
-      .select(col("doc_id"),
-        log((coalesce(col("c2"), lit(0L)).cast("double") + lit(1d)) /
-          (coalesce(col("c1"), lit(0L)).cast("double") + col("vocab").cast("double"))).as("lp"))
-      .groupBy("doc_id")
-      .agg((sum(col("lp")) / count(lit(1))).as("avg_log_prob"),
-        count(lit(1)).as("n_big"))
   }
 }

@@ -3,7 +3,6 @@ package graft.ops
 import java.nio.ByteBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing for a training-data pipeline: media as opaque
   * `binary` columns with typed metadata, processed by per-partition batch
@@ -28,19 +27,6 @@ import org.apache.spark.sql.types._
 object Multimodal {
 
   val Magic: Array[Byte] = Array('G', 'R', 'F', 'T').map(_.toByte)
-
-  /** Canonical media-table schema: one row per asset; metadata columns are
-    * the HEADER fields (decode round-trips them — asserted in spec).
-    */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),   // image | audio | video
-    StructField("bytes", BinaryType, nullable = false),  // GRFT1 payload
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("n_frames", IntegerType)
-  ))
 
   /** Deterministic synthetic media table (payloads derived from the asset
     * id — reproducible across partitionings like Transcripts).

@@ -271,9 +271,9 @@ object Rollup {
     * computed hierarchically so no aggregation buffer ever holds a key's
     * full history:
     *
-    *  stage 1 — LTTB per (conv, metric, `chunkUnit` chunk) down to at most
-    *            `threshold` keepers (buffer ≤ points-per-chunk: bounded by
-    *            the chunk duration over the grid step, not by key history);
+    *  stage 1 — LTTB per (conv, metric, day) down to at most
+    *            `threshold` keepers (buffer ≤ points-per-day: bounded by
+    *            the day over the grid step, not by key history);
     *  stage 2 — LTTB the concatenated keepers down to `threshold`
     *            (buffer ≤ n_chunks · threshold).
     *
@@ -283,7 +283,7 @@ object Rollup {
     * interior points are the hierarchical approximation standard for
     * streaming LTTB. Both passes run through the typed [[LttbAgg]].
     */
-  def lttbTier(points: DataFrame, threshold: Int, chunkUnit: String = "day"): DataFrame = {
+  def lttbTier(points: DataFrame, threshold: Int): DataFrame = {
     val ds = udaf(LttbAgg(threshold))
     def pass(df: DataFrame, grouping: Seq[org.apache.spark.sql.Column]): DataFrame =
       df.groupBy(grouping: _*)
@@ -293,7 +293,7 @@ object Rollup {
         .select(col("conv_id"), col("metric"),
           timestamp_micros(col("pt.ts")).as("ts"), col("pt.vs").as("value"))
     val stage1 = pass(points,
-      Seq(col("conv_id"), col("metric"), date_trunc(chunkUnit, col("ts")).as("chunk")))
+      Seq(col("conv_id"), col("metric"), date_trunc("day", col("ts")).as("chunk")))
     pass(stage1, Seq(col("conv_id"), col("metric")))
   }
 

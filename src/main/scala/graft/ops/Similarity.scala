@@ -3,16 +3,17 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.GraftExtensions.registered
 import graft.meta.Hasher
 
-/** Embedding similarity search: brute-force cosine top-k as the exact
-  * baseline and random-hyperplane LSH bucketing as the scale path (an IVF
-  * alternative would cluster first; LSH needs no training pass and its
-  * plane matrix is derived from a hash, so both engines — and both cluster
-  * sizes — agree bit-for-bit).
+/** Embedding similarity search: brute-force top-k ([[l2TopK]]) as the
+  * exact baseline and random-hyperplane LSH bucketing as the scale path
+  * (an IVF alternative would cluster first; LSH needs no training pass and
+  * its plane matrix is derived from a hash, so both engines — and both
+  * cluster sizes — agree bit-for-bit).
   *
   * All dot products are the codegen'd [[graft.functions.DotProduct]] kernel
-  * (bit-equal left fold; see `registered` below) — no UDFs.
+  * (bit-equal left fold; see `dot` below) — no UDFs.
   */
 object Similarity {
 
@@ -25,30 +26,10 @@ object Similarity {
     * dot; see DotProduct scaladoc + OPTIMIZATION_r06.md for the q40/q81
     * measurements).
     */
-  private def registered(df: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(df.sparkSession)
-    df
-  }
-
   private def dot(a: String, b: String): Column =
     expr(s"graft_dot($a, $b)")
 
   val castVec = "transform(embedding, x -> cast(x as double))"
-
-  /** Exact cosine top-k neighbors for each query id (broadcast the query
-    * side — it is small by construction; the big side streams).
-    */
-  def cosineTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val e = registered(embeddings).select(col("vec_id"), expr(castVec).as("v"))
-    val q = e.where(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val scored = e.crossJoin(broadcast(q))
-      .where(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        (dot("qv", "v") / (sqrt(dot("qv", "qv")) * sqrt(dot("v", "v")))).as("cosine"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-  }
 
   /** Deterministic ±1 hyperplanes from sha256 — identical on any engine. */
   def planes(nPlanes: Int, dim: Int): Array[Array[Int]] =
@@ -364,8 +345,8 @@ object Similarity {
   }
 
   /** Exact squared-L2 top-k — the brute-force truth the PQ recall metric
-    * (q83) grades against, and the L2 sibling of [[cosineTopK]]. Same
-    * broadcast-queries shape: the corpus streams, nothing shuffles.
+    * (q83) grades against. The query side is broadcast: the corpus
+    * streams, nothing shuffles.
     */
   def l2TopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     val e = registered(embeddings).select(col("vec_id"), expr(castVec).as("v"))

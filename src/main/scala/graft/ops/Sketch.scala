@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.registered
 
 /** Mergeable summary sketches — the cardinality / frequency layer a 100 TB
   * corpus pipeline runs BEFORE it commits to exact work (how many distinct
@@ -33,9 +34,9 @@ object Sketch {
 
   /** HyperLogLog register table over `idCol`: one row per OCCUPIED bucket,
     * `(bucket, register)`, both integers — the mergeable sketch state
-    * (merge = max per bucket, see [[hllMerge]]; a partition-local partial
-    * agg does the same max map-side, so the exchange carries at most 2^p
-    * rows per partition regardless of input size).
+    * (merge = max per bucket, see [[foldRegisters]]; a partition-local
+    * partial agg does the same max map-side, so the exchange carries at
+    * most 2^p rows per partition regardless of input size).
     *
     * Hash domain: md5(id as string). bucket = first p/4 hex digits;
     * rho = 1 + (leading zero BITS of the next 12 hex digits), computed in
@@ -76,13 +77,6 @@ object Sketch {
         expr(rho).cast("int").as("rho")): _*)
   }
 
-  /** Merge two register tables (sketches of disjoint — or overlapping, HLL
-    * doesn't care — inputs): per-bucket max. This is the 100 TB property:
-    * shard sketches combine without revisiting data.
-    */
-  def hllMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("bucket")).agg(max(col("register")).as("register"))
-
   /** GROUPED register tables: one HLL sketch per distinct `keyCols` tuple
     * — the scale answer to COUNT(DISTINCT id) GROUP BY key. At 100 TB a
     * per-day exact distinct shuffles the whole id population every day;
@@ -101,8 +95,8 @@ object Sketch {
   }
 
   /** Fold grouped register tables down to coarser keys (or to the total
-    * sketch with `keyCols = Nil`): per-bucket max — the tier-rollup face
-    * of [[hllMerge]]. foldRegisters(hllRegistersBy(df, day), Nil) ==
+    * sketch with `keyCols = Nil`): per-bucket max, the HLL merge.
+    * foldRegisters(hllRegistersBy(df, day), Nil) ==
     * hllRegisters(df), exactly (spec + oracle-gated).
     */
   def foldRegisters(grouped: DataFrame, keyCols: Seq[String]): DataFrame =
@@ -212,6 +206,20 @@ object Sketch {
       .select(col("item"), col("n"), col("n_total"))
   }
 
+  /** Column-index expression: first `hex` hex digits of md5(r:item). */
+  private def hashCol(r: Int, itemExpr: String, hex: Int): String =
+    // r6: fused digest+prefix kernel, bit-equal to
+    // cast(conv(substr(md5(.), 1, hex), 16, 10) as int) (Md5NibblesSpec)
+    s"graft_md5int(concat('$r', ':', $itemExpr), $hex)"
+
+  /** (row, col) cells for one item across all d hashes, as ONE exploded
+    * array — a single input scan regardless of d (a per-hash union would
+    * rescan the source d times).
+    */
+  private def cellsExpr(d: Int, itemExpr: String, hex: Int): String =
+    (0 until d).map(r =>
+      s"struct($r as r, ${hashCol(r, itemExpr, hex)} as c)").mkString("array(", ", ", ")")
+
   /** Count-min sketch (Cormode & Muthukrishnan 2005): a d×w integer grid
     * where cell (r, c) counts every item whose r-th hash lands on column c
     * — point frequency estimates read min over the d rows, always an
@@ -229,25 +237,6 @@ object Sketch {
     * @param d rows (independent hashes), >= 1
     * @param wHex column-width in hex digits, in [1, 7] (w = 16^wHex)
     */
-  /** Column-index expression: first `hex` hex digits of md5(r:item). */
-  private def registered(df: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(df.sparkSession)
-    df
-  }
-
-  private def hashCol(r: Int, itemExpr: String, hex: Int): String =
-    // r6: fused digest+prefix kernel, bit-equal to
-    // cast(conv(substr(md5(.), 1, hex), 16, 10) as int) (Md5NibblesSpec)
-    s"graft_md5int(concat('$r', ':', $itemExpr), $hex)"
-
-  /** (row, col) cells for one item across all d hashes, as ONE exploded
-    * array — a single input scan regardless of d (a per-hash union would
-    * rescan the source d times).
-    */
-  private def cellsExpr(d: Int, itemExpr: String, hex: Int): String =
-    (0 until d).map(r =>
-      s"struct($r as r, ${hashCol(r, itemExpr, hex)} as c)").mkString("array(", ", ", ")")
-
   def cmsCounts(df: DataFrame, itemCol: String, d: Int = 4, wHex: Int = 2): DataFrame = {
     require(d >= 1, s"d must be >= 1, got $d")
     require(wHex >= 1 && wHex <= 7, s"wHex must be in [1,7], got $wHex")
@@ -256,10 +245,6 @@ object Sketch {
       .groupBy(col("__cell.r").as("cms_row"), col("__cell.c").as("cms_col"))
       .agg(count(lit(1)).as("cnt"))
   }
-
-  /** Merge two CMS grids over the same (d, wHex) geometry: per-cell sum. */
-  def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("cms_row"), col("cms_col")).agg(sum(col("cnt")).as("cnt"))
 
   /** Bloom filter as a set-bit position table: k md5-derived hashes per
     * item into m = 16^mHex positions; the filter is the DISTINCT position

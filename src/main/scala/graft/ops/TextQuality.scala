@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions.registered
 
 /** Within-document repetition profiling — the quality signal LLM-corpus
   * pipelines filter on BEFORE any cross-document dedup (a document that
@@ -52,11 +53,6 @@ object TextQuality {
     // since the kernel is a single expression over the words column.
     // Sessions are registered at the public entry points below.
     s"graft_shingles($words, $n)"
-
-  private def registered(df: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.register(df.sparkSession)
-    df
-  }
 
   /** Max multiplicity of any element of an array column — the "top n-gram"
     * count the published char-fraction rule derives from — WITHOUT a

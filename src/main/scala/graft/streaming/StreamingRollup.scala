@@ -29,11 +29,12 @@ object StreamingRollup {
     * late-but-within-watermark lower cells merge correctly because the
     * stats compose.
     *
-    * `unit` ∈ minute/hour/day. State per key is one stats row per OPEN
-    * window, bounded by the watermark horizon over the lower tier's
-    * chunk_start — not by history.
+    * `unit` ∈ minute/hour/day. The watermark on the lower tier's
+    * chunk_start has zero delay: the lower tier's own watermark already
+    * absorbed event lateness before it sealed its rows. State per key is
+    * one stats row per OPEN window — not history.
     */
-  def fromSealed(lower: DataFrame, unit: String, lateness: String = "0 seconds"): DataFrame = {
+  def fromSealed(lower: DataFrame, unit: String): DataFrame = {
     val span = unit match {
       case "minute" => "1 minute"
       case "hour"   => "1 hour"
@@ -41,7 +42,7 @@ object StreamingRollup {
       case other    => throw new IllegalArgumentException(s"unsupported tier unit: $other")
     }
     lower
-      .withWatermark("chunk_start", lateness)
+      .withWatermark("chunk_start", "0 seconds")
       .groupBy(col("conv_id"), col("metric"), window(col("chunk_start"), span))
       .agg(Rollup.foldCols.head, Rollup.foldCols.tail: _*)
       .select(col("conv_id"), col("metric"), col("window.start").as("chunk_start"),

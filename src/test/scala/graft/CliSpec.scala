@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.synth.Transcripts
 
@@ -10,14 +9,7 @@ import graft.synth.Transcripts
   * (/root/reference/setup.cfg:51-59). Each command is driven end-to-end on
   * a tiny deterministic fixture: a properties file in, parquet out.
   */
-class CliSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CliSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val transcriptsPath = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Funnel
@@ -9,14 +9,7 @@ import graft.ops.Funnel
   * fixtures: strict after-previous-step ordering, tie/exhaustion edges,
   * the state cap, and the report-surface invariants.
   */
-class FunnelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunnelSpec extends AnyFunSuite with SparkSuite {
 
   private def t(dayMs: Long): java.sql.Timestamp =
     new java.sql.Timestamp(1704067200000L + dayMs) // 2024-01-01 + offset

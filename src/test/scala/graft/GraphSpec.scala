@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Graph
 
@@ -8,14 +7,7 @@ import graft.ops.Graph
   * double recursion on a star graph, isolated-node fixpoint, direction/
   * duplicate insensitivity, and guard rails.
   */
-class GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with SparkSuite {
 
   private def ranks(edges: Seq[(String, String)], nodes: Seq[String],
                     iters: Int, d: Double = 0.85): Map[String, Double] = {

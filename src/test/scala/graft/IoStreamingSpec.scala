@@ -1,100 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.jobs.ProcessJob
-import graft.meta.{Cf19, TableFormat, TableIO}
+import graft.meta.{Cf19, TableFormat}
 import graft.streaming.StreamingRollup
 import graft.synth.Transcripts
 
-class IoStreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  test("TableIO.read validates hashes, schema and masks status") {
-    import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
-    val t = Transcripts.generate(spark, 6, 120).toDF()
-    val pairs = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000003")).toDF("conv_a", "conv_b")
-    val dir = java.nio.file.Files.createTempDirectory("ccio").toString
-    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 1800)
-    ProcessJob.run(spark, t, pairs, dir, cfg)
-
-    // happy path + status mask
-    val df = TableIO.read(spark, dir, Seq("pair", "metric", "win_start", "cc", "status"),
-      expectedConfigHash = Some(cfg.hash), maskStatus = true)
-    assert(df.count() > 0)
-    assert(df.where(col("status") =!= 1 && col("cc").isNotNull).count() == 0)
-
-    // wrong config hash rejected (validate.py:185-194 semantics)
-    intercept[TableIO.ValidationError] {
-      TableIO.read(spark, dir, Seq("pair"), expectedConfigHash = Some("deadbeef"))
-    }
-    // missing column rejected
-    intercept[TableIO.ValidationError] {
-      TableIO.read(spark, dir, Seq("no_such_column"))
-    }
-    // tampered metadata hash rejected (validate.py:136-159)
-    val props = TableFormat.readProps(dir)
-    TableFormat.writeProps(dir, props + ("title" -> "tampered"))
-    intercept[TableIO.ValidationError] {
-      TableIO.read(spark, dir, Seq("pair"))
-    }
-    // re-stamping with a consistent hash heals it
-    TableFormat.writeProps(dir, Cf19.props("healed", extra = Map("job_config_sha256" -> cfg.hash)))
-    assert(TableIO.read(spark, dir, Seq("pair")).count() > 0)
-  }
-
-  test("TableIO.merge outer-aligns frames and collapses duplicate cells") {
-    import spark.implicits._
-    val a = Seq(("k1", 1, 10.0), ("k2", 1, 20.0)).toDF("pair", "t", "v")
-    val b = Seq(("k2", 1, 20.0), ("k3", 2, 30.0)).toDF("pair", "t", "v")
-    val m = TableIO.merge(Seq(a, b), Seq("pair", "t"))
-    assert(m.count() == 3)
-    assert(m.where(col("pair") === "k2").count() == 1)
-    // allowMissingColumns: extra column in one frame survives as nulls
-    val c = Seq(("k4", 3, 40.0, "x")).toDF("pair", "t", "v", "extra")
-    val m2 = TableIO.merge(Seq(a, c), Seq("pair", "t"))
-    assert(m2.columns.contains("extra") && m2.count() == 3)
-    // status-aware collapse: the retry-upgraded status=1 cell wins over a
-    // stale -1 from another table (readCc's freshest-wins rule)
-    val s1 = Seq(("k1", 1, 0.0, -1)).toDF("pair", "t", "v", "status")
-    val s2 = Seq(("k1", 1, 9.0, 1)).toDF("pair", "t", "v", "status")
-    val ms = TableIO.merge(Seq(s1, s2), Seq("pair", "t")).collect()
-    assert(ms.length == 1 && ms(0).getInt(3) == 1 && ms(0).getDouble(2) == 9.0)
-  }
-
-  test("TableIO.validateList: head eager, tail gated by head's config hash") {
-    import spark.implicits._
-    val t = Transcripts.generate(spark, 6, 120).toDF()
-    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 1800)
-    def mkTable(pa: String, pb: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory("ccvl").toString
-      ProcessJob.run(spark, t, Seq((pa, pb)).toDF("conv_a", "conv_b"), dir, cfg)
-      dir
-    }
-    // pairs chosen with overlapping spans (a pair with disjoint time spans
-    // correctly yields zero common windows and writes nothing)
-    val d1 = mkTable("conv-000000", "conv-000001")
-    val d2 = mkTable("conv-000001", "conv-000002")
-    val d3 = mkTable("conv-000002", "conv-000005")
-    val frames = TableIO.validateList(spark, Seq(d1, d2, d3), Seq("pair", "metric", "win_start", "cc"))
-    assert(frames.length == 3 && frames.forall(_.count() > 0))
-    // a tail table written under a DIFFERENT config is rejected against the
-    // head's hash (validate.py:185-194 via the head, :329-361 parallel tail)
-    val alien = java.nio.file.Files.createTempDirectory("ccvl-alien").toString
-    ProcessJob.run(spark, t, Seq(("conv-000001", "conv-000005")).toDF("conv_a", "conv_b"),
-      alien, cfg.copy(windowSec = 900, strideSec = 900))
-    intercept[TableIO.ValidationError] {
-      TableIO.validateList(spark, Seq(d1, alien), Seq("pair"))
-    }
-  }
+class IoStreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("TableFormat props/snapshots work through an explicit file: URI (Hadoop FS path)") {
     val dir = "file:" + java.nio.file.Files.createTempDirectory("tfuri").toString
@@ -108,31 +20,6 @@ class IoStreamingSpec extends AnyFunSuite {
     // atomic replace keeps the metadata hash self-consistent
     TableFormat.writeProps(dir, Cf19.props("uri-test-2"))
     assert(TableFormat.readProps(dir)("title") == "uri-test-2")
-  }
-
-  test("iceberg runtime adaptivity: the native path engages iff the jar is present") {
-    val warehouse = java.nio.file.Files.createTempDirectory("iceberg-wh").toString
-    val cfgs = TableFormat.icebergSessionConfigs(warehouse)
-    assert(cfgs("spark.sql.catalog.graft.warehouse") == warehouse &&
-      cfgs.contains("spark.sql.extensions"))
-    if (!TableFormat.icebergAvailable) {
-      // sandbox: no Iceberg jar (zero egress) — detection must say so and
-      // the sidecar emulation must carry the Iceberg-style properties
-      val dir = java.nio.file.Files.createTempDirectory("iceberg-emul").toString
-      TableFormat.writeProps(dir, Cf19.props("emulated"))
-      assert(TableFormat.readProps(dir)("Conventions") == "CF-1.9")
-      cancel("Iceberg runtime not on classpath — native-path branch skipped (detection + emulation verified)")
-    } else {
-      // a runtime appeared: the wired classes must actually load and the
-      // Hadoop-catalog entry point must construct (reflection — this code
-      // cannot compile against the optional jar)
-      Class.forName(cfgs("spark.sql.extensions"))
-      Class.forName(cfgs("spark.sql.catalog.graft"))
-      val tables = Class.forName("org.apache.iceberg.hadoop.HadoopTables")
-        .getDeclaredConstructor(classOf[org.apache.hadoop.conf.Configuration])
-        .newInstance(spark.sparkContext.hadoopConfiguration)
-      assert(tables != null)
-    }
   }
 
   test("appendSnapshot is append-only: max+1 indexing survives a removed snapshot") {
@@ -210,7 +97,7 @@ class IoStreamingSpec extends AnyFunSuite {
       val dir = java.nio.file.Files.createTempDirectory(s"stream-cascade-$unit").toString
       lower.write.mode("overwrite").parquet(dir)
       val streamIn = spark.readStream.schema(lower.schema).parquet(dir)
-      val q = StreamingRollup.fromSealed(streamIn, unit, lateness = "0 seconds")
+      val q = StreamingRollup.fromSealed(streamIn, unit)
         .writeStream.outputMode("append").format("memory").queryName(qname)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

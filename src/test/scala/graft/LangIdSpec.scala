@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.LangId
 
@@ -8,14 +7,7 @@ import graft.ops.LangId
   * the right profile, ties resolve alphabetically, margins are exact, and
   * the 2-profile runner-up branch works.
   */
-class LangIdSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LangIdSpec extends AnyFunSuite with SparkSuite {
 
   private def classify(texts: (Long, String)*): Map[Long, (String, Long, Long, Long, Long)] = {
     import spark.implicits._

@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.LmScore
 
 /** Hand-computed gates for the bigram LM document scorer (q103): exact
-  * integer supports, the cross-multiplied low-quality flag, transition
-  * edge cases, and the float avgLogProb against a by-hand value.
+  * integer supports, the cross-multiplied low-quality flag and transition
+  * edge cases.
   */
-class LmScoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LmScoreSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import spark.implicits._
@@ -85,30 +77,5 @@ class LmScoreSpec extends AnyFunSuite {
     val b = LmScore.supportScore(t.repartition(7), r.repartition(3), u.repartition(2),
       "doc_id", "text").orderBy("doc_id").collect()
     assert(a.toSeq == b.toSeq)
-  }
-
-  test("avgLogProb matches the by-hand add-one value (tolerance gate)") {
-    // V = |{a, b}| + 1 = 3
-    // doc "a b c": ln((3+1)/(3+3)) + ln((1+1)/(1+3)) over 2
-    val expected = (math.log(4.0 / 6.0) + math.log(2.0 / 4.0)) / 2.0
-    val got = LmScore.avgLogProb(
-      docsDf(Seq(10L -> "a b c")), big, uni, "doc_id", "text")
-      .collect().head.getAs[Double]("avg_log_prob")
-    assert(math.abs(got - expected) < 1e-12, s"got $got want $expected")
-    // unseen-w1 transition uses c1=0: "q z" -> ln(1/3)
-    val unk = LmScore.avgLogProb(
-      docsDf(Seq(11L -> "q z")), big, uni, "doc_id", "text")
-      .collect().head.getAs[Double]("avg_log_prob")
-    assert(math.abs(unk - math.log(1.0 / 3.0)) < 1e-12)
-  }
-
-  test("avgLogProb and avg_support agree on the head/tail split") {
-    // typical doc (all transitions seen) vs garbage doc (none seen)
-    val cand = docsDf(Seq(20L -> "a b c a b", 21L -> "zz qq rr zz"))
-    val sup = LmScore.supportScore(cand, big, uni, "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.getAs[Double]("avg_support"))
-    val lp = LmScore.avgLogProb(cand, big, uni, "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.getAs[Double]("avg_log_prob"))
-    assert(sup(0) > sup(1) && lp(0) > lp(1))
   }
 }

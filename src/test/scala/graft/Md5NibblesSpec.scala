@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r6 fused digest+nibble expression and the packed-counter simhash
   * aggregate must reproduce the r5 surfaces bit-for-bit.
   */
-class Md5NibblesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Md5NibblesSpec extends AnyFunSuite with SparkSuite {
 
   test("Md5Nibbles == conv(substring(md5(tok), d, 1), 16, 10) on real tokens") {
     val toks = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Multimodal, Similarity}
 
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with SparkSuite {
 
   test("media synthesis is deterministic and schema-conformant") {
     spark.sparkContext.setLogLevel("WARN")
@@ -61,24 +53,6 @@ class MultimodalSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](Multimodal.parseHeader(truncated))
       intercept[IllegalArgumentException](Multimodal.decodeFeatures(truncated))
     }
-  }
-
-  test("similarity ops: exact top-k matches brute-force local computation") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val topk = Similarity.cosineTopK(emb, Seq(0L, 1L), 3).collect()
-    assert(topk.length == 6)
-    // local oracle for query 0
-    val local = emb.select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getAs[Seq[Float]](1).map(_.toDouble).toArray).toMap
-    def cos(a: Array[Double], b: Array[Double]) = {
-      val d = a.indices.map(i => a(i) * b(i)).sum
-      d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    val q0 = local(0L)
-    val want = local.filter(_._1 != 0L).map { case (id, v) => (id, cos(q0, v)) }
-      .toSeq.sortBy { case (id, c) => (-c, id) }.take(3).map(_._1)
-    val got = topk.filter(_.getLong(0) == 0L).sortBy(_.getInt(3)).map(_.getLong(1)).toSeq
-    assert(got == want, s"$got vs $want")
   }
 
   test("kmeansRefine: centroid = assigned mean within fixed-point ulp; partitioning-invariant") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.{Cc, Filter, Signal}
@@ -10,14 +9,7 @@ import graft.synth.Transcripts
 /** Preprocess registry, postprocess chain and custom TokenCount
   * expression.
   */
-class OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OpsSpec extends AnyFunSuite with SparkSuite {
 
   lazy val series = {
     import spark.implicits._
@@ -285,24 +277,6 @@ class OpsSpec extends AnyFunSuite {
     assert(r.getDouble(0) >= 0 && r.getDouble(1) >= 0)
     assert(math.abs(r.getDouble(2) - r.getDouble(0) / r.getDouble(1)) < 1e-12)
     assert(math.abs(r.getDouble(3)) <= 300)
-  }
-
-  test("pair codec: unambiguous validated split of dashed conv ids") {
-    import graft.core.PairCodec
-    val p = PairCodec.join("conv-000001", "conv-000042")
-    assert(PairCodec.split(p) == (("conv-000001", "conv-000042")))
-    assert(PairCodec.isValid(p))
-    assert(!PairCodec.isValid("conv-000042-conv-000001")) // unordered
-    assert(PairCodec.split("1-2", "\\d+".r) == (("1", "2")))
-    intercept[IllegalArgumentException](PairCodec.split("a-b-c", ".+".r)) // ambiguous
-    intercept[IllegalArgumentException](PairCodec.join("b", "a"))
-    // round-trips every pair the flagship path produces
-    import spark.implicits._
-    val t = Transcripts.generate(spark, 6, 100).toDF()
-    Correlate.allPairs(Ingest.seriesSparse(t, 60)).collect().foreach { r =>
-      val j = PairCodec.join(r.getString(0), r.getString(1))
-      assert(PairCodec.split(j) == ((r.getString(0), r.getString(1))))
-    }
   }
 
   test("SparkEntry.entry: the driver's flagship smoke query returns rows") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Correlate, Ingest, Rollup}
@@ -12,14 +11,7 @@ import graft.synth.Transcripts
   * the reference cells bit-for-bit (same kernel, same inputs); per-turn
   * text equality must survive a store/read round-trip.
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   lazy val tiny = Transcripts.generateLocal(nConvs = 12, baseTurns = 120, hotConvs = 2, hotFactor = 10)
   lazy val tinyDf = {

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.jobs.ProcessJob
-import graft.meta.TableFormat
+import graft.meta.{Hasher, TableFormat}
 import graft.synth.Transcripts
 
 /** Checkpoint-resume gate (BASELINE.md (b) "Resumability"): a partial run
@@ -12,14 +11,7 @@ import graft.synth.Transcripts
   * with no duplicate work (manifest anti-join semantics of
   * /root/reference/xcorr/core/process.py:93-104).
   */
-class ResumeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ResumeSpec extends AnyFunSuite with SparkSuite {
 
   test("kill-after-partial-manifest rerun == from-scratch run, no duplicate work") {
     import spark.implicits._
@@ -79,6 +71,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(props.get("Conventions").contains("CF-1.9"))
     assert(props.contains("sha256_hash_metadata"))
     transcripts.unpersist()
+  }
+
+  test("config-hash gate: a rerun under another config or over tampered properties fails before writing") {
+    import spark.implicits._
+    val transcripts = Transcripts.generate(spark, 8, 150).toDF()
+    val pairs = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000003")).toDF("conv_a", "conv_b")
+    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 1800)
+    val dir = java.nio.file.Files.createTempDirectory("cc-gate").toString
+    assert(ProcessJob.run(spark, transcripts, pairs, dir, cfg).written > 0)
+    def rows(): Long = spark.read.parquet(s"$dir/data").count()
+    val before = rows()
+
+    // same dir, another window: the stored job config hash is not this run's
+    val other = cfg.copy(windowSec = 3600)
+    val e = intercept[IllegalStateException](ProcessJob.run(spark, transcripts, pairs, dir, other))
+    Seq(dir, cfg.hash, other.hash).foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    assert(rows() == before)
+
+    // tampered properties no longer match their stored metadata hash
+    val props = TableFormat.readProps(dir)
+    TableFormat.writeProps(dir, props + ("title" -> "tampered"))
+    val t = intercept[IllegalStateException](ProcessJob.run(spark, transcripts, pairs, dir, cfg))
+    Seq(dir, props("sha256_hash_metadata"), Hasher.hashObj(props + ("title" -> "tampered")))
+      .foreach(w => assert(t.getMessage.contains(w), t.getMessage))
+    assert(rows() == before)
   }
 
   test("retry upgrade: readCc prefers the fresh status=1 row over a stale -1 for the same cell") {

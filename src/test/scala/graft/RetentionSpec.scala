@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.jobs.RetentionJob
@@ -11,14 +11,7 @@ import graft.synth.Transcripts
   * fine-tier days, answerability from surviving tiers, idempotence,
   * kill-mid-expiry convergence, and crash-safe compaction.
   */
-class RetentionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetentionSpec extends AnyFunSuite with SparkSuite {
 
   /** Build a fresh multi-day tier store via the CLI rollup command. */
   private def freshStore(): String = {

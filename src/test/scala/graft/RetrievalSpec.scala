@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Retrieval
@@ -9,14 +9,7 @@ import graft.ops.Retrieval
   * exclusion, tie order), RRF fusion laws (missing-leg contribution,
   * known orderings, single-leg degeneration), partitioning independence.
   */
-class RetrievalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetrievalSpec extends AnyFunSuite with SparkSuite {
 
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet

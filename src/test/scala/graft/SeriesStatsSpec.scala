@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SeriesStats
@@ -9,14 +8,7 @@ import graft.ops.SeriesStats
   * exact integer Pearson partials, Markov transition rows, and the
   * all-integer rolling-median/MAD anomaly flags.
   */
-class SeriesStatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SeriesStatsSpec extends AnyFunSuite with SparkSuite {
 
   private def minuteDf(rows: Seq[(String, Int, Long)]) = {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftExtensions
 
@@ -10,17 +10,11 @@ import graft.functions.GraftExtensions
   * of Dedup.shingleArrayExpr — on real corpus text and on the empty/short/
   * NULL edges the CASE guard and concat null-propagation covered.
   */
-class ShingleSpec extends AnyFunSuite {
+class ShingleSpec extends AnyFunSuite with SparkSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    GraftExtensions.register(spark)
   }
 
   /** The r5 spelling, verbatim. */

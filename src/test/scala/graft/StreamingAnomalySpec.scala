@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SeriesStats
@@ -12,14 +11,7 @@ import graft.streaming.StreamingAnomaly
   * equality between the streaming query and the batch trailing operator
   * on the same rows, and the trailing/centered relationship.
   */
-class StreamingAnomalySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingAnomalySpec extends AnyFunSuite with SparkSuite {
 
   private def ts(min: Int) = new Timestamp((1704067200L + min * 60L) * 1000L)
 

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Correlate, Ingest, Timelapse, Trigger}
 import graft.synth.Transcripts
 
-class TimelapseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TimelapseSpec extends AnyFunSuite with SparkSuite {
 
   test("timelapse matrix: diagonal symmetry with mirrored deltas") {
     import spark.implicits._

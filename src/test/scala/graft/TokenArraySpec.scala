@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftExtensions
 
@@ -11,17 +11,11 @@ import graft.functions.GraftExtensions
   * whitespace at the trimmed ends, [""] for blank input) and SQL trim's
   * spaces-only stripping.
   */
-class TokenArraySpec extends AnyFunSuite {
+class TokenArraySpec extends AnyFunSuite with SparkSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    GraftExtensions.register(spark)
   }
 
   private val splitForm = raw"split(trim(text), '\\s+')"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TrainPrep
@@ -8,14 +7,7 @@ import graft.ops.TrainPrep
 /** Hand-computed gates for the trainer-facing last mile (q105-q107):
   * PII redaction, token-budget sequence packing, sliding-window chunks.
   */
-class TrainPrepSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TrainPrepSpec extends AnyFunSuite with SparkSuite {
 
   test("scrubPii: counts and redacted text, sequential category passes") {
     import spark.implicits._

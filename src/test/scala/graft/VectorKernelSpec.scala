@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{DotProduct, GraftExtensions, L2Sq}
 
@@ -13,17 +13,11 @@ import graft.functions.{DotProduct, GraftExtensions, L2Sq}
   * literals, in both codegen and interpreted paths (the where-filter runs
   * interpreted eval, the projection codegen).
   */
-class VectorKernelSpec extends AnyFunSuite {
+class VectorKernelSpec extends AnyFunSuite with SparkSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    GraftExtensions.register(spark)
   }
 
   private val hofDot =

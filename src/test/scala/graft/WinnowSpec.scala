@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.WinnowUtil
@@ -12,14 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * guarantee, rightmost-tie behavior, and partitioning invariance of the
   * candidate-pair join.
   */
-class WinnowSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WinnowSpec extends AnyFunSuite with SparkSuite {
 
   private def fps(s: String, k: Int, w: Int): Seq[(Int, Long)] = {
     val a = WinnowUtil.fingerprints(UTF8String.fromString(s), k, w)

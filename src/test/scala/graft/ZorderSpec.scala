@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{GraftExtensions, Zorder, ZorderUtil}
@@ -8,13 +7,7 @@ import graft.functions.{GraftExtensions, Zorder, ZorderUtil}
 /** Gates for the Morton/Z-order layout key (q126): bit-loop reference
   * equality, curve locality, SQL registration, null propagation.
   */
-class ZorderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZorderSpec extends AnyFunSuite with SparkSuite {
 
   /** Naive bit-loop interleave — the definition the fast spread must match. */
   private def slow(a: Long, b: Long): Long = {
