@@ -3,11 +3,12 @@ package graft.cli
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 import graft.core.RollupRow
 import graft.jobs.{ProcessJob, RetentionJob}
-import graft.jobs.RetentionJob.ladder
 import graft.meta.TableFormat
 import graft.ops.{Correlate, Ingest, Postprocess, Rollup, Timelapse, Trigger}
+import graft.ops.Rollup.ladder
 
 /** Config-file-driven console entry points — the user surface the reference
   * registers as console_scripts (/root/reference/setup.cfg:51-59:
@@ -220,23 +221,34 @@ object Main {
     s"beamform -> ${c("output")}"
   }
 
+  /** A stored tier's columns: the stats row and its `day` partition. The
+    * higher tiers read the tier below with it, so no read infers a schema.
+    */
+  private lazy val tierSchema = Encoders.product[RollupRow].schema.add("day", DateType)
+
   /** rollup — continuous-aggregate cascade (engine-new, the north-rule
-    * job): series/transcripts → 1m/1h/1d tiers, each day-partitioned so
-    * retention can expire a day with one partition drop (the layout
-    * `graft.jobs.RetentionJob` enforces). Keys: input, output, step_sec.
+    * job): series/transcripts → the `Rollup.ladder` tiers (1m/1h/1d), each
+    * day-partitioned so retention can expire a day with one partition drop
+    * (the layout `graft.jobs.RetentionJob` enforces). The input is read
+    * once, for tier-1; each higher tier is folded (`Rollup.fromLower`) from
+    * the STORED tier below it — the walk `streamrollup` runs over its
+    * sealed tiers. Keys: input, output, step_sec.
     */
   def rollup(spark: SparkSession, c: Conf): String = {
     val in = spark.read.parquet(c("input"))
+    val out = c("output")
     val unit = ladder.head.unit
-    val first =
+    val tier1 =
       if (in.columns.contains("metric")) Rollup.fromPoints(in, unit)
       else Rollup.tier1FromBuckets(
         Ingest.bucketed(in, c.long("step_sec", 60)), c.long("step_sec", 60), unit)
-    val tiers = ladder.tail.scanLeft(first)((lower, t) => Rollup.fromLower(lower, t.unit))
-    ladder.zip(tiers).foreach { case (t, df) =>
-      RetentionJob.writeTier(df, s"${c("output")}/${t.dir}")
+    RetentionJob.writeTier(tier1, s"$out/${ladder.head.dir}")
+    ladder.zip(ladder.tail).foreach { case (lower, upper) =>
+      RetentionJob.writeTier(
+        Rollup.fromLower(spark.read.schema(tierSchema).parquet(s"$out/${lower.dir}"), upper.unit),
+        s"$out/${upper.dir}")
     }
-    s"rollup -> ${c("output")}/tier_{1m,1h,1d}"
+    s"rollup -> $out/tier_{1m,1h,1d}"
   }
 
   /** retention — enforce the tier store's retention policy (engine-new;
@@ -435,17 +447,18 @@ object Main {
   }
 
   /** streamrollup — the LIVE retention pipeline: streaming tier-1 (1 m)
-    * stats from a transcript feed, then the sealed cascade 1m→1h→1d
-    * (graft.streaming.StreamingRollup), each tier a parquet sink with its
-    * own checkpoint. Triggers are AvailableNow, so a cron re-run processes
-    * only NEW input files and state (open windows, watermarks) resumes
-    * from the checkpoints — a rerun over unchanged input writes nothing.
+    * stats from a transcript feed (graft.streaming.StreamingRollup), then
+    * each higher `Rollup.ladder` tier folded by `Rollup.fromLower` from the
+    * sealed stream of the stored tier below it — the walk `rollup` runs in
+    * batch — each tier a parquet sink with its own checkpoint. Triggers
+    * are AvailableNow, so a cron re-run processes only NEW input files and
+    * state (open windows, watermarks) resumes from the checkpoints — a
+    * rerun over unchanged input writes nothing.
     * Keys: input (transcript parquet dir — the stream source), output,
     * lateness (watermark, default "5 minutes").
     */
   def streamrollup(spark: SparkSession, c: Conf): String = {
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.DateType
     import graft.streaming.StreamingRollup
     val out = c("output")
     val lateness = c.get("lateness", "5 minutes")
@@ -461,14 +474,13 @@ object Main {
         .start()
       q.awaitTermination()
     }
-    val statsSchema = Encoders.product[RollupRow].schema.add("day", DateType)
     val inSchema = spark.read.parquet(c("input")).schema
     runStage(StreamingRollup.tier1Stats(
       spark.readStream.schema(inSchema).parquet(c("input")), lateness), ladder.head.dir)
     // higher tiers fold the SEALED lower stream
     ladder.zip(ladder.tail).foreach { case (lower, upper) =>
-      runStage(StreamingRollup.fromSealed(
-        spark.readStream.schema(statsSchema).parquet(s"$out/${lower.dir}"), upper.unit), upper.dir)
+      runStage(Rollup.fromLower(
+        spark.readStream.schema(tierSchema).parquet(s"$out/${lower.dir}"), upper.unit), upper.dir)
     }
     // optional in-pipeline retention: with the higher tiers freshly sealed,
     // expire 1m days older than `retention_keep_days` (idempotent — a day

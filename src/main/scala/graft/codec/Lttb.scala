@@ -49,10 +49,16 @@ object Lttb {
     out
   }
 
-  /** Downsample to (ts, value) pairs. */
+  /** Downsample to (ts, value) pairs. Plain loops: `Array.map` boxes
+    * every element.
+    */
   def downsample(ts: Array[Long], values: Array[Double], threshold: Int): (Array[Long], Array[Double]) = {
-    val xs = ts.map(_.toDouble)
+    val xs = new Array[Double](ts.length)
+    for (i <- ts.indices) xs(i) = ts(i).toDouble
     val idx = indices(xs, values, threshold)
-    (idx.map(ts), idx.map(values))
+    val kt = new Array[Long](idx.length)
+    val kv = new Array[Double](idx.length)
+    for (k <- idx.indices) { kt(k) = ts(idx(k)); kv(k) = values(idx(k)) }
+    (kt, kv)
   }
 }

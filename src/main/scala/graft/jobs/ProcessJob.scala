@@ -31,8 +31,9 @@ import graft.ops.{Correlate, Ingest}
   *  - per-partition lineage + metrics land in the manifest rows, and the
   *    job config hash is revalidated like the reference's preprocess hash
   *    gate (/root/reference/xcorr/core/process.py:68-73).
-  *  - a run into a directory whose table properties fail their own
-  *    metadata hash, or name another job config, fails before any work.
+  *  - table properties are written before the first data append, and a
+  *    run into a directory whose properties fail their own metadata hash,
+  *    or name another job config, fails before any work.
   *
   * All filesystem probes go through Hadoop `FileSystem`, so manifests and
   * snapshots work on cluster storage (HDFS/S3), not only local disk.
@@ -205,6 +206,12 @@ object ProcessJob {
         .withColumn("partition_key", partitionKey(col("pair")))
         .join(pendingKeys, Seq("partition_key"), "left_semi")
 
+      // properties BEFORE the first data append: a run that dies after
+      // appending cells must leave the config-hash gate something to check
+      val cfgHash = cfg.hash
+      TableFormat.writeProps(outDir, Cf19.props(
+        title = "xcorrspark pairwise cross-correlation",
+        extra = Map("job_config_sha256" -> cfgHash)))
       val ccCached = cc.cache()
       ccCached.drop("partition_key")
         .withColumn("day", to_date(col("win_start")))
@@ -213,7 +220,6 @@ object ProcessJob {
       // manifest AFTER data: crash between the two → deterministic recompute.
       // Written distributed (no driver collect — the work list can be huge
       // at production scale).
-      val cfgHash = cfg.hash
       pending
         .join(ccCached.select(col("partition_key"), col("status").as("cc_status")),
           Seq("partition_key"), "left")
@@ -234,9 +240,6 @@ object ProcessJob {
         .write.mode(SaveMode.Append).parquet(manifestPath(outDir))
       ccCached.unpersist()
 
-      TableFormat.writeProps(outDir, Cf19.props(
-        title = "xcorrspark pairwise cross-correlation",
-        extra = Map("job_config_sha256" -> cfgHash)))
       TableFormat.appendSnapshot(outDir, Map(
         "job_id" -> jobId, "written" -> nPending.toString, "config" -> cfgHash))
     }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.TableFormat
+import graft.ops.Rollup
 
 /** Retention ENFORCEMENT for the rollup tier store — the piece that makes
   * the 1m/1h/1d cascade an actual retention policy at 100 TB instead of an
@@ -22,10 +23,12 @@ import graft.meta.TableFormat
   * `_snapshots` commit log the process job uses.
   *
   * Store layout (written through [[withDay]]/[[writeTier]] by `cli.Main`
-  * rollup/streamrollup): one dir per [[ladder]] tier (`tier_1m`,
-  * `tier_1h`, `tier_1d`), each parquet partitioned by `day=YYYY-MM-DD`.
-  * Partition dirs are the unit of expiry — a drop is one
-  * recursive delete per day, no rewrite, exactly the Iceberg
+  * rollup, and through [[withDay]] by its streamrollup sinks): one dir per
+  * `Rollup.ladder` tier (`tier_1m`, `tier_1h`, `tier_1d`), each parquet
+  * partitioned by `day=YYYY-MM-DD`; both writers fold each tier from the
+  * stored tier below it. Every tier is day-partitioned, so the seal check
+  * reads only partition dirs. Partition dirs are the unit of expiry — a
+  * drop is one recursive delete per day, no rewrite, exactly the Iceberg
   * drop-partition/expire-snapshot shape.
   *
   * Crash safety: expiry deletes are independent per day and the candidate
@@ -59,18 +62,6 @@ object RetentionJob {
       .sorted
   }
 
-  /** One tier of the store: its directory under the store root, the
-    * rollup unit (a `date_trunc` level) its cells span, and that unit in
-    * seconds.
-    */
-  final case class Tier(dir: String, unit: String, stepSec: Long)
-
-  /** The store's tier ladder, finest first: each tier folds the one
-    * before it.
-    */
-  val ladder: Seq[Tier] = Seq(
-    Tier("tier_1m", "minute", 60L), Tier("tier_1h", "hour", 3600L), Tier("tier_1d", "day", 86400L))
-
   /** A tier's cells tagged with the store's partition column: the UTC
     * `day` of `chunk_start`.
     */
@@ -80,11 +71,6 @@ object RetentionJob {
   /** Write a batch tier to `path` in the store layout, replacing it. */
   private[graft] def writeTier(tier: DataFrame, path: String): Unit =
     withDay(tier).write.mode("overwrite").partitionBy("day").parquet(path)
-
-  private def readTier(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read.parquet(dir)
-    if (df.columns.contains("day")) df else withDay(df)
-  }
 
   /** Read a day-partitioned tier by EXPLICIT partition paths. Two reasons
     * over a root read + filter: (1) exact pruning without trusting the
@@ -105,15 +91,16 @@ object RetentionJob {
     * points are EXACTLY accounted for in the covering tier (per-day sum(n)
     * equality — the tiers compose, so equality means every lower cell is
     * sealed above). Days that fail the seal check are skipped and reported,
-    * never deleted. `maxPartitions` > 0 bounds the deletes per invocation
-    * (the resume tests use it to simulate a kill mid-expiry).
+    * never deleted; an upper tier with no day partitions seals nothing,
+    * and a missing upper tier fails. `maxPartitions` > 0 bounds the deletes
+    * per invocation (the resume tests use it to simulate a kill mid-expiry).
     */
   def expire(
       spark: SparkSession,
       storeDir: String,
       olderThan: String,
-      lowerTier: String = ladder(0).dir,
-      upperTier: String = ladder(1).dir,
+      lowerTier: String = Rollup.ladder(0).dir,
+      upperTier: String = Rollup.ladder(1).dir,
       maxPartitions: Int = -1
   ): ExpiryStats = {
     val lowerDir = s"$storeDir/$lowerTier"
@@ -122,10 +109,11 @@ object RetentionJob {
     var candidates = all.filter(_ < olderThan)
     if (maxPartitions > 0) candidates = candidates.take(maxPartitions)
     if (candidates.isEmpty) return ExpiryStats(Nil, Nil, Nil, 0L)
+    val (fs, _) = fsOf(spark, lowerDir)
+    require(fs.exists(new Path(upperDir)), s"upper tier $upperDir does not exist")
 
     // seal check, partition-pruned on BOTH sides (the candidate-day filter
-    // reaches the scans; the upper read derives day from chunk_start when
-    // the tier predates day-partitioning)
+    // reaches the scans)
     val (lowerN, upperN) = sealCheckFrames(spark, lowerDir, upperDir, candidates)
     val sealCheck = lowerN.join(upperN, Seq("day"), "left")
       .select(col("day"), col("lower_n"),
@@ -135,7 +123,6 @@ object RetentionJob {
       .toSeq
 
     val (covered, uncovered) = sealCheck.partition { case (_, lo, up) => lo == up }
-    val (fs, _) = fsOf(spark, lowerDir)
     covered.foreach { case (day, _, _) =>
       fs.delete(new Path(s"$lowerDir/day=$day"), true)
     }
@@ -171,9 +158,7 @@ object RetentionJob {
     def side(dir: String, out: String): DataFrame = {
       val present = partitionDays(spark, dir).intersect(candidates)
       if (present.nonEmpty) agg(readTierDays(spark, dir, present), out)
-      else if (partitionDays(spark, dir).nonEmpty) // day-partitioned, none of the candidates present
-        Seq.empty[(String, Long)].toDF("day", out)
-      else agg(readTier(spark, dir), out) // legacy non-day-partitioned tier: derived day
+      else Seq.empty[(String, Long)].toDF("day", out)
     }
     (side(lowerDir, "lower_n"), side(upperDir, "upper_n"))
   }
@@ -259,7 +244,7 @@ object RetentionJob {
   def tieredRead(
       spark: SparkSession,
       storeDir: String,
-      tiers: Seq[String] = ladder.map(_.dir)
+      tiers: Seq[String] = Rollup.ladder.map(_.dir)
   ): DataFrame = {
     val daysByTier = tiers.map(t => t -> partitionDays(spark, s"$storeDir/$t"))
     var served = Set.empty[String]

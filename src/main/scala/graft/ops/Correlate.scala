@@ -135,15 +135,16 @@ object Correlate {
   ): DataFrame = {
     // window starts w (aligned to stride) with w <= ts < w + window:
     //   ceil((ts - window + step) / stride) .. floor(ts / stride)
+    // (floored, so pre-epoch points land in their windows; starts of
+    // incomplete windows are dropped by the candidates join in `windows`)
     val winExpr =
       s"""sequence(
          |  CAST(ceil((unix_timestamp(cast(ts as timestamp)) - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec,
-         |  (unix_timestamp(cast(ts as timestamp)) DIV $strideSec) * $strideSec,
+         |  ${Rollup.floorDiv("unix_timestamp(cast(ts as timestamp))", strideSec)} * $strideSec,
          |  $strideSec)""".stripMargin
     series
       .where(col("value") =!= 0.0)
       .withColumn("win_start_s", explode(expr(winExpr)))
-      .where(col("win_start_s") >= 0)
   }
 
   /** A [[windowPoints]] row's grid offset in its window (`idx`) and its

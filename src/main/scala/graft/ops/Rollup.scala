@@ -22,7 +22,25 @@ import graft.codec.{ChunkBlob, Lttb}
   */
 object Rollup {
 
-  private val statCols = Seq("n", "sum", "min", "max", "first", "last")
+  /** One tier of the store: its directory under the store root, the
+    * rollup unit (a `date_trunc` level) its cells span, and that unit in
+    * seconds.
+    */
+  final case class Tier(dir: String, unit: String, stepSec: Long) {
+    /** The cell length as a `window` duration. */
+    def span: String = s"$stepSec seconds"
+  }
+
+  /** The tier ladder, finest first: each tier folds the one before it.
+    * Every unit, step, span and store dir of the 1m/1h/1d cascade derives
+    * from here.
+    */
+  val ladder: Seq[Tier] = Seq(
+    Tier("tier_1m", "minute", 60L), Tier("tier_1h", "hour", 3600L), Tier("tier_1d", "day", 86400L))
+
+  private def tierOf(unit: String): Tier =
+    ladder.find(_.unit == unit)
+      .getOrElse(throw new IllegalArgumentException(s"unsupported tier unit: $unit"))
 
   /** Tier-1: fold grid points into `unit`-aligned chunks
     * (unit ∈ minute/hour/day — SQL date_trunc levels).
@@ -41,10 +59,9 @@ object Rollup {
 
   /** The fold of lower-tier cells into a higher-tier cell: counts and sums
     * add, extrema fold, and first/last follow the lower `chunk_start`
-    * (unique per key). Shared by [[fromLower]] and the streaming cascade
-    * (`StreamingRollup.fromSealed`).
+    * (unique per key).
     */
-  private[graft] val foldCols: Seq[Column] = Seq(
+  private val foldCols: Seq[Column] = Seq(
     sum(col("n")).as("n"),
     sum(col("sum")).as("sum"),
     min(col("min")).as("min"),
@@ -53,15 +70,24 @@ object Rollup {
     max_by(col("last"), col("chunk_start")).as("last"))
 
   /** Higher tier from a lower tier — the hierarchical re-aggregation
-    * (SURVEY.md §2.6 "Aggregations"): stats compose exactly.
+    * (SURVEY.md §2.6 "Aggregations"): stats compose exactly. `unit` must be
+    * on the [[ladder]]; cells are its UTC-epoch-aligned `window`s, so the
+    * fold does not depend on the session time zone.
+    *
+    * The one fold for batch and streaming: on a stream of sealed lower
+    * cells (`cli.Main.streamrollup`) the zero-delay watermark on
+    * `chunk_start` lets append mode emit a cell once the lower tier moves
+    * past it — the lower tier's own watermark already absorbed event
+    * lateness — and state per key is one stats row per open window. On a
+    * batch frame the optimizer removes the watermark.
     */
   def fromLower(lower: DataFrame, unit: String): DataFrame =
     lower
-      .groupBy(col("conv_id"), col("metric"), date_trunc(unit, col("chunk_start")).as("chunk_start"))
+      .withWatermark("chunk_start", "0 seconds")
+      .groupBy(col("conv_id"), col("metric"), window(col("chunk_start"), tierOf(unit).span))
       .agg(foldCols.head, foldCols.tail: _*)
-
-  private val unitMicros: Map[String, Long] = Map(
-    "minute" -> 60000000L, "hour" -> 3600000000L, "day" -> 86400000000L)
+      .select(col("conv_id"), col("metric"), col("window.start").as("chunk_start"),
+        col("n"), col("sum"), col("min"), col("max"), col("first"), col("last"))
 
   /** SQL floor division (`DIV` truncates toward zero; pre-epoch timestamps
     * need the floor). Also used by Trigger's grid bucketing.
@@ -89,7 +115,7 @@ object Rollup {
     val spark = bucketed.sparkSession
     import org.apache.spark.sql.expressions.Window
     val stepUs = stepSec * 1000000L
-    val unitUs = unitMicros(unit)
+    val unitUs = tierOf(unit).stepSec * 1000000L
     require(unitUs % stepUs == 0, "grid step must divide the rollup unit")
     val n = spark.sessionState.conf.numShufflePartitions
     val w = Window.partitionBy(col("conv_id")).orderBy(col("own_us"))
@@ -163,11 +189,10 @@ object Rollup {
         col("n"), col("sum"), col("min"), col("max"), col("first"), col("last"))
   }
 
-  /** The full 1m → 1h → 1d cascade from tier-0 grid points. */
+  /** The full [[ladder]] cascade (1m → 1h → 1d) from tier-0 grid points. */
   def cascade(points: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val m1 = fromPoints(points, "minute")
-    val h1 = fromLower(m1, "hour")
-    val d1 = fromLower(h1, "day")
+    val Seq(m1, h1, d1) =
+      ladder.tail.scanLeft(fromPoints(points, ladder.head.unit))((lower, t) => fromLower(lower, t.unit))
     (m1, h1, d1)
   }
 
@@ -176,6 +201,12 @@ object Rollup {
   // micros stay longs end-to-end (unix_micros in, timestamp_micros /
   // ChunkDecode out).
 
+  /** One (epoch-micros, value) input row of the typed aggregators. Spark
+    * builds a case class of primitives without boxing its fields, which it
+    * does for a `(Long, Double)` tuple on every row.
+    */
+  final case class TsValue(ts: Long, value: Double)
+
   /** Primitive-array (ts, value) accumulator for [[ChunkEncodeAgg]]:
     * amortized-doubling appends, merged by concatenation, sorted once at
     * finish. Bounded by points-per-chunk (unit / grid step), like the
@@ -183,13 +214,43 @@ object Rollup {
     * instead of boxed Rows.
     */
   final case class ChunkAcc(var ts: Array[Long], var vs: Array[Double], var n: Int) {
-    def append(t: Long, v: Double): ChunkAcc = {
-      if (n == ts.length) {
-        ts = java.util.Arrays.copyOf(ts, n * 2)
-        vs = java.util.Arrays.copyOf(vs, n * 2)
+    private def reserve(need: Int): Unit =
+      if (need > ts.length) {
+        val cap = math.max(ts.length * 2, need)
+        ts = java.util.Arrays.copyOf(ts, cap)
+        vs = java.util.Arrays.copyOf(vs, cap)
       }
-      ts(n) = t; vs(n) = v; n += 1
+
+    def append(p: TsValue): ChunkAcc = {
+      reserve(n + 1)
+      ts(n) = p.ts; vs(n) = p.value; n += 1
       this
+    }
+
+    /** Concatenate `o`'s points after this buffer's, growing at most once. */
+    def appendAll(o: ChunkAcc): ChunkAcc = {
+      reserve(n + o.n)
+      System.arraycopy(o.ts, 0, ts, n, o.n)
+      System.arraycopy(o.vs, 0, vs, n, o.n)
+      n += o.n
+      this
+    }
+
+    /** The `n` points in ascending ts order, ties in append order. The ts
+      * sort as primitives and each value goes to the next free slot of its
+      * ts run: a `sortBy` on indices would box every key it compares.
+      */
+    def sorted: (Array[Long], Array[Double]) = {
+      val st = java.util.Arrays.copyOf(ts, n)
+      java.util.Arrays.sort(st)
+      val sv = new Array[Double](n)
+      val used = new Array[Int](n) // slots taken in the run that starts at each index
+      for (i <- 0 until n) {
+        var lo = 0; var hi = n // the first index of ts(i)'s run
+        while (lo < hi) { val m = (lo + hi) >>> 1; if (st(m) < ts(i)) lo = m + 1 else hi = m }
+        sv(lo + used(lo)) = vs(i); used(lo) += 1
+      }
+      (st, sv)
     }
   }
 
@@ -201,17 +262,13 @@ object Rollup {
     * arrays, so blobs are byte-identical to the previous
     * array_sort(collect_list)+UDF form (q22's round-trip gate).
     */
-  object ChunkEncodeAgg extends Aggregator[(Long, Double), ChunkAcc, Array[Byte]] {
+  object ChunkEncodeAgg extends Aggregator[TsValue, ChunkAcc, Array[Byte]] {
     def zero: ChunkAcc = ChunkAcc(new Array[Long](8), new Array[Double](8), 0)
-    def reduce(b: ChunkAcc, a: (Long, Double)): ChunkAcc = b.append(a._1, a._2)
-    def merge(b1: ChunkAcc, b2: ChunkAcc): ChunkAcc = {
-      var i = 0
-      while (i < b2.n) { b1.append(b2.ts(i), b2.vs(i)); i += 1 }
-      b1
-    }
+    def reduce(b: ChunkAcc, a: TsValue): ChunkAcc = b.append(a)
+    def merge(b1: ChunkAcc, b2: ChunkAcc): ChunkAcc = b1.appendAll(b2)
     def finish(b: ChunkAcc): Array[Byte] = {
-      val idx = Array.range(0, b.n).sortBy(b.ts(_)) // grid ts are unique per key
-      ChunkBlob.encode(idx.map(b.ts(_)), idx.map(b.vs(_)))
+      val (ts, vs) = b.sorted
+      ChunkBlob.encode(ts, vs)
     }
     def bufferEncoder: Encoder[ChunkAcc] = Encoders.product[ChunkAcc]
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
@@ -254,13 +311,13 @@ object Rollup {
     * finish, downsample. Replaces the r1-r3 array_sort(collect_list(
     * struct))+UDF stage — same keeper selection, no Row boxing.
     */
-  final case class LttbAgg(threshold: Int) extends Aggregator[(Long, Double), ChunkAcc, LttbPts] {
+  final case class LttbAgg(threshold: Int) extends Aggregator[TsValue, ChunkAcc, LttbPts] {
     def zero: ChunkAcc = ChunkEncodeAgg.zero
-    def reduce(b: ChunkAcc, a: (Long, Double)): ChunkAcc = b.append(a._1, a._2)
-    def merge(b1: ChunkAcc, b2: ChunkAcc): ChunkAcc = ChunkEncodeAgg.merge(b1, b2)
+    def reduce(b: ChunkAcc, a: TsValue): ChunkAcc = b.append(a)
+    def merge(b1: ChunkAcc, b2: ChunkAcc): ChunkAcc = b1.appendAll(b2)
     def finish(b: ChunkAcc): LttbPts = {
-      val idx = Array.range(0, b.n).sortBy(b.ts(_))
-      val (dt, dv) = Lttb.downsample(idx.map(b.ts(_)), idx.map(b.vs(_)), threshold)
+      val (ts, vs) = b.sorted
+      val (dt, dv) = Lttb.downsample(ts, vs, threshold)
       LttbPts(dt, dv)
     }
     def bufferEncoder: Encoder[ChunkAcc] = Encoders.product[ChunkAcc]
@@ -354,12 +411,11 @@ object Rollup {
     * 1-hour panel reads 1m cells, a 90-day panel reads 1d cells, and
     * nobody scans raw points.
     */
-  def pickTierStep(spanSec: Long, maxPoints: Long,
-                   steps: Seq[Long] = Seq(60L, 3600L, 86400L)): Long = {
-    require(spanSec > 0 && maxPoints > 0 && steps.nonEmpty,
-      s"need positive span/maxPoints and at least one step, got span=$spanSec max=$maxPoints")
-    val sorted = steps.sorted
-    sorted.find(st => (spanSec + st - 1) / st <= maxPoints).getOrElse(sorted.last)
+  def pickTierStep(spanSec: Long, maxPoints: Long): Long = {
+    require(spanSec > 0 && maxPoints > 0,
+      s"need positive span/maxPoints, got span=$spanSec max=$maxPoints")
+    val steps = ladder.map(_.stepSec)
+    steps.find(st => (spanSec + st - 1) / st <= maxPoints).getOrElse(steps.last)
   }
 
   /** Serve one viz request from the pre-built tiers: pick the step for

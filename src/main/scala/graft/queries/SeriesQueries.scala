@@ -236,9 +236,9 @@ private[graft] trait SeriesQueries {
     (s, d) => {
       // the LIVE Structured Streaming cascade fold under the oracle hash
       // gate: stage the sealed 1m tier as a parquet stream source, run
-      // StreamingRollup.fromSealed(hour) as a REAL streaming query
-      // (append after watermark close, checkpointed, AvailableNow), read
-      // the sink back. Identical semantics to q11's batch Rollup.fromLower
+      // Rollup.fromLower(hour) as a REAL streaming query (append after
+      // watermark close, checkpointed, AvailableNow), read the sink back.
+      // The same fold as q11's batch Rollup.fromLower
       // -> REUSES q11's oracle SQL verbatim (q63/q27 same-oracle
       // precedent): equal iff the streaming fold seals every 1h cell
       // exactly as the batch fold composes it. Append mode emits only
@@ -259,7 +259,7 @@ private[graft] trait SeriesQueries {
           lit(0.0).as("min"), lit(0.0).as("max"), lit(0.0).as("first"),
           lit(0.0).as("last"))
       tier1m.unionByName(sentinel).write.parquet(s"$base/in_1m")
-      val q = graft.streaming.StreamingRollup.fromSealed(
+      val q = Rollup.fromLower(
         s.readStream.schema(s.read.parquet(s"$base/in_1m").schema)
           .parquet(s"$base/in_1m"), "hour")
         .writeStream.outputMode("append").format("parquet")

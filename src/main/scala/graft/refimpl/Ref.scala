@@ -94,7 +94,8 @@ object Ref {
       val t0 = ps.head.tsMs
       val t1 = ps.last.tsMs
       val strideMs = strideSec * 1000
-      val starts = (0L to t1 / strideMs).map(_ * strideMs)
+      val starts = (Math.floorDiv(t0 - windowSec * 1000, strideMs) to Math.floorDiv(t1, strideMs))
+        .map(_ * strideMs)
         .filter(w => w >= t0 - (windowSec * 1000 - stepMs) && w <= t1)
       starts.flatMap { w =>
         val grid = (0 until npts).map(i => w + i * stepMs)

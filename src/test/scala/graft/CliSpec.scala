@@ -160,6 +160,38 @@ class CliSpec extends AnyFunSuite with SparkSuite {
       .agg(org.apache.spark.sql.functions.max("count")).collect()(0).getLong(0) <= 3)
   }
 
+  test("rollup reads its input once: each higher tier folds the stored tier below it") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val marker = "rollup_scan_marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = plans.add(qe)
+    }
+    def readsInput(qe: QueryExecution): Boolean = qe.analyzed.collect {
+      case r: LogicalRelation => r.relation
+    }.exists {
+      case h: HadoopFsRelation => h.location.rootPaths.exists(_.toUri.getPath == transcriptsPath)
+      case _                   => false
+    }
+    spark.listenerManager.register(listener)
+    try {
+      cli.Main.run("rollup", conf("input" -> transcriptsPath, "output" -> out(), "step_sec" -> "60"))
+      // listener events arrive in order: once the marker query is seen,
+      // every plan the rollup executed has been delivered
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!plans.asScala.exists(_.analyzed.output.exists(_.name == marker)))
+        if (System.nanoTime() > deadline) fail("the marker query never reached the listener")
+        else Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val scans = plans.asScala.count(readsInput)
+    assert(scans == 1, s"rollup scanned its input in $scans executed plans")
+  }
+
   test("timelapse command equals the library spectrogram matrix on the same keys") {
     import graft.ops.{Correlate, Ingest, Timelapse}
     val tDir = out()

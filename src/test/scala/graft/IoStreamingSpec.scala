@@ -90,14 +90,15 @@ class IoStreamingSpec extends AnyFunSuite with SparkSuite {
     val m1 = graft.ops.Rollup.fromPoints(graft.ops.Ingest.series(t, 60), "minute")
       .cache()
 
-    // one cascade stage: sealed lower-tier parquet -> fromSealed(unit) vs
-    // the batch fold restricted to windows the watermark closed
+    // one cascade stage: sealed lower-tier parquet -> the streaming
+    // fromLower(unit) vs the batch fromLower restricted to windows the
+    // watermark closed
     def stage(lower: org.apache.spark.sql.DataFrame, unit: String, span: String,
         qname: String): org.apache.spark.sql.DataFrame = {
       val dir = java.nio.file.Files.createTempDirectory(s"stream-cascade-$unit").toString
       lower.write.mode("overwrite").parquet(dir)
       val streamIn = spark.readStream.schema(lower.schema).parquet(dir)
-      val q = StreamingRollup.fromSealed(streamIn, unit)
+      val q = graft.ops.Rollup.fromLower(streamIn, unit)
         .writeStream.outputMode("append").format("memory").queryName(qname)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

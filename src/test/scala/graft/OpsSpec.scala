@@ -147,6 +147,24 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(Rollup.lttbTier(few, 100).count() == 20)
   }
 
+  test("ChunkAcc: appendAll concatenates; sorted == a stable sortBy on ts, ties in append order") {
+    import graft.ops.Rollup.{ChunkAcc, ChunkEncodeAgg, TsValue}
+    val rng = new java.util.Random(17)
+    for (n <- Seq(0, 1, 2, 7, 64, 1000)) {
+      // few distinct ts, so ties are common; values record the append order
+      val ts = Array.fill(n)(rng.nextInt(math.max(1, n / 3)).toLong - 5L)
+      val a = ChunkEncodeAgg.zero
+      val b = ChunkEncodeAgg.zero
+      (0 until n).foreach(i => (if (i % 3 == 0) a else b).append(TsValue(ts(i), i.toDouble)))
+      val both = a.appendAll(b)
+      val order = (0 until n).filter(_ % 3 == 0) ++ (0 until n).filter(_ % 3 != 0)
+      assert(both.n == n && both.vs.take(n).toSeq == order.map(_.toDouble), s"n=$n")
+      val want = order.sortBy(ts(_))
+      val (st, sv) = both.sorted
+      assert(st.toSeq == want.map(ts(_)) && sv.toSeq == want.map(_.toDouble), s"n=$n")
+    }
+  }
+
   test("lttbTier: a 10M-point single key completes under bounded buffers") {
     import graft.ops.Rollup
     // one conversation, 10M minutely points (~19 years): the old
@@ -636,6 +654,46 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(neg(0).keys.map(_._3).min == -dayMs - 60000L, "the -30 s turn opens the minute before")
   }
 
+  test("pre-epoch CC windows correlate like their shifted-positive twin, engine and reference") {
+    import spark.implicits._
+    import graft.core.Transcript
+    import graft.refimpl.Ref
+    // the same pair of conversations a day before and a day after the
+    // epoch: a turn every 3 minutes for 3 hours, b the same 2 minutes later
+    // (truncating the last window start toward zero left every pre-epoch
+    // window without points)
+    def turns(baseMs: Long) = for {
+      (c, lagMin) <- Seq(("a", 0), ("b", 2))
+      i <- 0 until 60
+    } yield Transcript(c, i, "user", "w " * (1 + i % 5), "",
+      new java.sql.Timestamp(baseMs + (i * 3 + lagMin) * 60000L + 7000L))
+    val (stepSec, windowSec, strideSec) = (60L, 1800L, 900L)
+    val dayMs = 86400000L
+    type Cells = Map[(String, String, Long), (Seq[Double], Double, Double)]
+    def engine(t: Seq[Transcript]): Cells = {
+      val wins = Correlate.windows(Ingest.series(spark.createDataset(t).toDF(), stepSec),
+        windowSec, strideSec, stepSec)
+      Correlate.ccPairs(wins, Seq(("a", "b")).toDF("conv_a", "conv_b"), stepSec, windowSec)
+        .collect().map(c => (c.pair, c.metric, c.win_start.getTime) -> (c.cc.toSeq, c.shift, c.cc_max))
+        .toMap
+    }
+    def reference(t: Seq[Transcript]): Cells =
+      Ref.ccPairs(Ref.series(t, stepSec), Seq(("a", "b")), stepSec, windowSec, strideSec)
+        .map(c => (c.pair, c.metric, c.winStartMs) -> (c.cc.toSeq, c.shift, c.ccMax)).toMap
+    def differ(a: Cells, b: Cells) =
+      (a.keySet ++ b.keySet).toSeq.filter(k => a.get(k) != b.get(k)).sortBy(_._3).take(3)
+        .map(k => s"$k: ${a.get(k)} vs ${b.get(k)}")
+    val (neg, pos) = (engine(turns(-dayMs)), engine(turns(dayMs)))
+    assert(pos.size > 10 && pos.values.forall(_._3 > 0.0), s"post-epoch cells: $pos")
+    val d1 = differ(neg, reference(turns(-dayMs)))
+    assert(d1.isEmpty, s"pre-epoch engine vs reference: $d1")
+    val d2 = differ(pos, reference(turns(dayMs)))
+    assert(d2.isEmpty, s"post-epoch engine vs reference: $d2")
+    val shifted = neg.map { case ((p, m, w), v) => (p, m, w + 2 * dayMs) -> v }
+    val d3 = differ(shifted, pos)
+    assert(d3.isEmpty, s"pre-epoch twin shifted by two days vs post-epoch twin: $d3")
+  }
+
   test("TextQuality.repetition: counts and flag on handcrafted repetitive/clean/degenerate docs") {
     import spark.implicits._
     val docs = Seq(
@@ -941,8 +999,6 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(pickTierStep(28L * 86400L, 100L) == 86400L) // 28 daily points
     // nothing fits -> coarsest (caller downsamples from there)
     assert(pickTierStep(1000L * 86400L, 5L) == 86400L)
-    // unordered step list is sorted internally
-    assert(pickTierStep(3600L, 100L, Seq(86400L, 60L, 3600L)) == 60L)
     assertThrows[IllegalArgumentException](pickTierStep(0L, 10L))
   }
 

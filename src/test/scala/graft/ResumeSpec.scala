@@ -98,6 +98,28 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     assert(rows() == before)
   }
 
+  test("config-hash gate: a first run that dies after its data append still gates a rerun under another config") {
+    import spark.implicits._
+    val transcripts = Transcripts.generate(spark, 8, 150).toDF()
+    val pairs = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000003")).toDF("conv_a", "conv_b")
+    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 1800)
+    val dir = java.nio.file.Files.createTempDirectory("cc-crash").toString
+    // a plain file where the manifest dir goes: the run appends its cells,
+    // then dies writing the manifest
+    val manifest = java.nio.file.Paths.get(dir, "_manifest")
+    java.nio.file.Files.writeString(manifest, "")
+    intercept[Exception](ProcessJob.run(spark, transcripts, pairs, dir, cfg))
+    def rows(): Long = spark.read.parquet(s"$dir/data").count()
+    val before = rows()
+    assert(before > 0, "the first run must have appended cells before dying")
+    java.nio.file.Files.delete(manifest)
+
+    val other = cfg.copy(windowSec = 3600)
+    val e = intercept[IllegalStateException](ProcessJob.run(spark, transcripts, pairs, dir, other))
+    Seq(dir, cfg.hash, other.hash).foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    assert(rows() == before)
+  }
+
   test("retry upgrade: readCc prefers the fresh status=1 row over a stale -1 for the same cell") {
     import spark.implicits._
     // the append-only data path can legitimately hold BOTH a degenerate

@@ -97,6 +97,23 @@ class RetentionSpec extends AnyFunSuite with SparkSuite {
       "a day the covering tier has not sealed must survive expiry")
   }
 
+  test("an upper tier with no day partitions seals nothing; a missing one fails naming it") {
+    val store = freshStore()
+    val days = RetentionJob.partitionDays(spark, s"$store/tier_1m")
+    val e = intercept[IllegalArgumentException](
+      RetentionJob.expire(spark, store, days.last, upperTier = "tier_1hr"))
+    assert(e.getMessage.contains(s"$store/tier_1hr"), e.getMessage)
+
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val upper = new org.apache.hadoop.fs.Path(s"$store/tier_1h")
+    fs.delete(upper, true)
+    fs.mkdirs(upper)
+    val st = RetentionJob.expire(spark, store, days.last)
+    assert(st.expired.isEmpty && st.uncovered.sorted == days.init.sorted, st)
+    assert(RetentionJob.partitionDays(spark, s"$store/tier_1m") == days)
+  }
+
   test("two-level retention: expire 1m under 1h, then 1h under 1d; totals still answerable") {
     val store = freshStore()
     val days = RetentionJob.partitionDays(spark, s"$store/tier_1m")
