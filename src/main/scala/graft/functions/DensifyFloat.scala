@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
 
 /** Scatter a sparse (idx, value) struct array into a dense float vector of
-  * fixed length `npts` (missing indices = 0.0f) — the window-assembly
-  * densify on the flagship CC path (graft.ops.Correlate.windows).
+  * fixed length `npts` (missing indices = 0.0f) — the window and block
+  * densify on the flagship CC path (graft.ops.Correlate.windows/ccCells).
   *
   * As a native codegen'd Expression (not a Scala UDF) the assembly stage
   * stays inside whole-stage codegen end-to-end (PlanSpec asserts no

@@ -17,18 +17,24 @@ import graft.ops.{Correlate, Ingest}
   *    (/root/reference/xcorr/core/init.py:237-249);
   *  - availability pre-gating (↔ lazy.py:128-177): the work list is built
   *    from the cheap spans-only `Correlate.candidates` query — no window
-  *    arrays are assembled to decide what to do; only the conversations
-  *    that still have pending cells pay for window assembly;
+  *    arrays are assembled to decide what to do. A pairs table that lists a
+  *    pair twice yields each cell once;
   *  - "skip already processed" = LEFT ANTI join of the work list against
   *    the manifest (process.py:93-104's `status != 0` skip — Spark has no
   *    cross-run memo, so the manifest table IS the memo, SURVEY.md §4),
   *    with per-key status resolved LATEST-WINS so a `retry_missing` run
   *    that upgrades a cell from -1 to 1 is never shadowed by the old row;
+  *  - the pending cells drive `Correlate.ccCells`: the series is densified
+  *    once into gcd(window, stride) blocks, and one pair-keyed exchange
+  *    carries the blocks of the pending conversations plus one marker per
+  *    pending cell into a sorted block walk. Each marker yields exactly one
+  *    CC row, so the job computes and writes only its pending cells;
   *  - results append-write, manifest rows written AFTER data (write-after-
   *    data ordering): a crash between the two re-computes a deterministic
   *    result; `readCc` collapses duplicates freshest-wins (highest status —
   *    equal-status duplicates are bit-identical recomputes);
-  *  - per-partition lineage + metrics land in the manifest rows, and the
+  *  - one manifest row per CC row, with the kernel's status, the window
+  *    points read (2 × npts) and the lag points stored (`size(cc)`); the
   *    job config hash is revalidated like the reference's preprocess hash
   *    gate (/root/reference/xcorr/core/process.py:68-73).
   *  - table properties are written before the first data append, and a
@@ -103,6 +109,25 @@ object ProcessJob {
   private[graft] def partitionKey(pair: Column): Column =
     concat_ws("|", col("metric"), pair, unix_timestamp(col("win_start")))
 
+  /** The full work list: one row per (pair, metric, win_start) cell where
+    * both sides have a complete window, keyed by `partition_key`. It comes
+    * from the spans-only `Correlate.candidates` pre-gate, so no window array
+    * is assembled to decide the work; a pair listed twice is one pair.
+    */
+  private[graft] def workList(series: DataFrame, pairs: DataFrame, cfg: Config): DataFrame = {
+    val cand = Correlate.candidates(series, cfg.windowSec, cfg.strideSec, cfg.stepSec)
+      .select(col("conv_id"), col("metric"),
+        timestamp_seconds(col("win_start_s")).as("win_start"))
+    val a = cand.select(col("conv_id").as("conv_a"), col("metric"), col("win_start"))
+    val b = cand.select(col("conv_id").as("conv_b"), col("metric"), col("win_start"))
+    a.join(broadcast(pairs.select(col("conv_a"), col("conv_b")).distinct()), Seq("conv_a"))
+      .join(b, Seq("conv_b", "metric", "win_start"))
+      .select(
+        partitionKey(Correlate.pairId).as("partition_key"),
+        col("conv_a"), col("conv_b"), col("metric"), col("win_start")
+      )
+  }
+
   def readManifest(spark: SparkSession, outDir: String): DataFrame = {
     import spark.implicits._
     val p = manifestPath(outDir)
@@ -147,30 +172,17 @@ object ProcessJob {
     val jobId = s"ccjob-${cfg.hash.take(12)}"
 
     // one materialization of the series feeds BOTH the work-list planning
-    // and (filtered) the window assembly — round 1 recomputed the whole
-    // ingest lineage once per consumer. The SPARSE form (occupied buckets
-    // only) is sufficient and exact for windowed CC: the window assembly
-    // reconstructs zeros and spans are gap-fill-invariant (OpsSpec asserts
-    // bitwise equality of the two forms' windows).
+    // and the block walk — round 1 recomputed the whole ingest lineage once
+    // per consumer. The SPARSE form (occupied buckets only) is sufficient
+    // and exact for windowed CC: the blocks reconstruct zeros and spans are
+    // gap-fill-invariant (OpsSpec asserts bitwise equality of the two
+    // forms' windows).
     val series = Ingest.seriesSparse(transcripts, cfg.stepSec)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // availability pre-gate: complete-window candidates from spans only
-    val cand = Correlate.candidates(series, cfg.windowSec, cfg.strideSec, cfg.stepSec)
-      .select(col("conv_id"), col("metric"),
-        timestamp_seconds(col("win_start_s")).as("win_start"))
-
-    // full work list: every (pair, metric, win_start) where both sides have
-    // a complete window
-    val a = cand.select(col("conv_id").as("conv_a"), col("metric"), col("win_start"))
-    val b = cand.select(col("conv_id").as("conv_b"), col("metric"), col("win_start"))
-    val work = a
-      .join(broadcast(pairs), Seq("conv_a"))
-      .join(b, Seq("conv_b", "metric", "win_start"))
-      .select(
-        partitionKey(Correlate.pairId).as("partition_key"),
-        col("conv_a"), col("conv_b"), col("metric"), col("win_start")
-      )
+    // cached: the total count and the pending cells both read it
+    val work = workList(series, pairs, cfg).cache()
+    val nTotal = work.count()
 
     // skip cells already processed (status=1) and — unless retrying —
     // cells flagged missing_data (status=-1), exactly the reference's
@@ -188,23 +200,13 @@ object ProcessJob {
     if (maxWindows > 0) pending = pending.limit(maxWindows)
     pending = pending.cache()
     val nPending = pending.count()
-    val nTotal = work.count()
+    work.unpersist()
 
     if (nPending > 0) {
-      val pendingPairs = pending.select(col("conv_a"), col("conv_b")).distinct()
-      val pendingKeys = pending.select("partition_key")
-      // assemble window arrays ONLY for conversations that still have work
-      val pendingConvs = pending.select(col("conv_a").as("conv_id"))
-        .union(pending.select(col("conv_b").as("conv_id"))).distinct()
-      val pendingSeries = series.join(broadcast(pendingConvs), Seq("conv_id"), "left_semi")
-      // two-step assembly: windows once per conv, then pair tagging
-      val wins = Correlate.windows(pendingSeries, cfg.windowSec, cfg.strideSec, cfg.stepSec)
-      val cc = Correlate
-        .ccPairs(wins, pendingPairs, cfg.stepSec, cfg.windowSec, cfg.normalize,
-          clipLagSec = cfg.clipLagSec, hashInputs = cfg.hashInputs)
-        .toDF()
-        .withColumn("partition_key", partitionKey(col("pair")))
-        .join(pendingKeys, Seq("partition_key"), "left_semi")
+      // one CC row per pending cell: the block walk emits a cell at each
+      // marker, so no window is assembled for a cell that is not pending
+      val cc = Correlate.ccCells(series, pending, cfg.windowSec, cfg.strideSec, cfg.stepSec,
+        cfg.normalize, clipLagSec = cfg.clipLagSec, hashInputs = cfg.hashInputs)
 
       // properties BEFORE the first data append: a run that dies after
       // appending cells must leave the config-hash gate something to check
@@ -213,29 +215,28 @@ object ProcessJob {
         title = "xcorrspark pairwise cross-correlation",
         extra = Map("job_config_sha256" -> cfgHash)))
       val ccCached = cc.cache()
-      ccCached.drop("partition_key")
+      ccCached.toDF()
         .withColumn("day", to_date(col("win_start")))
         .write.mode(SaveMode.Append).partitionBy("day").parquet(dataPath(outDir))
 
       // manifest AFTER data: crash between the two → deterministic recompute.
       // Written distributed (no driver collect — the work list can be huge
-      // at production scale).
-      pending
-        .join(ccCached.select(col("partition_key"), col("status").as("cc_status")),
-          Seq("partition_key"), "left")
+      // at production scale). One row per CC row: both windows' points in,
+      // the stored lag points out.
+      ccCached.toDF()
         .select(
           lit(jobId).as("job_id"),
           lit("cc").as("stage"),
-          col("partition_key"),
+          partitionKey(col("pair")).as("partition_key"),
           // carry the kernel's verdict: 1 processed, -1 missing_data
           // (degenerate window), matching init.py:244-247 flag semantics
-          coalesce(col("cc_status"), lit(-1)).cast("byte").as("status"),
-          lit(2L).as("rows_in"),
-          lit(1L).as("rows_out"),
+          col("status"),
+          (col("npts") * 2L).as("rows_in"),
+          size(col("cc")).cast("long").as("rows_out"),
           current_timestamp().as("started_ts"),
           current_timestamp().as("finished_ts"),
           lit(cfgHash).as("input_hash"),
-          lit(s"xcorrspark: ccPairs(${cfgHash.take(8)})").as("history")
+          lit(s"xcorrspark: ccCells(${cfgHash.take(8)})").as("history")
         )
         .write.mode(SaveMode.Append).parquet(manifestPath(outDir))
       ccCached.unpersist()

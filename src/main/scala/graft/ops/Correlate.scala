@@ -2,6 +2,7 @@ package graft.ops
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import graft.core.CcRow
 import graft.kernel.{Beamform, Cc}
@@ -10,29 +11,39 @@ import graft.kernel.{Beamform, Cc}
   * (reference inner loop: /root/reference/xcorr/core/process.py:82-172,
   * kernel /root/reference/xcorr/util/cc.py:22-79).
   *
-  * Execution shape (SURVEY.md §3.1 Spark shape):
-  *   series → overlapping-window explode → per-(conv, metric, window) value
-  *   arrays → pair join → mapPartitions FFT kernel.
+  * Execution shape (SURVEY.md §3.1 Spark shape): one ordered block walk per
+  * (pair, metric), fed by ONE pair-keyed exchange.
+  *   - [[ccCells]] (the CC job's path) densifies each series once into
+  *     blocks of B = gcd(window, stride) seconds, tags the blocks with every
+  *     (pair, side) they serve, and unions them with one marker row per
+  *     requested cell. [[ccPairs]] feeds the same walk whole windows
+  *     (B = window) and no markers.
+  *   - The rows move through a single `repartition(n, pair, metric)` and
+  *     are sorted by (pair, metric, block start); each partition walks its
+  *     keys in that order and runs [[kernelRow]] once per cell.
+  *   - A window of W/B consecutive blocks is built from the blocks, not
+  *     re-exploded per window (Factor Windows, ICDE 2022), and the walk keeps
+  *     only the W/B blocks per side that the current frame needs
+  *     (Arbitrarily-Framed Holistic SQL Aggregates, SIGMOD 2022).
   *
   * Scale notes:
-  *  - The window explode fans each point out `window/stride` ways (the
-  *    reference's 86400 s window at 21/24 overlap = 8×,
-  *    /root/reference/xcorr/scripts/cc.py:28) — a narrow map, no shuffle.
-  *  - Window assembly shuffles once on (conv_id, metric, win_start).
-  *  - Window values ride the shuffle as FLOAT32 (the reference's cc dtype,
-  *    /root/reference/xcorr/core/init.py:84-85) — halves the bytes of the
-  *    two big exchanges (assembly + pair join). The ingest series values
-  *    are integral counts, so the pack is lossless (< 2^24).
-  *  - The pair join broadcasts the (small) pair list and shuffles windows
-  *    on the join key — keys include conv_id, so hot windows spread.
-  *  - Before the kernel we repartition by (pair, win_start) hash: the FFT
-  *    is the expensive stage, and this is the explicit conv_id-hash
-  *    partitioning + skew spreading the north rule asks for (a hot conv
-  *    appearing in many pairs lands on many partitions, since the hash
-  *    covers BOTH conv ids and the window start).
-  *  - Incomplete windows are dropped (window must fit the per-key span),
-  *    mirroring the reference's strict sample-count gate
-  *    (/root/reference/xcorr/stream/client.py:1019-1050).
+  *  - In [[ccCells]] each nonzero point rides the block exchange once, and
+  *    each block rides the pair exchange once per pair of its conversation.
+  *    [[windows]] instead explodes every point `window/stride` ways (8× at
+  *    the reference's 86400 s window at 21/24 overlap,
+  *    xcorr/scripts/cc.py:28) before its assembly shuffle.
+  *  - Block and window values ride the shuffles as FLOAT32 (the reference's
+  *    cc dtype, xcorr/core/init.py:84-85). The ingest series
+  *    values are integral counts, so the pack is lossless (< 2^24).
+  *  - The pair exchange's partition count is explicit (as in
+  *    `Ingest.series`): AQE must not coalesce the FFT stage's KB-scale input
+  *    onto one task.
+  *  - Skew: a hot conversation still spreads, since its blocks go to every
+  *    pair it belongs to and the pairs hash apart. One pair's history is one
+  *    task's walk, bounded to W/B blocks per side in memory.
+  *  - Incomplete windows get no cell: the job's work list holds only windows
+  *    that fit both sides' spans, mirroring the reference's strict
+  *    sample-count gate (reference xcorr/stream/client.py:1019-1050).
   */
 object Correlate {
 
@@ -97,7 +108,7 @@ object Correlate {
     // densely by construction, so a window is complete iff it fits the span.
     val sparse = windowPoints(series, windowSec, strideSec, stepSec)
       .groupBy(col("conv_id"), col("metric"), col("win_start_s"))
-      .agg(collect_list(struct(pointCols(stepSec): _*)).as("sparse_pts"))
+      .agg(collect_list(struct(pointCols(col("win_start_s"), stepSec): _*)).as("sparse_pts"))
 
     val cand = candidates(series, windowSec, strideSec, stepSec)
 
@@ -147,11 +158,11 @@ object Correlate {
       .withColumn("win_start_s", explode(expr(winExpr)))
   }
 
-  /** A [[windowPoints]] row's grid offset in its window (`idx`) and its
-    * float32 value (`v`).
+  /** A point's grid offset from `start` (epoch seconds of its window or
+    * block: `idx`) and its float32 value (`v`).
     */
-  private def pointCols(stepSec: Long): Seq[Column] = Seq(
-    ((unix_timestamp(col("ts").cast("timestamp")) - col("win_start_s")) / stepSec).cast("int").as("idx"),
+  private def pointCols(start: Column, stepSec: Long): Seq[Column] = Seq(
+    ((unix_timestamp(col("ts").cast("timestamp")) - start) / stepSec).cast("int").as("idx"),
     col("value").cast("float").as("v"))
 
   /** The stored pair id `conv_a-conv_b` of a row with `conv_a`/`conv_b`
@@ -198,7 +209,7 @@ object Correlate {
       .select(col("a.conv_id").as("conv_a"), col("b.conv_id").as("conv_b"))
   }
 
-  /** The per-(pair, window) body of [[ccPairs]]: widens the float32
+  /** The per-cell body of the pair walk: widens the float32
     * windows to double and correlates them.
     */
   private def kernelRow(
@@ -255,8 +266,12 @@ object Correlate {
 
   /** Cross-correlate the given conversation pairs per (metric, window).
     *
+    * @param wins  complete windows (conv_id, metric, win_start, values), as
+    *              [[windows]] assembles them: each is one whole block of the
+    *              pair walk, and a (pair, metric, win_start) where both sides
+    *              hold a window gets one cell.
     * @param pairs DataFrame(conv_a, conv_b) with conv_a < conv_b — small,
-    *              broadcast to both joins.
+    *              broadcast to the side tagging.
     * @param clipLagSec keep only |lag| <= clip (reference lag clipping at
     *                   init, xcorr/core/init.py:177-196 —
     *                   a projection pushdown: store only the lag window of
@@ -277,39 +292,141 @@ object Correlate {
       clipLagSec: Double = -1,
       hashInputs: Boolean = false
   ): Dataset[CcRow] = {
-    val spark = wins.sparkSession
-    import spark.implicits._
-    // Single-shuffle pair assembly. The naive shape — wins self-joined
-    // through the pair list and then repartitioned for the kernel — costs
-    // THREE exchanges of the window arrays and computes the wins lineage
-    // twice (one per join side). Instead each window row is tagged with
-    // every (pair, side) it participates in via ONE broadcast join (a
-    // narrow map), and a single groupBy on (pair, metric, win_start)
-    // assembles both sides — one exchange of the arrays total, and the
-    // aggregation output is already hash-partitioned by a key containing
-    // both conv ids AND the window, so hot conversations spread across
-    // partitions for the FFT stage with no extra repartition.
-    val joined = wins
+    val blocks = wins
       .join(broadcast(pairSides(pairs)), Seq("conv_id"))
-      .groupBy(col("pair"), col("metric"), col("win_start"))
-      .agg(
-        first(when(col("side") === 0, col("values")), ignoreNulls = true).as("va"),
-        first(when(col("side") === 1, col("values")), ignoreNulls = true).as("vb"))
-      // strict completeness: both sides must have a complete window
-      // (mirrors the two-sided inner join / the reference's sample-count
-      // gate, client.py:1019-1050)
-      .where(col("va").isNotNull && col("vb").isNotNull)
-      .select(col("pair"), col("metric"), col("win_start"), col("va"), col("vb"))
-      .as[(String, String, Timestamp, Array[Float], Array[Float])]
+      .select(col("pair"), col("metric"), unix_micros(col("win_start")).as("pos"),
+        col("side"), col("values"))
+    walk(blocks, perWindow = 1, blockSec = windowSec, stepSec, windowSec, marked = false,
+      normalize, clipLagSec, hashInputs)
+  }
 
+  /** The CC cells of a work list: one row per (conv_a, conv_b, metric,
+    * win_start) of `cells`, each window a complete one of both sides'
+    * `series` (the CC job passes its pending cells, drawn from
+    * [[candidates]]). `series` may be sparse (occupied buckets only): a
+    * grid point or block it lacks is zero.
+    *
+    * The series is densified once into blocks of gcd(window, stride)
+    * seconds, keyed by (conv_id, metric, block start) — floored, so
+    * pre-epoch blocks hold their own points. The blocks are tagged with
+    * every (pair, side) they serve and unioned with one marker per cell; the
+    * walk builds each marked window from its window/block consecutive
+    * blocks. Same per-cell result as [[windows]] → [[ccPairs]] restricted
+    * to `cells` (OpsSpec and PipelineSpec check both against `Ref.ccPairs`).
+    */
+  def ccCells(
+      series: DataFrame,
+      cells: DataFrame,
+      windowSec: Long,
+      strideSec: Long,
+      stepSec: Long,
+      normalize: Boolean = true,
+      clipLagSec: Double = -1,
+      hashInputs: Boolean = false
+  ): Dataset[CcRow] = {
+    checkGrid(windowSec, strideSec, stepSec)
+    val spark = series.sparkSession
+    import spark.implicits._
+    val blockSec = BigInt(windowSec).gcd(BigInt(strideSec)).toLong
+    // the distinct pairs are collected once, as any broadcast collects its
+    // table: both joins below then broadcast a local table, and neither
+    // re-runs the distinct over the cells
+    val pairs = cells.select(col("conv_a"), col("conv_b")).distinct()
+      .as[(String, String)].collect().toSeq.toDF("conv_a", "conv_b")
+    val sides = broadcast(pairSides(pairs))
+    val ts = "unix_timestamp(cast(ts as timestamp))"
+    val blocks = series
+      .where(col("value") =!= 0.0)
+      .join(sides, Seq("conv_id"), "left_semi")
+      .withColumn("block_s", expr(Rollup.floorDiv(ts, blockSec)) * blockSec)
+      .groupBy(col("conv_id"), col("metric"), col("block_s"))
+      .agg(collect_list(struct(pointCols(col("block_s"), stepSec): _*)).as("pts"))
+      .join(sides, Seq("conv_id"))
+      .select(col("pair"), col("metric"), (col("block_s") * 1000000L).as("pos"), col("side"),
+        graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt).as("values"))
+    // a marker sorts after its window's LAST block
+    val markers = cells.select(pairId.as("pair"), col("metric"),
+      (unix_micros(col("win_start")) + (windowSec - blockSec) * 1000000L).as("pos"),
+      lit(Marker).as("side"), lit(null).cast("array<float>").as("values"))
+    walk(blocks.unionByName(markers), perWindow = (windowSec / blockSec).toInt, blockSec,
+      stepSec, windowSec, marked = true, normalize, clipLagSec, hashInputs)
+  }
+
+  /** `side` of a marker row: it sorts after both sides' blocks. */
+  private val Marker = 2
+
+  /** The pair walk behind [[ccPairs]] and [[ccCells]]. `rows` are (pair,
+    * metric, pos, side, values): a block of `blockSec` seconds starting at
+    * `pos` (epoch µs) of side 0 (conv_a) or 1 (conv_b), or a marker (side
+    * [[Marker]], no values) for the cell whose window ENDS with the block at
+    * `pos`. One exchange on (pair, metric), sorted by (pos, side) within
+    * each key; each window is `perWindow` consecutive blocks, a block a
+    * side lacks is zeros. Unmarked, a cell is emitted wherever both sides
+    * hold a block (then `perWindow` is 1 and a block is a whole window).
+    * Each (pair, metric, window) is emitted at most once.
+    */
+  private def walk(
+      rows: DataFrame,
+      perWindow: Int,
+      blockSec: Long,
+      stepSec: Long,
+      windowSec: Long,
+      marked: Boolean,
+      normalize: Boolean,
+      clipLagSec: Double,
+      hashInputs: Boolean
+  ): Dataset[CcRow] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val n = spark.sessionState.conf.numShufflePartitions
+    val blockUs = blockSec * 1000000L
+    val npts = (windowSec / stepSec).toInt
     val delta = stepSec.toDouble
     val halfWin = windowSec / 2.0
-    joined.mapPartitions { it =>
-      it.map { case (pairId, metric, winStart, vaF, vbF) =>
-        kernelRow(pairId, metric, winStart, vaF, vbF,
-          delta, halfWin, normalize, clipLagSec, hashInputs)
+    rows
+      .repartition(n, col("pair"), col("metric"))
+      .sortWithinPartitions(col("pair"), col("metric"), col("pos"), col("side"))
+      .as[(String, String, Long, Int, Array[Float])]
+      .mapPartitions { it =>
+        // per side, the last `perWindow` blocks, slot = block number mod perWindow
+        val at = Array.fill(2, perWindow)(Long.MinValue)
+        val held = Array.fill(2, perWindow)(null: Array[Float])
+        def slot(pos: Long) = Math.floorMod(Math.floorDiv(pos, blockUs), perWindow.toLong).toInt
+        def window(side: Int, w0: Long): Array[Float] = {
+          val out = new Array[Float](npts)
+          val len = npts / perWindow
+          var j = 0
+          while (j < perWindow) {
+            val p = w0 + j * blockUs
+            val s = slot(p)
+            if (at(side)(s) == p) System.arraycopy(held(side)(s), 0, out, j * len, len)
+            j += 1
+          }
+          out
+        }
+        var pair: String = null
+        var metric: String = null
+        var last = Long.MinValue
+        it.flatMap { case (p, m, pos, side, v) =>
+          if (p != pair || m != metric) {
+            pair = p; metric = m; last = Long.MinValue
+            at.foreach(java.util.Arrays.fill(_, Long.MinValue))
+          }
+          val cell = if (side == Marker) true else {
+            val s = slot(pos)
+            at(side)(s) = pos
+            held(side)(s) = v
+            !marked && side == 1 && at(0)(s) == pos
+          }
+          if (!cell || pos == last) Iterator.empty
+          else {
+            last = pos
+            val w0 = pos - (perWindow - 1) * blockUs
+            Iterator.single(kernelRow(p, m, DateTimeUtils.toJavaTimestamp(w0),
+              window(0, w0), window(1, w0), delta, halfWin, normalize, clipLagSec, hashInputs))
+          }
+        }
       }
-    }
   }
 
   /** Plane-wave beamforming per (metric, window) (↔ xcorr-beamform):

@@ -677,6 +677,15 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
         .collect().map(c => (c.pair, c.metric, c.win_start.getTime) -> (c.cc.toSeq, c.shift, c.cc_max))
         .toMap
     }
+    // the CC job's path: the block walk over the job's work list
+    def walk(t: Seq[Transcript]): Cells = {
+      val series = Ingest.seriesSparse(spark.createDataset(t).toDF(), stepSec)
+      val cfg = graft.jobs.ProcessJob.Config(stepSec = stepSec, windowSec = windowSec, strideSec = strideSec)
+      val cells = graft.jobs.ProcessJob.workList(series, Seq(("a", "b")).toDF("conv_a", "conv_b"), cfg)
+      Correlate.ccCells(series, cells, windowSec, strideSec, stepSec)
+        .collect().map(c => (c.pair, c.metric, c.win_start.getTime) -> (c.cc.toSeq, c.shift, c.cc_max))
+        .toMap
+    }
     def reference(t: Seq[Transcript]): Cells =
       Ref.ccPairs(Ref.series(t, stepSec), Seq(("a", "b")), stepSec, windowSec, strideSec)
         .map(c => (c.pair, c.metric, c.winStartMs) -> (c.cc.toSeq, c.shift, c.ccMax)).toMap
@@ -687,11 +696,45 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(pos.size > 10 && pos.values.forall(_._3 > 0.0), s"post-epoch cells: $pos")
     val d1 = differ(neg, reference(turns(-dayMs)))
     assert(d1.isEmpty, s"pre-epoch engine vs reference: $d1")
+    val d0 = differ(walk(turns(-dayMs)), neg)
+    assert(d0.isEmpty, s"pre-epoch block walk vs windows→ccPairs: $d0")
     val d2 = differ(pos, reference(turns(dayMs)))
     assert(d2.isEmpty, s"post-epoch engine vs reference: $d2")
     val shifted = neg.map { case ((p, m, w), v) => (p, m, w + 2 * dayMs) -> v }
     val d3 = differ(shifted, pos)
     assert(d3.isEmpty, s"pre-epoch twin shifted by two days vs post-epoch twin: $d3")
+  }
+
+  test("block walk: an all-zero block inside a window is zeros, and a window one side lacks gets no cell") {
+    import spark.implicits._
+    import graft.core.Transcript
+    import graft.jobs.ProcessJob
+    import graft.refimpl.Ref
+    // a: a turn every 2 minutes for 4 hours except a 30-minute silence
+    // (minutes 70-99), so at 1800/1200 (600 s blocks) a whole block of some
+    // complete windows is empty; b: every 3 minutes, starting an hour later
+    val baseMs = 1704067200000L
+    val t =
+      (0 until 120).filter(i => i * 2 < 70 || i * 2 >= 100).map(i => ("a", i, i * 2)) ++
+        (0 until 60).map(i => ("b", i, 60 + i * 3))
+    val turns = t.map { case (c, i, min) =>
+      Transcript(c, i, "user", "w " * (1 + i % 4), "", new java.sql.Timestamp(baseMs + min * 60000L + 5000L))
+    }
+    val (stepSec, windowSec, strideSec) = (60L, 1800L, 1200L)
+    val series = Ingest.seriesSparse(spark.createDataset(turns).toDF(), stepSec)
+    val cfg = ProcessJob.Config(stepSec = stepSec, windowSec = windowSec, strideSec = strideSec)
+    val cells = ProcessJob.workList(series, Seq(("a", "b")).toDF("conv_a", "conv_b"), cfg)
+    val got = Correlate.ccCells(series, cells, windowSec, strideSec, stepSec).collect()
+      .map(c => (c.metric, c.win_start.getTime) -> (c.cc.toSeq, c.status)).toMap
+    val want = Ref.ccPairs(Ref.series(turns, stepSec), Seq(("a", "b")), stepSec, windowSec, strideSec)
+      .map(c => (c.metric, c.winStartMs) -> (c.cc.toSeq, (if (c.cc.forall(_ == 0.0)) -1 else 1).toByte)).toMap
+    assert(got == want, s"walk vs reference: ${(got.keySet ++ want.keySet).filter(k => got.get(k) != want.get(k))}")
+    // the fixture holds both cases: a's first windows (before b starts) and
+    // a window whose middle block [4200 s, 4800 s) of a is silent
+    val aOnly = Correlate.candidates(series.where(col("conv_id") === "a"), windowSec, strideSec, stepSec)
+      .select(col("metric"), (col("win_start_s") * 1000L).as("w")).as[(String, Long)].collect().toSet
+    assert((aOnly -- got.keySet).nonEmpty, "no window of a that b lacks")
+    assert(got.keySet.exists { case (_, w) => w == baseMs + 3600000L }, s"no window over the silence: ${got.keySet}")
   }
 
   test("TextQuality.repetition: counts and flag on handcrafted repetitive/clean/degenerate docs") {

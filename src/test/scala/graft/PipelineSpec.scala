@@ -72,53 +72,92 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     assert(diff.count() == 0, "chunk round-trip altered points")
   }
 
-  test("windowed pairwise CC matches reference cells bit-for-bit") {
-    val pairsSeq = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000005"))
-    import spark.implicits._
-    val pairsDf = pairsSeq.toDF("conv_a", "conv_b")
-    val series = Ingest.series(tinyDf, 60)
-    val wins = Correlate.windows(series, windowSec = 1800, strideSec = 900, stepSec = 60)
-    val refPoints = Ref.series(tiny, 60)
-    val want = Ref.ccPairs(refPoints, pairsSeq, stepSec = 60, windowSec = 1800, strideSec = 900)
-    assert(want.nonEmpty, "reference produced no CC cells — fixture too sparse")
-    val npts = 30
-    // input_hash: SHA-256 over side A's then side B's float32 window values
-    val pointValue = refPoints.map(p => (p.convId, p.metric, p.tsMs) -> p.value).toMap
+  /** `got` holds exactly `want`'s cells, each bit-for-bit: the stored cc is
+    * the reference's `[lag0, lag0 + len)` slice (|lag| <= clipSec, all
+    * lags when negative), shift/cc_max its first argmax, status -1 iff a
+    * side is all-zero, and input_hash (when `hash`) the SHA-256 of side A's
+    * then side B's float32 window values.
+    */
+  private def assertRefCells(got: Seq[graft.core.CcRow], want: Seq[Ref.CcCell],
+                             pairs: Seq[(String, String)], windowSec: Long,
+                             clipSec: Double, hash: Boolean, what: String): Unit = {
+    val npts = (windowSec / 60).toInt
+    val pointValue = Ref.series(tiny, 60).map(p => (p.convId, p.metric, p.tsMs) -> p.value).toMap
     def windowHash(pair: String, metric: String, winStartMs: Long): String = {
-      val (a, b) = pairsSeq.find { case (x, y) => s"$x-$y" == pair }.get
+      val (a, b) = pairs.find { case (x, y) => s"$x-$y" == pair }.get
       val bb = java.nio.ByteBuffer.allocate(4 * 2 * npts)
       for (c <- Seq(a, b); i <- 0 until npts)
         bb.putFloat(pointValue((c, metric, winStartMs + i * 60000L)).toFloat)
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(bb.array()).map("%02x".format(_)).mkString
     }
+    val byKey = got.map(c => ((c.pair, c.metric, c.win_start.getTime), c)).toMap
+    assert(byKey.size == got.size, s"$what: duplicate cells")
+    assert(byKey.keySet == want.map(w => (w.pair, w.metric, w.winStartMs)).toSet,
+      s"$what: ${got.size} vs ${want.size} cells")
+    val halfKeep = if (clipSec < 0) npts - 1 else (clipSec / 60).toInt
+    want.foreach { w =>
+      val g = byKey((w.pair, w.metric, w.winStartMs))
+      val at = s"$what ${w.pair}@${w.winStartMs}"
+      assert(g.npts == npts && g.lag0 == npts - 1 - halfKeep && g.cc.length == 2 * halfKeep + 1, at)
+      val slice = w.cc.slice(g.lag0, g.lag0 + g.cc.length)
+      g.cc.zip(slice).zipWithIndex.foreach { case ((a, b), i) =>
+        assert(a == b, s"$at lag $i: $a != $b")
+      }
+      // shift/cc_max: the first argmax of the stored slice
+      val jm = slice.indexOf(slice.max)
+      assert(g.shift == (g.lag0 + jm - (npts - 1)) * 60.0 && g.cc_max == slice(jm), at)
+      if (clipSec < 0) assert(g.shift == w.shift && g.cc_max == w.ccMax, at)
+      // status=1 for informative windows; -1 (missing_data) iff a side is
+      // all-zero (reference init.py:244-247 semantics)
+      assert(g.status == (if (w.cc.forall(_ == 0.0)) -1 else 1), at)
+      assert(g.input_hash == (if (hash) windowHash(w.pair, w.metric, w.winStartMs) else ""), at)
+    }
+  }
+
+  test("windowed pairwise CC matches reference cells bit-for-bit") {
+    val pairsSeq = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000005"))
+    import spark.implicits._
+    val pairsDf = pairsSeq.toDF("conv_a", "conv_b")
+    val series = Ingest.series(tinyDf, 60)
+    val wins = Correlate.windows(series, windowSec = 1800, strideSec = 900, stepSec = 60)
+    val want = Ref.ccPairs(Ref.series(tiny, 60), pairsSeq, stepSec = 60, windowSec = 1800, strideSec = 900)
+    assert(want.nonEmpty, "reference produced no CC cells — fixture too sparse")
     // unclipped without hashing, and clipped to |lag| <= 300 s (5 steps)
     // with input hashing
     for ((clip, hash) <- Seq((-1.0, false), (300.0, true))) {
       val got = Correlate.ccPairs(wins, pairsDf, stepSec = 60, windowSec = 1800,
-          clipLagSec = clip, hashInputs = hash).collect()
-        .map(c => ((c.pair, c.metric, c.win_start.getTime), c))
-        .toMap
-      assert(got.size == want.size, s"clip=$clip: ${got.size} vs ${want.size} cells")
-      val halfKeep = if (clip < 0) npts - 1 else 5
-      want.foreach { w =>
-        val g = got((w.pair, w.metric, w.winStartMs))
-        val at = s"clip=$clip ${w.pair}@${w.winStartMs}"
-        assert(g.npts == npts && g.lag0 == npts - 1 - halfKeep && g.cc.length == 2 * halfKeep + 1, at)
-        val slice = w.cc.slice(g.lag0, g.lag0 + g.cc.length)
-        g.cc.zip(slice).zipWithIndex.foreach { case ((a, b), i) =>
-          assert(a == b, s"$at lag $i: $a != $b")
-        }
-        // shift/cc_max: the first argmax of the stored slice
-        val jm = slice.indexOf(slice.max)
-        assert(g.shift == (g.lag0 + jm - (npts - 1)) * 60.0 && g.cc_max == slice(jm), at)
-        if (clip < 0) assert(g.shift == w.shift && g.cc_max == w.ccMax, at)
-        // status=1 for informative windows; -1 (missing_data) iff a side is
-        // all-zero (reference init.py:244-247 semantics)
-        assert(g.status == (if (w.cc.forall(_ == 0.0)) -1 else 1), at)
-        assert(g.input_hash == (if (hash) windowHash(w.pair, w.metric, w.winStartMs) else ""), at)
+        clipLagSec = clip, hashInputs = hash).collect().toSeq
+      assertRefCells(got, want, pairsSeq, 1800, clip, hash, s"clip=$clip")
+    }
+  }
+
+  test("block walk (ccCells over the job's work list) matches reference cells bit-for-bit") {
+    import spark.implicits._
+    import graft.jobs.ProcessJob
+    // the hot conversations' longer spans leave windows of theirs that the
+    // partner lacks: the work list, and so the walk, give those no cell
+    val pairsSeq = Seq(("conv-000000", "conv-000001"), ("conv-000000", "conv-000003"),
+      ("conv-000002", "conv-000005"))
+    val pairsDf = pairsSeq.toDF("conv_a", "conv_b")
+    val series = Ingest.seriesSparse(tinyDf, 60).cache()
+    val hotOnly = Correlate.candidates(series.where(col("conv_id") === "conv-000000"), 1800, 900, 60)
+      .count() - Ref.ccPairs(Ref.series(tiny, 60), Seq(("conv-000000", "conv-000003")), 60, 1800, 900).size
+    assert(hotOnly > 0, "fixture: the hot conversation has no window its partner lacks")
+    // block B = gcd(window, stride): 600 s (3 per window), 900 s (2), 1800 s (1)
+    for ((windowSec, strideSec) <- Seq((1800L, 1200L), (1800L, 900L), (1800L, 1800L))) {
+      val want = Ref.ccPairs(Ref.series(tiny, 60), pairsSeq, 60, windowSec, strideSec)
+      assert(want.nonEmpty, s"$windowSec/$strideSec: no reference cells")
+      val cfg = ProcessJob.Config(stepSec = 60, windowSec = windowSec, strideSec = strideSec)
+      val cells = ProcessJob.workList(series, pairsDf, cfg)
+      for ((clip, hash) <- Seq((-1.0, false), (300.0, true))) {
+        val got = Correlate.ccCells(series, cells, windowSec, strideSec, 60,
+          clipLagSec = clip, hashInputs = hash).collect().toSeq
+        assertRefCells(got, want, pairsSeq, windowSec, clip, hash,
+          s"$windowSec/$strideSec clip=$clip")
       }
     }
+    series.unpersist()
   }
 
   test("per-turn text round-trips byte-equal under stable (conv_id, turn_idx) order") {

@@ -60,6 +60,27 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(p.contains("densifyfloat"), s"native densify expression missing:\n$p")
   }
 
+  test("CC job path (ccCells): one pair-keyed exchange with an explicit count, no array SortAggregate") {
+    import spark.implicits._
+    val t = Transcripts.generate(spark, 8, 120).toDF()
+    val series = Ingest.seriesSparse(t, 60)
+    val pairs = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000003")).toDF("conv_a", "conv_b")
+    val cfg = graft.jobs.ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 1200)
+    val cells = graft.jobs.ProcessJob.workList(series, pairs, cfg)
+    val p = plan(Correlate.ccCells(series, cells, 1800, 1200, 60).toDF())
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"BNLJ on the CC path:\n$p")
+    assert(!p.contains("CartesianProduct"), s"cartesian on the CC path:\n$p")
+    assert(!p.contains("SortAggregate"), s"sort-based aggregation on the CC path:\n$p")
+    assert(!p.contains("UDF("), s"Scala UDF on the CC path:\n$p")
+    assert(p.contains("BroadcastHashJoin"), s"pair tagging not broadcast:\n$p")
+    // blocks and markers share ONE exchange, keyed by (pair, metric), whose
+    // partition count is fixed (AQE may not coalesce the FFT stage)
+    val pairExchanges = "Exchange hashpartitioning\\(pair".r.findAllIn(p).length
+    assert(pairExchanges == 1, s"want exactly 1 pair-keyed exchange, got $pairExchanges:\n$p")
+    assert("Exchange hashpartitioning\\(pair#\\d+, metric#\\d+, 4\\), REPARTITION_BY_NUM".r
+      .findFirstIn(p).isDefined, s"pair exchange without an explicit count:\n$p")
+  }
+
   test("asof join: one key exchange over the union, no range/nested-loop join") {
     val e = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val r = e.where(col("event_type") === "purchase")

@@ -13,6 +13,22 @@ import graft.synth.Transcripts
   */
 class ResumeSpec extends AnyFunSuite with SparkSuite {
 
+  /** The manifest rows and the stored CC rows of `dir`, as multisets, name
+    * the same cells with the same status, and each manifest row counts its
+    * cell's window points in (2 × npts) and stored lag points out.
+    */
+  private def assertManifestMatchesData(dir: String): Unit = {
+    def counted(rows: Seq[(String, Byte, Long, Long)]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    val m = ProcessJob.readManifest(spark, dir)
+      .select("partition_key", "status", "rows_in", "rows_out").collect()
+      .map(r => (r.getString(0), r.getByte(1), r.getLong(2), r.getLong(3))).toSeq
+    val d = spark.read.parquet(s"$dir/data")
+      .select(ProcessJob.partitionKey(col("pair")), col("status"), col("npts"), col("cc")).collect()
+      .map(r => (r.getString(0), r.getByte(1), 2L * r.getInt(2), r.getSeq[Double](3).length.toLong)).toSeq
+    assert(m.nonEmpty && counted(m) == counted(d),
+      s"manifest vs data: ${(counted(m).toSet diff counted(d).toSet).take(3)} / ${(counted(d).toSet diff counted(m).toSet).take(3)}")
+  }
+
   test("kill-after-partial-manifest rerun == from-scratch run, no duplicate work") {
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
@@ -64,6 +80,8 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     assert(nDone + nMissing >= full.total, s"manifest under-covers: $nDone + $nMissing < ${full.total}")
     val retry = ProcessJob.run(spark, transcripts, pairs, dirPartial, cfg, retryMissing = true)
     assert(retry.pending == nMissing, s"retryMissing reprocessed ${retry.pending}, want $nMissing")
+    assertManifestMatchesData(dirPartial)
+    assertManifestMatchesData(dirFull)
 
     // CF-1.9 properties persisted (north rule: metadata conventions as
     // table properties)
@@ -71,6 +89,27 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     assert(props.get("Conventions").contains("CF-1.9"))
     assert(props.contains("sha256_hash_metadata"))
     transcripts.unpersist()
+  }
+
+  test("a pairs table that lists a pair twice computes, counts and writes each cell once") {
+    import spark.implicits._
+    val transcripts = Transcripts.generate(spark, 6, 120).toDF()
+    val once = Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000003"))
+    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 900)
+    val dirOnce = java.nio.file.Files.createTempDirectory("cc-once").toString
+    val dir = java.nio.file.Files.createTempDirectory("cc-twice").toString
+    val want = ProcessJob.run(spark, transcripts, once.toDF("conv_a", "conv_b"), dirOnce, cfg)
+    assert(want.total > 0 && want.pending == want.total && want.written == want.total, s"$want")
+    val got = ProcessJob.run(spark, transcripts, (once.head +: once).toDF("conv_a", "conv_b"), dir, cfg)
+    assert(got == want)
+    val data = spark.read.parquet(s"$dir/data")
+    assert(data.count() == want.total)
+    assert(data.select("pair", "metric", "win_start").distinct().count() == want.total)
+    val manifest = ProcessJob.readManifest(spark, dir)
+    assert(manifest.count() == want.total)
+    assert(manifest.select("partition_key").distinct().count() == want.total)
+    assert(TableFormat.snapshots(dir).map(_("written")) == Seq(want.total.toString))
+    assertManifestMatchesData(dir)
   }
 
   test("config-hash gate: a rerun under another config or over tampered properties fails before writing") {
