@@ -10,14 +10,13 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
 
 /** Scatter a sparse (idx, value) struct array into a dense float vector of
-  * fixed length `npts` (missing indices = 0.0f) — the window and block
-  * densify on the flagship CC path (graft.ops.Correlate.windows/ccCells).
+  * fixed length `npts` (missing indices = 0.0f) — the block densify behind
+  * the flagship CC path (graft.ops.Correlate.windows/ccCells).
   *
-  * As a native codegen'd Expression (not a Scala UDF) the assembly stage
+  * As a native codegen'd Expression (not a Scala UDF) the block stage
   * stays inside whole-stage codegen end-to-end (PlanSpec asserts no
-  * ScalaUDF on the ccPairs plan), and a NULL input (an incomplete-window
-  * left-join miss, i.e. a fully-zero window) yields the all-zeros vector
-  * directly instead of a null-handling wrapper.
+  * ScalaUDF on the windows and CC plans). A NULL input yields the
+  * all-zeros vector, so the output is never null.
   */
 object DensifyUtil {
   def densify(pts: ArrayData, npts: Int): ArrayData = {

@@ -168,6 +168,7 @@ object ProcessJob {
       maxWindows: Int = -1,
       retryMissing: Boolean = false
   ): Stats = {
+    val startedTs = new java.sql.Timestamp(System.currentTimeMillis())
     checkStoredConfig(spark, outDir, cfg.hash)
     val jobId = s"ccjob-${cfg.hash.take(12)}"
 
@@ -233,7 +234,7 @@ object ProcessJob {
           col("status"),
           (col("npts") * 2L).as("rows_in"),
           size(col("cc")).cast("long").as("rows_out"),
-          current_timestamp().as("started_ts"),
+          lit(startedTs).as("started_ts"),
           current_timestamp().as("finished_ts"),
           lit(cfgHash).as("input_hash"),
           lit(s"xcorrspark: ccCells(${cfgHash.take(8)})").as("history")

@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import graft.core.CcRow
@@ -12,26 +12,25 @@ import graft.kernel.{Beamform, Cc}
   * kernel /root/reference/xcorr/util/cc.py:22-79).
   *
   * Execution shape (SURVEY.md §3.1 Spark shape): one ordered block walk per
-  * (pair, metric), fed by ONE pair-keyed exchange.
+  * key, fed by ONE key exchange.
   *   - [[ccCells]] (the CC job's path) densifies each series once into
   *     blocks of B = gcd(window, stride) seconds, tags the blocks with every
   *     (pair, side) they serve, and unions them with one marker row per
   *     requested cell. [[ccPairs]] feeds the same walk whole windows
-  *     (B = window) and no markers.
-  *   - The rows move through a single `repartition(n, pair, metric)` and
-  *     are sorted by (pair, metric, block start); each partition walks its
-  *     keys in that order and runs [[kernelRow]] once per cell.
+  *     (B = window) and no markers. [[windows]] walks the blocks per
+  *     (conv_id, metric) and emits the window itself at each marker.
+  *   - The rows move through a single `repartition(n, key, metric)` and
+  *     are sorted by (key, metric, block start); each partition walks its
+  *     keys in that order and runs [[kernelRow]] once per pair cell.
   *   - A window of W/B consecutive blocks is built from the blocks, not
   *     re-exploded per window (Factor Windows, ICDE 2022), and the walk keeps
   *     only the W/B blocks per side that the current frame needs
   *     (Arbitrarily-Framed Holistic SQL Aggregates, SIGMOD 2022).
   *
   * Scale notes:
-  *  - In [[ccCells]] each nonzero point rides the block exchange once, and
-  *    each block rides the pair exchange once per pair of its conversation.
-  *    [[windows]] instead explodes every point `window/stride` ways (8× at
-  *    the reference's 86400 s window at 21/24 overlap,
-  *    xcorr/scripts/cc.py:28) before its assembly shuffle.
+  *  - Each nonzero point rides the block exchange once. In [[ccCells]] each
+  *    block rides the pair exchange once per pair of its conversation; in
+  *    [[windows]] once, as do its markers.
   *  - Block and window values ride the shuffles as FLOAT32 (the reference's
   *    cc dtype, xcorr/core/init.py:84-85). The ingest series
   *    values are integral counts, so the pack is lossless (< 2^24).
@@ -40,7 +39,8 @@ import graft.kernel.{Beamform, Cc}
   *    onto one task.
   *  - Skew: a hot conversation still spreads, since its blocks go to every
   *    pair it belongs to and the pairs hash apart. One pair's history is one
-  *    task's walk, bounded to W/B blocks per side in memory.
+  *    task's walk, bounded to W/B blocks per side in memory. A hot
+  *    conversation has more turns per bucket, not more blocks.
   *  - Incomplete windows get no cell: the job's work list holds only windows
   *    that fit both sides' spans, mirroring the reference's strict
   *    sample-count gate (reference xcorr/stream/client.py:1019-1050).
@@ -78,18 +78,17 @@ object Correlate {
         explode(expr(s"sequence(lo, hi, $strideSec)")).as("win_start_s"))
   }
 
-  /** Explode the gap-filled series into complete overlapping windows with
-    * time-ordered value arrays (float32 packed — see scale notes above).
+  /** The complete windows of the gap-filled series, one row per
+    * [[candidates]] row: (conv_id, metric, win_start, values), `values` the
+    * window's time-ordered grid points. `series` may be sparse (occupied
+    * buckets only): a grid point it lacks is zero. Built from the blocks
+    * of [[ccCells]] by the same walk, keyed by (conv_id, metric).
     *
     * DTYPE CONTRACT: `values` is float32 — the reference's cc dtype
-    * (/root/reference/xcorr/core/init.py:84-85), and it halves the two
-    * big array exchanges. This is LOSSLESS for the ingest path (integral
-    * counts < 2^24) but quantizes preprocessed series (filter/interpolate
-    * produce non-integral doubles) at ~1e-7 relative — the same precision
-    * the reference stores, so downstream parity holds, but callers
-    * needing full double precision through the window stage should window
-    * manually (collect_list over their own grid) rather than assume this
-    * path is exact.
+    * (reference xcorr/core/init.py:84-85). This is LOSSLESS for the
+    * ingest path (integral counts < 2^24) but quantizes preprocessed
+    * series at ~1e-7 relative, the precision the reference stores; callers
+    * needing full double precision should window over their own grid.
     */
   def windows(
       series: DataFrame,
@@ -98,31 +97,29 @@ object Correlate {
       stepSec: Long
   ): DataFrame = {
     checkGrid(windowSec, strideSec, stepSec)
-    val npts = (windowSec / stepSec).toInt
-
-    // Sparse assembly: gap-filled series are mostly zeros, and a zero grid
-    // point is fully reconstructible — so only NONZERO points ride the
-    // window-assembly shuffle (bytes ∝ occupied buckets x overlap, not grid
-    // points x overlap). Window completeness is decided from the per-key
-    // span instead of a point count: the gap-filled grid covers [t0, t1]
-    // densely by construction, so a window is complete iff it fits the span.
-    val sparse = windowPoints(series, windowSec, strideSec, stepSec)
-      .groupBy(col("conv_id"), col("metric"), col("win_start_s"))
-      .agg(collect_list(struct(pointCols(col("win_start_s"), stepSec): _*)).as("sparse_pts"))
-
-    val cand = candidates(series, windowSec, strideSec, stepSec)
-
-    // densify is a native codegen'd Expression (graft.functions.DensifyFloat)
-    // so the assembly projection stays inside whole-stage codegen — a Scala
-    // UDF here split the hottest generated stage (PlanSpec asserts no
-    // ScalaUDF on the ccPairs plan)
-    cand
-      .join(sparse, Seq("conv_id", "metric", "win_start_s"), "left")
-      .select(
-        col("conv_id"), col("metric"),
-        timestamp_seconds(col("win_start_s")).as("win_start"),
-        graft.functions.DensifyFloat(col("sparse_pts"), npts).as("values")
-      )
+    val spark = series.sparkSession
+    import spark.implicits._
+    val blockSec = BigInt(windowSec).gcd(BigInt(strideSec)).toLong
+    val blocks = blocksOf(series, blockSec, stepSec)
+      .select(col("conv_id"), col("metric"), (col("block_s") * 1000000L).as("pos"),
+        lit(0).as("side"), col("pts"))
+    // a window is complete iff it fits the key's span (the gap-filled grid
+    // covers [t0, t1] densely), so the markers come from the spans-only
+    // candidates; a marker sorts after its window's LAST block
+    val markers = candidates(series, windowSec, strideSec, stepSec)
+      .select(col("conv_id"), col("metric"),
+        ((col("win_start_s") + windowSec - blockSec) * 1000000L).as("pos"),
+        lit(Marker).as("side"), lit(null).cast("array<struct<idx:int,v:float>>").as("pts"))
+    // the blocks cross the exchange sparse and the codegen'd DensifyFloat
+    // runs after it (a marker's null pts gives zeros the walk ignores):
+    // right after the block aggregate the optimizer would fold it into the
+    // aggregate, out of the PlanSpec gates' sight
+    val values = graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt)
+    walk(blocks.unionByName(markers), values, sides = 1,
+        perWindow = (windowSec / blockSec).toInt, blockSec, (windowSec / stepSec).toInt,
+        marked = true) { (conv, metric, w0, win) =>
+      (conv, metric, DateTimeUtils.toJavaTimestamp(w0), win(0))
+    }.toDF("conv_id", "metric", "win_start", "values")
   }
 
   /** The grid the window operators assume: window and stride are whole
@@ -133,37 +130,6 @@ object Correlate {
     require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
     require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
   }
-
-  /** Every NONZERO point of `series`, once per window it falls in: the
-    * input columns plus `win_start_s`, the window start in epoch seconds.
-    * [[pointCols]] gives each point's place in its window.
-    */
-  private def windowPoints(
-      series: DataFrame,
-      windowSec: Long,
-      strideSec: Long,
-      stepSec: Long
-  ): DataFrame = {
-    // window starts w (aligned to stride) with w <= ts < w + window:
-    //   ceil((ts - window + step) / stride) .. floor(ts / stride)
-    // (floored, so pre-epoch points land in their windows; starts of
-    // incomplete windows are dropped by the candidates join in `windows`)
-    val winExpr =
-      s"""sequence(
-         |  CAST(ceil((unix_timestamp(cast(ts as timestamp)) - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec,
-         |  ${Rollup.floorDiv("unix_timestamp(cast(ts as timestamp))", strideSec)} * $strideSec,
-         |  $strideSec)""".stripMargin
-    series
-      .where(col("value") =!= 0.0)
-      .withColumn("win_start_s", explode(expr(winExpr)))
-  }
-
-  /** A point's grid offset from `start` (epoch seconds of its window or
-    * block: `idx`) and its float32 value (`v`).
-    */
-  private def pointCols(start: Column, stepSec: Long): Seq[Column] = Seq(
-    ((unix_timestamp(col("ts").cast("timestamp")) - start) / stepSec).cast("int").as("idx"),
-    col("value").cast("float").as("v"))
 
   /** The stored pair id `conv_a-conv_b` of a row with `conv_a`/`conv_b`
     * columns — the `pair` of every CC row and of the job's work list.
@@ -209,18 +175,20 @@ object Correlate {
       .select(col("a.conv_id").as("conv_a"), col("b.conv_id").as("conv_b"))
   }
 
-  /** The per-cell body of the pair walk: widens the float32
-    * windows to double and correlates them.
+  /** The per-cell body of the pair walk: widens the float32 windows of
+    * conv_a and conv_b, starting at `w0` (epoch µs), to double and
+    * correlates them.
     */
   private def kernelRow(
-      pairId: String, metric: String, winStart: Timestamp,
-      vaF: Array[Float], vbF: Array[Float],
-      delta: Double, halfWin: Double,
+      pairId: String, metric: String, w0: Long, wins: Array[Array[Float]],
+      stepSec: Long, windowSec: Long,
       normalize: Boolean, clipLagSec: Double,
       hashInputs: Boolean
   ): CcRow = {
+    val (vaF, vbF) = (wins(0), wins(1))
     val va = toDoubles(vaF)
     val vb = toDoubles(vbF)
+    val delta = stepSec.toDouble
     // a window with zero signal on either side carries no information:
     // flag it missing_data like the reference's status=-1
     // (/root/reference/xcorr/core/init.py:244-247) instead of emitting
@@ -245,14 +213,14 @@ object Correlate {
     CcRow(
       pair = pairId,
       metric = metric,
-      win_start = winStart,
+      win_start = DateTimeUtils.toJavaTimestamp(w0),
       cc = clipped,
       status = if (degenerate) -1 else 1,
       // both series share the ingest grid → start-time difference 0
       // (reference pair_offset, /root/reference/xcorr/core/init.py:275-287)
       pair_offset = 0.0,
       // first sample start vs window center (init.py:290-302)
-      time_offset = -halfWin,
+      time_offset = -windowSec / 2.0,
       shift = shift,
       cc_max = ccMax,
       npts = n,
@@ -292,12 +260,15 @@ object Correlate {
       clipLagSec: Double = -1,
       hashInputs: Boolean = false
   ): Dataset[CcRow] = {
+    val spark = wins.sparkSession
+    import spark.implicits._
     val blocks = wins
       .join(broadcast(pairSides(pairs)), Seq("conv_id"))
       .select(col("pair"), col("metric"), unix_micros(col("win_start")).as("pos"),
         col("side"), col("values"))
-    walk(blocks, perWindow = 1, blockSec = windowSec, stepSec, windowSec, marked = false,
-      normalize, clipLagSec, hashInputs)
+    walk(blocks, col("values"), sides = 2, perWindow = 1, blockSec = windowSec,
+      (windowSec / stepSec).toInt, marked = false)(
+      kernelRow(_, _, _, _, stepSec, windowSec, normalize, clipLagSec, hashInputs))
   }
 
   /** The CC cells of a work list: one row per (conv_a, conv_b, metric,
@@ -334,13 +305,7 @@ object Correlate {
     val pairs = cells.select(col("conv_a"), col("conv_b")).distinct()
       .as[(String, String)].collect().toSeq.toDF("conv_a", "conv_b")
     val sides = broadcast(pairSides(pairs))
-    val ts = "unix_timestamp(cast(ts as timestamp))"
-    val blocks = series
-      .where(col("value") =!= 0.0)
-      .join(sides, Seq("conv_id"), "left_semi")
-      .withColumn("block_s", expr(Rollup.floorDiv(ts, blockSec)) * blockSec)
-      .groupBy(col("conv_id"), col("metric"), col("block_s"))
-      .agg(collect_list(struct(pointCols(col("block_s"), stepSec): _*)).as("pts"))
+    val blocks = blocksOf(series.join(sides, Seq("conv_id"), "left_semi"), blockSec, stepSec)
       .join(sides, Seq("conv_id"))
       .select(col("pair"), col("metric"), (col("block_s") * 1000000L).as("pos"), col("side"),
         graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt).as("values"))
@@ -348,49 +313,66 @@ object Correlate {
     val markers = cells.select(pairId.as("pair"), col("metric"),
       (unix_micros(col("win_start")) + (windowSec - blockSec) * 1000000L).as("pos"),
       lit(Marker).as("side"), lit(null).cast("array<float>").as("values"))
-    walk(blocks.unionByName(markers), perWindow = (windowSec / blockSec).toInt, blockSec,
-      stepSec, windowSec, marked = true, normalize, clipLagSec, hashInputs)
+    walk(blocks.unionByName(markers), col("values"), sides = 2,
+      perWindow = (windowSec / blockSec).toInt, blockSec, (windowSec / stepSec).toInt, marked = true)(
+      kernelRow(_, _, _, _, stepSec, windowSec, normalize, clipLagSec, hashInputs))
+  }
+
+  /** The nonzero points of `series` in blocks of `blockSec` seconds:
+    * (conv_id, metric, block_s, pts), `block_s` the floored block start in
+    * epoch seconds (so pre-epoch blocks hold their own points), `pts` the
+    * points as (grid offset in the block, float32 value).
+    */
+  private def blocksOf(series: DataFrame, blockSec: Long, stepSec: Long): DataFrame = {
+    val ts = "unix_timestamp(cast(ts as timestamp))"
+    val idx = ((unix_timestamp(col("ts").cast("timestamp")) - col("block_s")) / stepSec).cast("int")
+    series
+      .where(col("value") =!= 0.0)
+      .withColumn("block_s", expr(Rollup.floorDiv(ts, blockSec)) * blockSec)
+      .groupBy(col("conv_id"), col("metric"), col("block_s"))
+      .agg(collect_list(struct(idx.as("idx"), col("value").cast("float").as("v"))).as("pts"))
   }
 
   /** `side` of a marker row: it sorts after both sides' blocks. */
   private val Marker = 2
 
-  /** The pair walk behind [[ccPairs]] and [[ccCells]]. `rows` are (pair,
-    * metric, pos, side, values): a block of `blockSec` seconds starting at
-    * `pos` (epoch µs) of side 0 (conv_a) or 1 (conv_b), or a marker (side
-    * [[Marker]], no values) for the cell whose window ENDS with the block at
-    * `pos`. One exchange on (pair, metric), sorted by (pos, side) within
-    * each key; each window is `perWindow` consecutive blocks, a block a
-    * side lacks is zeros. Unmarked, a cell is emitted wherever both sides
-    * hold a block (then `perWindow` is 1 and a block is a whole window).
-    * Each (pair, metric, window) is emitted at most once.
+  /** The block walk behind [[windows]], [[ccPairs]] and [[ccCells]].
+    * `rows` are (key, metric, pos, side, block): a block of `blockSec`
+    * seconds starting at `pos` (epoch µs) of one of the key's `sides`, or a
+    * marker (side [[Marker]], null block) for the cell whose window ENDS
+    * with the block at `pos`. One exchange on (key, metric), sorted by
+    * (pos, side) within each key; then `values` gives each row's dense
+    * block (the block column itself, or its densify). Each window is
+    * `perWindow` consecutive blocks, `npts` grid points in all; a block a
+    * side lacks is zeros. Unmarked, a cell is emitted wherever sides 0 and
+    * 1 hold a block (then `perWindow` is 1 and a block is a whole window).
+    * At each cell `emit` gets the key, the metric, the window start (epoch
+    * µs) and the window of every side; each (key, metric, window) is
+    * emitted at most once.
     */
-  private def walk(
+  private def walk[T: Encoder](
       rows: DataFrame,
+      values: Column,
+      sides: Int,
       perWindow: Int,
       blockSec: Long,
-      stepSec: Long,
-      windowSec: Long,
-      marked: Boolean,
-      normalize: Boolean,
-      clipLagSec: Double,
-      hashInputs: Boolean
-  ): Dataset[CcRow] = {
+      npts: Int,
+      marked: Boolean
+  )(emit: (String, String, Long, Array[Array[Float]]) => T): Dataset[T] = {
     val spark = rows.sparkSession
     import spark.implicits._
     val n = spark.sessionState.conf.numShufflePartitions
+    val keyCol = col(rows.columns.head)
     val blockUs = blockSec * 1000000L
-    val npts = (windowSec / stepSec).toInt
-    val delta = stepSec.toDouble
-    val halfWin = windowSec / 2.0
     rows
-      .repartition(n, col("pair"), col("metric"))
-      .sortWithinPartitions(col("pair"), col("metric"), col("pos"), col("side"))
+      .repartition(n, keyCol, col("metric"))
+      .sortWithinPartitions(keyCol, col("metric"), col("pos"), col("side"))
+      .select(keyCol, col("metric"), col("pos"), col("side"), values)
       .as[(String, String, Long, Int, Array[Float])]
       .mapPartitions { it =>
         // per side, the last `perWindow` blocks, slot = block number mod perWindow
-        val at = Array.fill(2, perWindow)(Long.MinValue)
-        val held = Array.fill(2, perWindow)(null: Array[Float])
+        val at = Array.fill(sides, perWindow)(Long.MinValue)
+        val held = Array.fill(sides, perWindow)(null: Array[Float])
         def slot(pos: Long) = Math.floorMod(Math.floorDiv(pos, blockUs), perWindow.toLong).toInt
         def window(side: Int, w0: Long): Array[Float] = {
           val out = new Array[Float](npts)
@@ -404,12 +386,12 @@ object Correlate {
           }
           out
         }
-        var pair: String = null
+        var key: String = null
         var metric: String = null
         var last = Long.MinValue
-        it.flatMap { case (p, m, pos, side, v) =>
-          if (p != pair || m != metric) {
-            pair = p; metric = m; last = Long.MinValue
+        it.flatMap { case (k, m, pos, side, v) =>
+          if (k != key || m != metric) {
+            key = k; metric = m; last = Long.MinValue
             at.foreach(java.util.Arrays.fill(_, Long.MinValue))
           }
           val cell = if (side == Marker) true else {
@@ -422,8 +404,7 @@ object Correlate {
           else {
             last = pos
             val w0 = pos - (perWindow - 1) * blockUs
-            Iterator.single(kernelRow(p, m, DateTimeUtils.toJavaTimestamp(w0),
-              window(0, w0), window(1, w0), delta, halfWin, normalize, clipLagSec, hashInputs))
+            Iterator.single(emit(k, m, w0, Array.tabulate(sides)(window(_, w0))))
           }
         }
       }

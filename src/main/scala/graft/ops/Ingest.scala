@@ -44,7 +44,8 @@ object Ingest {
 
   /** Long-form series WITHOUT gap-fill: one row per OCCUPIED (conv, bucket,
     * metric). For the windowed-CC path this is exactly equivalent to
-    * [[series]] — `Correlate.windows`' sparse assembly reconstructs zero
+    * [[series]] — the block densify behind `Correlate.windows` and
+    * `Correlate.ccCells` reads only nonzero points and reconstructs zero
     * grid points itself, and the per-key span (which decides window
     * completeness) is identical because gap-fill never extends a span —
     * at a fraction of the cost: ONE shuffle (the bucket groupBy), no window

@@ -179,7 +179,8 @@ private[graft] object OracleSql {
   /** Gap-filled hourly grid of per-user event counts (rows matching
     * `filter`) assembled into 24 h windows at 12 h stride, with each
     * window value spelled `v` over the count `c.c` — the SQL mirror of
-    * `Correlate.windows` over hourly counts.
+    * `Correlate.windows` over hourly counts: a window per stride-aligned
+    * start that fits the user's span, a grid point without a count being 0.
     */
   def hourlyGridCtes(filter: String, v: String): String =
     s"""bth AS (SELECT user_id, date_trunc('hour', ts) AS h FROM events

@@ -74,7 +74,39 @@ object Ref {
 
   final case class CcCell(pair: String, metric: String, winStartMs: Long, cc: Array[Double], shift: Double, ccMax: Double)
 
-  /** Windowed pairwise CC, mirroring Correlate.windows + ccPairs. */
+  /** Correlate.windows per (convId, metric): window start (epoch ms) →
+    * grid values, for every stride-aligned start whose whole grid is present.
+    */
+  def windows(
+      points: Seq[Point],
+      windowSec: Long,
+      strideSec: Long,
+      stepSec: Long
+  ): Map[(String, String), Map[Long, Array[Double]]] = {
+    val stepMs = stepSec * 1000
+    val npts = (windowSec / stepSec).toInt
+    points.groupBy(p => (p.convId, p.metric)).map { case (key, ps0) =>
+      val ps = ps0.sortBy(_.tsMs)
+      val byTs = ps.map(p => p.tsMs -> p.value).toMap
+      val t0 = ps.head.tsMs
+      val t1 = ps.last.tsMs
+      val strideMs = strideSec * 1000
+      val starts = (Math.floorDiv(t0 - windowSec * 1000, strideMs) to Math.floorDiv(t1, strideMs))
+        .map(_ * strideMs)
+        .filter(w => w >= t0 - (windowSec * 1000 - stepMs) && w <= t1)
+      key -> starts.flatMap { w =>
+        val grid = (0 until npts).map(i => w + i * stepMs)
+        // float32 round-trip mirrors the engine's float32 window packing
+        // (lossless for integral counts; reference cc dtype init.py:84-85)
+        if (grid.forall(byTs.contains)) Some(w -> grid.map(t => byTs(t).toFloat.toDouble).toArray)
+        else None
+      }.toMap
+    }
+  }
+
+  /** Windowed pairwise CC over [[windows]], mirroring Correlate.ccPairs
+    * and Correlate.ccCells over the full work list.
+    */
   def ccPairs(
       points: Seq[Point],
       pairs: Seq[(String, String)],
@@ -83,33 +115,13 @@ object Ref {
       strideSec: Long,
       normalize: Boolean = true
   ): Seq[CcCell] = {
-    val stepMs = stepSec * 1000
-    val npts = (windowSec / stepSec).toInt
-    // complete windows per (conv, metric)
-    val byKey = points.groupBy(p => (p.convId, p.metric))
-    def windowsOf(cid: String, metric: String): Map[Long, Array[Double]] = {
-      val ps = byKey.getOrElse((cid, metric), Seq.empty).sortBy(_.tsMs)
-      if (ps.isEmpty) return Map.empty
-      val byTs = ps.map(p => p.tsMs -> p.value).toMap
-      val t0 = ps.head.tsMs
-      val t1 = ps.last.tsMs
-      val strideMs = strideSec * 1000
-      val starts = (Math.floorDiv(t0 - windowSec * 1000, strideMs) to Math.floorDiv(t1, strideMs))
-        .map(_ * strideMs)
-        .filter(w => w >= t0 - (windowSec * 1000 - stepMs) && w <= t1)
-      starts.flatMap { w =>
-        val grid = (0 until npts).map(i => w + i * stepMs)
-        // float32 round-trip mirrors the engine's float32 window packing
-        // (lossless for integral counts; reference cc dtype init.py:84-85)
-        if (grid.forall(byTs.contains)) Some(w -> grid.map(t => byTs(t).toFloat.toDouble).toArray)
-        else None
-      }.toMap
-    }
+    val convs = pairs.flatMap { case (a, b) => Seq(a, b) }.toSet
+    val wins = windows(points.filter(p => convs(p.convId)), windowSec, strideSec, stepSec)
     for {
       (ca, cb) <- pairs.sortBy(identity)
       metric <- Seq("token_volume", "turn_rate")
-      wa = windowsOf(ca, metric)
-      wb = windowsOf(cb, metric)
+      wa = wins.getOrElse((ca, metric), Map.empty[Long, Array[Double]])
+      wb = wins.getOrElse((cb, metric), Map.empty[Long, Array[Double]])
       w <- (wa.keySet intersect wb.keySet).toSeq.sorted
     } yield {
       val rxy = Cc.cc(wa(w), wb(w), normalize = normalize)

@@ -201,17 +201,39 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
 
   test("windows(seriesSparse) == windows(series) bitwise (gap-fill invariance)") {
     import spark.implicits._
-    val t = Transcripts.generate(spark, 6, 150).toDF()
-    def winsOf(s: org.apache.spark.sql.DataFrame) =
-      Correlate.windows(s, 1800, 900, 60)
+    import graft.refimpl.Ref
+    type Wins = Map[(String, String, Long), Seq[Int]]
+    def bits(v: Seq[Float]) = v.map(java.lang.Float.floatToRawIntBits)
+    def winsOf(s: org.apache.spark.sql.DataFrame, windowSec: Long, strideSec: Long): Wins = {
+      val rows = Correlate.windows(s, windowSec, strideSec, 60)
         .select(col("conv_id"), col("metric"), col("win_start"), col("values"))
         .as[(String, String, java.sql.Timestamp, Array[Float])]
-        .collect().map(r => ((r._1, r._2, r._3.getTime), r._4)).toMap
-    val dense = winsOf(Ingest.series(t, 60))
-    val sparse = winsOf(Ingest.seriesSparse(t, 60))
-    assert(dense.keySet == sparse.keySet, "window sets differ")
-    assert(dense.nonEmpty)
-    dense.foreach { case (k, v) => assert(v.sameElements(sparse(k)), s"values differ at $k") }
+        .collect().map(r => ((r._1, r._2, r._3.getTime), bits(r._4.toSeq)))
+      val m = rows.toMap
+      assert(m.size == rows.length, "a window emitted twice")
+      m
+    }
+    // 1800/900 and 1800/1200 (3 blocks per window) and 1800/1800, without
+    // and with a hot conversation
+    for ((name, hot) <- Seq("plain" -> 0, "hot" -> 1)) {
+      val t = Transcripts.generate(spark, 6, 150, hotConvs = hot, hotFactor = 20).cache()
+      val points = Ref.series(t.collect().toSeq, 60)
+      for ((windowSec, strideSec) <- Seq((1800L, 900L), (1800L, 1200L), (1800L, 1800L))) {
+        val at = s"$name $windowSec/$strideSec"
+        val dense = winsOf(Ingest.series(t.toDF(), 60), windowSec, strideSec)
+        val sparse = winsOf(Ingest.seriesSparse(t.toDF(), 60), windowSec, strideSec)
+        val want: Wins = Ref.windows(points, windowSec, strideSec, 60).toSeq
+          .flatMap { case ((c, m), ws) => ws.map { case (w, v) => (c, m, w) -> bits(v.map(_.toFloat).toSeq) } }
+          .toMap
+        assert(dense.nonEmpty, at)
+        assert(dense.keySet == sparse.keySet, s"$at: window sets differ")
+        dense.foreach { case (k, v) => assert(v == sparse(k), s"$at: values differ at $k") }
+        assert(dense.keySet == want.keySet, s"$at: engine vs reference window sets: " +
+          s"${(dense.keySet diff want.keySet).take(3)} / ${(want.keySet diff dense.keySet).take(3)}")
+        dense.foreach { case (k, v) => assert(v == want(k), s"$at: engine vs reference values at $k") }
+      }
+      t.unpersist()
+    }
   }
 
   test("postprocess chain equals manual kernel composition on one row") {

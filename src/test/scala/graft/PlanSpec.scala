@@ -81,6 +81,19 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       .findFirstIn(p).isDefined, s"pair exchange without an explicit count:\n$p")
   }
 
+  test("windows: blocks and markers through one explicit-count (conv_id, metric) exchange, no join, no Scala UDF") {
+    val t = Transcripts.generate(spark, 8, 120).toDF()
+    val p = plan(Correlate.windows(Ingest.seriesSparse(t, 60), 1800, 1200, 60))
+    for (join <- Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin", "NestedLoopJoin", "CartesianProduct"))
+      assert(!p.contains(join), s"$join on the windows path:\n$p")
+    assert(!p.contains("UDF("), s"Scala UDF on the windows path:\n$p")
+    assert(p.contains("densifyfloat"), s"native densify expression missing:\n$p")
+    // the walk's exchange takes the union of blocks and markers, and its
+    // partition count is fixed
+    assert("Exchange hashpartitioning\\(conv_id#\\d+, metric#\\d+, 4\\), REPARTITION_BY_NUM.*\\n\\s*\\+- Union".r
+      .findFirstIn(p).isDefined, s"no explicit-count (conv_id, metric) exchange over the blocks and markers:\n$p")
+  }
+
   test("asof join: one key exchange over the union, no range/nested-loop join") {
     val e = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val r = e.where(col("event_type") === "purchase")

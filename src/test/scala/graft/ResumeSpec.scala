@@ -100,7 +100,9 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("cc-twice").toString
     val want = ProcessJob.run(spark, transcripts, once.toDF("conv_a", "conv_b"), dirOnce, cfg)
     assert(want.total > 0 && want.pending == want.total && want.written == want.total, s"$want")
+    val before = System.currentTimeMillis()
     val got = ProcessJob.run(spark, transcripts, (once.head +: once).toDF("conv_a", "conv_b"), dir, cfg)
+    val after = System.currentTimeMillis()
     assert(got == want)
     val data = spark.read.parquet(s"$dir/data")
     assert(data.count() == want.total)
@@ -108,6 +110,13 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     val manifest = ProcessJob.readManifest(spark, dir)
     assert(manifest.count() == want.total)
     assert(manifest.select("partition_key").distinct().count() == want.total)
+    // started when the run began, finished when its manifest was written
+    val times = manifest.select("started_ts", "finished_ts").distinct()
+      .as[(java.sql.Timestamp, java.sql.Timestamp)].collect()
+    assert(times.length == 1, s"one run, one (started, finished): ${times.toSeq}")
+    val (started, finished) = times.head
+    assert(before <= started.getTime && started.before(finished) && finished.getTime <= after,
+      s"started $started, finished $finished, run within [$before, $after] ms")
     assert(TableFormat.snapshots(dir).map(_("written")) == Seq(want.total.toString))
     assertManifestMatchesData(dir)
   }
