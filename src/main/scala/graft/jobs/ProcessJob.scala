@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,15 +15,25 @@ import graft.ops.{Correlate, Ingest}
   *  - work item  = (pair, metric, win_start) ↔ the reference's (pair, time)
   *    cell with status flags {-1 missing, 0 todo, 1 done}
   *    (/root/reference/xcorr/core/init.py:237-249);
-  *  - availability pre-gating (↔ lazy.py:128-177): the work list is built
-  *    from the cheap spans-only `Correlate.candidates` query — no window
-  *    arrays are assembled to decide what to do. A pairs table that lists a
-  *    pair twice yields each cell once;
-  *  - "skip already processed" = LEFT ANTI join of the work list against
-  *    the manifest (process.py:93-104's `status != 0` skip — Spark has no
+  *  - availability pre-gating (↔ lazy.py:128-177): one action over the
+  *    cached series collects the paired conversations' window-start bounds
+  *    (`Correlate.bounds`, spans only — no window arrays are assembled to
+  *    decide what to do), and the driver intersects them into one range of
+  *    window starts per (pair, metric). The total is the ranges' sum; the
+  *    cells are exploded from the ranges inside the plans that read them.
+  *    A pairs table that lists a pair twice yields each cell once;
+  *  - "skip already processed" = LEFT ANTI join of the cells against the
+  *    manifest (process.py:93-104's `status != 0` skip — Spark has no
   *    cross-run memo, so the manifest table IS the memo, SURVEY.md §4),
   *    with per-key status resolved LATEST-WINS so a `retry_missing` run
-  *    that upgrades a cell from -1 to 1 is never shadowed by the old row;
+  *    that upgrades a cell from -1 to 1 is never shadowed by the old row.
+  *    One per-pair aggregate of the remaining cells, collected, gives the
+  *    pending count and the pending pairs; with no manifest every cell is
+  *    pending and no action runs;
+  *  - driver memory: the pair list, the bounds and the ranges, all
+  *    O(pairs × metrics) rows — the pair list the walk broadcasts is of the
+  *    same order. The cells, O(pairs × windows), stay distributed and are
+  *    never cached, counted or collected;
   *  - the pending cells drive `Correlate.ccCells`: the series is densified
   *    once into gcd(window, stride) blocks, and one pair-keyed exchange
   *    carries the blocks of the pending conversations plus one marker per
@@ -109,29 +119,51 @@ object ProcessJob {
   private[graft] def partitionKey(pair: Column): Column =
     concat_ws("|", col("metric"), pair, unix_timestamp(col("win_start")))
 
-  /** The full work list: one row per (pair, metric, win_start) cell where
-    * both sides have a complete window, keyed by `partition_key`. It comes
-    * from the spans-only `Correlate.candidates` pre-gate, so no window array
-    * is assembled to decide the work; a pair listed twice is one pair.
+  /** The full work list: the cells (partition_key, conv_a, conv_b, metric,
+    * win_start) of each distinct pair where both sides have a complete
+    * window, with each pair's cell count on the driver. One action collects
+    * the paired conversations' window-start bounds from the spans-only
+    * `Correlate.bounds` pre-gate, so no window array is assembled to decide
+    * the work; the driver intersects them per (conv_a, conv_b, metric) into
+    * one range [max lo, min hi], and the cells are exploded from those
+    * ranges in the plan that reads them, never collected. A pair listed
+    * twice is one pair.
     */
-  private[graft] def workList(series: DataFrame, pairs: DataFrame, cfg: Config): DataFrame = {
-    val cand = Correlate.candidates(series, cfg.windowSec, cfg.strideSec, cfg.stepSec)
-      .select(col("conv_id"), col("metric"),
-        timestamp_seconds(col("win_start_s")).as("win_start"))
-    val a = cand.select(col("conv_id").as("conv_a"), col("metric"), col("win_start"))
-    val b = cand.select(col("conv_id").as("conv_b"), col("metric"), col("win_start"))
-    a.join(broadcast(pairs.select(col("conv_a"), col("conv_b")).distinct()), Seq("conv_a"))
-      .join(b, Seq("conv_b", "metric", "win_start"))
+  private[graft] def workList(series: DataFrame, pairs: DataFrame, cfg: Config): Correlate.Cells = {
+    val spark = series.sparkSession
+    import spark.implicits._
+    val distinct = pairs.select(col("conv_a"), col("conv_b")).as[(String, String)].collect().distinct.toSeq
+    val convs = distinct.flatMap(p => Seq(p._1, p._2)).distinct
+    val bounds = Correlate.bounds(series.where(col("conv_id").isin(convs: _*)),
+        cfg.windowSec, cfg.strideSec, cfg.stepSec)
+      .as[(String, String, Long, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(r => r._2 -> (r._3, r._4)).toMap).toMap
+    val ranges = for {
+      (a, b) <- distinct
+      (metric, (loA, hiA)) <- bounds.getOrElse(a, Map.empty[String, (Long, Long)]).toSeq
+      (loB, hiB) <- bounds.getOrElse(b, Map.empty[String, (Long, Long)]).get(metric).toSeq
+      (lo, hi) = (math.max(loA, loB), math.min(hiA, hiB))
+      if lo <= hi
+    } yield (a, b, metric, lo, hi)
+    val cells = ranges.toDF("conv_a", "conv_b", "metric", "lo", "hi")
+      .select(col("conv_a"), col("conv_b"), col("metric"),
+        explode(sequence(col("lo"), col("hi"), lit(cfg.strideSec))).as("win_start_s"))
+      .withColumn("win_start", timestamp_seconds(col("win_start_s")))
       .select(
         partitionKey(Correlate.pairId).as("partition_key"),
         col("conv_a"), col("conv_b"), col("metric"), col("win_start")
       )
+    Correlate.Cells(cells,
+      ranges.groupMapReduce(r => (r._1, r._2))(r => (r._5 - r._4) / cfg.strideSec + 1)(_ + _).toSeq)
   }
 
+  /** The manifest rows of `outDir`, read with the `ManifestRow` schema (no
+    * schema inference job); empty when no manifest was written.
+    */
   def readManifest(spark: SparkSession, outDir: String): DataFrame = {
     import spark.implicits._
     val p = manifestPath(outDir)
-    if (hasParquet(spark, p)) spark.read.parquet(p)
+    if (hasParquet(spark, p)) spark.read.schema(Encoders.product[ManifestRow].schema).parquet(p)
     else spark.emptyDataset[ManifestRow].toDF()
   }
 
@@ -168,6 +200,7 @@ object ProcessJob {
       maxWindows: Int = -1,
       retryMissing: Boolean = false
   ): Stats = {
+    import spark.implicits._
     val startedTs = new java.sql.Timestamp(System.currentTimeMillis())
     checkStoredConfig(spark, outDir, cfg.hash)
     val jobId = s"ccjob-${cfg.hash.take(12)}"
@@ -181,27 +214,32 @@ object ProcessJob {
     val series = Ingest.seriesSparse(transcripts, cfg.stepSec)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // cached: the total count and the pending cells both read it
-    val work = workList(series, pairs, cfg).cache()
-    val nTotal = work.count()
+    val work = workList(series, pairs, cfg)
+    val nTotal = work.count
 
     // skip cells already processed (status=1) and — unless retrying —
     // cells flagged missing_data (status=-1), exactly the reference's
     // status-flag skip (process.py:93-104). Status per key is the LATEST
-    // manifest row's: a retry that appended 1 after -1 must read as 1.
-    val doneStatuses = if (retryMissing) Seq(1) else Seq(1, -1)
-    val done = readManifest(spark, outDir)
-      .where(col("job_id") === jobId)
-      .groupBy(col("partition_key"))
-      .agg(max_by(col("status"), col("finished_ts")).as("status"))
-      .where(col("status").isin(doneStatuses: _*))
-      .select(col("partition_key"))
-
-    var pending = work.join(done, Seq("partition_key"), "left_anti")
-    if (maxWindows > 0) pending = pending.limit(maxWindows)
-    pending = pending.cache()
-    val nPending = pending.count()
-    work.unpersist()
+    // manifest row's: a retry that appended 1 after -1 must read as 1. A
+    // cell with a 1 row is never recomputed, so a key's rows are -1s then at
+    // most one 1, and its latest status is done iff some row's status is.
+    // With no manifest and no cap, every cell is pending; otherwise one
+    // per-pair aggregate over the remaining cells, collected, gives the
+    // pending pairs and their count together.
+    val pending =
+      if (maxWindows <= 0 && !hasParquet(spark, manifestPath(outDir))) work
+      else {
+        val doneStatuses = if (retryMissing) Seq(1) else Seq(1, -1)
+        val done = readManifest(spark, outDir)
+          .where(col("job_id") === jobId && col("status").isin(doneStatuses: _*))
+          .select(col("partition_key"))
+        var cells = work.df.join(done, Seq("partition_key"), "left_anti")
+        // ordered, so the count and the write take the same cells
+        if (maxWindows > 0) cells = cells.orderBy(col("partition_key")).limit(maxWindows)
+        Correlate.Cells(cells, cells.groupBy(col("conv_a"), col("conv_b")).count()
+          .as[(String, String, Long)].collect().toSeq.map(r => (r._1, r._2) -> r._3))
+      }
+    val nPending = pending.count
 
     if (nPending > 0) {
       // one CC row per pending cell: the block walk emits a cell at each
@@ -245,7 +283,6 @@ object ProcessJob {
       TableFormat.appendSnapshot(outDir, Map(
         "job_id" -> jobId, "written" -> nPending.toString, "config" -> cfgHash))
     }
-    pending.unpersist()
     series.unpersist()
     Stats(nTotal, nPending, nPending)
   }

@@ -47,13 +47,9 @@ import graft.kernel.{Beamform, Cc}
   */
 object Correlate {
 
-  /** The complete-window candidate list (conv_id, metric, win_start_s) —
-    * computed from the tiny one-row-per-key spans table WITHOUT assembling
-    * any value arrays. This is the engine's availability pre-gate
-    * (↔ /root/reference/xcorr/core/lazy.py:128-177: a cheap availability
-    * query decides the work list; the heavy fetch only happens for items
-    * that pass): ProcessJob builds its work list from this, and only the
-    * still-pending conversations pay for window assembly.
+  /** The complete-window candidate list (conv_id, metric, win_start_s):
+    * every start of [[bounds]], computed from the tiny one-row-per-key
+    * spans table WITHOUT assembling any value arrays.
     */
   def candidates(
       series: DataFrame,
@@ -62,11 +58,30 @@ object Correlate {
       stepSec: Long
   ): DataFrame = {
     val n = series.sparkSession.sessionState.conf.numShufflePartitions
-    val spans = series.groupBy(col("conv_id"), col("metric"))
+    bounds(series, windowSec, strideSec, stepSec)
+      .repartition(n, col("conv_id"), col("metric"))
+      .select(col("conv_id"), col("metric"),
+        explode(expr(s"sequence(lo, hi, $strideSec)")).as("win_start_s"))
+  }
+
+  /** The window-start bounds of each key with a complete window:
+    * (conv_id, metric, lo, hi), the stride-aligned starts s in [lo, hi]
+    * (epoch seconds) being those whose whole window lies in the key's span
+    * [t0, t1]. This is the engine's availability pre-gate
+    * (↔ reference xcorr/core/lazy.py:128-177: a cheap availability
+    * query decides the work list; the heavy fetch only happens for items
+    * that pass): [[candidates]] explodes it, and the CC job collects it for
+    * the paired conversations to plan its cells.
+    */
+  private[graft] def bounds(
+      series: DataFrame,
+      windowSec: Long,
+      strideSec: Long,
+      stepSec: Long
+  ): DataFrame =
+    series.groupBy(col("conv_id"), col("metric"))
       .agg(min(unix_timestamp(col("ts").cast("timestamp"))).as("t0"),
         max(unix_timestamp(col("ts").cast("timestamp"))).as("t1"))
-    spans
-      .repartition(n, col("conv_id"), col("metric"))
       .withColumn("lo", expr(s"CAST(ceil(t0 / $strideSec) AS BIGINT) * $strideSec"))
       // floor (not DIV, which truncates toward zero): a negative numerator
       // — span shorter than one window near epoch 0 — must round DOWN so
@@ -74,9 +89,7 @@ object Correlate {
       // it with fabricated zero fill beyond the series end
       .withColumn("hi", expr(s"CAST(floor((t1 - $windowSec + $stepSec) / $strideSec) AS BIGINT) * $strideSec"))
       .where(col("lo") <= col("hi")) // alignment can leave no valid window
-      .select(col("conv_id"), col("metric"),
-        explode(expr(s"sequence(lo, hi, $strideSec)")).as("win_start_s"))
-  }
+      .select(col("conv_id"), col("metric"), col("lo"), col("hi"))
 
   /** The complete windows of the gap-filled series, one row per
     * [[candidates]] row: (conv_id, metric, win_start, values), `values` the
@@ -111,10 +124,11 @@ object Correlate {
         ((col("win_start_s") + windowSec - blockSec) * 1000000L).as("pos"),
         lit(Marker).as("side"), lit(null).cast("array<struct<idx:int,v:float>>").as("pts"))
     // the blocks cross the exchange sparse and the codegen'd DensifyFloat
-    // runs after it (a marker's null pts gives zeros the walk ignores):
-    // right after the block aggregate the optimizer would fold it into the
+    // runs after it, on block rows only (a marker carries no block): right
+    // after the block aggregate the optimizer would fold it into the
     // aggregate, out of the PlanSpec gates' sight
-    val values = graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt)
+    val values = when(col("side") =!= Marker,
+      graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt))
     walk(blocks.unionByName(markers), values, sides = 1,
         perWindow = (windowSec / blockSec).toInt, blockSec, (windowSec / stepSec).toInt,
         marked = true) { (conv, metric, w0, win) =>
@@ -272,22 +286,23 @@ object Correlate {
   }
 
   /** The CC cells of a work list: one row per (conv_a, conv_b, metric,
-    * win_start) of `cells`, each window a complete one of both sides'
-    * `series` (the CC job passes its pending cells, drawn from
-    * [[candidates]]). `series` may be sparse (occupied buckets only): a
-    * grid point or block it lacks is zero.
+    * win_start) of `cells.df`, each window a complete one of both sides'
+    * `series` (the CC job passes its pending cells, planned from
+    * [[bounds]]). `series` may be sparse (occupied buckets only): a grid
+    * point or block it lacks is zero.
     *
     * The series is densified once into blocks of gcd(window, stride)
     * seconds, keyed by (conv_id, metric, block start) — floored, so
     * pre-epoch blocks hold their own points. The blocks are tagged with
-    * every (pair, side) they serve and unioned with one marker per cell; the
-    * walk builds each marked window from its window/block consecutive
-    * blocks. Same per-cell result as [[windows]] → [[ccPairs]] restricted
-    * to `cells` (OpsSpec and PipelineSpec check both against `Ref.ccPairs`).
+    * every (pair, side) of `cells.pairs` they serve and unioned with one
+    * marker per cell; the walk builds each marked window from its
+    * window/block consecutive blocks. Same per-cell result as [[windows]] →
+    * [[ccPairs]] restricted to the cells (OpsSpec and PipelineSpec check
+    * both against `Ref.ccPairs`).
     */
   def ccCells(
       series: DataFrame,
-      cells: DataFrame,
+      cells: Cells,
       windowSec: Long,
       strideSec: Long,
       stepSec: Long,
@@ -299,23 +314,27 @@ object Correlate {
     val spark = series.sparkSession
     import spark.implicits._
     val blockSec = BigInt(windowSec).gcd(BigInt(strideSec)).toLong
-    // the distinct pairs are collected once, as any broadcast collects its
-    // table: both joins below then broadcast a local table, and neither
-    // re-runs the distinct over the cells
-    val pairs = cells.select(col("conv_a"), col("conv_b")).distinct()
-      .as[(String, String)].collect().toSeq.toDF("conv_a", "conv_b")
-    val sides = broadcast(pairSides(pairs))
+    // both joins below broadcast the driver's pair list, a local table
+    val sides = broadcast(pairSides(cells.pairs.map(_._1).toDF("conv_a", "conv_b")))
     val blocks = blocksOf(series.join(sides, Seq("conv_id"), "left_semi"), blockSec, stepSec)
       .join(sides, Seq("conv_id"))
       .select(col("pair"), col("metric"), (col("block_s") * 1000000L).as("pos"), col("side"),
         graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt).as("values"))
     // a marker sorts after its window's LAST block
-    val markers = cells.select(pairId.as("pair"), col("metric"),
+    val markers = cells.df.select(pairId.as("pair"), col("metric"),
       (unix_micros(col("win_start")) + (windowSec - blockSec) * 1000000L).as("pos"),
       lit(Marker).as("side"), lit(null).cast("array<float>").as("values"))
     walk(blocks.unionByName(markers), col("values"), sides = 2,
       perWindow = (windowSec / blockSec).toInt, blockSec, (windowSec / stepSec).toInt, marked = true)(
       kernelRow(_, _, _, _, stepSec, windowSec, normalize, clipLagSec, hashInputs))
+  }
+
+  /** Cells to correlate: `df` holds one row (conv_a, conv_b, metric,
+    * win_start) per cell, distributed; `pairs` holds, on the driver, each
+    * distinct (conv_a, conv_b) of `df` with its cell count.
+    */
+  final case class Cells(df: DataFrame, pairs: Seq[((String, String), Long)]) {
+    def count: Long = pairs.map(_._2).sum
   }
 
   /** The nonzero points of `series` in blocks of `blockSec` seconds:

@@ -187,4 +187,91 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     assert(got.length == 1)
     assert(got(0).getAs[Byte]("status") == 1 && got(0).getAs[Double]("cc_max") == 1.0)
   }
+
+  test("job count: a fresh run and a nothing-pending resume stay under their Spark job ceilings, one spans pass each") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // stored inputs, as the CLI and the benchmark pass them; their schema is
+    // read here, outside the counted runs
+    val in = java.nio.file.Files.createTempDirectory("cc-jobs-in").toString
+    Transcripts.generate(spark, 8, 150).toDF().write.parquet(s"$in/t")
+    Seq(("conv-000000", "conv-000001"), ("conv-000002", "conv-000003"), ("conv-000001", "conv-000006"))
+      .toDF("conv_a", "conv_b").write.parquet(s"$in/pairs")
+    val (transcripts, pairs) = (spark.read.parquet(s"$in/t"), spark.read.parquet(s"$in/pairs"))
+    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 900)
+    val dir = java.nio.file.Files.createTempDirectory("cc-jobs").toString
+
+    val marker = "job_count_marker"
+    @volatile var markerSeen = false
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(marker) != null)) markerSeen = true
+        else jobs.incrementAndGet()
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val planListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = plans.add(qe)
+    }
+    // the spans pass: the partial min/max of each (conv_id, metric) key's
+    // timestamps under the spans exchange, one plan node per exchange run —
+    // a reused exchange is not walked again, and a cached plan's nodes are
+    // the same objects in every plan that reads the cache
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def spansAggs(plan: SparkPlan): Seq[SparkPlan] = aqe.collect(plan) {
+      case h: HashAggregateExec if h.groupingExpressions.map(_.name) == Seq("conv_id", "metric") &&
+          h.aggregateExpressions.exists(e => e.mode == Partial && e.aggregateFunction.isInstanceOf[Min]) => Seq(h)
+      case c: InMemoryTableScanExec => spansAggs(c.relation.cachedPlan)
+    }.flatten
+    /** Spark jobs and spans passes of one `ProcessJob.run`. */
+    def counted(run: => ProcessJob.Stats): (ProcessJob.Stats, Int, Int) = {
+      jobs.set(0); plans.clear(); markerSeen = false
+      spark.sparkContext.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      try {
+        val st = run
+        // listener events arrive in order: once the marker job and query are
+        // seen, every job and plan of the run has been delivered
+        spark.sparkContext.setLocalProperty(marker, "1")
+        try spark.range(0, 1, 1, 1).toDF(marker).collect()
+        finally spark.sparkContext.setLocalProperty(marker, null)
+        val deadline = System.nanoTime() + 60000000000L
+        while (!markerSeen || !plans.toArray.exists(_.asInstanceOf[QueryExecution].analyzed.output.exists(_.name == marker)))
+          if (System.nanoTime() > deadline) fail("the marker never reached the listeners")
+          else Thread.sleep(50)
+        val aggs = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+        plans.toArray.map(_.asInstanceOf[QueryExecution])
+          .filterNot(_.analyzed.output.exists(_.name == marker))
+          .foreach(qe => spansAggs(qe.executedPlan).foreach(aggs.add))
+        val passes = aggs.size
+        (st, jobs.get(), passes)
+      } finally {
+        spark.sparkContext.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
+    }
+    val (fresh, freshJobs, freshPasses) = counted(ProcessJob.run(spark, transcripts, pairs, dir, cfg))
+    assert(fresh.total > 0 && fresh.written == fresh.total, s"$fresh")
+    val (resume, resumeJobs, resumePasses) = counted(ProcessJob.run(spark, transcripts, pairs, dir, cfg))
+    assert(resume.total == fresh.total && resume.pending == 0, s"$resume")
+    assert(freshJobs <= FreshJobs, s"a fresh run ran $freshJobs Spark jobs, ceiling $FreshJobs")
+    assert(resumeJobs <= ResumeJobs, s"a nothing-pending resume ran $resumeJobs Spark jobs, ceiling $ResumeJobs")
+    assert(freshPasses == 1 && resumePasses == 1,
+      s"spans exchange runs: fresh $freshPasses, resume $resumePasses; want one each")
+  }
+
+  /** Spark jobs of `ProcessJob.run` over stored inputs whose schema was
+    * already read: a fresh run (the pair list, the spans pass over the cached
+    * series, the CC write and the manifest write) and a resume with nothing
+    * pending (the pair list, the spans pass and the manifest anti-join).
+    */
+  private val FreshJobs = 12
+  private val ResumeJobs = 7
 }
