@@ -314,10 +314,11 @@ object Correlate {
     val spark = series.sparkSession
     import spark.implicits._
     val blockSec = BigInt(windowSec).gcd(BigInt(strideSec)).toLong
-    // both joins below broadcast the driver's pair list, a local table
-    val sides = broadcast(pairSides(cells.pairs.map(_._1).toDF("conv_a", "conv_b")))
-    val blocks = blocksOf(series.join(sides, Seq("conv_id"), "left_semi"), blockSec, stepSec)
-      .join(sides, Seq("conv_id"))
+    // the driver's pair list filters the series and, broadcast, tags the blocks
+    val pairs = cells.pairs.map(_._1)
+    val convs = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    val blocks = blocksOf(series.where(col("conv_id").isin(convs: _*)), blockSec, stepSec)
+      .join(broadcast(pairSides(pairs.toDF("conv_a", "conv_b"))), Seq("conv_id"))
       .select(col("pair"), col("metric"), (col("block_s") * 1000000L).as("pos"), col("side"),
         graft.functions.DensifyFloat(col("pts"), (blockSec / stepSec).toInt).as("values"))
     // a marker sorts after its window's LAST block

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp
 import org.apache.spark.sql.functions._
 import graft.codec.{ChunkBlob, Lttb}
 
@@ -14,11 +14,13 @@ import graft.codec.{ChunkBlob, Lttb}
   * so results are partitioning-invariant; sums are integral-valued doubles
   * (see Ingest) and therefore order-independent.
   *
-  * All aggregations are plain `groupBy().agg()` — Spark's partial/final
+  * The tier stats are plain `groupBy().agg()` — Spark's partial/final
   * (map-side combine) aggregation handles skewed hot conv_ids without an
   * explicit salt; the shuffle key (conv_id, metric, chunk) has per-key
   * cardinality bounded by the tier ratio (60 / 24), so no single reducer
   * key can exceed that bound regardless of how hot a conversation is.
+  * The chunk blobs and LTTB keepers, which need each group's points in ts
+  * order, come from one sorted group walk ([[groupWalk]]) instead.
   */
 object Rollup {
 
@@ -198,94 +200,63 @@ object Rollup {
 
   // Timestamps are stored in blobs at MICROsecond precision (the
   // parquet/Spark timestamp resolution) so decode(encode(x)) == x exactly;
-  // micros stay longs end-to-end (unix_micros in, timestamp_micros /
-  // ChunkDecode out).
+  // micros stay longs through the walk (unix_micros in, ChunkDecode out).
 
-  /** One (epoch-micros, value) input row of the typed aggregators. Spark
-    * builds a case class of primitives without boxing its fields, which it
-    * does for a `(Long, Double)` tuple on every row.
+  /** The sorted group walk behind [[toChunks]] and [[lttbTier]]: the
+    * (conv_id, metric, ts, value) `points` move through one
+    * `repartition(n, conv_id, metric, chunk)`, `chunk` being the
+    * timestamp `group` (a chunk start, or a constant for one group per
+    * key) in epoch µs, and are sorted by (conv_id, metric, chunk, ts)
+    * within each partition; each partition then walks its groups in that
+    * order and hands `emit` the key, the chunk and the group's points as
+    * two primitive arrays in ascending ts order. No per-group aggregation
+    * buffer is serialized (an ordered walk instead of per-group buffers,
+    * as in `Correlate`'s block walk). The partition count is explicit (as
+    * in `Ingest.series`): AQE must not coalesce the encode / LTTB stage
+    * onto one task.
     */
-  final case class TsValue(ts: Long, value: Double)
-
-  /** Primitive-array (ts, value) accumulator for [[ChunkEncodeAgg]]:
-    * amortized-doubling appends, merged by concatenation, sorted once at
-    * finish. Bounded by points-per-chunk (unit / grid step), like the
-    * collect_list buffer it replaces — but holding two primitive arrays
-    * instead of boxed Rows.
-    */
-  final case class ChunkAcc(var ts: Array[Long], var vs: Array[Double], var n: Int) {
-    private def reserve(need: Int): Unit =
-      if (need > ts.length) {
-        val cap = math.max(ts.length * 2, need)
-        ts = java.util.Arrays.copyOf(ts, cap)
-        vs = java.util.Arrays.copyOf(vs, cap)
+  private def groupWalk[T: Encoder](points: DataFrame, group: Column)(
+      emit: (String, String, Long, Array[Long], Array[Double]) => IterableOnce[T]): Dataset[T] = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val n = spark.sessionState.conf.numShufflePartitions
+    points
+      .select(col("conv_id"), col("metric"), unix_micros(group.cast("timestamp")).as("chunk"),
+        unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
+      .repartition(n, col("conv_id"), col("metric"), col("chunk"))
+      .sortWithinPartitions("conv_id", "metric", "chunk", "ts_us")
+      .as[(String, String, Long, Long, Double)]
+      .mapPartitions { it =>
+        val rows = it.buffered
+        var ts = new Array[Long](1024)
+        var vs = new Array[Double](1024)
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+          val (k, m, g, _, _) = rows.head
+          var len = 0
+          while (rows.hasNext && rows.head._3 == g && rows.head._1 == k && rows.head._2 == m) {
+            val (_, _, _, t, v) = rows.next()
+            if (len == ts.length) {
+              ts = java.util.Arrays.copyOf(ts, 2 * len)
+              vs = java.util.Arrays.copyOf(vs, 2 * len)
+            }
+            ts(len) = t; vs(len) = v; len += 1
+          }
+          emit(k, m, g, java.util.Arrays.copyOf(ts, len), java.util.Arrays.copyOf(vs, len))
+        }
       }
-
-    def append(p: TsValue): ChunkAcc = {
-      reserve(n + 1)
-      ts(n) = p.ts; vs(n) = p.value; n += 1
-      this
-    }
-
-    /** Concatenate `o`'s points after this buffer's, growing at most once. */
-    def appendAll(o: ChunkAcc): ChunkAcc = {
-      reserve(n + o.n)
-      System.arraycopy(o.ts, 0, ts, n, o.n)
-      System.arraycopy(o.vs, 0, vs, n, o.n)
-      n += o.n
-      this
-    }
-
-    /** The `n` points in ascending ts order, ties in append order. The ts
-      * sort as primitives and each value goes to the next free slot of its
-      * ts run: a `sortBy` on indices would box every key it compares.
-      */
-    def sorted: (Array[Long], Array[Double]) = {
-      val st = java.util.Arrays.copyOf(ts, n)
-      java.util.Arrays.sort(st)
-      val sv = new Array[Double](n)
-      val used = new Array[Int](n) // slots taken in the run that starts at each index
-      for (i <- 0 until n) {
-        var lo = 0; var hi = n // the first index of ts(i)'s run
-        while (lo < hi) { val m = (lo + hi) >>> 1; if (st(m) < ts(i)) lo = m + 1 else hi = m }
-        sv(lo + used(lo)) = vs(i); used(lo) += 1
-      }
-      (st, sv)
-    }
-  }
-
-  /** Typed Aggregator building the Gorilla chunk blob from (epoch-micros,
-    * value) input rows — the SURVEY §7.3 shape: no `collect_list` of boxed
-    * Rows, no Scala UDF on the encode path, no java.sql.Timestamp boxing
-    * (micros stay longs end-to-end, mirroring the ChunkDecode read path).
-    * Encoding still happens once per chunk at `finish` on the ts-sorted
-    * arrays, so blobs are byte-identical to the previous
-    * array_sort(collect_list)+UDF form (q22's round-trip gate).
-    */
-  object ChunkEncodeAgg extends Aggregator[TsValue, ChunkAcc, Array[Byte]] {
-    def zero: ChunkAcc = ChunkAcc(new Array[Long](8), new Array[Double](8), 0)
-    def reduce(b: ChunkAcc, a: TsValue): ChunkAcc = b.append(a)
-    def merge(b1: ChunkAcc, b2: ChunkAcc): ChunkAcc = b1.appendAll(b2)
-    def finish(b: ChunkAcc): Array[Byte] = {
-      val (ts, vs) = b.sorted
-      ChunkBlob.encode(ts, vs)
-    }
-    def bufferEncoder: Encoder[ChunkAcc] = Encoders.product[ChunkAcc]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
   /** Chunked storage form: per (conv, metric, `unit` chunk) the raw grid
     * points delta-of-delta + Gorilla compressed into one binary blob
-    * (Gorilla §4.1, public algorithm — see graft.codec) by the typed
-    * [[ChunkEncodeAgg]].
+    * (Gorilla §4.1, public algorithm — see graft.codec), encoded from the
+    * chunk's ts-sorted points by [[groupWalk]].
     */
   def toChunks(points: DataFrame, unit: String): DataFrame = {
-    val enc = udaf(ChunkEncodeAgg)
-    points
-      .groupBy(col("conv_id"), col("metric"), date_trunc(unit, col("ts")).as("chunk_start"))
-      .agg(
-        count(lit(1)).cast("int").as("n_points"),
-        enc(unix_micros(col("ts").cast("timestamp")), col("value")).as("chunk_blob"))
+    val spark = points.sparkSession
+    import spark.implicits._
+    groupWalk(points, date_trunc(unit, col("ts"))) { (k, m, chunk, ts, vs) =>
+      Iterator.single((k, m, toJavaTimestamp(chunk), ts.length, ChunkBlob.encode(ts, vs)))
+    }.toDF("conv_id", "metric", "chunk_start", "n_points", "chunk_blob")
   }
 
   /** Explode chunk blobs back into (conv_id, metric, ts, value) points.
@@ -301,57 +272,32 @@ object Rollup {
       )
       .select(col("conv_id"), col("metric"), col("pt.ts").as("ts"), col("pt.value").as("value"))
 
-  /** LTTB keeper arrays — [[LttbAgg]]'s output (parallel ts/value arrays,
-    * exploded back to rows by the caller).
-    */
-  final case class LttbPts(ts: Array[Long], vs: Array[Double])
-
-  /** Typed Aggregator for one LTTB pass: accumulate (epoch-micros, value)
-    * into the same primitive buffer as [[ChunkEncodeAgg]], sort once at
-    * finish, downsample. Replaces the r1-r3 array_sort(collect_list(
-    * struct))+UDF stage — same keeper selection, no Row boxing.
-    */
-  final case class LttbAgg(threshold: Int) extends Aggregator[TsValue, ChunkAcc, LttbPts] {
-    def zero: ChunkAcc = ChunkEncodeAgg.zero
-    def reduce(b: ChunkAcc, a: TsValue): ChunkAcc = b.append(a)
-    def merge(b1: ChunkAcc, b2: ChunkAcc): ChunkAcc = b1.appendAll(b2)
-    def finish(b: ChunkAcc): LttbPts = {
-      val (ts, vs) = b.sorted
-      val (dt, dv) = Lttb.downsample(ts, vs, threshold)
-      LttbPts(dt, dv)
-    }
-    def bufferEncoder: Encoder[ChunkAcc] = Encoders.product[ChunkAcc]
-    def outputEncoder: Encoder[LttbPts] = Encoders.product[LttbPts]
-  }
-
   /** LTTB visualization tier: at most `threshold` points per (conv, metric),
-    * computed hierarchically so no aggregation buffer ever holds a key's
-    * full history:
+    * computed hierarchically so no task holds a key's full history:
     *
-    *  stage 1 — LTTB per (conv, metric, day) down to at most
-    *            `threshold` keepers (buffer ≤ points-per-day: bounded by
-    *            the day over the grid step, not by key history);
-    *  stage 2 — LTTB the concatenated keepers down to `threshold`
-    *            (buffer ≤ n_chunks · threshold).
+    *  stage 1 — LTTB per (conv, metric, UTC day) down to at most
+    *            `threshold` keepers (a group ≤ points-per-day: bounded by
+    *            the day over the grid step, not by key history; a hot
+    *            key's days still hash apart over the tasks);
+    *  stage 2 — LTTB each key's concatenated keepers down to `threshold`
+    *            (≤ n_days · threshold points).
     *
-    * LTTB keeps first/last per input, so chunk boundaries survive into
+    * LTTB keeps first/last per input, so day boundaries survive into
     * stage 2 and the global first/last are exact. The keeper count per key
     * equals the single-pass count (min(threshold, n_points)); the selected
     * interior points are the hierarchical approximation standard for
-    * streaming LTTB. Both passes run through the typed [[LttbAgg]].
+    * streaming LTTB. Both stages are one [[groupWalk]].
     */
   def lttbTier(points: DataFrame, threshold: Int): DataFrame = {
-    val ds = udaf(LttbAgg(threshold))
-    def pass(df: DataFrame, grouping: Seq[org.apache.spark.sql.Column]): DataFrame =
-      df.groupBy(grouping: _*)
-        .agg(ds(unix_micros(col("ts").cast("timestamp")), col("value")).as("pts"))
-        .select(col("conv_id"), col("metric"),
-          explode(arrays_zip(col("pts.ts").as("ts"), col("pts.vs").as("vs"))).as("pt"))
-        .select(col("conv_id"), col("metric"),
-          timestamp_micros(col("pt.ts")).as("ts"), col("pt.vs").as("value"))
-    val stage1 = pass(points,
-      Seq(col("conv_id"), col("metric"), date_trunc("day", col("ts")).as("chunk")))
-    pass(stage1, Seq(col("conv_id"), col("metric")))
+    val spark = points.sparkSession
+    import spark.implicits._
+    def pass(df: DataFrame, group: Column): DataFrame =
+      groupWalk(df, group) { (k, m, _, ts, vs) =>
+        val (kt, kv) = Lttb.downsample(ts, vs, threshold)
+        // a Timestamp and a boxed Double keep both output columns nullable
+        Iterator.tabulate(kt.length)(i => (k, m, toJavaTimestamp(kt(i)), Double.box(kv(i))))
+      }.toDF("conv_id", "metric", "ts", "value")
+    pass(pass(points, date_trunc("day", col("ts"))), lit(0L))
   }
 
   /** M4 visualization downsampler (Jugel et al., VLDB 2014): per key,

@@ -147,21 +147,44 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(Rollup.lttbTier(few, 100).count() == 20)
   }
 
-  test("ChunkAcc: appendAll concatenates; sorted == a stable sortBy on ts, ties in append order") {
-    import graft.ops.Rollup.{ChunkAcc, ChunkEncodeAgg, TsValue}
-    val rng = new java.util.Random(17)
-    for (n <- Seq(0, 1, 2, 7, 64, 1000)) {
-      // few distinct ts, so ties are common; values record the append order
-      val ts = Array.fill(n)(rng.nextInt(math.max(1, n / 3)).toLong - 5L)
-      val a = ChunkEncodeAgg.zero
-      val b = ChunkEncodeAgg.zero
-      (0 until n).foreach(i => (if (i % 3 == 0) a else b).append(TsValue(ts(i), i.toDouble)))
-      val both = a.appendAll(b)
-      val order = (0 until n).filter(_ % 3 == 0) ++ (0 until n).filter(_ % 3 != 0)
-      assert(both.n == n && both.vs.take(n).toSeq == order.map(_.toDouble), s"n=$n")
-      val want = order.sortBy(ts(_))
-      val (st, sv) = both.sorted
-      assert(st.toSeq == want.map(ts(_)) && sv.toSeq == want.map(_.toDouble), s"n=$n")
+  test("toChunks and lttbTier equal the single-node definition: byte-identical blobs, identical keepers, pre-epoch too") {
+    import spark.implicits._
+    import graft.codec.{ChunkBlob, Lttb}
+    import graft.ops.Rollup
+    import graft.refimpl.Ref
+    val dayMs = 86400000L
+    for (start <- Seq(1704067200L, -3L * 86400 - 1234)) {
+      val pts = Ref.series(Transcripts.generateLocal(10, 300, hotConvs = 1, hotFactor = 20,
+        seed = 5L, startEpochSec = start), 60)
+      val df = pts.map(p => (p.convId, p.metric, new java.sql.Timestamp(p.tsMs), p.value))
+        .toDF("conv_id", "metric", "ts", "value").repartition(7)
+      // per (conv, metric, UTC day), the ts-sorted points as (µs, value)
+      val days = pts.groupBy(p => (p.convId, p.metric, Math.floorDiv(p.tsMs, dayMs) * dayMs))
+        .map { case (k, ps) => val s = ps.sortBy(_.tsMs); k -> (s.map(_.tsMs * 1000L).toArray, s.map(_.value).toArray) }
+      assert(days.keys.groupBy(k => (k._1, k._2)).values.exists(_.size >= 3),
+        s"start=$start: no key spans several days")
+
+      val blobs = Rollup.toChunks(df, "day").collect().map(r =>
+        (r.getString(0), r.getString(1), r.getTimestamp(2).getTime) -> (r.getInt(3), r.getAs[Array[Byte]](4))).toMap
+      assert(blobs.keySet == days.keySet, s"start=$start: chunk keys differ")
+      days.foreach { case (k, (ts, vs)) =>
+        assert(blobs(k)._1 == ts.length && java.util.Arrays.equals(blobs(k)._2, ChunkBlob.encode(ts, vs)),
+          s"start=$start: chunk $k differs")
+      }
+
+      for (threshold <- Seq(50, 1000)) {
+        // LTTB per day, then per key over the days' keepers in day order
+        val want = days.toSeq.groupBy(e => (e._1._1, e._1._2)).map { case (key, ds) =>
+          val kept = ds.sortBy(_._1._3).map { case (_, (ts, vs)) => Lttb.downsample(ts, vs, threshold) }
+          val (kt, kv) = Lttb.downsample(kept.flatMap(_._1.toSeq).toArray, kept.flatMap(_._2.toSeq).toArray, threshold)
+          key -> kt.toSeq.zip(kv.toSeq.map(java.lang.Double.doubleToRawLongBits))
+        }
+        val got = Rollup.lttbTier(df, threshold).select(col("conv_id"), col("metric"),
+            unix_micros(col("ts")), col("value")).as[(String, String, Long, Double)].collect()
+          .groupBy(r => (r._1, r._2))
+          .map { case (key, rs) => key -> rs.toSeq.sortBy(_._3).map(r => (r._3, java.lang.Double.doubleToRawLongBits(r._4))) }
+        assert(got == want, s"start=$start threshold=$threshold: keepers differ")
+      }
     }
   }
 

@@ -136,15 +136,34 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(Correlate.allPairs(s, maxConvs = 12).count() == 12L * 11 / 2)
   }
 
-  test("toChunks: typed Aggregator encode — object hash agg, no Scala UDF, no collect_list") {
+  test("toChunks: one explicit-count group-walk exchange — no typed aggregate, no Scala UDF, no collect_list") {
     import spark.implicits._
     val t = Transcripts.generate(spark, 4, 60).toDF()
     val df = graft.ops.Rollup.toChunks(Ingest.series(t, 60), "hour")
     df.collect()
     val p = plan(df)
-    assert(p.contains("ObjectHashAggregate"), s"encode agg not object-hash:\n$p")
+    assert(!p.contains("ObjectHashAggregate") && !p.contains("SortAggregate"),
+      s"typed aggregate on the encode path:\n$p")
+    // the walk's exchange is keyed by (conv_id, metric, chunk) and its
+    // partition count is fixed (AQE may not coalesce the encode stage)
+    assert("Exchange hashpartitioning\\(conv_id#\\d+, metric#\\d+, chunk#\\d+L, 4\\), REPARTITION_BY_NUM".r
+      .findFirstIn(p).isDefined, s"no explicit-count (conv_id, metric, chunk) exchange:\n$p")
     assert(!p.contains("UDF("), s"Scala UDF on the encode path:\n$p")
     assert(!p.contains("collect_list"), s"boxed-Row collect_list is back:\n$p")
+  }
+
+  test("lttbTier: two explicit-count group-walk exchanges (per day, then per key), no typed aggregate") {
+    import spark.implicits._
+    val t = Transcripts.generate(spark, 4, 60).toDF()
+    // the initial plan, which lists each exchange once
+    val p = plan(graft.ops.Rollup.lttbTier(Ingest.series(t, 60), 20))
+    assert(!p.contains("ObjectHashAggregate") && !p.contains("SortAggregate"),
+      s"typed aggregate on the LTTB path:\n$p")
+    // the per-key pass's chunk is the constant 0, folded into the exchange
+    val walks = "Exchange hashpartitioning\\(conv_id#\\d+, metric#\\d+, (chunk#\\d+L|0), 4\\), REPARTITION_BY_NUM".r
+      .findAllMatchIn(p).map(_.group(1).take(5)).toSeq.sorted
+    assert(walks == Seq("0", "chunk"), s"want one explicit-count exchange per pass, per day then per key:\n$p")
+    assert(!p.contains("UDF("), s"Scala UDF on the LTTB path:\n$p")
   }
 
   test("dedup clusters: star-contraction rounds are equi-joins, never cartesian") {
