@@ -532,8 +532,9 @@ object Scaling {
          |transfers to a real 4x-executor cluster, where each executor brings
          |its own cores, clocks, memory bandwidth and shuffle disks and the
          |floors themselves scale near-linearly.
-         |Skew handling (hot conv_ids spread by salted repartition before the
-         |row-exploding stages) is in the measured path.
+         |Skew handling (hot conv_ids combined map-side by the bucket aggregate,
+         |so the gap-fill explodes span/step rows per conversation) is in the
+         |measured path.
          |""".stripMargin
 
     Files.createDirectories(Paths.get("BENCH"))

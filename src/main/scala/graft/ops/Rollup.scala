@@ -14,9 +14,10 @@ import graft.codec.{ChunkBlob, Lttb}
   * so results are partitioning-invariant; sums are integral-valued doubles
   * (see Ingest) and therefore order-independent.
   *
-  * The tier stats are plain `groupBy().agg()` — Spark's partial/final
-  * (map-side combine) aggregation handles skewed hot conv_ids without an
-  * explicit salt; the shuffle key (conv_id, metric, chunk) has per-key
+  * The tier stats are plain `groupBy().agg()` with no salt: tier-1 runs
+  * partition-locally on the gap-filled grid (`Ingest.fill`, hash-partitioned
+  * by conv_id), whose rows per conversation are its span over the step, not
+  * its turn count; each fold's key (conv_id, metric, chunk) has per-key
   * cardinality bounded by the tier ratio (60 / 24), so no single reducer
   * key can exceed that bound regardless of how hot a conversation is.
   * The chunk blobs and LTTB keepers, which need each group's points in ts
@@ -97,98 +98,14 @@ object Rollup {
   private[graft] def floorDiv(a: String, b: Long): String =
     s"(($a) DIV $b + (CASE WHEN ($a) % $b < 0 THEN -1 ELSE 0 END))"
 
-  /** Tier-1 directly from OCCUPIED buckets (`Ingest.bucketed` output) —
-    * bitwise-identical to `fromPoints(Ingest.series(t, step), unit)` (
-    * asserted in OpsSpec) but the shuffle carries per-cell PARTIALS instead
-    * of exploded grid points: a "run" is one occupied bucket + its
-    * zero-fill range (the gap-fill unit of Ingest.series); every run holds
-    * exactly ONE nonzero point plus zeros, so each cell's contribution is
-    * closed-form and the gap-fill zeros never materialize as rows. Shuffle
-    * rows ∝ cells touched (each carrying BOTH metrics), not grid points ×
-    * metrics.
-    *
-    * The per-(run, cell) partials are pure codegen'd SQL (explode +
-    * integer CASE arithmetic): an earlier typed flatMap emitting a
-    * 15-field case class paid object ser/de plus per-run allocations,
-    * which dominated the stage AND scaled sub-linearly with threads
-    * (allocation-rate contention in one JVM).
+  /** Tier-1 from OCCUPIED buckets (`Ingest.bucketed` output): [[fromPoints]]
+    * over their gap-filled grid (`Ingest.fill`, the one gap-fill), so it
+    * equals `fromPoints(Ingest.series(t, step), unit)`. The fill's output
+    * is hash-partitioned by conv_id, so the aggregate adds no exchange.
     */
   def tier1FromBuckets(bucketed: DataFrame, stepSec: Long, unit: String): DataFrame = {
-    val spark = bucketed.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val stepUs = stepSec * 1000000L
-    val unitUs = tierOf(unit).stepSec * 1000000L
-    require(unitUs % stepUs == 0, "grid step must divide the rollup unit")
-    val n = spark.sessionState.conf.numShufflePartitions
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("own_us"))
-    val runs = bucketed
-      .repartition(n, col("conv_id"))
-      .select(col("conv_id"),
-        unix_micros(col("ts").cast("timestamp")).as("own_us"),
-        col("turn_rate"), col("token_volume"))
-      .withColumn("next_us", lead(col("own_us"), 1).over(w))
-
-    // grid points in the run; cells [c0, cLast] the run overlaps
-    val cells = runs
-      .withColumn("k", expr(s"coalesce((next_us - own_us) DIV $stepUs, 1L)"))
-      .withColumn("cell_us", explode(expr(
-        s"sequence(${floorDiv("own_us", unitUs)} * $unitUs, " +
-          s"${floorDiv(s"own_us + (k - 1) * $stepUs", unitUs)} * $unitUs, $unitUs)")))
-      // run-grid indices covered by this cell: ilo = ceil((c-own)/step)
-      // clamped at 0 (greatest() also absorbs DIV's toward-zero truncation:
-      // a negative numerator means the true ilo <= 0), ihi = last index
-      // before the next cell (numerator >= 0 by construction)
-      .withColumn("ilo", expr(s"greatest(0L, (cell_us - own_us + ${stepUs - 1}) DIV $stepUs)"))
-      .withColumn("ihi", expr(s"least(k - 1, (cell_us + ${unitUs - 1} - own_us) DIV $stepUs)"))
-
-    // per-cell closed-form stats: the run's single nonzero point is index 0
-    def stats(v: String, p: String) = Seq(
-      expr(s"CASE WHEN ilo = 0 THEN $v ELSE 0D END").as(s"${p}_sum"),
-      expr(s"CASE WHEN ilo = 0 AND ihi = 0 THEN $v WHEN ilo = 0 THEN least($v, 0D) ELSE 0D END").as(s"${p}_min"),
-      expr(s"CASE WHEN ilo = 0 AND ihi = 0 THEN $v WHEN ilo = 0 THEN greatest($v, 0D) ELSE 0D END").as(s"${p}_max"),
-      expr(s"CASE WHEN ilo = 0 THEN $v ELSE 0D END").as(s"${p}_first"),
-      expr(s"CASE WHEN ihi = 0 THEN $v ELSE 0D END").as(s"${p}_last"))
-    val partials = cells.select(
-      Seq(col("conv_id"), col("cell_us"),
-        expr("ihi - ilo + 1").as("n"),
-        expr(s"own_us + ilo * $stepUs").as("min_ts"),
-        expr(s"own_us + ihi * $stepUs").as("max_ts")) ++
-        stats("turn_rate", "tr") ++ stats("token_volume", "tv"): _*)
-
-    // unit == step degenerates: every cell is exactly ONE grid point of
-    // exactly one run (cells never straddle runs), so the partial row IS
-    // the final cell and the merge aggregation — a hash map over #cells
-    // keys with zero reduction (every group has one row) — is pure
-    // overhead. This is the benched 60 s grid → 1 m tier shape.
-    val merged =
-      if (unitUs == stepUs)
-        partials.select(col("conv_id"), col("cell_us"), col("n"),
-          col("tr_sum"), col("tr_min"), col("tr_max"), col("tr_first"), col("tr_last"),
-          col("tv_sum"), col("tv_min"), col("tv_max"), col("tv_first"), col("tv_last"))
-      else partials
-        .groupBy(col("conv_id"), col("cell_us"))
-        .agg(
-          sum(col("n")).as("n"),
-          sum(col("tr_sum")).as("tr_sum"), min(col("tr_min")).as("tr_min"),
-          max(col("tr_max")).as("tr_max"),
-          min_by(col("tr_first"), col("min_ts")).as("tr_first"),
-          max_by(col("tr_last"), col("max_ts")).as("tr_last"),
-          sum(col("tv_sum")).as("tv_sum"), min(col("tv_min")).as("tv_min"),
-          max(col("tv_max")).as("tv_max"),
-          min_by(col("tv_first"), col("min_ts")).as("tv_first"),
-          max_by(col("tv_last"), col("max_ts")).as("tv_last"))
-    merged
-      .select(col("conv_id"),
-        expr("timestamp_micros(cell_us)").as("chunk_start"), col("n"),
-        col("tr_sum"), col("tr_min"), col("tr_max"), col("tr_first"), col("tr_last"),
-        col("tv_sum"), col("tv_min"), col("tv_max"), col("tv_first"), col("tv_last"))
-      .selectExpr("conv_id", "chunk_start", "n",
-        """stack(2,
-          | 'turn_rate', tr_sum, tr_min, tr_max, tr_first, tr_last,
-          | 'token_volume', tv_sum, tv_min, tv_max, tv_first, tv_last)
-          | as (metric, sum, min, max, first, last)""".stripMargin)
-      .select(col("conv_id"), col("metric"), col("chunk_start"),
-        col("n"), col("sum"), col("min"), col("max"), col("first"), col("last"))
+    require(tierOf(unit).stepSec % stepSec == 0, "grid step must divide the rollup unit")
+    fromPoints(Ingest.fill(bucketed, stepSec), unit)
   }
 
   /** The full [[ladder]] cascade (1m → 1h → 1d) from tier-0 grid points. */

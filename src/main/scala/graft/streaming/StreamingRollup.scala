@@ -29,8 +29,7 @@ object StreamingRollup {
     */
   def tier1Stats(transcripts: DataFrame, lateness: String = "5 minutes"): DataFrame =
     tier1m(transcripts, lateness)
-      .selectExpr("conv_id", "chunk_start",
-        "stack(2, 'turn_rate', turn_rate, 'token_volume', token_volume) as (metric, value)")
+      .selectExpr("conv_id", "chunk_start", Ingest.metricRows)
       .select(col("conv_id"), col("metric"), col("chunk_start"),
         lit(1L).as("n"), col("value").as("sum"), col("value").as("min"),
         col("value").as("max"), col("value").as("first"), col("value").as("last"))

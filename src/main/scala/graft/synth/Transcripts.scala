@@ -10,7 +10,7 @@ import graft.core.Transcript
   * generated rows are identical regardless of partitioning or parallelism —
   * the property the exact-match and scaling gates rely on. A configurable
   * head of "hot" conversations gets `hotFactor`× the turns, to exercise the
-  * salting / skew-mitigation paths demanded by the north rule.
+  * skew-handling paths demanded by the north rule.
   *
   * Row shape per BASELINE.json `input_hint`:
   * (conv_id string, turn_idx int, role string, text string, tool string,

@@ -699,6 +699,39 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(neg(0).keys.map(_._3).min == -dayMs - 60000L, "the -30 s turn opens the minute before")
   }
 
+  test("a turn with a null ts is dropped: rollup tiers and CC rows equal those without it") {
+    import spark.implicits._
+    import graft.core.Transcript
+    import graft.jobs.ProcessJob
+    import graft.ops.Rollup
+    val base = Transcripts.generateLocal(2, 150)
+    val withNull = base :+ Transcript(base.head.conv_id, 9999, "user", "w w w", "", null)
+    val pairs = Seq(("conv-000000", "conv-000001")).toDF("conv_a", "conv_b")
+    val cfg = ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 900)
+    // CLI rollup's tiers, then the CC job's rows, each as a comparable set
+    def outputs(t: Seq[Transcript]): (Seq[Set[String]], Set[String]) = {
+      val dir = java.nio.file.Files.createTempDirectory("null-ts").toString
+      spark.createDataset(t).write.parquet(s"$dir/in")
+      val props = new java.util.Properties()
+      Seq("input" -> s"$dir/in", "output" -> s"$dir/tiers", "step_sec" -> "60")
+        .foreach { case (k, v) => props.setProperty(k, v) }
+      cli.Main.rollup(spark, new cli.Main.Conf(props))
+      val tiers = Rollup.ladder.map(tier => spark.read.parquet(s"$dir/tiers/${tier.dir}")
+        .collect().map(_.mkString("|")).toSet)
+      ProcessJob.run(spark, spark.read.parquet(s"$dir/in"), pairs, s"$dir/cc", cfg)
+      val cc = ProcessJob.readCc(spark, s"$dir/cc").as[graft.core.CcRow].collect()
+        .map(r => Seq(r.pair, r.metric, r.win_start, r.cc.toSeq, r.status, r.shift, r.cc_max).mkString("|")).toSet
+      (tiers, cc)
+    }
+    val (tiers, cc) = outputs(base)
+    assert(tiers.forall(_.nonEmpty) && cc.nonEmpty, "empty fixture outputs")
+    val (tiersN, ccN) = outputs(withNull)
+    Rollup.ladder.zip(tiers.zip(tiersN)).foreach { case (tier, (a, b)) =>
+      assert(a == b, s"${tier.dir} differs with a null-ts turn: ${(a diff b).take(2)} vs ${(b diff a).take(2)}")
+    }
+    assert(cc == ccN, s"CC rows differ with a null-ts turn: ${(cc diff ccN).take(2)} vs ${(ccN diff cc).take(2)}")
+  }
+
   test("pre-epoch CC windows correlate like their shifted-positive twin, engine and reference") {
     import spark.implicits._
     import graft.core.Transcript

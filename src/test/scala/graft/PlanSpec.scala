@@ -166,6 +166,21 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(!p.contains("UDF("), s"Scala UDF on the LTTB path:\n$p")
   }
 
+  test("tier-1 over Ingest.series: the bucket exchange and one explicit-count conv_id exchange, none above the window") {
+    import spark.implicits._
+    val t = Transcripts.generate(spark, 4, 60, hotConvs = 1, hotFactor = 5).toDF()
+    // the initial plan, which lists each exchange once
+    val p = plan(graft.ops.Rollup.cascade(Ingest.series(t, 60))._1)
+    val exchanges = p.linesIterator.filter(_.matches(".*\\bExchange .*")).toSeq
+    assert(exchanges.size == 2, s"want the bucket aggregate's exchange and the fill's, got:\n$p")
+    assert("Exchange hashpartitioning\\(conv_id#\\d+, 4\\), REPARTITION_BY_NUM".r.findFirstIn(p).isDefined,
+      s"no explicit-count conv_id exchange before the fill's window:\n$p")
+    assert(!"hashpartitioning\\(conv_id#\\d+, ts#".r.findFirstIn(p).isDefined, s"the fill is salted by ts again:\n$p")
+    assert(p.contains("Window ["), s"no Window in the plan:\n$p")
+    assert(!p.linesIterator.takeWhile(!_.contains("Window [")).exists(_.contains("Exchange")),
+      s"an exchange above the fill's window:\n$p")
+  }
+
   test("dedup clusters: star-contraction rounds are equi-joins, never cartesian") {
     import spark.implicits._
     // capture the FIRST round's plan shape by running one large-star +
