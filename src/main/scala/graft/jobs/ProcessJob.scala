@@ -201,6 +201,8 @@ object ProcessJob {
       retryMissing: Boolean = false
   ): Stats = {
     import spark.implicits._
+    // a bad grid fails before any action, also when no cell is pending
+    Correlate.checkGrid(cfg.windowSec, cfg.strideSec, cfg.stepSec)
     val startedTs = new java.sql.Timestamp(System.currentTimeMillis())
     checkStoredConfig(spark, outDir, cfg.hash)
     val jobId = s"ccjob-${cfg.hash.take(12)}"

@@ -139,7 +139,7 @@ object Correlate {
   /** The grid the window operators assume: window and stride are whole
     * numbers of grid steps, and consecutive windows leave no gap.
     */
-  private def checkGrid(windowSec: Long, strideSec: Long, stepSec: Long): Unit = {
+  private[graft] def checkGrid(windowSec: Long, strideSec: Long, stepSec: Long): Unit = {
     require(windowSec % stepSec == 0, "window must be a multiple of the grid step")
     require(strideSec % stepSec == 0, "stride must be a multiple of the grid step")
     require(strideSec <= windowSec, "stride must not exceed the window (no gaps)")
@@ -168,8 +168,8 @@ object Correlate {
     * PRODUCTION CONTRACT: this is an O(n²) pair explosion and is therefore
     * GUARDED — above `maxConvs` distinct conversations it refuses and the
     * caller must supply an explicit pair table (or a pairing predicate such
-    * as the ring pairing Bench uses), exactly as the reference takes its
-    * pair list from explicit config
+    * as the ring pairing of pipebench's cc_batch), exactly as the reference
+    * takes its pair list from explicit config
     * (/root/reference/xcorr/scripts/cc.py:136-145). At corpus scale
     * (millions of conv_ids) the triangular self-join is a quadratic
     * candidate explosion before any kernel runs; no default should ever

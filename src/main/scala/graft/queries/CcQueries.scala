@@ -85,7 +85,7 @@ private[graft] trait CcQueries {
       // gap-fill (sparse window assembly must reconstruct the zeros
       // identically) and allPairs' triangular pair generation. The
       // transcripts variant of the same composition stays golden-tested
-      // in PipelineSpec and measured in Bench.ccThroughput/Scaling.
+      // in PipelineSpec; pipebench's cc_batch times the CC job over it.
       import s.implicits._
       val t = ev(s, d).where(col("user_id").isin(1L, 2L, 3L))
         .select(col("user_id").cast("string").as("conv_id"), col("ts"),

@@ -175,7 +175,7 @@ private[graft] trait SeriesQueries {
       // composition end-to-end (the oracle aggregates the raw events
       // directly; equal iff all three tier folds compose exactly —
       // the synthetic-transcript variant of this path stays golden-tested
-      // in PipelineSpec and measured in Bench)
+      // in PipelineSpec and timed by pipebench's rollup_batch)
       val pts = ev(s, d).select(col("user_id").cast("string").as("conv_id"),
         lit("value").as("metric"), col("ts"), col("value"))
       val (_, _, d1) = Rollup.cascade(pts)

@@ -205,18 +205,26 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(out.last.getTimestamp(2).getTime == (1704067200L + (n - 1) * 60) * 1000L)
   }
 
-  test("tier1FromBuckets == fromPoints(series) bitwise, at unit==step and unit>step") {
+  test("tier1FromBuckets == Ref.rollup(Ref.series) bitwise, at unit==step and unit>step") {
     import spark.implicits._
     import graft.ops.Rollup
-    val t = Transcripts.generate(spark, 8, 200, hotConvs = 1, hotFactor = 5).toDF()
+    import graft.refimpl.Ref
+    val turns = Transcripts.generateLocal(8, 200, hotConvs = 1, hotFactor = 5)
+    val t = spark.createDataset(turns).toDF()
+    // n and every double statistic as raw bits: -0.0 and NaN compare exactly
+    def bits(s: Ref.Stats): Seq[Long] =
+      s.n +: Seq(s.sum, s.min, s.max, s.first, s.last).map(java.lang.Double.doubleToRawLongBits)
     val cols = Seq("conv_id", "metric", "chunk_start", "n", "sum", "min", "max", "first", "last")
     def check(stepSec: Long): Unit = {
-      val viaPoints = Rollup.fromPoints(Ingest.series(t, stepSec), "minute").select(cols.map(col): _*)
-      val viaRuns = Rollup.tier1FromBuckets(Ingest.bucketed(t, stepSec), stepSec, "minute").select(cols.map(col): _*)
-      assert(viaPoints.count() == viaRuns.count(), s"row counts differ at step=$stepSec")
-      val diff = viaPoints.union(viaRuns).groupBy(cols.map(col): _*)
-        .count().where(col("count") =!= 2)
-      assert(diff.count() == 0, s"cells differ at step=$stepSec: ${diff.take(3).mkString}")
+      val got = Rollup.tier1FromBuckets(Ingest.bucketed(t, stepSec), stepSec, "minute")
+          .select(cols.map(col): _*).collect().map { r =>
+        (r.getString(0), r.getString(1), r.getTimestamp(2).getTime) ->
+          bits(Ref.Stats(r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getDouble(8)))
+      }
+      val want = Ref.rollup(Ref.series(turns, stepSec), "minute").view.mapValues(bits).toMap
+      assert(got.length == want.size, s"row counts differ at step=$stepSec: ${got.length} vs ${want.size}")
+      val diff = got.filter { case (k, v) => !want.get(k).contains(v) }
+      assert(diff.isEmpty, s"cells differ at step=$stepSec: ${diff.take(3).mkString}")
     }
     check(60) // degenerate: one grid point per minute cell
     check(10) // real fold: 6 grid points per cell, cells straddle runs

@@ -168,6 +168,23 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     assert(rows() == before)
   }
 
+  test("grid guard: a stride longer than the window fails before writing, also with no cell pending") {
+    import spark.implicits._
+    val transcripts = Transcripts.generate(spark, 2, 150).toDF()
+    val pairs = Seq(("conv-000000", "conv-000001")).toDF("conv_a", "conv_b")
+    // the one-day window has no cell over these conversations, the
+    // 30-minute window has some
+    Seq(ProcessJob.Config(stepSec = 60, windowSec = 86400, strideSec = 90000) -> false,
+        ProcessJob.Config(stepSec = 60, windowSec = 1800, strideSec = 2400) -> true).foreach { case (cfg, cells) =>
+      val work = ProcessJob.workList(graft.ops.Ingest.seriesSparse(transcripts, cfg.stepSec), pairs, cfg)
+      assert((work.count > 0) == cells, s"$cfg: ${work.count} cells")
+      val dir = java.nio.file.Files.createTempDirectory("cc-grid").toString
+      val e = intercept[IllegalArgumentException](ProcessJob.run(spark, transcripts, pairs, dir, cfg))
+      assert(e.getMessage.contains("stride must not exceed the window"), e.getMessage)
+      assert(new java.io.File(dir).list().isEmpty, s"$cfg wrote under $dir")
+    }
+  }
+
   test("retry upgrade: readCc prefers the fresh status=1 row over a stale -1 for the same cell") {
     import spark.implicits._
     // the append-only data path can legitimately hold BOTH a degenerate
