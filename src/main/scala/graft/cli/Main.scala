@@ -78,13 +78,14 @@ object Main {
   /** cc — the production driver (↔ scripts/cc.py + core/process.py):
     * transcripts → checkpoint-resumable pairwise windowed CC table.
     * Keys: input, output, step_sec, window_sec, stride_sec, normalize,
-    * clip_lag_sec, pairs (optional parquet of conv_a/conv_b), retry_missing,
-    * max_auto_pairs_convs. Without an explicit `pairs` table the implicit
-    * all-pairs fallback is GUARDED: it refuses above `max_auto_pairs_convs`
-    * (default 1024) distinct conversations, because the triangular pairing
-    * is quadratic — at corpus scale the pair list is production CONFIG, not
-    * something a CLI default should synthesize (the reference reads its
-    * pair list from explicit config, scripts/cc.py:136-145).
+    * clip_lag_sec, hash_inputs, pairs (optional parquet of conv_a/conv_b),
+    * retry_missing, max_auto_pairs_convs. Without an explicit `pairs` table
+    * the implicit all-pairs fallback is GUARDED: it refuses above
+    * `max_auto_pairs_convs` (default 1024) distinct conversations, because
+    * the triangular pairing is quadratic — at corpus scale the pair list is
+    * production CONFIG, not something a CLI default should synthesize (the
+    * reference reads its pair list from explicit config,
+    * scripts/cc.py:136-145).
     */
   def cc(spark: SparkSession, c: Conf): String = {
     val t = spark.read.parquet(c("input"))
@@ -108,9 +109,10 @@ object Main {
   /** snr — postprocess chain + SNR (↔ xcorr-snr): validated cc-table read,
     * unbias → demean → taper → timeshift → filter → taper → lag window
     * (global or per-pair celerity), then SNR. Keys: input (cc table dir),
-    * output, step_sec, taper_sec, filter_freq_hz, filter_order, taper2_sec,
-    * lag_min_sec, lag_max_sec, pair_distance (optional parquet), celerity_min,
-    * celerity_max, signal_min/max, noise_min/max, envelope, power, decibels.
+    * output, step_sec, unbias, taper_sec, filter_freq_hz, filter_order,
+    * taper2_sec, lag_min_sec, lag_max_sec, pair_distance (optional parquet),
+    * celerity_min, celerity_max, signal_min, signal_max, noise_min,
+    * noise_max, envelope, power, decibels.
     */
   def snr(spark: SparkSession, c: Conf): String = {
     val step = c.dbl("step_sec", 60)
@@ -455,7 +457,9 @@ object Main {
     * state (open windows, watermarks) resumes from the checkpoints — a
     * rerun over unchanged input writes nothing.
     * Keys: input (transcript parquet dir — the stream source), output,
-    * lateness (watermark, default "5 minutes").
+    * lateness (watermark, default "5 minutes"), retention_keep_days
+    * (optional: expire 1m days older than this once 1h seals them),
+    * compact_snapshots (with retention, as in `retention`).
     */
   def streamrollup(spark: SparkSession, c: Conf): String = {
     import org.apache.spark.sql.streaming.Trigger

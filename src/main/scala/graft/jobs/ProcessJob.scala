@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.ManifestRow
+import graft.core.{CcRow, ManifestRow}
 import graft.meta.{Cf19, Hasher, TableFormat}
 import graft.ops.{Correlate, Ingest}
 
@@ -170,11 +170,14 @@ object ProcessJob {
   /** Completed CC table with freshest-wins duplicate collapse: the row with
     * the highest status per key wins (a retry upgrades -1 → 1; equal-status
     * duplicates are bit-identical deterministic recomputes, so any of them
-    * is exact).
+    * is exact). Empty, with the stored columns (`CcRow`'s and `day`), when
+    * no cell was ever written.
     */
   def readCc(spark: SparkSession, outDir: String): DataFrame = {
+    import spark.implicits._
     val p = dataPath(outDir)
-    if (!hasParquet(spark, p)) return spark.emptyDataFrame
+    if (!hasParquet(spark, p))
+      return spark.emptyDataset[CcRow].toDF().withColumn("day", lit(null).cast("date"))
     val w = Window.partitionBy(col("pair"), col("metric"), col("win_start"))
       .orderBy(col("status").desc)
     spark.read.parquet(p)
@@ -183,9 +186,7 @@ object ProcessJob {
       .drop("__rn")
   }
 
-  /** Run (or resume) the job. `maxWindows` > 0 processes only that many
-    * work items this invocation — used by the resume tests to simulate a
-    * partial run / crash.
+  /** Run (or resume) the job.
     *
     * @param retryMissing re-process cells previously flagged -1
     *                     (missing_data), mirroring the reference's
@@ -197,7 +198,6 @@ object ProcessJob {
       pairs: DataFrame,
       outDir: String,
       cfg: Config = Config(),
-      maxWindows: Int = -1,
       retryMissing: Boolean = false
   ): Stats = {
     import spark.implicits._
@@ -225,19 +225,17 @@ object ProcessJob {
     // manifest row's: a retry that appended 1 after -1 must read as 1. A
     // cell with a 1 row is never recomputed, so a key's rows are -1s then at
     // most one 1, and its latest status is done iff some row's status is.
-    // With no manifest and no cap, every cell is pending; otherwise one
-    // per-pair aggregate over the remaining cells, collected, gives the
-    // pending pairs and their count together.
+    // With no manifest, every cell is pending; otherwise one per-pair
+    // aggregate over the remaining cells, collected, gives the pending
+    // pairs and their count together.
     val pending =
-      if (maxWindows <= 0 && !hasParquet(spark, manifestPath(outDir))) work
+      if (!hasParquet(spark, manifestPath(outDir))) work
       else {
         val doneStatuses = if (retryMissing) Seq(1) else Seq(1, -1)
         val done = readManifest(spark, outDir)
           .where(col("job_id") === jobId && col("status").isin(doneStatuses: _*))
           .select(col("partition_key"))
-        var cells = work.df.join(done, Seq("partition_key"), "left_anti")
-        // ordered, so the count and the write take the same cells
-        if (maxWindows > 0) cells = cells.orderBy(col("partition_key")).limit(maxWindows)
+        val cells = work.df.join(done, Seq("partition_key"), "left_anti")
         Correlate.Cells(cells, cells.groupBy(col("conv_a"), col("conv_b")).count()
           .as[(String, String, Long)].collect().toSeq.map(r => (r._1, r._2) -> r._3))
       }

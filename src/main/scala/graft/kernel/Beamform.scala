@@ -19,13 +19,11 @@ object Beamform {
   /** @param coords per-key (x, y) coordinates, meters (or any length unit)
     * @param series per-key signal vectors, equal lengths, regular delta
     * @param delta  sample interval in seconds
-    * @param envelopePick pick the delay at max |envelope| instead of max cc
     */
   def planeWave(
       coords: Array[(Double, Double)],
       series: Array[Array[Double]],
-      delta: Double,
-      envelopePick: Boolean = false
+      delta: Double
   ): Result = {
     val n = coords.length
     require(series.length == n && n >= 3, "need >= 3 receivers")
@@ -37,7 +35,7 @@ object Beamform {
       a(k)(0) = coords(j)._1 - coords(i)._1
       a(k)(1) = coords(j)._2 - coords(i)._2
       val rxy = Cc.cc(series(i), series(j), normalize = true)
-      val pick = if (envelopePick) Signal.envelope(rxy) else rxy.map(math.abs)
+      val pick = rxy.map(math.abs)
       var best = 0
       var m = 1
       while (m < pick.length) { if (pick(m) > pick(best)) best = m; m += 1 }

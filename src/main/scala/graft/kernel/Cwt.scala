@@ -1,16 +1,23 @@
 package graft.kernel
 
 /** Continuous wavelet transform with a complex Morlet wavelet — the
-  * reference's cwt/scaleogram (/root/reference/xcorr/signal/cwt.py:28-261:
-  * pywt cmor wavelet, log-spaced scales, scaleogram = |cwt| cropped to a
-  * frequency band). Implemented as FFT-domain convolution per scale
-  * (O(n log n) per scale), double precision.
+  * reference's cwt/scaleogram (xcorr/signal/cwt.py:28-261: pywt cmor
+  * wavelet, log-spaced scales, scaleogram = |cwt| cropped to a frequency
+  * band). Implemented as FFT-domain convolution per scale (O(n log n) per
+  * scale), double precision.
   *
   * Morlet (cmorB-C convention): psi(t) = (pi*B)^(-1/2) exp(2*pi*i*C*t)
-  * exp(-t^2/B) with bandwidth B and center frequency C; a scale `a` maps to
-  * pseudo-frequency f = C / (a * delta).
+  * exp(-t^2/B) with bandwidth B = [[Bandwidth]] and center frequency
+  * C = [[CenterFreq]], the reference's cmor1.5-1.0 wavelet; a scale `a`
+  * maps to pseudo-frequency f = C / (a * delta).
   */
 object Cwt {
+
+  /** Bandwidth B of the reference's cmor1.5-1.0 wavelet (cwt.py). */
+  private val Bandwidth = 1.5
+
+  /** Center frequency C of the reference's cmor1.5-1.0 wavelet (cwt.py). */
+  private val CenterFreq = 1.0
 
   /** @return (nScales x n) matrix of |CWT| magnitudes and the
     *         pseudo-frequency axis.
@@ -18,9 +25,7 @@ object Cwt {
   def scaleogram(
       x: Array[Double],
       delta: Double,
-      scales: Array[Double],
-      bandwidth: Double = 1.5,
-      centerFreq: Double = 1.0
+      scales: Array[Double]
   ): (Array[Array[Double]], Array[Double]) = {
     val n = x.length
     val m = Integer.highestOneBit(math.max(2 * n - 1, 2)) * 2
@@ -29,7 +34,7 @@ object Cwt {
     val xi = new Array[Double](m)
     Fft.fft(xr, xi)
     val out = Array.ofDim[Double](scales.length, n)
-    val freqAxis = scales.map(a => centerFreq / (a * delta))
+    val freqAxis = scales.map(a => CenterFreq / (a * delta))
     var s = 0
     while (s < scales.length) {
       val a = scales(s)
@@ -43,8 +48,8 @@ object Cwt {
         val f = (if (k <= m / 2) k else k - m) / (m * delta) // cycles/sec
         // pseudo-frequency relation: f = C / (a * delta) ⇒ match when
         // a * delta * f == C (dimensionless wavelet argument)
-        val arg = a * delta * f - centerFreq
-        val mag = math.exp(-math.Pi * math.Pi * bandwidth * arg * arg) * math.sqrt(a)
+        val arg = a * delta * f - CenterFreq
+        val mag = math.exp(-math.Pi * math.Pi * Bandwidth * arg * arg) * math.sqrt(a)
         // conv theorem: Y = X * conj(Psi(a f)) — Morlet spectrum is real
         wr(k) = xr(k) * mag
         wi(k) = xi(k) * mag
@@ -59,9 +64,9 @@ object Cwt {
   }
 
   /** Log-spaced scales covering [fMin, fMax] (cwt.py default layout). */
-  def logScales(fMin: Double, fMax: Double, nScales: Int, delta: Double, centerFreq: Double = 1.0): Array[Double] = {
-    val aMax = centerFreq / (fMin * delta)
-    val aMin = centerFreq / (fMax * delta)
+  def logScales(fMin: Double, fMax: Double, nScales: Int, delta: Double): Array[Double] = {
+    val aMax = CenterFreq / (fMin * delta)
+    val aMin = CenterFreq / (fMax * delta)
     Array.tabulate(nScales)(i => aMin * math.pow(aMax / aMin, i.toDouble / (nScales - 1)))
   }
 
@@ -70,7 +75,7 @@ object Cwt {
     * pywt.cwt with a cmorB-C wavelet):
     *
     *  1. the wavelet is numerically integrated ONCE on a fine grid of
-    *     2^precision points over its [-8, 8] support
+    *     2^10 points (pywt's default precision) over its [-8, 8] support
     *     (pywt.integrate_wavelet: cumulative sum × step), conjugated for
     *     complex wavelets;
     *  2. each scale `a` subsamples the integrated wavelet at
@@ -84,19 +89,16 @@ object Cwt {
   def scaleogramPywt(
       x: Array[Double],
       delta: Double,
-      scales: Array[Double],
-      bandwidth: Double = 1.5,
-      centerFreq: Double = 1.0,
-      precision: Int = 10
+      scales: Array[Double]
   ): (Array[Array[Double]], Array[Double]) = {
     val n = x.length
-    val nGrid = 1 << precision
+    val nGrid = 1 << 10
     val lb = -8.0
     val ub = 8.0
     val step = (ub - lb) / (nGrid - 1)
     // psi(t) = (pi*B)^(-1/2) exp(2*pi*i*C*t) exp(-t^2/B), integrated by
     // cumulative sum (pywt.integrate_function), then conjugated
-    val norm = 1.0 / math.sqrt(math.Pi * bandwidth)
+    val norm = 1.0 / math.sqrt(math.Pi * Bandwidth)
     val intRe = new Array[Double](nGrid)
     val intIm = new Array[Double](nGrid)
     var accRe = 0.0
@@ -104,8 +106,8 @@ object Cwt {
     var g = 0
     while (g < nGrid) {
       val t = lb + g * step
-      val env = norm * math.exp(-t * t / bandwidth)
-      val ph = 2 * math.Pi * centerFreq * t
+      val env = norm * math.exp(-t * t / Bandwidth)
+      val ph = 2 * math.Pi * CenterFreq * t
       accRe += env * math.cos(ph) * step
       accIm += env * math.sin(ph) * step
       intRe(g) = accRe
@@ -113,7 +115,7 @@ object Cwt {
       g += 1
     }
     val out = Array.ofDim[Double](scales.length, n)
-    val freqAxis = scales.map(a => centerFreq / (a * delta))
+    val freqAxis = scales.map(a => CenterFreq / (a * delta))
     var s = 0
     while (s < scales.length) {
       val a = scales(s)

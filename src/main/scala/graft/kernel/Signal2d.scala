@@ -118,10 +118,11 @@ object Signal2d {
     out
   }
 
-  /** Argmax of a 2-D CC surface → (delta1, delta2, max) with zero-lag at
-    * the center indices (len/2) — ties → first in row-major order.
+  /** Argmax of a 2-D CC surface → (shift1, shift2, max), the shifts in
+    * samples with zero-lag at the center indices (len/2) — ties → first in
+    * row-major order.
     */
-  def extractShift2d(rxy: Array[Array[Double]], delta1: Double = 1.0, delta2: Double = 1.0): (Double, Double, Double) = {
+  def extractShift2d(rxy: Array[Array[Double]]): (Double, Double, Double) = {
     val z1 = rxy.length / 2
     val z2 = rxy(0).length / 2
     var bi = 0; var bj = 0
@@ -134,7 +135,7 @@ object Signal2d {
       }
       i += 1
     }
-    ((bi - z1) * delta1, (bj - z2) * delta2, rxy(bi)(bj))
+    ((bi - z1).toDouble, (bj - z2).toDouble, rxy(bi)(bj))
   }
 
   /** 2-D local maxima over an 8-neighborhood with a minimum distance and a

@@ -61,18 +61,12 @@ object Hasher {
   * them preserved as Iceberg-style table/snapshot properties.
   */
 object Cf19 {
-  def props(
-      title: String,
-      institution: String = "n/a",
-      author: String = "n/a",
-      source: String = "xcorrspark",
-      extra: Map[String, String] = Map.empty
-  ): Map[String, String] = {
+  def props(title: String, extra: Map[String, String] = Map.empty): Map[String, String] = {
     val base = Map(
       "title" -> title,
-      "institution" -> institution,
-      "author" -> author,
-      "source" -> source,
+      "institution" -> "n/a",
+      "author" -> "n/a",
+      "source" -> "xcorrspark",
       "Conventions" -> "CF-1.9",
       "engine" -> "xcorrspark-0.1.0",
       "references" -> "https://github.com/psmsmets/xcorr (semantics reference)"

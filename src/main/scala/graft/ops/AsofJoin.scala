@@ -26,9 +26,8 @@ import org.apache.spark.sql.types.DataType
   * partitions with a per-bucket boundary hand-off — the bucketed-islands
   * pattern `Trigger.periods` implements (Trigger.scala:55-98).
   *
-  * Right-side ties (two right rows at the same key+ts) resolve to the later
-  * row in (ts, tiebreak...) order; pass `tiebreak` columns or pre-dedupe
-  * the right side for full determinism.
+  * Right-side ties (two right rows at the same key+ts) resolve to either
+  * row: pre-dedupe the right side on (key, ts) for full determinism.
   */
 object AsofJoin {
 
@@ -39,16 +38,15 @@ object AsofJoin {
     * @param rightTs   right event-time column name
     * @param pick      right columns to attach (null when no match)
     * @param toleranceSec match only if left.ts - right.ts <= tolerance
-    * @param tiebreak  extra right-side sort columns for same-ts ties
     * @return left columns + `pick` columns + `asof_ts` (matched right ts)
     */
   def leftAsof(
       left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, pick: Seq[String],
-      toleranceSec: Option[Long] = None, tiebreak: Seq[String] = Nil
+      toleranceSec: Option[Long] = None
   ): DataFrame = {
-    val (tagged, rType) = tag(left, right, keys, leftTs, rightTs, pick, tiebreak)
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order(tiebreak): _*)
+    val (tagged, rType) = tag(left, right, keys, leftTs, rightTs, pick)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = tagged
       .withColumn("__r", last(col("__r"), ignoreNulls = true).over(w))
@@ -57,19 +55,18 @@ object AsofJoin {
 
   /** Both sides tagged and unioned for the carry-forward window: right
     * rows are side 0 with `__r`, left rows side 1 with the whole left row
-    * in `__l`; `__ts` is the event time and `__tb_*` the tiebreaks.
-    * Returns the union and the type of `__r`.
+    * in `__l`; `__ts` is the event time. Returns the union and the type of
+    * `__r`.
     */
   private def tag(
       left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTs: String, rightTs: String, pick: Seq[String], tiebreak: Seq[String]
+      leftTs: String, rightTs: String, pick: Seq[String]
   ): (DataFrame, DataType) = {
     require(pick.nonEmpty, "pick at least one right column")
     val reserved = pick :+ "asof_ts"
     require(left.columns.intersect(reserved).isEmpty,
       s"left columns collide with the output: ${left.columns.intersect(reserved).mkString(", ")}")
     val leftStruct = struct(left.columns.map(col).toIndexedSeq: _*)
-    val tbTypes = tiebreak.map(c => c -> right.schema(c).dataType)
 
     // ONE struct per right row carries (asof_ts, picks...) together, so
     // every output value comes from the SAME matched right row even when
@@ -78,22 +75,19 @@ object AsofJoin {
     val rStruct = struct(col(rightTs).as("asof_ts") +: pick.map(col): _*)
     val r = right.select(
       keys.map(col) ++ Seq(
-        col(rightTs).as("__ts"), lit(0).as("__side"), rStruct.as("__r")) ++
-        tiebreak.map(c => col(c).as(s"__tb_$c")): _*)
+        col(rightTs).as("__ts"), lit(0).as("__side"), rStruct.as("__r")): _*)
     val rType = r.schema("__r").dataType
     val lWithR = left.select(
       keys.map(col) ++ Seq(
         col(leftTs).as("__ts"), lit(1).as("__side"),
-        lit(null).cast(rType).as("__r"), leftStruct.as("__l")) ++
-        tbTypes.map { case (c, t) => lit(null).cast(t).as(s"__tb_$c") }: _*)
+        lit(null).cast(rType).as("__r"), leftStruct.as("__l")): _*)
     val rWithL = r.withColumn("__l", lit(null).cast(lWithR.schema("__l").dataType))
       .select(lWithR.columns.map(col).toIndexedSeq: _*)
     (rWithL.unionByName(lWithR), rType)
   }
 
   /** Carry-forward sort: right rows BEFORE left rows at equal ts (asof <=). */
-  private def order(tiebreak: Seq[String]): Seq[Column] =
-    col("__ts") +: col("__side") +: tiebreak.map(c => col(s"__tb_$c"))
+  private def order: Seq[Column] = Seq(col("__ts"), col("__side"))
 
   /** Null the matched `__r` when it is older than `toleranceSec`. */
   private def masked(df: DataFrame, rType: DataType, toleranceSec: Option[Long]): DataFrame =
@@ -136,10 +130,10 @@ object AsofJoin {
       left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, pick: Seq[String],
       bucketSec: Long,
-      toleranceSec: Option[Long] = None, tiebreak: Seq[String] = Nil
+      toleranceSec: Option[Long] = None
   ): DataFrame = {
     require(bucketSec > 0, "bucketSec must be positive")
-    val (tagged, rType) = tag(left, right, keys, leftTs, rightTs, pick, tiebreak)
+    val (tagged, rType) = tag(left, right, keys, leftTs, rightTs, pick)
     val bucketUs = bucketSec * 1000000L
 
     val withBkt = tagged
@@ -147,18 +141,18 @@ object AsofJoin {
       .withColumn("__bkt", expr(Rollup.floorDiv("__us", bucketUs)))
 
     // 1. within-bucket carry — the leftAsof window, bucket-partitioned
-    val wIn = Window.partitionBy(keys.map(col) :+ col("__bkt"): _*).orderBy(order(tiebreak): _*)
+    val wIn = Window.partitionBy(keys.map(col) :+ col("__bkt"): _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = withBkt
       .withColumn("__rin", last(col("__r"), ignoreNulls = true).over(wIn))
 
     // 2. boundary hand-off over the bucket-level rows. Latest-right ties at
-    // identical (ts, tiebreak) resolve arbitrarily — same contract as
-    // leftAsof (pass tiebreak columns or pre-dedupe the right side).
-    val ordStruct = struct(col("__ts") +: tiebreak.map(c => col(s"__tb_$c")): _*)
+    // identical ts resolve arbitrarily — same contract as leftAsof
+    // (pre-dedupe the right side). The ordering is a struct, never null,
+    // so a right row with a null ts still competes, as in leftAsof.
     val lastPerBucket = withBkt.where(col("__side") === 0)
       .groupBy(keys.map(col) :+ col("__bkt"): _*)
-      .agg(max_by(col("__r"), ordStruct).as("__rlast"))
+      .agg(max_by(col("__r"), struct(col("__ts"))).as("__rlast"))
       .withColumn("__bside", lit(1))
     val lBuckets = withBkt.where(col("__side") === 1)
       .select(keys.map(col) :+ col("__bkt"): _*).distinct()

@@ -274,7 +274,7 @@ object Dedup {
     */
   def clusters(
       edges: DataFrame, d1: String, d2: String,
-      nodes: DataFrame, nodeCol: String, maxIter: Int = 50
+      nodes: DataFrame, nodeCol: String
   ): DataFrame = {
     // lineage truncation per round: RELIABLE checkpoint when the session
     // has a checkpoint dir configured (survives executor loss — the
@@ -361,7 +361,8 @@ object Dedup {
     roundParts = math.max(1L, (fp._1 + (4 << 20) - 1) / (4 << 20)).toInt
     var converged = e.isEmpty
     var it = 0
-    while (!converged && it < maxIter) {
+    val maxRounds = 50 // far above the O(log² n) rounds alternating star takes
+    while (!converged && it < maxRounds) {
       val next = truncate(smallStar(largeStar(e)))
       val nfp = fingerprint(next)
       if (nfp == fp) {
@@ -378,7 +379,7 @@ object Dedup {
       org.apache.spark.sql.GraftSqlShim.dropLocalCheckpoint(e)
       fp = nfp; e = next; it += 1
     }
-    require(converged, s"clusters() did not converge in $maxIter rounds")
+    require(converged, s"clusters() did not converge in $maxRounds rounds")
 
     // fixpoint = per-component stars centered at the min: (child, root)
     val assign = e.select(greatest(col("a"), col("b")).as("doc_id"),

@@ -75,18 +75,16 @@ object LmScore {
     * never saw, `support` = Σ model bigram counts over the doc's
     * transitions (unseen → 0), `uni_support` = Σ model unigram counts,
     * `avg_support` = support/n_big (round-6), `unk_rate` = n_unk/n_big
-    * (round-6), `is_lowq` = n_unk·100 ≥ n_big·unkPctThreshold (integer
-    * cross-multiplied — no float in the decision).
+    * (round-6), `is_lowq` = n_unk·100 ≥ n_big·50, i.e. at least half the
+    * transitions unseen (integer cross-multiplied — no float in the
+    * decision).
     */
   def supportScore(
       docs: DataFrame,
       refBigrams: DataFrame,
       refUnigrams: DataFrame,
       idCol: String,
-      textCol: String,
-      unkPctThreshold: Int = 50): DataFrame = {
-    require(unkPctThreshold >= 0 && unkPctThreshold <= 100,
-      s"unkPctThreshold must be a percentage, got $unkPctThreshold")
+      textCol: String): DataFrame = {
     val tr = transitions(docs, idCol, textCol)
     val joined = tr
       .join(refBigrams, Seq("w1", "w2"), "left")
@@ -100,6 +98,6 @@ object LmScore {
       col("doc_id"), col("n_big"), col("n_unk"), col("support"), col("uni_support"),
       round(col("support").cast("double") / col("n_big").cast("double"), 6).as("avg_support"),
       round(col("n_unk").cast("double") / col("n_big").cast("double"), 6).as("unk_rate"),
-      (col("n_unk") * lit(100L) >= col("n_big") * lit(unkPctThreshold.toLong)).as("is_lowq"))
+      (col("n_unk") * lit(100L) >= col("n_big") * lit(50L)).as("is_lowq"))
   }
 }

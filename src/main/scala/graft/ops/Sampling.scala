@@ -32,24 +32,19 @@ object Sampling {
     expr(s"cast(conv(substr(md5(cast($idCol as string)), 1, 2), 16, 10) as int)")
 
   /** Deterministic train/val/test assignment by hash bucket:
-    * train = bucket < trainUpTo, val = bucket < valUpTo, else test
-    * (defaults 230/243 ≈ 90/5/5 of 256). Output: all input columns +
-    * bucket + split.
+    * train = bucket < 230, val = bucket < 243, else test (≈ 90/5/5 of
+    * 256). Output: all input columns + bucket + split.
     */
-  def hashSplit(df: DataFrame, idCol: String,
-                trainUpTo: Int = 230, valUpTo: Int = 243): DataFrame = {
-    require(0 < trainUpTo && trainUpTo <= valUpTo && valUpTo <= 256,
-      s"need 0 < trainUpTo <= valUpTo <= 256, got $trainUpTo/$valUpTo")
+  def hashSplit(df: DataFrame, idCol: String): DataFrame =
     df.withColumn("bucket", bucketCol(idCol))
       // a NULL id hashes to a NULL bucket; leave split NULL too (visible,
       // filterable corruption) instead of letting otherwise() silently
       // concentrate undefined docs in the eval split — and then move them
       // when a re-ingest backfills the id, breaking the stability property
       .withColumn("split",
-        when(col("bucket") < trainUpTo, lit("train"))
-          .when(col("bucket") < valUpTo, lit("val"))
+        when(col("bucket") < 230, lit("train"))
+          .when(col("bucket") < 243, lit("val"))
           .when(col("bucket").isNotNull, lit("test")))
-  }
 
   /** Source-mixture rebalancing: downsample every source toward the
     * SMALLEST source's count by deterministic hash-rate selection — doc

@@ -22,6 +22,10 @@ import Rollup.floorDiv
   */
 object Trigger {
 
+  /** Default time-bucket width, in grid steps, of the islands sort and of
+    * the period join. */
+  private val BucketSteps = 4096
+
   /** @param cf   DataFrame(key, time, value) characteristic function
     * @param thrOn trigger when value > thrOn
     * @param coincidence minimum number of distinct keys simultaneously on
@@ -42,7 +46,7 @@ object Trigger {
       stepSec: Long,
       minDurationSteps: Int = 3,
       extendSteps: Int = 0,
-      bucketSteps: Int = 4096
+      bucketSteps: Int = BucketSteps
   ): DataFrame = {
     val stepUs = stepSec * 1000000L
     val active = cf.where(col("value") > thrOn)
@@ -106,13 +110,8 @@ object Trigger {
     * nested loop; exploding each period into the buckets it overlaps keeps
     * this a hash join at any period count.
     */
-  def values(
-      cf: DataFrame,
-      periodsDf: DataFrame,
-      stepSec: Long,
-      bucketSteps: Int = 4096
-  ): DataFrame = {
-    val bUs = stepSec * 1000000L * bucketSteps
+  def values(cf: DataFrame, periodsDf: DataFrame, stepSec: Long): DataFrame = {
+    val bUs = stepSec * 1000000L * BucketSteps
     val p = periodsDf.withColumn("b", explode(expr(
       s"sequence(${floorDiv("unix_micros(cast(period_start as timestamp))", bUs)}, " +
         s"${floorDiv("unix_micros(cast(period_end as timestamp))", bUs)})")))

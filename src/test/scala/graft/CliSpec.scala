@@ -117,6 +117,20 @@ class CliSpec extends AnyFunSuite with SparkSuite {
       Set("period", "period_start", "period_end", "n_steps"))
   }
 
+  test("cc over conversations shorter than one window writes no cell; snr over it writes an empty table") {
+    val ccDir = out()
+    val msg = cli.Main.run("cc", conf(
+      "input" -> transcriptsPath, "output" -> ccDir,
+      "step_sec" -> "60", "window_sec" -> "604800", "stride_sec" -> "604800"))
+    assert(msg.contains("0 of 0"), msg)
+    val snrDir = out()
+    cli.Main.run("snr", conf("input" -> ccDir, "output" -> snrDir, "step_sec" -> "60"))
+    val snrDf = spark.read.parquet(snrDir)
+    assert(snrDf.count() == 0 && snrDf.columns.contains("snr"))
+    assert(graft.jobs.ProcessJob.readCc(spark, ccDir).columns.toSet ==
+      (org.apache.spark.sql.Encoders.product[graft.core.CcRow].schema.fieldNames :+ "day").toSet)
+  }
+
   test("rollup command writes the three tiers; psd writes spectrogram cells") {
     val rDir = out()
     cli.Main.run("rollup", conf("input" -> transcriptsPath, "output" -> rDir, "step_sec" -> "60"))

@@ -22,6 +22,15 @@ class IoStreamingSpec extends AnyFunSuite with SparkSuite {
     assert(TableFormat.readProps(dir)("title") == "uri-test-2")
   }
 
+  test("CF-1.9 template: the CC table's metadata hash is pinned") {
+    // CC tables already on disk carry this template's properties and hash,
+    // which the config-hash gate (ProcessJob.checkStoredConfig) reads back:
+    // a change to the template must be deliberate
+    val p = Cf19.props("xcorrspark pairwise cross-correlation", extra = Map("job_config_sha256" -> "x"))
+    assert(p("sha256_hash_metadata") == "4fee628e29898a3c4a33eff2e3e02c3e860e03bc4b19aab95971903e2f333786")
+    assert(p("institution") == "n/a" && p("author") == "n/a" && p("source") == "xcorrspark")
+  }
+
   test("appendSnapshot is append-only: max+1 indexing survives a removed snapshot") {
     val dir = java.nio.file.Files.createTempDirectory("tfsnap").toString
     TableFormat.appendSnapshot(dir, Map("n" -> "1"))

@@ -46,11 +46,21 @@ class ResumeSpec extends AnyFunSuite with SparkSuite {
     val full = ProcessJob.run(spark, transcripts, pairs, dirFull, cfg)
     assert(full.pending == full.total && full.total > 4, s"want real work, got $full")
 
-    // partial run ("crash" after k windows), then resume
-    val part1 = ProcessJob.run(spark, transcripts, pairs, dirPartial, cfg, maxWindows = 3)
-    assert(part1.written == 3)
+    // partial state the way real traffic builds it: a first run over the
+    // transcripts before a step-aligned cut (the median end of the full
+    // run's windows) writes its own work list, then a rerun over the whole
+    // table computes only the rest
+    val ends = ProcessJob.readCc(spark, dirFull).select(unix_timestamp(col("win_start")))
+      .as[Long].collect().map(_ + cfg.windowSec).sorted
+    val cut = ends(ends.length / 2)
+    assert(cut % cfg.stepSec == 0)
+    val part1 = ProcessJob.run(spark, transcripts.where(unix_timestamp(col("ts")) < cut),
+      pairs, dirPartial, cfg)
+    assert(part1.pending == part1.total && part1.written == part1.total, s"first run: $part1")
+    assert(part1.written > 0 && part1.written < full.total, s"first run: $part1, full: $full")
+    assert(spark.read.parquet(s"$dirPartial/data").count() == part1.written)
     val part2 = ProcessJob.run(spark, transcripts, pairs, dirPartial, cfg)
-    assert(part2.pending == full.total - 3, s"resume recomputed: $part2")
+    assert(part2.pending == full.total - part1.written, s"resume recomputed: $part2")
     // third run: nothing to do
     val part3 = ProcessJob.run(spark, transcripts, pairs, dirPartial, cfg)
     assert(part3.pending == 0)
